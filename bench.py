@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Benchmark harness (driver contract).
 
-Runs the engine's headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
+Runs every catalog query (``queries()``) at ``$SPARK_GRAFT_SF_DIR`` (default
 /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
 JSON line::
 
@@ -26,144 +26,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-# Headline set: the north-star spatial core (pip/knn/tiling/skew), the
-# interleaved-corpus flagship, dedup + similarity training-data ops,
-# and the relational parity classics.
-HEADLINE = [
-    "flagship",
-    "cell_assign",
-    "cell_rollup",
-    "pip_join_boxes",
-    "knn_join",
-    "tile_counts",
-    "kring_expand",
-    "salted_cell_count",
-    "dedup_keep_first",
-    "minhash_signatures",
-    "lsh_candidate_pairs",
-    "simhash",
-    "token_stats",
-    "lang_id",
-    "ngram_jaccard_pairs",
-    "cosine_topk",
-    "embedding_lsh_sig",
-    "ann_lsh_topk",
-    "ann_lsh_topk_w16",
-    "embedding_near_dup",
-    "ivf_topk",
-    "quality_score",
-    "training_pipeline",
-    "media_edges",
-    "span_roundtrip",
-    "wkt_export",
-    "rollup_cells",
-    "cube_cells",
-    "lsh_candidate_pairs_capped",
-    "ivf_kmeans_topk",
-    "media_frames",
-    "hash_split",
-    "stratified_sample",
-    "event_percentiles",
-    "cumulative_daily_events",
-    "asof_user_state",
-    "asof_user_state_fwd",
-    "asof_user_state_nearest",
-    "sql_cell_rollup",
-    "interval_join_windows",
-    "dedup_clusters",
-    "topk_dense_cells",
-    "rolling_fingerprint",
-    "winnow_sketch",
-    "pip_join_shuffle",
-    "lineage_buckets",
-    "json_props_agg",
-    "sessionize",
-    "cdc_latest_state",
-    "tpch_q1_pricing",
-    "tpch_q3_top_orders",
-    "tpch_q5_region_volume",
-    "count_all",
-    "statistics",
-    "ordered_assembly",
-    "tfidf_top_terms",
-    "way_length",
-    "way_area",
-    "pbf_roundtrip",
-    "dedup_keep_best",
-    "zorder_cells",
-    "heavy_hitter_terms",
-    "simhash_near_dup",
-    "contamination_overlap",
-    "repetition_score",
-    "token_shards",
-    "funnel_stages",
-    "cohort_retention",
-    "domain_cap",
-    "split_leakage",
-    "span_fingerprint",
-    "bigram_familiarity",
-    "box_overlap_join",
-    "tile_pyramid",
-    "ring_density",
-    # round-5: the 12 previously-unbenched round-4 classics plus every
-    # round-5 addition — the per-round regression signal covers the
-    # FULL 97-query catalog
-    "lat_stat",
-    "tag_filter",
-    "semi_lookup_join",
-    "span_explode",
-    "except_users",
-    "intersect_users",
-    "event_windows",
-    "raster_roundtrip",
-    "fingerprint",
-    "media_features",
-    "tpch_q6_forecast",
-    "approx_distinct_cells",
-    "simhash_sharded",
-    "pii_scrub",
-    "doc_chunks",
-    "pagerank",
-    "segment_join",
-    "geohash_cells",
-    "simplify_ways",
-    "click_attribution",
-    "priority_sample",
-    "incremental_dedup",
-    "triangle_count",
-    "event_path_ngrams",
-    "geohash_pyramid",
-    "gopher_filter",
-    "c4_filter",
-    "embedding_split_leakage",
-    # round-6 additions: PBF per-axis debug twins + exact sketch twin
-    "pbf_roundtrip_ids",
-    "pbf_roundtrip_coords",
-    "pbf_roundtrip_ts",
-    "pbf_roundtrip_tags",
-    "distinct_cells_exact",
-    "dbscan_clusters",
-    "staypoints",
-    "bloom_prune_join",
-    "jaccard_prefix_pairs",
-    "bfs_hops",
-    "approx_event_percentiles",
-    "od_flows",
-    "tpch_q4_priority",
-    "colocation_pairs",
-    "label_propagation",
-    "areal_interpolation",
-    "rolling_active_users",
-    "scd2_history",
-    "media_dedup",
-    "pip_anti_join",
-    "pca_component",
-    "daily_type_pivot",
-    "value_deciles",
-    "grouping_sets_cells",
-    "melt_doc_metrics",
-]
 
 
 def materialize(df) -> int:
@@ -198,10 +60,8 @@ def main() -> int:
     n_reps = int(os.environ.get("BENCH_REPS", "3"))
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
-    for name in HEADLINE:
-        fn = qs.get(name)
-        if fn is None:
-            continue
+    # every catalog query, in the catalog's own order
+    for name, fn in qs.items():
         try:
             # one UNTIMED warm-up rep per query (Python-worker spawn,
             # JIT, shuffle-file page cache), then best-of-N timed reps:

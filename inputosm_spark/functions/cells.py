@@ -277,18 +277,3 @@ def make_cell_id_udf(res: int):
 
     return _cell
 
-
-def make_point_udf():
-    """pandas UDF: id -> struct-free pair via two calls (lat path)."""
-
-    @F.pandas_udf(LongType())
-    def _lat(ids: pd.Series) -> pd.Series:
-        lat, _ = geo.point_from_id(ids.to_numpy())
-        return pd.Series(lat)
-
-    @F.pandas_udf(LongType())
-    def _lon(ids: pd.Series) -> pd.Series:
-        _, lon = geo.point_from_id(ids.to_numpy())
-        return pd.Series(lon)
-
-    return _lat, _lon

@@ -172,20 +172,6 @@ def dist2_e4(lat1, lon1, lat2, lon2):
     return dlat * dlat + dlon * dlon
 
 
-EARTH_RADIUS_M = 6_371_008.8
-
-
-def haversine_m(lat1_e4, lon1_e4, lat2_e4, lon2_e4):
-    """Great-circle distance in meters (float64, analytics-grade)."""
-    to_rad = np.pi / (180.0 * LAT_SCALE)
-    p1 = np.asarray(lat1_e4, np.float64) * to_rad
-    p2 = np.asarray(lat2_e4, np.float64) * to_rad
-    dp = p2 - p1
-    dl = (np.asarray(lon2_e4, np.float64) - np.asarray(lon1_e4, np.float64)) * to_rad
-    a = np.sin(dp / 2) ** 2 + np.cos(p1) * np.cos(p2) * np.sin(dl / 2) ** 2
-    return 2 * EARTH_RADIUS_M * np.arcsin(np.sqrt(np.clip(a, 0.0, 1.0)))
-
-
 # ---------------------------------------------------------------------------
 # polygons: ray-cast PIP + covering cells ("polyfill")
 # ---------------------------------------------------------------------------

@@ -47,12 +47,6 @@ def _hash_exprs(key: Column, m_bits: int, k: int) -> list[Column]:
     ]
 
 
-def hash_sql(key_sql: str, m_bits: int, i: int) -> str:
-    """The same hash in DuckDB SQL (oracle dialect)."""
-    a, b = BLOOM_PARAMS[i]
-    return f"(((({key_sql}) % {BLOOM_P}) * {a} + {b}) % {BLOOM_P} % {m_bits})"
-
-
 def build_bloom_words(
     df: DataFrame, key_col: str, m_bits: int = 8064, k: int = 3
 ) -> list[int]:

@@ -23,8 +23,27 @@ engine replays it with a recursive-CTE transitive closure — the
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+# serialized broadcast-hash-relation footprint per (long, long) edge
+# row: 16 B of data + key/row overhead in the LongHashedRelation
+_EDGE_ROW_BYTES = 32
+# hard cap for the deliberate closing-probe broadcast: 64 MB (= 2M
+# edges) fits comfortably in default executor/driver memory; the old
+# 5M-ROW cap was ~160 MB serialized per executor — an OOM risk on
+# default configs (r5 ADVICE: size the decision in bytes, not rows)
+_CLOSING_BROADCAST_MAX_BYTES = 64 << 20
+
+
+def _fits(spark: SparkSession, rows: int) -> bool:
+    """The graph operators' one broadcast / local-finish gate: `rows`
+    two-long rows fit the byte cap, and broadcasting is enabled at all
+    (Spark's parsed spark.sql.autoBroadcastJoinThreshold > 0, so -1
+    and 0 force every operator onto its distributed path)."""
+    conf = spark._jsparkSession.sessionState().conf()
+    thr = conf.autoBroadcastJoinThreshold()
+    return thr > 0 and rows * _EDGE_ROW_BYTES <= _CLOSING_BROADCAST_MAX_BYTES
 
 
 def _cc_round(edges: DataFrame) -> DataFrame:
@@ -164,15 +183,7 @@ def connected_components(
         F.col(src).alias("u"), F.col(dst).alias("v")
     ).localCheckpoint(eager=True)
     nodes = raw.select("u").unionAll(raw.select(F.col("v").alias("u"))).distinct()
-    conf_thr = _parse_size_bytes(
-        edges.sparkSession.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold", "10485760"
-        )
-    )
-    fits = (
-        lambda rows: conf_thr > 0
-        and rows * _EDGE_ROW_BYTES <= _CLOSING_BROADCAST_MAX_BYTES
-    )
+    spark = edges.sparkSession
     # the LOCAL path gates on the RAW count and skips the input
     # `.distinct()` entirely — connectivity is multiplicity-invariant
     # and the kernel's scatter-min is idempotent, so duplicates cost
@@ -181,7 +192,7 @@ def connected_components(
     # raw >= distinct rows, so the gate errs only toward the
     # distributed path (a performance choice, never correctness).
     n_raw = raw.count()
-    if fits(n_raw):
+    if _fits(spark, n_raw):
         # labels + roots both consume the star set: checkpoint so the
         # kernel runs once, exactly as the loop's fixpoint frame was
         e = _cc_local_star(
@@ -198,7 +209,7 @@ def connected_components(
         converged = False
         n_prev = e.count()
         for _ in range(max_iter):
-            if fits(n_prev):
+            if _fits(spark, n_prev):
                 break  # the local kernel finishes from here
             new_e = _cc_round(e).localCheckpoint(eager=True)
             n_new = new_e.count()
@@ -214,7 +225,7 @@ def connected_components(
                 converged = True
                 break
         if not converged:
-            if not fits(n_prev):
+            if not _fits(spark, n_prev):
                 raise RuntimeError(
                     f"connected_components did not converge in "
                     f"{max_iter} rounds"
@@ -291,16 +302,7 @@ def pagerank(
     # the node count is loop-invariant (every node keeps exactly one
     # rank row): one exact count drives the per-iteration broadcast
     # gate and the cache partitioning key (the LPA sizing pattern)
-    n_nodes = nodes.count()
-    conf_thr = _parse_size_bytes(
-        edges.sparkSession.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold", "10485760"
-        )
-    )
-    rank_fits = (
-        conf_thr > 0
-        and n_nodes * _EDGE_ROW_BYTES <= _CLOSING_BROADCAST_MAX_BYTES
-    )
+    rank_fits = _fits(edges.sparkSession, nodes.count())
     deg = edges.groupBy("src").agg(F.count("*").alias("__deg"))
     # loop-invariant: edges carrying their source out-degree, cached
     # once so every iteration reuses the materialized columnar blocks
@@ -365,143 +367,88 @@ def pagerank(
     return ranks
 
 
-def _parse_size_bytes(s: str) -> int:
-    """Spark size-conf string ('10485760', '10485760b', '10m', '1g',
-    '-1') -> bytes. Mirrors Spark's JavaUtils.byteStringAsBytes for
-    the suffixes that appear in autoBroadcastJoinThreshold configs."""
-    t = s.strip().lower()
-    for suf, mult in (
-        ("tb", 1 << 40), ("gb", 1 << 30), ("mb", 1 << 20), ("kb", 1 << 10),
-        ("t", 1 << 40), ("g", 1 << 30), ("m", 1 << 20), ("k", 1 << 10),
-        ("b", 1),
-    ):
-        if t.endswith(suf) and t[: -len(suf)].strip("-").isdigit():
-            return int(t[: -len(suf)]) * mult
-    return int(t)
-
-
-# serialized broadcast-hash-relation footprint per (long, long) edge
-# row: 16 B of data + key/row overhead in the LongHashedRelation
-_EDGE_ROW_BYTES = 32
-# hard cap for the deliberate closing-probe broadcast: 64 MB (= 2M
-# edges) fits comfortably in default executor/driver memory; the old
-# 5M-ROW cap was ~160 MB serialized per executor — an OOM risk on
-# default configs (r5 ADVICE: size the decision in bytes, not rows)
-_CLOSING_BROADCAST_MAX_BYTES = 64 << 20
-
-
-def triangle_counts(
-    edges: DataFrame | None = None,
-    degree_orient: bool = True,
-    edge_multiset: DataFrame | None = None,
-) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle counts over an undirected graph given as
-    CANONICAL ascending edges (u < v, distinct) — the clustering /
-    cohesion primitive (co-purchase cliques, link-farm detection).
+    CANONICAL ascending (u, v) pairs, u < v, duplicates allowed — the
+    clustering / cohesion primitive (co-purchase cliques, link-farm
+    detection). The dedup rides a u-partitioned cache IN PLACE, so the
+    caller pays no separate corpus-wide distinct exchange (A/B
+    best-of-4 3.29 -> 2.56 s at sf0.1 co-purchase, combined with the
+    in-place adjacency aggregations below).
 
     Ordered-wedge algorithm: orient every edge along a TOTAL order π,
     then a wedge π(a)<π(b)<π(c) is e(a,b) ⋈ e(b,c) and the closing
     join probes e(a,c) — each triangle is found exactly ONCE (as its
     π-sorted orientation), two equi-joins, no cartesian anywhere.
 
-    π is the DEGREE order (degree, id) by default (r5 verdict #5):
-    orienting low-degree -> high-degree bounds every node's out-degree
-    by O(sqrt(m)) (arboricity), so the wedge stream is O(m^1.5) even
-    on hub-skewed graphs — plain id order leaves a low-id hub with
+    π is the DEGREE order (degree, id) (r5 verdict #5): orienting
+    low-degree -> high-degree bounds every node's out-degree by
+    O(sqrt(m)) (arboricity), so the wedge stream is O(m^1.5) even on
+    hub-skewed graphs — plain id order leaves a low-id hub with
     out-degree ~n and a quadratic wedge blow-up at 100×. The
     orientation is one degree aggregation + two equi-joins against the
     narrow (node, degree) table BEFORE the wedge join; corner ids are
-    untouched, so the triangle set (and every oracle hash) is
-    identical under either order. `degree_orient=False` keeps the raw
-    id order (valid for graphs known to be degree-uniform).
-
-    `edge_multiset` (mutually exclusive with `edges`): canonical
-    ascending (u, v) pairs WITH duplicates — the dedup then rides a
-    u-partitioned cache IN PLACE instead of the caller paying a
-    separate corpus-wide distinct exchange (the LPA sym_edges
-    pattern; A/B best-of-4 3.29 -> 2.56 s at sf0.1 co-purchase,
-    combined with the in-place adjacency aggregations below).
+    untouched, so the triangle set (and every oracle hash) is the one
+    any total order finds.
     """
-    if (edges is None) == (edge_multiset is None):
-        raise ValueError(
-            "triangle_counts takes exactly one of edges / edge_multiset"
-        )
-    # the edge list feeds THREE join branches (wedge left, wedge
-    # right, closing probe) — plus the degree aggregation and the two
+    # the edge list feeds the degree aggregation and the two
     # orientation joins; materialize it once or every branch
     # re-derives it from source (measured 18.4s -> 7.5s at sf0.1
-    # co-purchase). The multiset path uses a u-partitioned CACHE so
-    # the dedup runs in place (and, when degree_orient=False, the
-    # adjacency aggregations below do too).
-    if edge_multiset is not None:
-        edges = (
-            edge_multiset.select("u", "v")
-            .repartition(F.col("u"))
-            .dropDuplicates(["u", "v"])
-            .cache()
-        )
-    else:
-        edges = edges.localCheckpoint(eager=True)
-    # one count, reused for BOTH broadcast decisions below (the
-    # checkpoint makes it a cheap cached-RDD count; orientation
-    # preserves row count so it stays valid for the closing probe)
+    # co-purchase)
+    edges = (
+        edges.select("u", "v")
+        .repartition(F.col("u"))
+        .dropDuplicates(["u", "v"])
+        .cache()
+    )
+    spark = edges.sparkSession
+    # one count, reused for the closing decision below (orientation
+    # preserves row count)
     n_edges = edges.count()
-    conf_thr = _parse_size_bytes(
-        edges.sparkSession.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold", "10485760"
-        )
+    # ONE explode pass for both endpoints (explode-vs-unionAll rule);
+    # undirected degree since input edges are canonical. Materialized
+    # once: both orientation probes (du, dv) read the same RDD instead
+    # of re-aggregating, and its row count is the EXACT node count for
+    # the broadcast decision — the old bound (2 * n_edges)
+    # overestimated nodes by orders of magnitude on dense graphs and
+    # pushed the sf0.1 co-purchase orientation (20k nodes, 1.2M edges)
+    # past the byte cap into a sort-merge shuffle of the edge list
+    # (and, post-AQE-coalescing, a 1-partition oriented RDD that
+    # serialized everything downstream: 5.3 s vs 1.5 s for the
+    # intersect stage).
+    deg = (
+        edges.select(F.explode(F.array("u", "v")).alias("n"))
+        .groupBy("n")
+        .agg(F.count("*").alias("d"))
+        .localCheckpoint(eager=True)
     )
-    fits = (
-        lambda rows: conf_thr > 0
-        and rows * _EDGE_ROW_BYTES <= _CLOSING_BROADCAST_MAX_BYTES
+    du = deg.select(F.col("n").alias("u"), F.col("d").alias("__du"))
+    dv = deg.select(F.col("n").alias("v"), F.col("d").alias("__dv"))
+    # broadcast BOTH orientation joins when the (node, degree) table
+    # fits the byte cap, so the oriented list is produced map-side over
+    # the cached edges. Past the cap the joins shuffle: the correct
+    # 100 TB path.
+    if _fits(spark, deg.count()):
+        du, dv = F.broadcast(du), F.broadcast(dv)
+    lower_first = (F.col("__du") < F.col("__dv")) | (
+        (F.col("__du") == F.col("__dv")) & (F.col("u") < F.col("v"))
     )
-    if degree_orient:
-        # ONE explode pass for both endpoints (explode-vs-unionAll
-        # rule); undirected degree since input edges are canonical.
-        # Materialized once: both orientation probes (du, dv) read the
-        # same RDD instead of re-aggregating, and its row count is the
-        # EXACT node count for the broadcast decision — the old bound
-        # (2 * n_edges) overestimated nodes by orders of magnitude on
-        # dense graphs and pushed the sf0.1 co-purchase orientation
-        # (20k nodes, 1.2M edges) past the byte cap into a sort-merge
-        # shuffle of the edge list (and, post-AQE-coalescing, a
-        # 1-partition oriented RDD that serialized everything
-        # downstream: 5.3 s vs 1.5 s for the intersect stage).
-        deg = (
-            edges.select(F.explode(F.array("u", "v")).alias("n"))
-            .groupBy("n")
-            .agg(F.count("*").alias("d"))
-            .localCheckpoint(eager=True)
+    edges = (
+        edges.join(du, "u")
+        .join(dv, "v")
+        .select(
+            F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("u"),
+            F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("v"),
         )
-        n_nodes = deg.count()
-        du = deg.select(F.col("n").alias("u"), F.col("d").alias("__du"))
-        dv = deg.select(F.col("n").alias("v"), F.col("d").alias("__dv"))
-        # broadcast BOTH orientation joins when the (node, degree)
-        # table fits the byte cap, so the oriented list is produced
-        # map-side over the checkpointed edges. Past the cap the joins
-        # shuffle: the correct 100 TB path.
-        if fits(n_nodes):
-            du, dv = F.broadcast(du), F.broadcast(dv)
-        lower_first = (F.col("__du") < F.col("__dv")) | (
-            (F.col("__du") == F.col("__dv")) & (F.col("u") < F.col("v"))
-        )
-        edges = (
-            edges.join(du, "u")
-            .join(dv, "v")
-            .select(
-                F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("u"),
-                F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("v"),
-            )
-            # re-materialize: the oriented list feeds the wedge/probe
-            # branches below. A u-partitioned CACHE (not a checkpoint,
-            # which loses partitioning) lets BOTH adjacency
-            # collect_list aggregations run in place — two exchanges
-            # gone for the price of this one (r7 second pass)
-            .repartition(F.col("u"))
-            .cache()
-        )
-    # Two physical strategies, chosen by the SAME byte-capped broadcast
-    # decision as before (disabled when autoBroadcastJoinThreshold=-1):
+        # re-materialize: the oriented list feeds the wedge/probe
+        # branches below. A u-partitioned CACHE (not a checkpoint,
+        # which loses partitioning) lets BOTH adjacency collect_list
+        # aggregations run in place — two exchanges gone for the price
+        # of this one (r7 second pass)
+        .repartition(F.col("u"))
+        .cache()
+    )
+    # Two physical strategies, chosen by the same byte-capped gate:
     #
     # * broadcastable edge list -> ADJACENCY-INTERSECT: build each
     #   node's out-neighborhood array once (total payload = n_edges
@@ -518,7 +465,7 @@ def triangle_counts(
     #   exchange.
     # * past the cap -> the shuffled wedge join (the 100 TB path —
     #   wedges partition by the closing key, AQE handles skew).
-    if fits(n_edges):
+    if _fits(spark, n_edges):
         adj = edges.groupBy("u").agg(F.collect_list("v").alias("__nb"))
         # the aliased plans do NOT dedupe into a ReusedExchange (alias-
         # scoped expr ids defeat canonicalized reuse) — measured r7:
@@ -526,7 +473,7 @@ def triangle_counts(
         # stage, and that is still FASTER than caching the array-heavy
         # adjacency rows once (interleaved A/B 2.98 vs 3.08 s: the
         # cache's extra materialization costs more than the duplicate
-        # agg saves). Both builds stay byte-capped by fits(n_edges).
+        # agg saves). Both builds stay byte-capped by the n_edges gate.
         au, av = adj.alias("au"), adj.alias("av")
         tri = (
             edges.alias("e")
@@ -617,40 +564,32 @@ def bfs_hops(
     return visited
 
 
-def label_propagation(
-    edges: DataFrame | None = None,
-    n_iter: int = 3,
-    sym_edges: DataFrame | None = None,
-) -> DataFrame:
+def label_propagation(edges: DataFrame, n_iter: int = 3) -> DataFrame:
     """Community detection via SYNCHRONOUS label propagation over an
-    undirected edge list (u, v), canonical or not: `n_iter` fixed
-    rounds, label(v) starts as v, and each round every node adopts the
-    most frequent label among its neighbors with ties broken toward
-    the SMALLEST label — fully deterministic (no RNG, no asynchronous
-    order-dependence), so a SQL engine replays every round with an
-    unrolled CTE (count → row_number argmax), the pagerank contract.
+    undirected graph given as a directed (s, d) edge MULTISET whose
+    DISTINCT set is the symmetrized graph (both directions of every
+    edge, duplicates allowed): `n_iter` fixed rounds, label(v) starts
+    as v, and each round every node adopts the most frequent label
+    among its neighbors with ties broken toward the SMALLEST label —
+    fully deterministic (no RNG, no asynchronous order-dependence), so
+    a SQL engine replays every round with an unrolled CTE (count →
+    row_number argmax), the pagerank contract.
 
     Scale shape per round: one equi-join of the (node, label) frame
     against the symmetrized edge list (narrow labels side — broadcast
     when small, shuffle-hash at scale), one (dst, label) map-side-
     combined count, one per-dst ranking window (bounded: at most
-    #distinct-neighbor-labels rows per node). The symmetrized edge
-    list is produced by ONE explode (both directions per input row —
-    the unionAll rule) and cached once, partitioned on the aggregation
-    key so broadcast rounds run exchange-free; iterations sever their
-    label frame each round (iterative-lineage rule). Fixed
+    #distinct-neighbor-labels rows per node). The edge multiset is
+    cached once, partitioned on the aggregation key d, and deduplicated
+    IN PLACE on that cache (hashpartitioning(d) satisfies the (s, d)
+    dedup's clustering), so callers that fan out both directions
+    cheaply (the co-purchase basket explode) pay no separate
+    corpus-wide distinct exchange (A/B best-of-4 3.32 -> 2.61 s at
+    sf0.1) and broadcast rounds run exchange-free; iterations sever
+    their label frame each round (iterative-lineage rule). Fixed
     iteration count, no driver-side convergence polling: at 100 TB the
     round count is the budget knob, and synchronous LPA's known
     oscillation modes are bounded by it.
-
-    `sym_edges` (mutually exclusive with `edges`): a directed (s, d)
-    edge MULTISET whose DISTINCT set is the symmetrized graph —
-    callers that can fan out both directions cheaply (e.g. the
-    co-purchase basket explode) pass it so the dedup rides the
-    d-partitioned cache IN PLACE (hashpartitioning(d) satisfies the
-    (s, d) dedup's clustering) instead of paying a separate
-    corpus-wide distinct exchange before the symmetrize (A/B
-    best-of-4 3.32 -> 2.61 s at sf0.1).
     """
     # CACHE, not localCheckpoint: an InMemoryRelation PRESERVES its
     # child's outputPartitioning (a checkpointed LogicalRDD reports
@@ -662,33 +601,12 @@ def label_propagation(
     # the per-node ranking window — one in-place sort per round is all
     # that remains (guide §2.4; interleaved A/B best-of-4 4.76 ->
     # 3.74 s at sf0.1).
-    if (edges is None) == (sym_edges is None):
-        raise ValueError(
-            "label_propagation takes exactly one of edges / sym_edges"
-        )
-    if sym_edges is not None:
-        # multiset input: dedup runs IN PLACE on the d-partitioned
-        # cache (no extra exchange — see docstring)
-        sym = (
-            sym_edges.select("s", "d")
-            .repartition(F.col("d"))
-            .dropDuplicates(["s", "d"])
-            .cache()
-        )
-    else:
-        sym = (
-            edges.select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("u").alias("s"), F.col("v").alias("d")),
-                        F.struct(F.col("v").alias("s"), F.col("u").alias("d")),
-                    )
-                ).alias("e")
-            )
-            .select(F.col("e.s").alias("s"), F.col("e.d").alias("d"))
-            .repartition(F.col("d"))
-            .cache()
-        )
+    sym = (
+        edges.select("s", "d")
+        .repartition(F.col("d"))
+        .dropDuplicates(["s", "d"])
+        .cache()
+    )
     # the node set from the PARTITIONING side d (symmetric graph:
     # distinct d == distinct s) — the distinct runs in place on the
     # cache instead of paying an exchange on s
@@ -698,8 +616,6 @@ def label_propagation(
         .select("node", F.col("node").alias("label"))
         .localCheckpoint(eager=True)
     )
-    from pyspark.sql import Window
-
     # Cached/checkpointed label frames carry no size statistics, so
     # without a hint every round sort-merge-joins — re-SORTING the
     # whole symmetrized edge list per round. The (node, label) table
@@ -712,18 +628,13 @@ def label_propagation(
     # `s` (one extra cache-to-cache pass, amortized across the rounds
     # it saves from re-shuffling) and the sort-merge rounds are the
     # correct 100 TB plan, unchanged from round start.
-    n_nodes = labels.count()
-    conf_thr = _parse_size_bytes(
-        sym.sparkSession.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold", "10485760"
-        )
-    )
-    label_fits = (
-        conf_thr > 0
-        and n_nodes * _EDGE_ROW_BYTES <= _CLOSING_BROADCAST_MAX_BYTES
-    )
+    label_fits = _fits(sym.sparkSession, labels.count())
     if not label_fits:
+        # materialize the s-partitioned copy BEFORE releasing the
+        # d-partitioned one, or the first round rebuilds the whole
+        # symmetrized edge set from source
         sym2 = sym.repartition(F.col("s")).cache()
+        sym2.count()
         sym.unpersist(False)
         sym = sym2
     w = Window.partitionBy("node").orderBy(

@@ -157,11 +157,15 @@ def _pip_refine(
     return pd.Series(out)
 
 
+# exploded polygon covering-cell rows at or below which pip_join
+# broadcasts the polygon side
+_PIP_BROADCAST_MAX_CELLS = 100_000
+
+
 def pip_join(
     points: DataFrame,
     polygons: DataFrame,
     res: int = 7,
-    broadcast_threshold: int = 100_000,
     point_cell: str | None = None,
     force_broadcast: bool | None = None,
 ) -> DataFrame:
@@ -177,10 +181,11 @@ def pip_join(
     (split_seam_polygons / geo.split_antimeridian), so coverage and
     containment hold on both sides of the seam.
 
-    Physical strategy: polygon covering cells are counted; below
-    `broadcast_threshold` exploded rows the polygon side is broadcast
-    (point table untouched by shuffle — the 100 TB plan), otherwise a
-    shuffled equi-join on cell with AQE skew splitting.
+    Physical strategy: polygon covering cells are counted; up to
+    _PIP_BROADCAST_MAX_CELLS exploded rows the polygon side is
+    broadcast (point table untouched by shuffle — the 100 TB plan),
+    otherwise a shuffled equi-join on cell with AQE skew splitting.
+    `force_broadcast=True/False` picks the strategy without the count.
     """
     # cache the exploded covering cells: the count() below and the join
     # both consume them — without the cache the polyfill UDF runs twice
@@ -200,7 +205,7 @@ def pip_join(
     # high parallelism these sync points are what Amdahl eats first)
     if force_broadcast is None:
         n_poly_cells = pcells.count()  # tiny aggregate; drives the plan choice
-        do_broadcast = n_poly_cells <= broadcast_threshold
+        do_broadcast = n_poly_cells <= _PIP_BROADCAST_MAX_CELLS
     else:
         do_broadcast = force_broadcast
     # split the build side: interior ("full") cells join WITHOUT the
@@ -242,7 +247,6 @@ def knn_join(
     max_rounds: int = 4,
     id_col: str = "id",
     qid_col: str = "qid",
-    auto_ring: bool = True,
 ) -> DataFrame:
     """k nearest points for each query row, exact.
 
@@ -281,37 +285,36 @@ def knn_join(
     )
     results = None
     ring = 1
-    if auto_ring:
-        # density-aware starting ring: one cheap agg over the point
-        # side estimates points per OCCUPIED cell; pick the smallest
-        # ring whose (2r+1)^2 cells are expected to hold ~2k points,
-        # skipping escalation rounds that predictably come up short
-        # (clustered data makes the occupied-cell average the right
-        # density, not the whole-world one). The statistic is a
-        # PLAN-CHOICE input over an immutable point plan (the ring
-        # schedule only changes how the exact answer is found — the
-        # k-th-distance bound proves exactness at every ring), so it
-        # is memoized per (applicationId, semanticHash) like the
-        # partition probe: the ~0.3 s driver job runs once per
-        # distinct point plan, never per invocation. No results are
-        # cached.
-        sc = pts.sparkSession.sparkContext
-        key = (sc.applicationId, pts.semanticHash())
-        st = _DENSITY_MEMO.get(key)
-        if st is None:
-            stats = pts.agg(
-                F.count("*").alias("n"),
-                F.approx_count_distinct("__cell", 0.05).alias("c"),
-            ).first()
-            st = (stats.n or 0, stats.c or 0)
-            _DENSITY_MEMO[key] = st
-        if st[0] and st[1]:
-            per_cell = max(st[0] / st[1], 1e-9)
-            import math
+    # density-aware starting ring: one cheap agg over the point
+    # side estimates points per OCCUPIED cell; pick the smallest
+    # ring whose (2r+1)^2 cells are expected to hold ~2k points,
+    # skipping escalation rounds that predictably come up short
+    # (clustered data makes the occupied-cell average the right
+    # density, not the whole-world one). The statistic is a
+    # PLAN-CHOICE input over an immutable point plan (the ring
+    # schedule only changes how the exact answer is found — the
+    # k-th-distance bound proves exactness at every ring), so it
+    # is memoized per (applicationId, semanticHash) like the
+    # partition probe: the ~0.3 s driver job runs once per
+    # distinct point plan, never per invocation. No results are
+    # cached.
+    sc = pts.sparkSession.sparkContext
+    key = (sc.applicationId, pts.semanticHash())
+    st = _DENSITY_MEMO.get(key)
+    if st is None:
+        stats = pts.agg(
+            F.count("*").alias("n"),
+            F.approx_count_distinct("__cell", 0.05).alias("c"),
+        ).first()
+        st = (stats.n or 0, stats.c or 0)
+        _DENSITY_MEMO[key] = st
+    if st[0] and st[1]:
+        per_cell = max(st[0] / st[1], 1e-9)
+        import math
 
-            ring = max(1, math.ceil((math.sqrt(2 * k / per_cell) - 1) / 2))
-            # never start beyond what max_rounds' doubling could reach
-            ring = min(ring, 2 ** (max_rounds - 1))
+        ring = max(1, math.ceil((math.sqrt(2 * k / per_cell) - 1) / 2))
+        # never start beyond what max_rounds' doubling could reach
+        ring = min(ring, 2 ** (max_rounds - 1))
     for _ in range(max_rounds):
         cand = (
             remaining.withColumn(

@@ -2392,15 +2392,16 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_pip_join_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PIP join's SHUFFLE physical path (broadcast_threshold=0
-    forces the sort-merge/AQE-skew plan used when the polygon side is
-    too big to broadcast) — must produce byte-identical results to the
-    broadcast path (same oracle as pip_join_boxes)."""
+    """The PIP join's SHUFFLE path: force_broadcast=False drops the
+    polygon-side broadcast hints (the plan used when the polygon side
+    is too big to broadcast; at sf0.01 AQE may still turn the small
+    joins into broadcasts at runtime) — must produce byte-identical
+    results to the broadcast path (same oracle as pip_join_boxes)."""
     docs = _t(spark, sf_dir, "documents")
     lat, lon = cells.point_exprs("doc_id")
     pts = docs.select("doc_id", lat, lon)
     return spatial.pip_join(
-        pts, _box_polygons(spark), res=6, broadcast_threshold=0
+        pts, _box_polygons(spark), res=6, force_broadcast=False
     ).select("doc_id", "poly_id")
 
 
@@ -4275,28 +4276,25 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _copurchase_edges(
-    li: DataFrame, directed: bool = False, dedup: bool = True
-) -> DataFrame:
-    """Distinct co-purchase edges (parts sharing an order) from a
+def _copurchase_edges(li: DataFrame, directed: bool = False) -> DataFrame:
+    """Co-purchase edge MULTISET (parts sharing an order) from a
     (l_orderkey, l_partkey) projection — canonical ascending (u, v)
-    pairs, or both directions with `directed=True`.
+    pairs, or both directions with `directed=True`; a pair appears
+    once per order that shares it.
 
     ONE lineitem scan + one groupBy(order) shuffle + a map-side pair
     explode, instead of the old self-join (two scans, both shuffled on
-    the order key) — same distinct edge set, measured 2.0 s -> 1.25 s
-    at sf0.1 (guide §2.3: shuffle fewer bytes / §2.4 share the
-    exchange). Orders are bounded baskets (TPC-H: <= 7 lines), so the
-    per-order pair fan-out is bounded and skew-free at any corpus
-    size.
+    the order key) — measured 2.0 s -> 1.25 s at sf0.1 (guide §2.3:
+    shuffle fewer bytes / §2.4 share the exchange). Orders are bounded
+    baskets (TPC-H: <= 7 lines), so the per-order pair fan-out is
+    bounded and skew-free at any corpus size.
 
-    `dedup=False` skips the terminal `.distinct()` — its corpus-wide
-    exchange is the single largest stage of the build — for consumers
-    whose semantics are invariant under edge MULTIPLICITY (BFS
-    reachability: the per-hop frontier `.distinct()` dedupes anyway;
-    r7 A/B on bfs_hops best-of-4 3.21 -> 2.38 s, identical rows).
-    Triangle counts and LPA vote tallies are NOT multiplicity-
-    invariant — they keep the default."""
+    No terminal `.distinct()`: its corpus-wide exchange was the single
+    largest stage of the build. Every consumer either is invariant
+    under edge multiplicity (BFS reachability: the per-hop frontier
+    `.distinct()` dedupes anyway; r7 A/B on bfs_hops best-of-4 3.21 ->
+    2.38 s, identical rows) or dedupes in place on its own partitioned
+    cache (graph.triangle_counts, graph.label_propagation)."""
     parts = li.groupBy("l_orderkey").agg(
         F.collect_set("l_partkey").alias("__ps")
     )
@@ -4305,8 +4303,7 @@ def _copurchase_edges(
         second = F.filter("__ps", lambda x: x != F.col("u"))
     else:
         second = F.filter("__ps", lambda x: x > F.col("u"))
-    out = first.select("u", F.explode(second).alias("v"))
-    return out.distinct() if dedup else out
+    return first.select("u", F.explode(second).alias("v"))
 
 
 @register(
@@ -4343,20 +4340,11 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     # canonical-pair MULTISET straight from the basket explode: the
-    # operator dedupes it in place on its u-partitioned cache (the
-    # LPA sym_edges pattern) instead of paying the distinct exchange
-    # here (A/B best-of-4 3.29 -> 2.56 s, identical top-50)
-    parts = li.groupBy("l_orderkey").agg(
-        F.collect_set("l_partkey").alias("__ps")
-    )
-    pairs = parts.select(
-        F.explode("__ps").alias("u"), F.col("__ps")
-    ).select(
-        "u",
-        F.explode(F.filter("__ps", lambda x: x > F.col("u"))).alias("v"),
-    )
+    # operator dedupes it in place on its u-partitioned cache instead
+    # of paying the distinct exchange here (A/B best-of-4 3.29 ->
+    # 2.56 s, identical top-50)
     return (
-        graph.triangle_counts(edge_multiset=pairs)
+        graph.triangle_counts(_copurchase_edges(li))
         .orderBy(F.desc("n_tri"), "node")
         .limit(50)
     )
@@ -4829,7 +4817,7 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     from inputosm_spark.operators import graph
 
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    edges = _copurchase_edges(li, directed=True, dedup=False).select(
+    edges = _copurchase_edges(li, directed=True).select(
         F.col("u").alias("src"), F.col("v").alias("dst")
     )
     sources = (
@@ -5053,24 +5041,17 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from inputosm_spark.operators import graph
 
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    # The basket explode emits the DIRECTED pair multiset (u, x != u)
-    # directly — that IS the symmetrized edge multiset, so LPA's
-    # sym_edges path dedupes it in place on the d-partitioned cache
+    # The directed basket explode (u, x != u) IS the symmetrized edge
+    # multiset, so LPA dedupes it in place on its d-partitioned cache
     # instead of paying the canonical-edge distinct exchange AND the
-    # symmetrize fan-out (A/B best-of-4 vs the _copurchase_edges form:
-    # 3.32 -> 2.61 s, all reps better, identical labels). The early-r7
-    # row-order sensitivity is gone: the zero-exchange rounds read a
-    # cache whose layout the repartition fixes.
-    parts = li.groupBy("l_orderkey").agg(
-        F.collect_set("l_partkey").alias("__ps")
+    # symmetrize fan-out (A/B best-of-4 vs the distinct canonical
+    # form: 3.32 -> 2.61 s, all reps better, identical labels). The
+    # early-r7 row-order sensitivity is gone: the zero-exchange rounds
+    # read a cache whose layout the repartition fixes.
+    sym = _copurchase_edges(li, directed=True).select(
+        F.col("u").alias("s"), F.col("v").alias("d")
     )
-    sym_raw = parts.select(
-        F.explode("__ps").alias("s"), F.col("__ps")
-    ).select(
-        "s",
-        F.explode(F.filter("__ps", lambda x: x != F.col("s"))).alias("d"),
-    )
-    labels = graph.label_propagation(sym_edges=sym_raw, n_iter=3)
+    labels = graph.label_propagation(sym, n_iter=3)
     # labels is checkpoint-severed (cheap RDD scan), so the size
     # rollup branch re-reads the materialized rounds, not the loop
     sizes = labels.groupBy("label").agg(

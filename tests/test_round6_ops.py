@@ -1,12 +1,11 @@
-"""Round-6 gates: HLL error envelope, degree-oriented triangles,
-hermetic PBF roundtrip, shared LSH band format."""
+"""Round-6 gates: HLL error envelope, hermetic PBF roundtrip, shared
+LSH band format."""
 
 from __future__ import annotations
 
 import glob
 import os
 import tempfile
-from itertools import combinations
 
 import pytest
 from pyspark.sql import functions as F
@@ -38,46 +37,6 @@ def test_approx_distinct_cells_error_bound(spark, sf_dir):
             f"cell3={cell3}: HLL estimate {est} outside 5x-rsd "
             f"envelope of exact {true}"
         )
-
-
-def _brute_triangles(edges):
-    es = set(edges)
-    want: dict[int, int] = {}
-    nodes = sorted({n for e in edges for n in e})
-    for a, b, c in combinations(nodes, 3):
-        if (a, b) in es and (b, c) in es and (a, c) in es:
-            for n in (a, b, c):
-                want[n] = want.get(n, 0) + 1
-    return want
-
-
-def test_triangle_counts_hub_skew_orientations_agree(spark):
-    """r5 verdict #5: a hub node of degree ~n. Under id-order
-    orientation the hub (id 0) would own ~n^2 wedges; degree
-    orientation points every star edge AT the hub (its out-degree
-    drops to ~0) so wedge fan-out is bounded by the arboricity. The
-    triangle SET must be identical under both orientations and match
-    brute force."""
-    from inputosm_spark.operators import graph
-
-    n = 60
-    edges = sorted(
-        {(0, i) for i in range(1, n)}
-        | {(1, 2), (3, 4), (5, 6), (10, 11), (11, 12), (20, 21)}
-    )
-    df = spark.createDataFrame(edges, "u long, v long")
-    by_deg = {
-        r.node: r.n_tri
-        for r in graph.triangle_counts(df, degree_orient=True).collect()
-    }
-    by_id = {
-        r.node: r.n_tri
-        for r in graph.triangle_counts(df, degree_orient=False).collect()
-    }
-    want = _brute_triangles(edges)
-    assert by_deg == want
-    assert by_id == want
-    assert want[0] >= 6  # the hub really is in many triangles
 
 
 def test_pbf_roundtrip_hermetic(spark, sf_dir):
@@ -277,43 +236,6 @@ def test_prefix_filter_equals_bruteforce(spark):
     assert got == want and len(want) >= 1
 
 
-def test_bfs_hops_matches_bruteforce(spark):
-    """bfs_hops on a hand graph (directed, with an unreachable island
-    and a node at hops > max_hops): every (node, hops) row must equal
-    the brute-force min-hop closure truncated at max_hops."""
-    from inputosm_spark.operators import graph
-
-    edges = [
-        (1, 2), (2, 3), (3, 4), (4, 5),   # chain: 5 is 4 hops from 1
-        (1, 6), (6, 3),                    # shortcut: 3 via 2 paths
-        (7, 8),                            # island, unreachable
-        (2, 1),                            # back edge (cycle)
-    ]
-    ed = spark.createDataFrame(edges, "src long, dst long")
-    src = spark.createDataFrame([(1,), (10,)], "node long")  # 10: no out-edges
-    got = {
-        (r.node, r.hops)
-        for r in graph.bfs_hops(ed, src, max_hops=3).collect()
-    }
-    # brute force
-    adj = {}
-    for s, d in edges:
-        adj.setdefault(s, []).append(d)
-    dist = {1: 0, 10: 0}
-    frontier = [1, 10]
-    for h in range(1, 4):
-        nxt = []
-        for n in frontier:
-            for d in adj.get(n, []):
-                if d not in dist:
-                    dist[d] = h
-                    nxt.append(d)
-        frontier = nxt
-    assert got == set(dist.items())
-    assert (5, 3) not in got and 5 not in {n for n, _ in got}  # beyond max
-    assert (7, 1) not in got  # island never reached
-
-
 def test_approx_event_percentiles_envelope(spark, sf_dir):
     """Twin gate for the rows-only percentile sketch: with accuracy
     10000 the Greenwald-Khanna sketch's rank error is <= n/10000, so
@@ -397,46 +319,6 @@ def test_colocation_pairs_bruteforce_and_cap(spark):
     want[(1, 3)] = 2
     want[(2, 3)] = 2
     assert got_nocap == want
-
-
-def test_label_propagation_matches_python_reference(spark):
-    """Synchronous LPA vs a brute-force Python replay on a barbell
-    graph (two K4 cliques joined by one bridge): labels after each
-    fixed round must match exactly (deterministic min tie-break)."""
-    from inputosm_spark.operators import graph
-
-    k4a = [(i, j) for i in range(4) for j in range(i + 1, 4)]
-    k4b = [(i, j) for i in range(10, 14) for j in range(i + 1, 14)]
-    edges = k4a + k4b + [(3, 10)]
-    adj: dict[int, list[int]] = {}
-    for u, v in edges:
-        adj.setdefault(u, []).append(v)
-        adj.setdefault(v, []).append(u)
-
-    def ref_lpa(n_iter):
-        lab = {n: n for n in adj}
-        for _ in range(n_iter):
-            nxt = {}
-            for n, nbrs in adj.items():
-                cnt: dict[int, int] = {}
-                for m in nbrs:
-                    cnt[lab[m]] = cnt.get(lab[m], 0) + 1
-                best = sorted(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[0][0]
-                nxt[n] = best
-            lab = nxt
-        return lab
-
-    df = spark.createDataFrame(edges, "u long, v long")
-    for it in (1, 3):
-        got = {
-            r.node: r.label
-            for r in graph.label_propagation(df, n_iter=it).collect()
-        }
-        assert got == ref_lpa(it), f"n_iter={it}"
-    # after 3 rounds the two cliques are two communities
-    final = ref_lpa(3)
-    assert len({final[n] for n in range(4)}) == 1
-    assert len({final[n] for n in range(10, 14)}) == 1
 
 
 def test_areal_interpolation_conservation_and_guards(spark):

@@ -47,8 +47,8 @@ def test_pip_join_exact_vs_bruteforce(spark, points, points_np):
 
 def test_pip_join_broadcast_vs_shuffle_same_result(spark, points):
     polys = synth_polygons(spark)
-    a = spatial.pip_join(points, polys, res=6, broadcast_threshold=10**9)
-    b = spatial.pip_join(points, polys, res=6, broadcast_threshold=0)
+    a = spatial.pip_join(points, polys, res=6, force_broadcast=True)
+    b = spatial.pip_join(points, polys, res=6, force_broadcast=False)
     rows_a = {(r.id, r.poly_id) for r in a.select("id", "poly_id").collect()}
     rows_b = {(r.id, r.poly_id) for r in b.select("id", "poly_id").collect()}
     assert rows_a == rows_b
