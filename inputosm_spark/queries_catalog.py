@@ -43,102 +43,20 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-# The driver's correctness gate checks the FIRST ~50 queries() entries
-# per round; rounds 2-3 re-checked the same 50 while every newer entry
-# went unmeasured by the hard signal (round-3 verdict directive #2).
-# Names listed here are emitted FIRST — keep it as: queries added or
-# materially changed in recent rounds, then the entries no
-# CORRECTNESS_r*.json has ever covered; long-stable classics rotate to
-# the back (they remain covered by scripts/check_oracles.py, which
-# always runs the full set).
+# The driver's correctness gate hash-checks only the FIRST ~50
+# queries() entries per round, so registration order decides what it
+# sees. This list moves the standing driver reds to the front: the four
+# pbf_roundtrip oracles (fixed by CASTing DuckDB's HUGEINT sums to
+# BIGINT, awaiting their first green driver row) and the two rows-only
+# sketches. Every other entry keeps registration order;
+# scripts/check_oracles.py always checks the full set.
 _DRIVER_WINDOW_FIRST = [
-    # round-6: new or behavior-changed this round
-    "label_propagation",    # new: synchronous LPA communities
-    "areal_interpolation",  # new: area-weighted raster allocation
-    "rolling_active_users",  # new: sliding-window distinct
-    "scd2_history",         # new: SCD type-2 validity intervals
-    "media_dedup",          # new: content-addressable media dedup
-    "pip_anti_join",        # new: spatial anti-join
-    "pca_component",        # new: exact fixed-point power iteration
-    "daily_type_pivot",     # new: PIVOT surface
-    "value_deciles",        # new: ntile equi-depth histogram
-    "grouping_sets_cells",  # new: explicit GROUPING SETS + grouping_id
-    "melt_doc_metrics",     # new: unpivot/melt
-    "bfs_hops",             # new: bounded multi-source BFS
-    "od_flows",             # new: OD cell-transition matrix
-    "colocation_pairs",     # new: contact-graph co-location join
-    "tpch_q4_priority",     # new: EXISTS -> LEFT SEMI classic
-    "approx_event_percentiles",  # new rows-only sketch (twin-gated)
-    "dbscan_clusters",      # new: grid-partitioned DBSCAN
-    "staypoints",           # new: trajectory stay-point runs
-    "bloom_prune_join",     # new: deterministic bloom join pruning
-    "jaccard_prefix_pairs",  # new: exact all-pairs similarity join
-    "pbf_roundtrip",        # hermetic rewrite (mkdtemp + eager
-                            # checkpoint + rmtree) — needs its first
-                            # green driver row after two reds
-    "pbf_roundtrip_ids",    # new: per-axis debug twins — if the full
-    "pbf_roundtrip_coords",  # roundtrip reds again, the red/green
-    "pbf_roundtrip_ts",      # pattern across these four bisects the
-    "pbf_roundtrip_tags",    # drifting wire column in the same round
-    "distinct_cells_exact",  # new: exact twin bounding the HLL sketch
-    "approx_distinct_cells",  # rows-only; now pinned by the twin
-    "triangle_count",       # degree-ordered orientation (r5 verdict #5)
-    "incremental_dedup",    # in-plan disjointness guard + shared bands
-    "lsh_candidate_pairs",  # banding now via minhash_bands explode
-    "lsh_candidate_pairs_capped",
-    "ngram_jaccard_pairs",  # downstream of the banding rewrite
-    "dedup_clusters",
-    "dedup_keep_best",
-    "pagerank",             # 2^53 exactness guards in-plan
-    "priority_sample",      # overflow-safe guard predicate
-    # not driver-checked since r4 or earlier (CORRECTNESS_r05 gap set)
-    "count_all",
-    "statistics",
-    "lat_stat",
-    "tag_filter",
-    "semi_lookup_join",
-    "ordered_assembly",
-    "span_explode",
-    "cell_assign",
-    "cell_rollup",
-    "pip_join_boxes",
-    "knn_join",
-    "tile_counts",
-    "kring_expand",
-    "salted_cell_count",
-    "dedup_keep_first",
-    "simhash",
-    "token_stats",
-    "lang_id",
-    "fingerprint",
-    "embedding_lsh_sig",
-    "cdc_latest_state",
-    "sessionize",
-    "tpch_q1_pricing",
-    "tpch_q3_top_orders",
-    "tpch_q5_region_volume",
-    "flagship",
-    "media_edges",
-    "span_roundtrip",
-    "wkt_export",
-    "except_users",
-    "rollup_cells",
-    "cube_cells",
-    "topk_dense_cells",
-    "quality_score",
-    "lineage_buckets",
-    "json_props_agg",
-    "raster_roundtrip",
-    "media_features",
-    "media_frames",
-    "hash_split",
-    "stratified_sample",
-    "intersect_users",
-    "training_pipeline",
-    "pip_join_shuffle",
-    "tfidf_top_terms",
-    "zorder_cells",
-    "repetition_score",
+    "pbf_roundtrip",
+    "pbf_roundtrip_ids",
+    "pbf_roundtrip_coords",
+    "pbf_roundtrip_tags",
+    "approx_distinct_cells",
+    "approx_event_percentiles",
 ]
 
 
@@ -2860,9 +2778,9 @@ _PBF_RT_NODES_SQL = f"""
     WITH nodes AS ({_PBF_RT_NODES_SQL})
     SELECT CAST(id % 7 AS BIGINT) AS bucket,
            count(*) AS n,
-           sum(raw_lat) AS sum_lat,
-           sum(raw_lon) AS sum_lon,
-           sum(changeset) AS sum_cs,
+           CAST(sum(raw_lat) AS BIGINT) AS sum_lat,
+           CAST(sum(raw_lon) AS BIGINT) AS sum_lon,
+           CAST(sum(changeset) AS BIGINT) AS sum_cs,
            CAST(sum(ts_s) AS BIGINT) AS sum_ts_s,
            max(id) AS max_id,
            count(DISTINCT clerk) AS n_clerks
@@ -2933,7 +2851,7 @@ _PBF_RT_SUBSET_SQL = f"""
     oracle=f"""
     WITH sub AS ({_PBF_RT_SUBSET_SQL})
     SELECT CAST(id % 7 AS BIGINT) AS bucket,
-           count(*) AS n, sum(id) AS sum_id, max(id) AS max_id
+           count(*) AS n, CAST(sum(id) AS BIGINT) AS sum_id, max(id) AS max_id
     FROM sub GROUP BY 1
     """,
 )
@@ -2956,7 +2874,8 @@ def q_pbf_roundtrip_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH sub AS ({_PBF_RT_SUBSET_SQL})
     SELECT CAST(id % 7 AS BIGINT) AS bucket,
-           sum(raw_lat) AS sum_lat, sum(raw_lon) AS sum_lon
+           CAST(sum(raw_lat) AS BIGINT) AS sum_lat,
+           CAST(sum(raw_lon) AS BIGINT) AS sum_lon
     FROM sub GROUP BY 1
     """,
 )
@@ -2996,7 +2915,7 @@ def q_pbf_roundtrip_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH sub AS ({_PBF_RT_SUBSET_SQL})
     SELECT CAST(id % 7 AS BIGINT) AS bucket,
-           sum(changeset) AS sum_cs,
+           CAST(sum(changeset) AS BIGINT) AS sum_cs,
            count(DISTINCT clerk) AS n_clerks
     FROM sub GROUP BY 1
     """,

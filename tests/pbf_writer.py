@@ -36,7 +36,9 @@ def lenf(f: int, payload: bytes) -> bytes:
 
 
 def varf(f: int, v: int) -> bytes:
-    return key(f, 0) + vu(v)
+    """Varint field of a (u)int32/int64 type: negatives go on the wire
+    as 10-byte two's complement, per the protobuf spec."""
+    return key(f, 0) + vu(v & (2**64 - 1))
 
 
 def packed(f: int, vals, enc) -> bytes:

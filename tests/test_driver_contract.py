@@ -33,7 +33,10 @@ def test_every_query_runs_and_returns_rows(spark, sf_dir):
 
 def test_every_oracle_parses_in_duckdb(sf_dir):
     """EXPLAIN every oracle against the real views — malformed SQL or a
-    schema drift fails here in seconds, not in the driver round."""
+    schema drift fails here in seconds, not in the driver round. No
+    output column may bind as HUGEINT (DuckDB's type for a bare sum()
+    over BIGINT): pandas reads it as float64, whose printed hash form
+    drifts from Spark's BIGINT once a sum passes 9 digits."""
     m = _entry()
     con = duckdb.connect()
     tables = ("region nation customer supplier part orders lineitem "
@@ -42,13 +45,17 @@ def test_every_oracle_parses_in_duckdb(sf_dir):
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-    bad = []
+    bad, hugeint = [], []
     for name, sql in m.oracle_sql().items():
         try:
             con.execute(f"EXPLAIN {sql}")
         except Exception as e:  # noqa: BLE001
             bad.append((name, str(e)[:120]))
+            continue
+        if "HUGEINT" in map(str, con.sql(sql).types):
+            hugeint.append(name)
     assert not bad, bad
+    assert not hugeint, hugeint
 
 
 def test_entry_returns_flagship(spark):

@@ -437,3 +437,38 @@ def test_input_blob_mem_header_roundtrip_and_validation():
 def test_input_blob_mem_rejects_unknown_type():
     with pytest.raises(ValueError, match="unknown blob_type"):
         pbf.input_blob_mem(b"\x0a\x00", blob_type="SomethingElse")
+
+
+def _decode_block(groups_builder):
+    (_, data), = pbf._iter_blob_frames(
+        W.blob(W.primitive_block(groups_builder), "OSMData")
+    )
+    return pbf.input_blob_mem(data).to_pylist()
+
+
+def test_negative_way_and_relation_ids_decode():
+    """Way.id and Relation.id are int64, not sint64: a negative id is a
+    10-byte two's-complement varint (>= 2^63 as unsigned) and must
+    decode back to the negative id."""
+    rows = _decode_block(lambda st: [
+        W.way_group(st, dict(GOLDEN_WAY, id=-5)),
+        W.relation_group(st, dict(GOLDEN_REL, id=-(2**63))),
+    ])
+    assert [(r["kind"], r["id"]) for r in rows] == [
+        ("way", -5), ("relation", -(2**63)),
+    ]
+
+
+def test_blob_with_all_packed_refs_and_members_empty():
+    """Every way without refs and every relation without members in a
+    blob: the per-chunk delta decode sees zero values in total."""
+    rows = _decode_block(lambda st: [
+        W.way_group(st, dict(GOLDEN_WAY, node_refs=[])),
+        W.way_group(st, dict(GOLDEN_WAY, id=11, node_refs=[])),
+        W.relation_group(st, dict(GOLDEN_REL, members=[])),
+    ])
+    assert [(r["kind"], r["id"], r["node_refs"], r["members"]) for r in rows] == [
+        ("way", 10, [], None), ("way", 11, [], None),
+        ("relation", 20, None, []),
+    ]
+    assert dict(rows[2]["tags"]) == GOLDEN_REL["tags"]
