@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Benchmark harness (driver contract).
+"""Benchmark harness (driver contract) and the repo's one timing loop.
 
 Runs every catalog query (``queries()``) at ``$SPARK_GRAFT_SF_DIR`` (default
 /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
@@ -13,9 +13,16 @@ collect overhead — the same methodology as the reference's integration
 benchmarks (count_all et al. timed end-to-end over the planet file,
 /root/reference/README.md:396-416).
 
-Scaling-efficiency evidence (north_rule: N vs 4N executors) lives in
-``scripts/bench_scaling.py``, which re-invokes this harness at
-local[8] and local[32] and reports throughput at both.
+``python bench.py [query ...]`` runs only the named queries, in that
+order. Without ``$SPARK_GRAFT_CPUS`` the session takes every core;
+``BENCH_REPS`` (default 3) sets the timed reps per query, of which the
+best is reported. For a quiet-host headline number, pin the whole
+process tree: ``taskset -c 0-3 python bench.py flagship cell_assign
+pip_join_boxes knn_join tile_counts salted_cell_count dedup_keep_best``.
+
+``timed`` is the one warm-up + timed-reps loop; the ``scripts/bench_*``
+harnesses call it too. Scaling-efficiency evidence (north_rule: N vs 4N
+executors) lives in ``scripts/bench_scaling.py``.
 """
 
 from __future__ import annotations
@@ -24,9 +31,9 @@ import json
 import os
 import sys
 import time
+from typing import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
 
 def materialize(df) -> int:
     """Run the full plan through the no-op sink; return row count cheaply.
@@ -39,15 +46,39 @@ def materialize(df) -> int:
     return -1
 
 
-def main() -> int:
+def timed(run: Callable[[], object], reps: int) -> list[float]:
+    """One UNTIMED ``run()``, then ``reps`` timed calls; their walls in s.
+
+    The untimed call takes the Python-worker spawn, JIT and shuffle-file
+    page cache. Callers report the minimum: the documented failure
+    mode of a shared host is a single contended minute printing a 9x outlier
+    (round-3 repetition_score read 12.1 s vs a quiet-box 1.31 s), and
+    warm-up + best-of-3 needs all three timed reps to hit contention
+    to lie (BASELINE.md §scaling).
+    """
+    run()
+    walls = []
+    for _ in range(reps):
+        t0 = time.monotonic()
+        run()
+        walls.append(time.monotonic() - t0)
+    return walls
+
+
+def main(argv: list[str] | None = None) -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     import __spark_entry__ as entry_mod
     from inputosm_spark import get_spark
 
-    spark = get_spark(cpus=cpus, app_name=f"inputosm_spark_bench[{cpus}]")
     qs = entry_mod.queries()
+    names = sys.argv[1:] if argv is None else argv
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        raise ValueError(f"unknown queries: {', '.join(unknown)}")
+
+    spark = get_spark(app_name="inputosm_spark_bench")
+    cpus = spark.sparkContext.master[len("local["):-1]
 
     # estimate corpus scale for the docs/sec headline metric
     from inputosm_spark.sources.registry import load_table
@@ -60,25 +91,11 @@ def main() -> int:
     n_reps = int(os.environ.get("BENCH_REPS", "3"))
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
-    # every catalog query, in the catalog's own order
-    for name, fn in qs.items():
+    for name in names or qs:
+        fn = qs[name]
         try:
-            # one UNTIMED warm-up rep per query (Python-worker spawn,
-            # JIT, shuffle-file page cache), then best-of-N timed reps:
-            # this box's documented failure mode is a single contended
-            # minute printing a 9x outlier (round-3 repetition_score
-            # read 12.1 s vs a quiet-box 1.31 s) — best-of-2 with a
-            # timed first rep could not shed it; warm-up + best-of-3
-            # needs all three timed reps to hit contention to lie
-            # (BASELINE.md §scaling)
-            materialize(fn(spark, sf_dir))
-            best = None
-            for _ in range(n_reps):
-                t0 = time.monotonic()
-                materialize(fn(spark, sf_dir))
-                dt = time.monotonic() - t0
-                best = dt if best is None else min(best, dt)
-            timings[name] = round(best, 3)
+            walls = timed(lambda: materialize(fn(spark, sf_dir)), n_reps)
+            timings[name] = round(min(walls), 3)
         except Exception as e:  # one bad query must not kill the round
             errors[name] = f"{type(e).__name__}: {e}"[:200]
 

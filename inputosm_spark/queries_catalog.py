@@ -1719,7 +1719,6 @@ def q_approx_distinct_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CELL3_SQL = cells.cell_id_sql(_LAT_SQL, _LON_SQL, 3)
 _CELL9_SQL = cells.cell_id_sql(_LAT_SQL, _LON_SQL, 9)
 
 
@@ -2310,11 +2309,13 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_pip_join_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PIP join's SHUFFLE path: force_broadcast=False drops the
-    polygon-side broadcast hints (the plan used when the polygon side
-    is too big to broadcast; at sf0.01 AQE may still turn the small
-    joins into broadcasts at runtime) — must produce byte-identical
-    results to the broadcast path (same oracle as pip_join_boxes)."""
+    """The PIP join without broadcast hints: force_broadcast=False
+    drops the polygon-side hints, the plan used when the polygon side is
+    too big to broadcast. The 13 boxes stay under
+    spark.sql.autoBroadcastJoinThreshold, so the static planner still
+    broadcasts them here; the shuffle (SortMergeJoin) path itself is
+    tested at threshold -1 (tests/test_spatial.py). Same oracle as
+    pip_join_boxes."""
     docs = _t(spark, sf_dir, "documents")
     lat, lon = cells.point_exprs("doc_id")
     pts = docs.select("doc_id", lat, lon)

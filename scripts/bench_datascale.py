@@ -2,11 +2,11 @@
 """DATA-size scaling evidence (complement to bench_scaling.py's
 parallelism axis): the same document-only queries at sf0.1 (5k docs)
 and at a synthesized 10x corpus (50k docs — ten deterministic doc_id-
-shifted copies of the sf0.1 documents table, no external data), same
-local[32] session. A scan-shaped or single-shuffle operator should
-grow ~linearly in wall time (ratio ~10 of the per-level BEST walls,
-minus the fixed session/stage overhead that dominates sub-second
-queries); a super-linear ratio exposes an accidental O(n^2) — the
+shifted copies of the sf0.1 documents table, no external data), in one
+local[$SPARK_GRAFT_CPUS] session. A scan-shaped or single-shuffle
+operator should grow ~linearly in wall time (ratio ~10 of the per-level
+BEST walls, minus the fixed session/stage overhead that dominates
+sub-second queries); a super-linear ratio exposes an accidental O(n^2) — the
 pair-generating operators (LSH, simhash bands) are exactly the ones
 whose candidate growth the width pytests bound.
 
@@ -18,9 +18,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import materialize, timed  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 BIG_DIR_TMPL = "/tmp/inputosm_datascale_x{n}"
@@ -47,7 +48,7 @@ def main() -> int:
 
     from inputosm_spark import get_spark
 
-    spark = get_spark(cpus="32", app_name="datascale")
+    spark = get_spark(app_name="datascale")
     qs = entry_mod.queries()
 
     docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
@@ -70,20 +71,13 @@ def main() -> int:
             out.repartition(max(32, lvl)).write.mode("overwrite").parquet(path)
         level_dirs[lvl] = d
 
-    def best_wall(fn, sf_dir: str) -> float:
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = None
-        for _ in range(3):
-            t0 = time.monotonic()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.monotonic() - t0
-            best = dt if best is None else min(best, dt)
-        return round(best, 3)
-
     results: dict[str, dict] = {}
     for name in QUERIES:
         fn = qs[name]
-        walls = {lvl: best_wall(fn, d) for lvl, d in level_dirs.items()}
+        walls = {
+            lvl: round(min(timed(lambda: materialize(fn(spark, d)), 3)), 3)
+            for lvl, d in level_dirs.items()
+        }
         results[name] = {
             **{f"wall_x{lvl}_s": w for lvl, w in walls.items()},
             **{
@@ -97,8 +91,8 @@ def main() -> int:
         "levels": [1] + LEVELS,
         "queries": results,
         "note": (
-            "best-of-3 after untimed warm-up, one local[32] session, "
-            "pinned; ratio ~= size_factor means linear data scaling "
+            "best-of-3 after untimed warm-up, one local[$SPARK_GRAFT_CPUS] "
+            "session, pinned; ratio ~= size_factor means linear data scaling "
             "(fixed per-stage overhead makes sub-second queries read "
             "below the factor); each xN corpus is N deterministic "
             "doc_id-shifted copies of sf0.1 documents. Only per-doc "

@@ -24,6 +24,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
                 + "/tests")
 
+from bench import timed  # noqa: E402
+
 
 def synth_pbf(path: str, n_blobs: int, nodes_per_blob: int) -> int:
     import pbf_writer as W
@@ -76,20 +78,6 @@ def synth_way_pbf(path: str, n_blobs: int, ways_per_blob: int,
     return n_blobs * ways_per_blob
 
 
-def _bench(spark, pbf, path: str, expect: int) -> float:
-    def run() -> int:
-        return pbf.read_pbf_entities(spark, path).count()
-
-    got = run()  # warm-up (JIT + Python pool)
-    assert got == expect, (got, expect)
-    best = 1e9
-    for _ in range(3):
-        t0 = time.monotonic()
-        run()
-        best = min(best, time.monotonic() - t0)
-    return best
-
-
 def main() -> int:
     n_blobs = int(os.environ.get("PBF_BLOBS", "250"))
     per_blob = int(os.environ.get("PBF_NODES_PER_BLOB", "8000"))
@@ -112,8 +100,13 @@ def main() -> int:
     spark = get_spark(app_name="bench_pbf")
     n = n_blobs * per_blob
     nw = way_blobs * ways_per_blob
-    best = _bench(spark, pbf, path, n)
-    wbest = _bench(spark, pbf, wpath, nw)
+
+    def run(path: str, expect: int) -> None:
+        got = pbf.read_pbf_entities(spark, path).count()
+        assert got == expect, (got, expect)
+
+    best = min(timed(lambda: run(path, n), 3))
+    wbest = min(timed(lambda: run(wpath, nw), 3))
     print(json.dumps({
         "entities": n,
         "n_blobs": n_blobs,

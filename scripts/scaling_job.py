@@ -20,11 +20,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
+
+from bench import materialize, timed  # noqa: E402
 
 
 def main() -> int:
@@ -42,13 +43,8 @@ def main() -> int:
     # the SAME job at every cluster size: input splits, shuffle
     # partitioning and salt fan-out are all fixed — only the executor
     # thread count differs between runs (north_rule N vs 4N evidence)
-    n_shuffle = int(os.environ.get("SCALING_SHUFFLE", "256"))
-    aqe = os.environ.get("SCALING_AQE", "1") == "1"
-    single_action = os.environ.get("SCALING_SINGLE", "1") == "1"
-    spark = get_spark(cpus=cpus, shuffle_partitions=n_shuffle,
-                      app_name=f"scaling_job[{cpus}]",
-                      extra_conf={"spark.sql.adaptive.enabled":
-                                  "true" if aqe else "false"})
+    spark = get_spark(cpus=cpus, shuffle_partitions=256,
+                      app_name=f"scaling_job[{cpus}]")
 
     lat, lon = cells.point_exprs("id")
     docs = spark.range(n_docs, numPartitions=128).select(
@@ -69,35 +65,23 @@ def main() -> int:
         )
         tiles = spatial.tile_counts(docs.select("lat_e4", "lon_e4"),
                                     tile_res=4, pixel_res=9)
-        if single_action:
-            # ONE action: the two independent DAG branches schedule
-            # concurrently, halving job-submission barriers and letting
-            # the scheduler fill cores across branches
-            both = rollup.select(
-                F.col("key"), F.col("cnt")
-            ).unionAll(tiles.select(
+        # ONE action: the two independent DAG branches schedule
+        # concurrently, halving job-submission barriers and letting
+        # the scheduler fill cores across branches
+        materialize(rollup.select(F.col("key"), F.col("cnt")).unionAll(
+            tiles.select(
                 F.concat_ws("|", "tile", "px", "py").alias("key"),
                 F.col("cnt"),
-            ))
-            both.write.format("noop").mode("overwrite").save()
-        else:
-            rollup.write.format("noop").mode("overwrite").save()
-            tiles.write.format("noop").mode("overwrite").save()
+            )
+        ))
 
-    # warm-up: one UNTIMED full-pipeline pass — C2 JIT of the generated
-    # code and the Python worker pool spawn happen here, not inside the
+    # one UNTIMED full-pipeline pass first — C2 JIT of the generated
+    # code and the Python worker pool spawn happen there, not inside the
     # measurement (at 32 threads concurrent JIT alone is tens of
-    # seconds of one-time noise)
-    pipeline()
-
-    # best-of-N: single-JVM runs on a shared VM have multi-second
-    # GC/JIT/host noise; min wall is the standard throughput estimator
-    n_reps = int(os.environ.get("SCALING_REPS", "3"))
-    walls = []
-    for _ in range(n_reps):
-        t0 = time.monotonic()
-        pipeline()
-        walls.append(time.monotonic() - t0)
+    # seconds of one-time noise); then best-of-3: single-JVM runs on a
+    # shared VM have multi-second GC/JIT/host noise, and min wall is the
+    # standard throughput estimator
+    walls = timed(pipeline, 3)
     wall = min(walls)
 
     print(json.dumps({

@@ -6,6 +6,7 @@ driver's correctness gate does."""
 from __future__ import annotations
 
 import duckdb
+import json
 import os
 import pytest
 
@@ -63,6 +64,27 @@ def test_entry_returns_flagship(spark):
     df = m.entry(spark)
     assert df.count() > 0
     assert set(df.columns) == {"cell7", "n_docs", "n_spans", "text_chars"}
+
+
+def test_bench_prints_one_json_line(spark, sf_dir, capsys, monkeypatch):
+    """bench.py's side of the contract: one JSON line with the fixed
+    keys, timing exactly the named queries; an unknown name raises."""
+    import bench
+
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
+    monkeypatch.setenv("BENCH_REPS", "1")
+    # get_spark re-applies its shuffle width to the shared test session
+    monkeypatch.setenv("INPUTOSM_SHUFFLE",
+                       spark.conf.get("spark.sql.shuffle.partitions"))
+    assert bench.main(["count_all"]) == 0
+    lines = capsys.readouterr().out.splitlines()
+    assert len(lines) == 1
+    out = json.loads(lines[0])
+    assert set(out) == {"metric", "value", "unit", "queries", "sf", "cpus",
+                        "n_documents", "spatial_docs_per_sec"}
+    assert list(out["queries"]) == ["count_all"]
+    with pytest.raises(ValueError, match="no_such_query"):
+        bench.main(["no_such_query"])
 
 
 def test_oracle_keys_subset_of_queries():

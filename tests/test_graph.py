@@ -12,17 +12,6 @@ import pytest
 from inputosm_spark.operators import graph
 
 
-@pytest.fixture
-def no_broadcast(spark):
-    """Disable broadcasting for one test, which sends every gated graph
-    operator down its distributed (above-the-cap) branch."""
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    orig = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    yield
-    spark.conf.set(key, orig)
-
-
 def _ref_components(edges):
     comp: dict[int, int] = {}
 

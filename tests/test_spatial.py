@@ -45,12 +45,16 @@ def test_pip_join_exact_vs_bruteforce(spark, points, points_np):
     assert len(want) > 100  # the metro box guarantees plenty of matches
 
 
-def test_pip_join_broadcast_vs_shuffle_same_result(spark, points):
+def test_pip_join_broadcast_vs_shuffle_same_result(spark, points, no_broadcast):
+    """With broadcasting off, force_broadcast=False really shuffles
+    while the hints of force_broadcast=True still broadcast."""
     polys = synth_polygons(spark)
-    a = spatial.pip_join(points, polys, res=6, force_broadcast=True)
-    b = spatial.pip_join(points, polys, res=6, force_broadcast=False)
-    rows_a = {(r.id, r.poly_id) for r in a.select("id", "poly_id").collect()}
-    rows_b = {(r.id, r.poly_id) for r in b.select("id", "poly_id").collect()}
+    a = spatial.pip_join(points, polys, res=6, force_broadcast=True).select("id", "poly_id")
+    b = spatial.pip_join(points, polys, res=6, force_broadcast=False).select("id", "poly_id")
+    rows_a = {(r.id, r.poly_id) for r in a.collect()}
+    rows_b = {(r.id, r.poly_id) for r in b.collect()}
+    assert "BroadcastHashJoin" in a._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" in b._jdf.queryExecution().executedPlan().toString()
     assert rows_a == rows_b
 
 
