@@ -1,18 +1,20 @@
-"""Grid-cell functions in three synchronized dialects.
+"""Grid-cell functions in two synchronized dialects.
 
 1. **Spark Column expressions** (`*_expr`) — pure integer Catalyst
    expressions, whole-stage-codegen'd; this is the hot path for cell
    assignment at 100 TB (no Python at all).
 2. **ANSI SQL strings** (`*_sql`) — the *same* formulas for the DuckDB
    correctness oracle.
-3. **Arrow pandas UDFs** (`cell_id_udf`, …) — the vectorized-UDF path
-   mandated by the north rule, used where the geometry genuinely needs
-   numpy (polygon polyfill, ray-cast refine, rasterization) and as a
-   parity check against the expression path. Batch-in/batch-out, no
-   per-row Python — the contract of the reference's span callbacks
-   (/root/reference/include/inputosm/inputosm.h:92-96).
 
-All three implement the identical integer math in `inputosm_spark.geo`.
+Each dialect states the packed-cell layout once: `pack_expr` /
+`unpack_expr` and `pack_sql` (bit layout), `cell_x_expr` /
+`cell_y_expr` and `cell_xy_sql` (x/y quantization). Every other cell
+formula here, in `operators.spatial` and in the catalog oracles builds
+on them. `make_cell_id_udf` is the Arrow pandas-UDF twin that the
+parity test checks the expression path against.
+
+Both implement the identical integer math in `inputosm_spark.geo`,
+whose numpy `pack_cell` / `unpack_cell` are the reference.
 """
 
 from __future__ import annotations
@@ -49,19 +51,27 @@ def cell_y_expr(lat_e4: Column | str, res: int) -> Column:
     return F.least(y, F.lit(ny - 1)).cast("long")
 
 
-def cell_id_expr(lat_e4: Column | str, lon_e4: Column | str, res: int) -> Column:
-    """Packed cell id — mirrors geo.cell_id exactly."""
-    x = F.floor(
-        ((_col(lon_e4) + F.lit(geo.LON_MAX_E4)) * F.lit(2 ** (res + 1)))
-        / F.lit(2 * geo.LON_MAX_E4)
-    )
-    x = F.pmod(x, F.lit(2 ** (res + 1)))
-    y = cell_y_expr(lat_e4, res)
+def pack_expr(res: int, y: Column, x: Column) -> Column:
+    """Packed (res, y, x) cell id — geo.pack_cell."""
     return (
         F.lit(res).cast("long") * F.lit(1 << geo._RES_SHIFT)
         + y * F.lit(1 << geo._Y_SHIFT)
         + x
     ).cast("long")
+
+
+def unpack_expr(cell: Column | str) -> tuple[Column, Column]:
+    """(y, x) Columns of a packed cell id — geo.unpack_cell[1:]."""
+    c = _col(cell)
+    return (
+        F.shiftright(c, geo._Y_SHIFT).bitwiseAND(F.lit(geo._XY_MASK)),
+        c.bitwiseAND(F.lit(geo._XY_MASK)),
+    )
+
+
+def cell_id_expr(lat_e4: Column | str, lon_e4: Column | str, res: int) -> Column:
+    """Packed cell id — mirrors geo.cell_id exactly."""
+    return pack_expr(res, cell_y_expr(lat_e4, res), cell_x_expr(lon_e4, res))
 
 
 def point_exprs(id_col: Column | str) -> tuple[Column, Column]:
@@ -84,12 +94,7 @@ def kring_expr(lat_e4: Column | str, lon_e4: Column | str, res: int, k: int = 1)
     + `flatten`, filters pole fall-off with `filter`. No Python.
     """
     nx, ny = 2 ** (res + 1), 2**res
-    x = F.pmod(
-        F.floor(
-            ((_col(lon_e4) + F.lit(geo.LON_MAX_E4)) * F.lit(nx)) / F.lit(2 * geo.LON_MAX_E4)
-        ),
-        F.lit(nx),
-    )
+    x = cell_x_expr(lon_e4, res)
     y = cell_y_expr(lat_e4, res)
     offs = F.sequence(F.lit(-k), F.lit(k))
     pairs = F.flatten(
@@ -97,10 +102,7 @@ def kring_expr(lat_e4: Column | str, lon_e4: Column | str, res: int, k: int = 1)
     )
     valid = F.filter(pairs, lambda p: ((y + p.dy) >= 0) & ((y + p.dy) < ny))
     return F.transform(
-        valid,
-        lambda p: F.lit(res).cast("long") * F.lit(1 << geo._RES_SHIFT)
-        + (y + p.dy) * F.lit(1 << geo._Y_SHIFT)
-        + F.pmod(x + p.dx, F.lit(nx)),
+        valid, lambda p: pack_expr(res, y + p.dy, F.pmod(x + p.dx, F.lit(nx)))
     )
 
 
@@ -249,10 +251,8 @@ def point_sql(id_expr: str) -> tuple[str, str]:
     return lat, lon
 
 
-def cell_id_sql(lat_sql: str, lon_sql: str, res: int) -> str:
-    nx, ny = 2 ** (res + 1), 2**res
-    x = f"(((({lon_sql}) + {geo.LON_MAX_E4}) * {nx}) // {2 * geo.LON_MAX_E4} % {nx})"
-    y = f"least(((({lat_sql}) + {geo.LAT_MAX_E4}) * {ny}) // {2 * geo.LAT_MAX_E4}, {ny - 1})"
+def pack_sql(res: int, y: str, x: str) -> str:
+    """Packed (res, y, x) cell id as an ANSI fragment — geo.pack_cell."""
     return f"({res} * {1 << geo._RES_SHIFT} + {y} * {1 << geo._Y_SHIFT} + {x})"
 
 
@@ -263,8 +263,13 @@ def cell_xy_sql(lat_sql: str, lon_sql: str, res: int) -> tuple[str, str]:
     return x, y
 
 
+def cell_id_sql(lat_sql: str, lon_sql: str, res: int) -> str:
+    x, y = cell_xy_sql(lat_sql, lon_sql, res)
+    return pack_sql(res, y, x)
+
+
 # ---------------------------------------------------------------------------
-# Arrow pandas UDFs (vectorized Python path)
+# Arrow pandas UDF (parity twin of cell_id_expr)
 # ---------------------------------------------------------------------------
 
 

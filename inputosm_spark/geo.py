@@ -40,7 +40,6 @@ LON_MAX_E4 = 1_800_000
 _RES_SHIFT = 58
 _Y_SHIFT = 29
 _XY_MASK = (1 << 29) - 1
-_Y_MASK = (1 << 29) - 1
 
 
 def _check_res(res: int) -> None:
@@ -87,7 +86,7 @@ def cell_id(lat_e4, lon_e4, res: int):
 def unpack_cell(cell):
     """cell id -> (res, y, x) arrays."""
     c = np.asarray(cell, dtype=np.int64)
-    return c >> _RES_SHIFT, (c >> _Y_SHIFT) & _Y_MASK, c & _XY_MASK
+    return c >> _RES_SHIFT, (c >> _Y_SHIFT) & _XY_MASK, c & _XY_MASK
 
 
 def cell_parent(cell, parent_res: int):

@@ -61,16 +61,22 @@ def fp_vec(col) -> F.Column:
     )
 
 
-@pandas_udf(LongType())
-def dot_fp(a: pd.Series, b: pd.Series) -> pd.Series:
+def dot_fp(a, b) -> F.Column:
     """Exact int64 dot product, vectorized over the Arrow batch (row-
-    aligned pairs; for bucket x bucket work use the GEMM kernels)."""
-    if len(a) == 0:
-        return pd.Series([], dtype="int64")
-    A = np.stack(a.to_numpy()).astype(np.float64)
-    B = np.stack(b.to_numpy()).astype(np.float64)
-    # float64 products/sums of ints < 2^53 are exact -> back to int64
-    return pd.Series(np.einsum("ij,ij->i", A, B).astype(np.int64))
+    aligned pairs; for bucket x bucket work use the GEMM kernels). The
+    pandas UDF is built per call so it binds to the current
+    SparkContext."""
+
+    @pandas_udf(LongType())
+    def dot_fp(a: pd.Series, b: pd.Series) -> pd.Series:
+        if len(a) == 0:
+            return pd.Series([], dtype="int64")
+        A = np.stack(a.to_numpy()).astype(np.float64)
+        B = np.stack(b.to_numpy()).astype(np.float64)
+        # float64 products/sums of ints < 2^53 are exact -> back to int64
+        return pd.Series(np.einsum("ij,ij->i", A, B).astype(np.int64))
+
+    return dot_fp(a, b)
 
 
 def _make_sig_udf(n_planes: int):

@@ -8,7 +8,8 @@ bucket is a grid cell, the exact phase is a vectorized numpy kernel in
 an Arrow UDF, and Catalyst/AQE picks broadcast vs shuffle.
 
 Scale design (100 TB corpus, 1000 executors):
-* PIP: the polygon side is polyfilled to covering cells and — when
+* PIP: one Arrow UDF (polygon_cells) splits each ring at the
+  antimeridian and covers it with classified cells; the cover — when
   small (the common case: polygon sets are dimension tables) —
   broadcast, so the point table is never shuffled at all; with a huge
   polygon side the join is a shuffled equi-join on cell where AQE
@@ -18,6 +19,10 @@ Scale design (100 TB corpus, 1000 executors):
   queries, and the final fallback brute-forces only stragglers.
 * exact refine runs per Arrow batch with numpy vectorized over points,
   grouped by polygon within the batch — no per-row Python.
+
+Cell ids are built and taken apart only through functions.cells
+(`cell_x_expr`/`cell_y_expr`, `pack_expr`/`unpack_expr`); no operator
+here spells out the packed bit layout.
 """
 
 from __future__ import annotations
@@ -29,9 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
-    IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
@@ -46,115 +49,57 @@ from inputosm_spark.functions import cells
 _DENSITY_MEMO: dict[tuple[str, int], tuple[int, int]] = {}
 
 # ---------------------------------------------------------------------------
-# polygon covering cells (polyfill) — Arrow UDF over numpy
+# polygon covering cells (polyfill) — one Arrow UDF over numpy
 # ---------------------------------------------------------------------------
 
 
-_CELL_FULL = ArrayType(
-    StructType(
-        [StructField("cell", LongType(), False), StructField("full", BooleanType(), False)]
-    )
-)
-
-
-def _polyfill_udf(res: int):
-    @F.pandas_udf(_CELL_FULL)
-    def _fill(ring_lat: pd.Series, ring_lon: pd.Series) -> pd.Series:
-        out = []
-        for la, lo in zip(ring_lat, ring_lon):
-            cells_, full = geo.polyfill_classified(
-                np.asarray(la), np.asarray(lo), res
-            )
-            out.append(
-                [{"cell": int(c), "full": bool(f)} for c, f in zip(cells_, full)]
-            )
-        return pd.Series(out)
-
-    return _fill
-
-
-_RING = ArrayType(
-    StructType(
-        [
-            StructField("ring_lat_e4", ArrayType(LongType()), False),
-            StructField("ring_lon_e4", ArrayType(LongType()), False),
-        ]
-    )
-)
-
-
-@F.pandas_udf(_RING)
-def _split_seam(ring_lat: pd.Series, ring_lon: pd.Series) -> pd.Series:
-    """Antimeridian splitter: rings crossing lon ±180 become one
-    seam-free sub-ring per 360° band (geo.split_antimeridian);
-    non-crossing rings pass through unchanged."""
-    out = []
-    for la, lo in zip(ring_lat, ring_lon):
-        parts = geo.split_antimeridian(np.asarray(la), np.asarray(lo))
-        out.append(
-            [
-                {"ring_lat_e4": p[0].tolist(), "ring_lon_e4": p[1].tolist()}
-                for p in parts
-            ]
-        )
-    return pd.Series(out)
-
-
-def split_seam_polygons(polygons: DataFrame) -> DataFrame:
-    """One row per seam-free sub-ring (poly_id preserved, so a point in
-    ANY sub-ring joins to the original polygon id)."""
-    return polygons.select(
-        "poly_id", F.explode(_split_seam("ring_lat_e4", "ring_lon_e4")).alias("r")
-    ).select(
-        "poly_id",
-        F.col("r.ring_lat_e4").alias("ring_lat_e4"),
-        F.col("r.ring_lon_e4").alias("ring_lon_e4"),
-    )
+_COVER = ArrayType(StructType([
+    StructField("ring_lat_e4", ArrayType(LongType()), False),
+    StructField("ring_lon_e4", ArrayType(LongType()), False),
+    StructField("cells", ArrayType(StructType([
+        StructField("cell", LongType(), False),
+        StructField("full", BooleanType(), False),
+    ])), False),
+]))
 
 
 def polygon_cells(polygons: DataFrame, res: int) -> DataFrame:
     """polygons -> (poly_id, ring_lat_e4, ring_lon_e4, cell, full)
-    exploded covering-cell rows. The cover is exact-classified
-    (geo.polyfill_classified): `full` cells lie entirely inside the
-    polygon (no refine needed), non-full cells are boundary cells that
-    the exact ray-cast refine resolves after the equi-join.
+    exploded covering-cell rows; the ring is the seam-free sub-ring
+    that the cell covers.
+
+    One pandas UDF does the whole cover. Per ring,
+    geo.split_antimeridian cuts a ring crossing lon ±180 into one
+    sub-ring per 360° band (a point in ANY sub-ring joins to the
+    original poly_id), then geo.polyfill_classified covers each
+    sub-ring. `full` cells lie entirely inside the polygon (no refine
+    needed); non-full cells are boundary cells that the exact ray-cast
+    refine resolves after the equi-join. The UDF returns each sub-ring
+    once with its cell array and both explodes run in the JVM, so the
+    ring arrays never cross Arrow once per cell. The UDF is built per
+    call so it binds to the current SparkContext.
     """
-    return split_seam_polygons(polygons).withColumn(
-        "cf", F.explode(_polyfill_udf(res)("ring_lat_e4", "ring_lon_e4"))
-    ).select("*", F.col("cf.cell").alias("cell"), F.col("cf.full").alias("full")).drop(
-        "cf"
-    )
 
+    @F.pandas_udf(_COVER)
+    def _cover(ring_lat: pd.Series, ring_lon: pd.Series) -> pd.Series:
+        out = []
+        for la, lo in zip(ring_lat, ring_lon):
+            subs = []
+            for sla, slo in geo.split_antimeridian(np.asarray(la), np.asarray(lo)):
+                cells_, full = geo.polyfill_classified(sla, slo, res)
+                subs.append({
+                    "ring_lat_e4": sla.tolist(),
+                    "ring_lon_e4": slo.tolist(),
+                    "cells": [{"cell": int(c), "full": bool(f)}
+                              for c, f in zip(cells_, full)],
+                })
+            out.append(subs)
+        return pd.Series(out)
 
-# ---------------------------------------------------------------------------
-# exact refine — even-odd ray cast, vectorized per polygon within batch
-# ---------------------------------------------------------------------------
-
-
-@F.pandas_udf(BooleanType())
-def _pip_refine(
-    lat: pd.Series,
-    lon: pd.Series,
-    poly_id: pd.Series,
-    ring_lat: pd.Series,
-    ring_lon: pd.Series,
-) -> pd.Series:
-    """Vectorized point-in-polygon refine. Candidate rows arrive as
-    (point, poly_id, polygon-ring) tuples; rows are grouped by poly_id
-    (a cheap vectorized factorize — never per-row ring hashing) so the
-    numpy kernel runs once per polygon per batch over all its points
-    (batch ~16k rows, polygon count per batch is small).
-    """
-    plat = lat.to_numpy(dtype=np.int64)
-    plon = lon.to_numpy(dtype=np.int64)
-    out = np.zeros(len(lat), dtype=bool)
-    codes, _ = pd.factorize(poly_id, sort=False)
-    for g in np.unique(codes):
-        ii = np.nonzero(codes == g)[0]
-        ra = np.asarray(ring_lat.iloc[ii[0]], dtype=np.int64)
-        ro = np.asarray(ring_lon.iloc[ii[0]], dtype=np.int64)
-        out[ii] = geo.point_in_polygon(plat[ii], plon[ii], ra, ro)
-    return pd.Series(out)
+    rings = polygons.select(
+        "poly_id", F.explode(_cover("ring_lat_e4", "ring_lon_e4")).alias("r")
+    ).select("poly_id", "r.ring_lat_e4", "r.ring_lon_e4", F.explode("r.cells").alias("cf"))
+    return rings.select("poly_id", "ring_lat_e4", "ring_lon_e4", "cf.cell", "cf.full")
 
 
 # exploded polygon covering-cell rows at or below which pip_join
@@ -166,19 +111,18 @@ def pip_join(
     points: DataFrame,
     polygons: DataFrame,
     res: int = 7,
-    point_cell: str | None = None,
     force_broadcast: bool | None = None,
 ) -> DataFrame:
     """Cell-bucketed point-in-polygon join.
 
-    points: (id, lat_e4, lon_e4 [, cell_r{res} precomputed]) — any extra
-    columns pass through. polygons: schemas.POLYGONS.
+    points: (id, lat_e4, lon_e4) — any extra columns pass through.
+    polygons: schemas.POLYGONS.
     Returns points' columns + poly_id for every (point, polygon)
     containment pair (half-open boundary rule, see geo.point_in_polygon).
 
     Antimeridian-safe: rings crossing lon +/-180 are split into
     seam-free sub-rings per 360-degree band before polyfill
-    (split_seam_polygons / geo.split_antimeridian), so coverage and
+    (polygon_cells / geo.split_antimeridian), so coverage and
     containment hold on both sides of the seam.
 
     Physical strategy: polygon covering cells are counted; up to
@@ -188,16 +132,13 @@ def pip_join(
     `force_broadcast=True/False` picks the strategy without the count.
     """
     # cache the exploded covering cells: the count() below and the join
-    # both consume them — without the cache the polyfill UDF runs twice
+    # both consume them — without the cache the cover UDF runs twice
     pcells = polygon_cells(polygons, res).cache()
-    cell_col = (
-        F.col(point_cell)
-        if point_cell
-        else cells.cell_id_expr("lat_e4", "lon_e4", res)
-    )
     from inputosm_spark.operators import ensure_parallelism
 
-    pts = ensure_parallelism(points).withColumn("__cell", cell_col)
+    pts = ensure_parallelism(points).withColumn(
+        "__cell", cells.cell_id_expr("lat_e4", "lon_e4", res)
+    )
 
     # plan choice: measured (count) unless the caller already knows the
     # build side's size class — `force_broadcast` skips the measuring
@@ -224,6 +165,24 @@ def pip_join(
         right_full = F.broadcast(right_full)
         right_edge = F.broadcast(right_edge)
 
+    # exact refine, built per call so it binds to the current
+    # SparkContext. Rows are grouped by poly_id (a cheap vectorized
+    # factorize — never per-row ring hashing) so the numpy ray cast
+    # runs once per polygon per Arrow batch over all its points.
+    @F.pandas_udf(BooleanType())
+    def _pip_refine(lat: pd.Series, lon: pd.Series, poly_id: pd.Series,
+                    ring_lat: pd.Series, ring_lon: pd.Series) -> pd.Series:
+        plat = lat.to_numpy(dtype=np.int64)
+        plon = lon.to_numpy(dtype=np.int64)
+        out = np.zeros(len(lat), dtype=bool)
+        codes, _ = pd.factorize(poly_id, sort=False)
+        for g in np.unique(codes):
+            ii = np.nonzero(codes == g)[0]
+            ra = np.asarray(ring_lat.iloc[ii[0]], dtype=np.int64)
+            ro = np.asarray(ring_lon.iloc[ii[0]], dtype=np.int64)
+            out[ii] = geo.point_in_polygon(plat[ii], plon[ii], ra, ro)
+        return pd.Series(out)
+
     inside_full = pts.join(right_full, "__cell").drop("__cell")
     refined = (
         pts.join(right_edge, "__cell")
@@ -245,8 +204,6 @@ def knn_join(
     k: int,
     res: int = 6,
     max_rounds: int = 4,
-    id_col: str = "id",
-    qid_col: str = "qid",
 ) -> DataFrame:
     """k nearest points for each query row, exact.
 
@@ -272,14 +229,14 @@ def knn_join(
     from inputosm_spark.operators import ensure_parallelism
 
     pts = ensure_parallelism(points).select(
-        F.col(id_col).alias("__pid"),
+        F.col("id").alias("__pid"),
         F.col("lat_e4").alias("__plat"),
         F.col("lon_e4").alias("__plon"),
         cells.cell_id_expr("lat_e4", "lon_e4", res).alias("__cell"),
     )
 
     remaining = queries.select(
-        F.col(qid_col).alias("__qid"),
+        F.col("qid").alias("__qid"),
         F.col("lat_e4").alias("__qlat"),
         F.col("lon_e4").alias("__qlon"),
     )
@@ -382,7 +339,7 @@ def knn_join(
         results = brute if results is None else results.unionAll(brute)
 
     return results.select(
-        F.col("__qid").alias(qid_col),
+        F.col("__qid").alias("qid"),
         F.col("__pid").alias("neighbor_id"),
         F.col("__d2").alias("dist2"),
         F.col("__rn").alias("rank"),
@@ -404,17 +361,12 @@ def tile_counts(points: DataFrame, tile_res: int, pixel_res: int) -> DataFrame:
     if pixel_res <= tile_res:
         raise ValueError("pixel_res must exceed tile_res")
     d = pixel_res - tile_res
-    px_cell = cells.cell_id_expr("lat_e4", "lon_e4", pixel_res)
-    df = points.withColumn("__pc", px_cell)
-    x = F.col("__pc").bitwiseAND(F.lit((1 << geo._Y_SHIFT) - 1))
-    y = F.shiftrightunsigned("__pc", geo._Y_SHIFT).bitwiseAND(
-        F.lit((1 << (geo._RES_SHIFT - geo._Y_SHIFT)) - 1)
-    )
+    x = cells.cell_x_expr("lon_e4", pixel_res)
+    y = cells.cell_y_expr("lat_e4", pixel_res)
     return (
-        df.select(
-            (F.lit(tile_res) * F.lit(1 << geo._RES_SHIFT)
-             + F.shiftrightunsigned(y, d) * F.lit(1 << geo._Y_SHIFT)
-             + F.shiftrightunsigned(x, d)).alias("tile"),
+        points.select(
+            cells.pack_expr(tile_res, F.shiftright(y, d), F.shiftright(x, d))
+            .alias("tile"),
             F.pmod(x, F.lit(1 << d)).cast("int").alias("px"),
             F.pmod(y, F.lit(1 << d)).cast("int").alias("py"),
         )
@@ -458,19 +410,16 @@ def vectorize(raster: DataFrame, tile_res: int, pixel_res: int) -> DataFrame:
     """
     d = pixel_res - tile_res
     side = 1 << d
-    tx = F.col("tile").bitwiseAND(F.lit((1 << geo._Y_SHIFT) - 1))
-    ty = F.shiftrightunsigned("tile", geo._Y_SHIFT).bitwiseAND(
-        F.lit((1 << (geo._RES_SHIFT - geo._Y_SHIFT)) - 1)
-    )
+    ty, tx = cells.unpack_expr("tile")
     exploded = raster.select(
         tx.alias("__tx"), ty.alias("__ty"), F.posexplode("pixels").alias("i", "cnt")
     ).filter(F.col("cnt") > 0)
     px = F.pmod("i", F.lit(side))
     py = (F.col("i") / side).cast("long")
     return exploded.select(
-        (F.lit(pixel_res) * F.lit(1 << geo._RES_SHIFT)
-         + (F.col("__ty") * side + py) * F.lit(1 << geo._Y_SHIFT)
-         + (F.col("__tx") * side + px)).alias("cell"),
+        cells.pack_expr(
+            pixel_res, F.col("__ty") * side + py, F.col("__tx") * side + px
+        ).alias("cell"),
         "cnt",
     )
 
@@ -480,7 +429,13 @@ def vectorize(raster: DataFrame, tile_res: int, pixel_res: int) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _grid_cells(df: DataFrame, grid: int) -> DataFrame:
+#: grid-cell edge (e4 units) of the box-overlap and segment joins —
+#: a tuning value only (the exact test makes results grid-independent);
+#: near the typical box / segment size most rows hit 1-4 cells
+_JOIN_GRID = 100_000
+
+
+def _grid_cells(df: DataFrame) -> DataFrame:
     """Explode each closed-open box [lat0,lat1) x [lon0,lon1) into the
     (ci, cj) grid cells it intersects — pure sequence/explode column
     math, no UDF. Boxes must be non-empty (lat1 > lat0, lon1 > lon0):
@@ -489,7 +444,7 @@ def _grid_cells(df: DataFrame, grid: int) -> DataFrame:
     F.sequence generate a DESCENDING cell range, silently fanning the
     bad row across cells before the exact interval filter drops it.
     """
-    g = F.lit(grid)
+    g = F.lit(_JOIN_GRID)
     guard = F.assert_true(
         (F.col("lat1") > F.col("lat0")) & (F.col("lon1") > F.col("lon0")),
         F.lit("box_overlap_join: empty or inverted box (need lat1>lat0 "
@@ -517,17 +472,11 @@ def _grid_cells(df: DataFrame, grid: int) -> DataFrame:
     )
 
 
-def box_overlap_join(
-    a_boxes: DataFrame,
-    b_boxes: DataFrame,
-    a_id: str = "a_id",
-    b_id: str = "b_id",
-    grid: int = 100_000,
-) -> DataFrame:
-    """Rectangle-intersection JOIN: all (a, b) pairs whose closed-open
-    boxes [lat0,lat1) x [lon0,lon1) overlap, with the exact integer
-    intersection area — the polygon-overlap primitive (bbox phase of
-    any polygon-polygon join).
+def box_overlap_join(a_boxes: DataFrame, b_boxes: DataFrame) -> DataFrame:
+    """Rectangle-intersection JOIN: all (a_id, b_id) pairs whose
+    closed-open boxes [lat0,lat1) x [lon0,lon1) overlap, with the exact
+    integer intersection area — the polygon-overlap primitive (bbox
+    phase of any polygon-polygon join).
 
     Shape: *bucket first, exact-match second* (the engine's PIP/kNN
     pattern). Both sides explode into covering grid cells and
@@ -537,20 +486,18 @@ def box_overlap_join(
     + area are then plain column arithmetic, and duplicates from
     multi-cell overlaps collapse with one distinct.
 
-    Sizing: fan-out per box = ceil(h/grid) * ceil(w/grid); pick `grid`
-    near the typical box size so most boxes hit 1-4 cells. A giant box
-    (continental outlier) fans out proportionally — cap or split such
-    boxes upstream, same guardrail as lsh_candidate_pairs' max_bucket.
+    Sizing: fan-out per box = ceil(h/_JOIN_GRID) * ceil(w/_JOIN_GRID).
+    A giant box (continental outlier) fans out proportionally — cap or
+    split such boxes upstream, same guardrail as lsh_candidate_pairs'
+    max_bucket.
     """
-    a = _grid_cells(
-        a_boxes.select(F.col(a_id), "lat0", "lat1", "lon0", "lon1"), grid
-    ).select(
-        a_id, "__ci", "__cj",
+    a = _grid_cells(a_boxes.select("a_id", "lat0", "lat1", "lon0", "lon1")).select(
+        "a_id", "__ci", "__cj",
         F.col("lat0").alias("alat0"), F.col("lat1").alias("alat1"),
         F.col("lon0").alias("alon0"), F.col("lon1").alias("alon1"),
     )
-    b = _grid_cells(b_boxes.select(b_id, "lat0", "lat1", "lon0", "lon1"), grid).select(
-        b_id, "__ci", "__cj",
+    b = _grid_cells(b_boxes.select("b_id", "lat0", "lat1", "lon0", "lon1")).select(
+        "b_id", "__ci", "__cj",
         F.col("lat0").alias("blat0"), F.col("lat1").alias("blat1"),
         F.col("lon0").alias("blon0"), F.col("lon1").alias("blon1"),
     )
@@ -560,7 +507,7 @@ def box_overlap_join(
         a.join(b, ["__ci", "__cj"])
         .filter((ilat > 0) & (ilon > 0))
         .select(
-            a_id, b_id,
+            "a_id", "b_id",
             (ilat * ilon).cast("long").alias("inter_area"),
         )
         .distinct()
@@ -572,7 +519,7 @@ def box_overlap_join(
 # ---------------------------------------------------------------------------
 
 
-def _seg_cells(df: DataFrame, grid: int) -> DataFrame:
+def _seg_cells(df: DataFrame) -> DataFrame:
     """Explode each segment (x0,y0)-(x1,y1) into the grid cells of its
     bounding box — INCLUSIVE floor-divided ranges over least/greatest,
     so degenerate (axis-parallel or zero-length) segments cover their
@@ -580,7 +527,7 @@ def _seg_cells(df: DataFrame, grid: int) -> DataFrame:
     (unlike `_grid_cells`, whose closed-open boxes must be non-empty).
     The bbox cover is a proven superset of the cells the segment
     touches; the exact crossing test prunes the slack."""
-    g = F.lit(grid)
+    g = F.lit(_JOIN_GRID)
     out = df.withColumn(
         "__ci",
         F.explode(
@@ -601,15 +548,9 @@ def _seg_cells(df: DataFrame, grid: int) -> DataFrame:
     )
 
 
-def segment_intersection_join(
-    a_segs: DataFrame,
-    b_segs: DataFrame,
-    a_id: str = "a_id",
-    b_id: str = "b_id",
-    grid: int = 100_000,
-) -> DataFrame:
-    """PROPER-CROSSING segment intersection join: all (a, b) pairs
-    whose open segments strictly cross — the computational-geometry
+def segment_intersection_join(a_segs: DataFrame, b_segs: DataFrame) -> DataFrame:
+    """PROPER-CROSSING segment intersection join: all (a_id, b_id)
+    pairs whose open segments (x0, y0)-(x1, y1) strictly cross — the computational-geometry
     core of road/boundary overlay analytics (reference analog: the way
     geometry assembly feeding `extract_ferries`-style pipelines,
     /root/reference/examples/; the reference itself never intersects
@@ -627,26 +568,23 @@ def segment_intersection_join(
     cells of each segment's bbox (never a cartesian / theta join —
     same plan contract as box_overlap_join); DISTINCT dedups pairs
     found in several cells. Long diagonal segments inflate the bbox
-    cover quadratically — pick `grid` at or above the typical segment
-    length, exactly like the box join's cell sizing.
+    cover quadratically once they outgrow `_JOIN_GRID`.
     """
     a = _seg_cells(
         a_segs.select(
-            F.col(a_id),
+            "a_id",
             F.col("x0").alias("ax0"), F.col("y0").alias("ay0"),
             F.col("x1").alias("ax1"), F.col("y1").alias("ay1"),
             F.col("x0"), F.col("y0"), F.col("x1"), F.col("y1"),
         ),
-        grid,
     ).drop("x0", "y0", "x1", "y1")
     b = _seg_cells(
         b_segs.select(
-            F.col(b_id),
+            "b_id",
             F.col("x0").alias("bx0"), F.col("y0").alias("by0"),
             F.col("x1").alias("bx1"), F.col("y1").alias("by1"),
             F.col("x0"), F.col("y0"), F.col("x1"), F.col("y1"),
         ),
-        grid,
     ).drop("x0", "y0", "x1", "y1")
 
     def cross(ox, oy, px, py, qx, qy):
@@ -662,7 +600,7 @@ def segment_intersection_join(
     return (
         a.join(b, ["__ci", "__cj"])
         .filter(opposite(d1, d2) & opposite(d3, d4))
-        .select(a_id, b_id)
+        .select("a_id", "b_id")
         .distinct()
     )
 
@@ -722,12 +660,7 @@ def simplify_polyline(
 # ---------------------------------------------------------------------------
 
 
-def dbscan(
-    points: DataFrame,
-    eps: int,
-    min_pts: int,
-    id_col: str = "id",
-) -> DataFrame:
+def dbscan(points: DataFrame, eps: int, min_pts: int) -> DataFrame:
     """Grid-partitioned DBSCAN over integer-e4 points — the density
     clustering step of spatial curation (POI conflation, settlement
     detection, hot-spot grouping). Input (id, lat_e4, lon_e4);
@@ -751,11 +684,10 @@ def dbscan(
     agree). Eps-squared stays < 2^53 for any eps <= LON span, so the
     integer dist2 is exact in both engines.
     """
-    from inputosm_spark import geo
     from inputosm_spark.operators.graph import connected_components
 
     base = points.select(
-        F.col(id_col).alias("id"),
+        "id",
         "lat_e4",
         "lon_e4",
         F.floor((F.col("lon_e4") + F.lit(geo.LON_MAX_E4)) / F.lit(eps)).alias("gx"),
@@ -833,19 +765,13 @@ def dbscan(
     )
 
 
-def staypoints(
-    events: DataFrame,
-    res: int,
-    min_points: int,
-    user_col: str = "user_id",
-    ts_col: str = "ts_sec",
-    lat_col: str = "lat_e4",
-    lon_col: str = "lon_e4",
-) -> DataFrame:
+def staypoints(events: DataFrame, res: int, min_points: int) -> DataFrame:
     """Trajectory stay-point detection: maximal runs of CONSECUTIVE
     per-user observations inside one grid cell, kept when the run has
     >= min_points observations — the trajectory-mining primitive
     behind home/work detection, POI dwell models and visit extraction.
+    events: (user_id, ts_sec, lat_e4, lon_e4), as for od_flows and
+    colocation_pairs.
 
     Gaps-and-islands over per-user windows: flag cell changes with
     lag(), prefix-sum the flags into a run id, aggregate runs. Two
@@ -856,14 +782,9 @@ def staypoints(
     end (the engine's pure-epoch convention), so the oracle replays
     enter/exit/dwell bit-for-bit under any session timezone.
     """
-    cell = cells.cell_id_expr(lat_col, lon_col, res)
-    # window binds to the RENAMED frame below, so name it there
+    cell = cells.cell_id_expr("lat_e4", "lon_e4", res)
     w = Window.partitionBy("user_id").orderBy("ts_sec", "__cell")
-    seq = events.select(
-        F.col(user_col).alias("user_id"),
-        F.col(ts_col).alias("ts_sec"),
-        cell.alias("__cell"),
-    ).withColumn(
+    seq = events.select("user_id", "ts_sec", cell.alias("__cell")).withColumn(
         "__chg",
         F.when(
             F.lag("__cell").over(w).isNull()
@@ -891,14 +812,7 @@ def staypoints(
     )
 
 
-def od_flows(
-    events: DataFrame,
-    res: int,
-    user_col: str = "user_id",
-    ts_col: str = "ts_sec",
-    lat_col: str = "lat_e4",
-    lon_col: str = "lon_e4",
-) -> DataFrame:
+def od_flows(events: DataFrame, res: int) -> DataFrame:
     """Origin->destination flow matrix: for every CONSECUTIVE pair of
     per-user observations that lands in two different grid cells,
     count one movement from_cell -> to_cell, plus the distinct movers
@@ -917,13 +831,11 @@ def od_flows(
     reducer each but carry only counters, and AQE skew-split handles
     the shuffle read side.
     """
-    cell = cells.cell_id_expr(lat_col, lon_col, res)
+    cell = cells.cell_id_expr("lat_e4", "lon_e4", res)
     w = Window.partitionBy("user_id").orderBy("ts_sec", "__cell")
-    seq = events.select(
-        F.col(user_col).alias("user_id"),
-        F.col(ts_col).alias("ts_sec"),
-        cell.alias("__cell"),
-    ).withColumn("__prev", F.lag("__cell").over(w))
+    seq = events.select("user_id", "ts_sec", cell.alias("__cell")).withColumn(
+        "__prev", F.lag("__cell").over(w)
+    )
     return (
         seq.filter(
             F.col("__prev").isNotNull() & (F.col("__prev") != F.col("__cell"))
@@ -945,10 +857,6 @@ def colocation_pairs(
     bucket_s: int,
     min_shared: int = 2,
     max_bucket: int | None = None,
-    user_col: str = "user_id",
-    ts_col: str = "ts_sec",
-    lat_col: str = "lat_e4",
-    lon_col: str = "lon_e4",
 ) -> DataFrame:
     """Co-location pairs: users observed in the SAME grid cell within
     the SAME time bucket, kept when they share >= min_shared distinct
@@ -968,11 +876,11 @@ def colocation_pairs(
     replay the drop). Time buckets are integer floor-division epochs —
     engine-neutral and replayable.
     """
-    cell = cells.cell_id_expr(lat_col, lon_col, res)
+    cell = cells.cell_id_expr("lat_e4", "lon_e4", res)
     presence = (
         obs.select(
-            F.col(user_col).alias("user_id"),
-            F.floor(F.col(ts_col) / F.lit(bucket_s)).cast("long").alias("tb"),
+            "user_id",
+            F.floor(F.col("ts_sec") / F.lit(bucket_s)).cast("long").alias("tb"),
             cell.alias("cell"),
         )
         .distinct()
@@ -1004,11 +912,7 @@ def colocation_pairs(
     )
 
 
-def areal_interpolation(
-    boxes: DataFrame,
-    res: int,
-    value_col: str = "value",
-) -> DataFrame:
+def areal_interpolation(boxes: DataFrame, res: int) -> DataFrame:
     """Area-weighted vector->raster allocation (areal interpolation):
     each axis-aligned box distributes its integer value over every
     res-`res` grid cell it intersects, proportional to the EXACT
@@ -1019,7 +923,7 @@ def areal_interpolation(
     box count.
 
     Boxes carry closed-open integer rects (lat0 <= lat < lat1,
-    lon0 <= lon < lon1 in e4 degrees). The covering-cell fan-out is
+    lon0 <= lon < lon1 in e4 degrees) and an integer `value`. The covering-cell fan-out is
     two `sequence()` explodes (map-side Generate, no join); the
     allocation `value * inter_area div box_area` stays in int64 under
     an in-plan assert_true guard (value bounded by 2^62 / box_area,
@@ -1042,7 +946,7 @@ def areal_interpolation(
             f"res {res}: cell edges {2*geo.LON_MAX_E4}/{nx}, "
             f"{2*geo.LAT_MAX_E4}/{ny} are not integral"
         )
-    v = F.col(value_col).cast("long")
+    v = F.col("value").cast("long")
     area = (F.col("lat1") - F.col("lat0")) * (F.col("lon1") - F.col("lon0"))
     # loud int64 guard: value * inter_area <= value * box_area < 2^62
     guard = F.assert_true(
@@ -1073,11 +977,7 @@ def areal_interpolation(
     ih = F.least(F.col("lat1"), cell_lat0 + F.lit(w_lat)) - F.greatest(
         F.col("lat0"), cell_lat0
     )
-    cell = (
-        F.lit(res).cast("long") * F.lit(1 << geo._RES_SHIFT)
-        + F.col("y") * F.lit(1 << geo._Y_SHIFT)
-        + F.col("x")
-    )
+    cell = cells.pack_expr(res, F.col("y"), F.col("x"))
     return (
         fan.select(
             cell.alias("cell"),

@@ -359,7 +359,6 @@ def q_cell_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # BATCH 2 — spatial joins, tiling, skew, dedup, text, similarity, CDC
 # ===========================================================================
 
-from inputosm_spark import geo  # noqa: E402
 from inputosm_spark.operators import dedup, similarity, skew, spatial, textstats  # noqa: E402
 from inputosm_spark.operators import sampling as sampling_mod  # noqa: E402
 from pyspark.sql import Window  # noqa: E402
@@ -379,24 +378,35 @@ _BOX_SQL = f"""
 """
 
 
-def _box_polygons(spark: SparkSession) -> DataFrame:
+def _box_bboxes(spark: SparkSession) -> DataFrame:
+    """The _BOX_SQL rectangles as a (b_id, lat0, lat1, lon0, lon1)
+    bbox frame."""
     lat0 = F.lit(-800_000) + F.col("id") * 130_000
-    dlat = F.lit(60_000) + F.pmod("id", F.lit(3)) * 40_000
+    lat1 = lat0 + F.lit(60_000) + F.pmod("id", F.lit(3)) * 40_000
     lon0 = F.lit(-1_700_000) + F.col("id") * 260_000
-    dlon = F.lit(90_000) + F.pmod("id", F.lit(4)) * 50_000
+    lon1 = lon0 + F.lit(90_000) + F.pmod("id", F.lit(4)) * 50_000
     boxes = spark.range(_N_BOXES).select(
-        F.concat(F.lit("box"), F.col("id").cast("string")).alias("poly_id"),
-        F.array(lat0, lat0, lat0 + dlat, lat0 + dlat, lat0).alias("ring_lat_e4"),
-        F.array(lon0, lon0 + dlon, lon0 + dlon, lon0, lon0).alias("ring_lon_e4"),
+        F.concat(F.lit("box"), F.col("id").cast("string")).alias("b_id"),
+        lat0.cast("long").alias("lat0"), lat1.cast("long").alias("lat1"),
+        lon0.cast("long").alias("lon0"), lon1.cast("long").alias("lon1"),
     )
     metro = spark.range(1).select(
-        F.lit("metro").alias("poly_id"),
-        F.array(*[F.lit(v).cast("long") for v in
-                  (-450_000, -450_000, 450_000, 450_000, -450_000)]).alias("ring_lat_e4"),
-        F.array(*[F.lit(v).cast("long") for v in
-                  (-900_000, 900_000, 900_000, -900_000, -900_000)]).alias("ring_lon_e4"),
+        F.lit("metro").alias("b_id"),
+        F.lit(-450_000).cast("long").alias("lat0"),
+        F.lit(450_000).cast("long").alias("lat1"),
+        F.lit(-900_000).cast("long").alias("lon0"),
+        F.lit(900_000).cast("long").alias("lon1"),
     )
     return boxes.unionAll(metro)
+
+
+def _box_polygons(spark: SparkSession) -> DataFrame:
+    """The _box_bboxes rectangles as closed polygon rings."""
+    return _box_bboxes(spark).select(
+        F.col("b_id").alias("poly_id"),
+        F.array("lat0", "lat0", "lat1", "lat1", "lat0").alias("ring_lat_e4"),
+        F.array("lon0", "lon1", "lon1", "lon0", "lon0").alias("ring_lon_e4"),
+    )
 
 
 @register(
@@ -474,7 +484,7 @@ _X7, _Y7 = cells.cell_xy_sql(_LAT_SQL, _LON_SQL, 7)
     WITH px AS (
       SELECT {_X7} AS x7, {_Y7} AS y7 FROM documents
     )
-    SELECT (4 * {1 << geo._RES_SHIFT} + (y7 // 8) * {1 << geo._Y_SHIFT} + (x7 // 8))
+    SELECT {cells.pack_sql(4, "(y7 // 8)", "(x7 // 8)")}
              AS tile,
            CAST(x7 % 8 AS INT) AS px, CAST(y7 % 8 AS INT) AS py,
            count(*) AS cnt
@@ -495,14 +505,12 @@ _X6, _Y6 = cells.cell_xy_sql(_LAT_SQL, _LON_SQL, 6)
     "kring_expand",
     oracle=f"""
     WITH cells6 AS (
-      SELECT DISTINCT (6 * {1 << geo._RES_SHIFT} + {_Y6} * {1 << geo._Y_SHIFT} + {_X6})
+      SELECT DISTINCT {cells.pack_sql(6, _Y6, _X6)}
                AS cell,
              {_X6} AS x, {_Y6} AS y
       FROM documents
     )
-    SELECT cell, (6 * {1 << geo._RES_SHIFT}
-                  + (y + dy) * {1 << geo._Y_SHIFT}
-                  + ((x + dx + 128) % 128)) AS neighbor
+    SELECT cell, {cells.pack_sql(6, "(y + dy)", "((x + dx + 128) % 128)")} AS neighbor
     FROM cells6, unnest(range(-1, 2)) AS a(dy), unnest(range(-1, 2)) AS b(dx)
     WHERE y + dy >= 0 AND y + dy < 64
     """,
@@ -1680,7 +1688,7 @@ _X8, _Y8 = cells.cell_xy_sql(_LAT_SQL, _LON_SQL, 8)
 @register(
     "raster_roundtrip",
     oracle=f"""
-    SELECT (8 * {1 << geo._RES_SHIFT} + {_Y8} * {1 << geo._Y_SHIFT} + {_X8})
+    SELECT {cells.pack_sql(8, _Y8, _X8)}
              AS cell,
            count(*) AS cnt
     FROM documents GROUP BY 1
@@ -3596,28 +3604,6 @@ def q_bigram_familiarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _box_bboxes(spark: SparkSession) -> DataFrame:
-    """The _BOX_SQL rectangles as a (b_id, lat0, lat1, lon0, lon1)
-    bbox frame (same literals as _box_polygons' rings)."""
-    lat0 = F.lit(-800_000) + F.col("id") * 130_000
-    lat1 = lat0 + F.lit(60_000) + F.pmod("id", F.lit(3)) * 40_000
-    lon0 = F.lit(-1_700_000) + F.col("id") * 260_000
-    lon1 = lon0 + F.lit(90_000) + F.pmod("id", F.lit(4)) * 50_000
-    boxes = spark.range(_N_BOXES).select(
-        F.concat(F.lit("box"), F.col("id").cast("string")).alias("b_id"),
-        lat0.cast("long").alias("lat0"), lat1.cast("long").alias("lat1"),
-        lon0.cast("long").alias("lon0"), lon1.cast("long").alias("lon1"),
-    )
-    metro = spark.range(1).select(
-        F.lit("metro").alias("b_id"),
-        F.lit(-450_000).cast("long").alias("lat0"),
-        F.lit(450_000).cast("long").alias("lat1"),
-        F.lit(-900_000).cast("long").alias("lon0"),
-        F.lit(900_000).cast("long").alias("lon1"),
-    )
-    return boxes.unionAll(metro)
-
-
 @register(
     "box_overlap_join",
     oracle=f"""
@@ -3659,7 +3645,7 @@ def q_box_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (lon - h).cast("long").alias("lon0"),
         (lon + h).cast("long").alias("lon1"),
     )
-    return spatial.box_overlap_join(a, _box_bboxes(spark), grid=100_000)
+    return spatial.box_overlap_join(a, _box_bboxes(spark))
 
 
 @register(
@@ -3706,9 +3692,7 @@ def q_tile_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ring_density",
     oracle=f"""
     WITH pts AS (SELECT {_X6} AS x, {_Y6} AS y FROM documents)
-    SELECT (6 * {1 << geo._RES_SHIFT}
-            + (y + dy) * {1 << geo._Y_SHIFT}
-            + ((x + dx + 128) % 128)) AS cell,
+    SELECT {cells.pack_sql(6, "(y + dy)", "((x + dx + 128) % 128)")} AS cell,
            CAST(sum(CASE WHEN dx = 0 AND dy = 0 THEN 2 ELSE 1 END)
                 AS BIGINT) AS density
     FROM pts, unnest(range(-1, 2)) AS a(dy), unnest(range(-1, 2)) AS b(dx)
@@ -3966,7 +3950,7 @@ def q_segment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (by0 + 120000 - F.pmod(rid, F.lit(3)) * 110000)
         .cast("long").alias("y1"),
     )
-    return spatial.segment_intersection_join(a, b, grid=100_000)
+    return spatial.segment_intersection_join(a, b)
 
 
 _GH_PREC = 6
@@ -5007,8 +4991,7 @@ _AREAL_RES, _AREAL_W = 5, 56_250  # 3_600_000/64 = 1_800_000/32 exactly
                         (lat1 - 1 + 900000) // {_AREAL_W} + 1)) AS ty(y)
     ),
     alloc AS (
-      SELECT ({_AREAL_RES} * 288230376151711744
-              + y * 536870912 + x) AS cell,
+      SELECT {cells.pack_sql(_AREAL_RES, "y", "x")} AS cell,
              (v * ((least(lon1, (x + 1) * {_AREAL_W} - 1800000)
                     - greatest(lon0, x * {_AREAL_W} - 1800000))
                    * (least(lat1, (y + 1) * {_AREAL_W} - 900000)

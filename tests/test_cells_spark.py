@@ -1,5 +1,5 @@
 """Three-way parity: Catalyst Column exprs == numpy kernels == Arrow
-pandas UDFs for cell assignment and point derivation. This is the
+pandas UDF for cell assignment and point derivation. This is the
 engine's core guarantee (the SQL-oracle gate depends on it).
 """
 
@@ -25,13 +25,17 @@ def test_cell_expr_matches_numpy_and_udf(spark):
     lat, lon = cells.point_exprs("id")
     df = spark.range(5000).select("id", lat, lon)
     for res in (0, 3, 7, 11, 15, 20):
+        c_expr = cells.cell_id_expr("lat_e4", "lon_e4", res)
+        uy, ux = cells.unpack_expr(c_expr)
         out = (
             df.select(
                 "id",
                 "lat_e4",
                 "lon_e4",
-                cells.cell_id_expr("lat_e4", "lon_e4", res).alias("c_expr"),
+                c_expr.alias("c_expr"),
                 cells.make_cell_id_udf(res)("lat_e4", "lon_e4").alias("c_udf"),
+                uy.alias("uy"),
+                ux.alias("ux"),
             )
             .orderBy("id")
             .collect()
@@ -43,6 +47,9 @@ def test_cell_expr_matches_numpy_and_udf(spark):
         got_udf = np.array([r.c_udf for r in out])
         assert np.array_equal(got_expr, want), f"expr mismatch at res {res}"
         assert np.array_equal(got_udf, want), f"udf mismatch at res {res}"
+        _, want_y, want_x = geo.unpack_cell(want)
+        assert np.array_equal(np.array([r.uy for r in out]), want_y), f"unpack y at res {res}"
+        assert np.array_equal(np.array([r.ux for r in out]), want_x), f"unpack x at res {res}"
 
 
 def test_cell_boundary_values(spark):

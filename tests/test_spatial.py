@@ -5,6 +5,10 @@ order-insensitive).
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -205,7 +209,7 @@ def test_box_overlap_join_matches_bruteforce(spark):
     ]
     a = spark.createDataFrame(a_rows, "a_id long, lat0 long, lat1 long, lon0 long, lon1 long")
     b = spark.createDataFrame(b_rows, "b_id long, lat0 long, lat1 long, lon0 long, lon1 long")
-    got = sorted(map(tuple, spatial.box_overlap_join(a, b, grid=100_000).collect()))
+    got = sorted(map(tuple, spatial.box_overlap_join(a, b).collect()))
 
     brute = []
     for ai, al0, al1, an0, an1 in a_rows:
@@ -225,7 +229,6 @@ def test_box_overlap_join_rejects_inverted_box(spark):
     filter then dropped the pairs, hiding the contract violation). The
     in-plan assert_true now fails loudly."""
     import pytest
-    from pyspark.sql import functions as F
 
     from inputosm_spark.operators import spatial
 
@@ -239,3 +242,221 @@ def test_box_overlap_join_rejects_inverted_box(spark):
     )
     with pytest.raises(Exception, match="inverted box"):
         spatial.box_overlap_join(good, bad).collect()
+
+
+def test_segment_join_matches_bruteforce(spark):
+    rng = np.random.default_rng(7)
+    n_a, n_b = 120, 60
+    span = 400_000
+    a_np = rng.integers(-span, span, size=(n_a, 4))
+    # keep b segments shortish so the grid cover stays tight
+    b0 = rng.integers(-span, span, size=(n_b, 2))
+    b_np = np.hstack([b0, b0 + rng.integers(-150_000, 150_000,
+                                            size=(n_b, 2))])
+    a = spark.createDataFrame(
+        [(f"a{i}", *map(int, r)) for i, r in enumerate(a_np)],
+        "a_id string, x0 long, y0 long, x1 long, y1 long",
+    )
+    b = spark.createDataFrame(
+        [(f"b{i}", *map(int, r)) for i, r in enumerate(b_np)],
+        "b_id string, x0 long, y0 long, x1 long, y1 long",
+    )
+    got = {(r.a_id, r.b_id) for r in
+           spatial.segment_intersection_join(a, b).collect()}
+
+    def cross(ox, oy, px, py, qx, qy):
+        return (px - ox) * (qy - oy) - (py - oy) * (qx - ox)
+
+    want = set()
+    for i, (ax0, ay0, ax1, ay1) in enumerate(a_np):
+        for j, (bx0, by0, bx1, by1) in enumerate(b_np):
+            d1 = cross(bx0, by0, bx1, by1, ax0, ay0)
+            d2 = cross(bx0, by0, bx1, by1, ax1, ay1)
+            d3 = cross(ax0, ay0, ax1, ay1, bx0, by0)
+            d4 = cross(ax0, ay0, ax1, ay1, bx1, by1)
+            if ((d1 > 0 > d2) or (d1 < 0 < d2)) and (
+                (d3 > 0 > d4) or (d3 < 0 < d4)
+            ):
+                want.add((f"a{i}", f"b{j}"))
+    assert got == want
+    assert len(want) > 0  # the fixture must actually exercise crossings
+
+
+def test_dbscan_labels_hand_graph(spark):
+    """Two clusters + one border + noise, verified against the
+    textbook definition by hand. eps=10, min_pts=3.
+
+    Cluster A: (0,0),(0,5),(5,0),(3,3) — mutual neighbors, all core.
+    Border: (0,14) is within 10 of (0,5) [core] but has only 2
+    neighbors itself -> border, labeled with A's min id.
+    Cluster B: (100,100),(100,106),(106,100),(103,103) — all core.
+    Noise: (50,50) alone."""
+    pts = [
+        (1, 0, 0), (2, 0, 5), (3, 5, 0), (4, 3, 3),
+        (5, 0, 14),
+        (6, 100, 100), (7, 100, 106), (8, 106, 100), (9, 103, 103),
+        (10, 50, 50),
+    ]
+    df = spark.createDataFrame(pts, "id long, lat_e4 long, lon_e4 long")
+    out = {r.id: (r.cluster, r.role) for r in spatial.dbscan(df, eps=10, min_pts=3).collect()}
+    assert out[1] == (1, "core")
+    assert out[2] == (1, "core")
+    assert out[3] == (1, "core")
+    assert out[4] == (1, "core")
+    assert out[5] == (1, "border")
+    assert all(out[i] == (6, "core") for i in (6, 7, 8, 9))
+    assert out[10] == (-1, "noise")
+
+
+def test_dbscan_cell_boundary_neighbors(spark):
+    """Points eps-close but in ADJACENT grid cells must still pair:
+    the 3x3 probe explode is exactly what makes the grid exact."""
+    # eps=10 grid; the trio straddles a cell boundary (x = ...0)
+    pts = [(1, 0, 9995), (2, 0, 10002), (3, 0, 10009)]
+    df = spark.createDataFrame(pts, "id long, lat_e4 long, lon_e4 long")
+    out = {r.id: (r.cluster, r.role) for r in spatial.dbscan(df, eps=10, min_pts=3).collect()}
+    # 2 sees both others (core); 1 and 3 see two points each (border)
+    assert out[2] == (2, "core")
+    assert out[1] == (2, "border") and out[3] == (2, "border")
+
+
+def test_staypoints_runs_and_min_points(spark):
+    """Run segmentation: same-cell runs split by a visit elsewhere;
+    runs under min_points are dropped; dwell is exit-enter."""
+    # user 1: 3 obs at cell(0,0)-ish, 1 obs far away, 2 obs back ->
+    # first run kept (n=3), second run (n=2) dropped
+    rows = [
+        (1, 100, 10, 10), (1, 160, 12, 11), (1, 220, 11, 13),
+        (1, 300, 800_000, 1_700_000),
+        (1, 400, 10, 12), (1, 460, 13, 10),
+        (2, 100, 10, 10), (2, 150, 10, 10), (2, 200, 10, 10), (2, 260, 10, 10),
+    ]
+    df = spark.createDataFrame(rows, "user_id long, ts_sec long, lat_e4 long, lon_e4 long")
+    out = spatial.staypoints(df, res=5, min_points=3).collect()
+    got = {(r.user_id): (r.enter_sec, r.exit_sec, r.dwell_sec, r.n_points) for r in out}
+    assert len(out) == 2
+    assert got[1] == (100, 220, 120, 3)
+    assert got[2] == (100, 260, 160, 4)
+
+
+def test_colocation_pairs_bruteforce_and_cap(spark):
+    """colocation_pairs on hand data: pair counts equal brute force,
+    min_shared filters, and an over-cap bucket (transit hub) drops —
+    users co-present ONLY there share nothing."""
+    from itertools import combinations
+
+    # obs: (user, ts_sec, lat_e4, lon_e4). res-2 cells are huge; use
+    # far-apart coords for distinct cells.
+    hub = (0, 0)            # everyone here at bucket 0 (dropped: 5 > cap 4)
+    spot_a = (800000, 900000)
+    spot_b = (-800000, -900000)
+    rows = []
+    for u in range(1, 6):
+        rows.append((u, 10, *hub))
+        rows.append((u, 10, *hub))  # repeat ping: ONE presence
+    for u in (1, 2):
+        rows.append((u, 3600, *spot_a))     # bucket 1 together
+        rows.append((u, 7200, *spot_b))     # bucket 2 together
+    rows.append((3, 3600, *spot_a))         # with 1,2 once only
+    df = spark.createDataFrame(
+        rows, "user_id long, ts_sec long, lat_e4 long, lon_e4 long"
+    )
+    got = {
+        (r.user_a, r.user_b): r.n_shared
+        for r in spatial.colocation_pairs(
+            df, res=2, bucket_s=3600, min_shared=2, max_bucket=4
+        ).collect()
+    }
+    assert got == {(1, 2): 2}
+    # without the cap the hub bucket contributes all 10 pairs once
+    got_nocap = {
+        (r.user_a, r.user_b): r.n_shared
+        for r in spatial.colocation_pairs(
+            df, res=2, bucket_s=3600, min_shared=1, max_bucket=None
+        ).collect()
+    }
+    want = {p: 1 for p in combinations(range(1, 6), 2)}
+    want[(1, 2)] = 3
+    want[(1, 3)] = 2
+    want[(2, 3)] = 2
+    assert got_nocap == want
+
+
+def test_areal_interpolation_conservation_and_guards(spark):
+    """Mass conservation: a box's total allocation is value - r where
+    0 <= r < n_cells (one floor per cell); a CELL-ALIGNED box
+    allocates exactly its value; a non-integral res raises; the int64
+    overflow guard fires loudly."""
+    W = 56_250  # res-5 cell edge
+    aligned = spark.createDataFrame(
+        [(0, 2 * W, 0, 3 * W, 6000)],
+        "lat0 long, lat1 long, lon0 long, lon1 long, value long",
+    )
+    out = spatial.areal_interpolation(aligned, res=5).collect()
+    assert sum(r.alloc_sum for r in out) == 6000
+    assert len(out) == 6 and all(r.alloc_sum == 1000 for r in out)
+
+    ragged = spark.createDataFrame(
+        [(100, W + 3517, 200, 2 * W + 7919, 99991)],
+        "lat0 long, lat1 long, lon0 long, lon1 long, value long",
+    )
+    rout = spatial.areal_interpolation(ragged, res=5).collect()
+    tot = sum(r.alloc_sum for r in rout)
+    assert 99991 - len(rout) <= tot <= 99991
+
+    # res 6: nx=128 -> 28125 exact; res 7: nx=256 -> 14062.5 NOT integral
+    with pytest.raises(ValueError):
+        spatial.areal_interpolation(aligned, res=7)
+
+    big = spark.createDataFrame(
+        [(-900_000, 900_000, -1_800_000, 1_800_000, 1 << 45)],
+        "lat0 long, lat1 long, lon0 long, lon1 long, value long",
+    )
+    try:
+        spatial.areal_interpolation(big, res=5).collect()
+        raise AssertionError("overflow guard did not fire")
+    except Exception as e:  # Py4J wraps the SparkRuntimeException
+        assert "overflow" in str(e) or "USER_RAISED" in str(e) or "assert" in str(e).lower()
+
+
+_TWO_SESSIONS = """
+from pyspark.sql import functions as F
+from inputosm_spark import get_spark
+from inputosm_spark.datagen import synth_polygons
+from inputosm_spark.functions import cells
+from inputosm_spark.operators import similarity, spatial
+
+
+def run():
+    spark = get_spark(cpus=2, shuffle_partitions=2, app_name="two_sessions")
+    lat, lon = cells.point_exprs("id")
+    pts = spark.range(2000).select("id", lat, lon)
+    pip = sorted(map(tuple, spatial.pip_join(pts, synth_polygons(spark), res=6)
+                     .select("id", "poly_id").collect()))
+    iv = similarity.fp_vec(F.array(F.col("id") / 100.0, F.lit(0.5)))
+    dots = sorted(map(tuple, spark.range(50).select(
+        "id", similarity.dot_fp(iv, iv).alias("d")).collect()))
+    spark.stop()
+    return pip, dots
+
+
+first, second = run(), run()
+print(first == second, len(first[0]) > 0)
+"""
+
+
+def test_pandas_udfs_bind_to_each_session():
+    """pip_join and dot_fp in a second SparkSession, after the first
+    one stopped, return the same rows and log no accumulator errors. A
+    pandas UDF built at import time stays bound to the first
+    SparkContext: its rows still come back, but every task of the
+    second session logs `Failed to update accumulator`."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root, INPUTOSM_DRIVER_MEM="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", _TWO_SESSIONS], cwd=root, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert proc.stdout.split() == ["True", "True"]
+    assert "Failed to update accumulator" not in proc.stderr
