@@ -18,7 +18,10 @@ Instead each pairwise stage is a bucket-local GEMM: cogroup the two
 sides on the bucket key (lsh_sig / centroid id), multiply the stacked
 matrices once per bucket, and emit only narrow (qid, nid, dot, norms)
 rows. Each vector crosses the Arrow boundary once per bucket it
-belongs to, not once per pair.
+belongs to, not once per pair, and only as its fixed-point array:
+norm squares are computed inside the kernel (`_gemm_pairs`, the one
+place pair dots, norms and partial top-k are written), not by a
+separate per-row UDF stage.
 
 Determinism split: Python emits ONLY exact int64 (dots, norm squares);
 every float op (sqrt, divide, round) and every ranking decision stays
@@ -48,6 +51,15 @@ from pyspark.sql.types import LongType
 
 FP_SCALE = 1_000_000  # fixed-point scale: |x|<=1, d<=512 keeps dots < 2^53
 
+# every ranking and threshold reads the cosine rounded to this many
+# decimals (the oracles' `round(..., 4)`)
+_DECIMALS = 4
+# one rounding-grid step (covers round-to-grid both ways) plus slack
+# for the kernels' float64 cos approximation (~1e-16 relative,
+# negligible vs the grid)
+_PRUNE_MARGIN = 1.5 * 10.0 ** -_DECIMALS
+_MAX_CENTROIDS = 65_536  # largest coarse quantizer a kernel closure holds
+
 _PAIR_SCHEMA = "qid long, nid long, dot long, qns long, cns long"
 
 
@@ -59,24 +71,6 @@ def fp_vec(col) -> F.Column:
     return F.transform(
         col, lambda x: F.round(x.cast("double") * F.lit(float(FP_SCALE))).cast("long")
     )
-
-
-def dot_fp(a, b) -> F.Column:
-    """Exact int64 dot product, vectorized over the Arrow batch (row-
-    aligned pairs; for bucket x bucket work use the GEMM kernels). The
-    pandas UDF is built per call so it binds to the current
-    SparkContext."""
-
-    @pandas_udf(LongType())
-    def dot_fp(a: pd.Series, b: pd.Series) -> pd.Series:
-        if len(a) == 0:
-            return pd.Series([], dtype="int64")
-        A = np.stack(a.to_numpy()).astype(np.float64)
-        B = np.stack(b.to_numpy()).astype(np.float64)
-        # float64 products/sums of ints < 2^53 are exact -> back to int64
-        return pd.Series(np.einsum("ij,ij->i", A, B).astype(np.int64))
-
-    return dot_fp(a, b)
 
 
 def _make_sig_udf(n_planes: int):
@@ -103,23 +97,20 @@ def _make_sig_udf(n_planes: int):
     return sig
 
 
-def _prep(df: DataFrame, id_out: str, id_col: str = "vec_id",
-          vec_col: str = "embedding") -> DataFrame:
-    """(id, iv, ns): fixed-point vector + exact self-dot (norm²),
-    computed once per frame."""
-    return df.select(
-        F.col(id_col).alias(id_out), fp_vec(vec_col).alias("iv")
-    ).withColumn("ns", dot_fp("iv", "iv"))
+def _prep(df: DataFrame, id_out: str) -> DataFrame:
+    """(id, iv): the fixed-point vector, the one form in which a vector
+    crosses Arrow (its norm is computed in the kernel)."""
+    return df.select(F.col("vec_id").alias(id_out), fp_vec("embedding").alias("iv"))
 
 
-def _cos_from_pair(round_scale: int) -> F.Column:
+def _cos_from_pair() -> F.Column:
     """cos over the narrow pair row — float math entirely in Catalyst:
     sqrt/divide/round on exact-integer inputs, deterministic across
     engines."""
     return F.round(
         F.col("dot").cast("double")
         / (F.sqrt(F.col("qns").cast("double")) * F.sqrt(F.col("cns").cast("double"))),
-        round_scale,
+        _DECIMALS,
     )
 
 
@@ -133,29 +124,23 @@ def _empty_pairs() -> pd.DataFrame:
 _GEMM_CHUNK_CELLS = 4_000_000  # max nq*nc materialized at once (~120 MB out)
 
 
-def _prune_margin(round_scale: int) -> float:
-    # one rounding-grid step (covers round-to-grid both ways) plus slack
-    # for the kernel's float64 cos approximation (~1e-16 relative,
-    # negligible vs the grid at any sane round_scale)
-    return 1.5 * (10.0 ** -round_scale)
-
-
 def _gemm_pairs(qpdf: pd.DataFrame, cpdf: pd.DataFrame,
                 upper_only: bool = False,
                 topk: int | None = None,
-                min_cos: float | None = None,
-                round_scale: int = 4) -> pd.DataFrame:
-    """(q, c) dots for one bucket via exact GEMM — chunked on the query
-    side so a degenerate giant bucket costs bounded memory per step
-    instead of one nq x nc allocation.
+                min_cos: float | None = None) -> pd.DataFrame:
+    """(qid, nid, dot, qns, cns) for one (qid, iv) x (nid, iv) bucket
+    via exact GEMM — the one place pair dots, norm squares and partial
+    top-k are computed. Chunked on the query side so a degenerate giant
+    bucket costs bounded memory per step instead of one nq x nc
+    allocation.
 
     PARTIAL SELECTION (the scale lever): with `topk`, each query emits
     only candidates whose cosine is >= (its (k+1)-th best in this
     bucket) - margin; with `min_cos`, only candidates >= min_cos -
     margin. Both are provably SUPERSETS of what the downstream Catalyst
     ranking/filter keeps, so oracle hashes are unchanged: the final
-    order is (round(cos, rs) DESC, nid ASC), round is monotone, and any
-    candidate more than one grid step (10^-rs) below the k-th best
+    order is (round(cos, 4) DESC, nid ASC), round is monotone, and any
+    candidate more than one grid step (10^-4) below the k-th best
     exact cosine rounds STRICTLY lower than the k-th best's rounded
     value — it can never displace the k rows above it. The margin
     (1.5 grid steps) covers the grid plus float64 error; k+1 covers the
@@ -168,9 +153,9 @@ def _gemm_pairs(qpdf: pd.DataFrame, cpdf: pd.DataFrame,
     C = np.stack(cpdf["iv"].to_numpy()).astype(np.float64)
     nc = len(cpdf)
     nid = cpdf["nid"].to_numpy()
-    cns = cpdf["ns"].to_numpy()
+    # norm squares: float64 self-dots of ints < 2^53 are exact -> int64
+    cns = np.einsum("ij,ij->i", C, C).astype(np.int64)
     step = max(1, _GEMM_CHUNK_CELLS // max(nc, 1))
-    margin = _prune_margin(round_scale)
     chunks = []
     for lo in range(0, len(qpdf), step):
         qc = qpdf.iloc[lo : lo + step]
@@ -178,7 +163,7 @@ def _gemm_pairs(qpdf: pd.DataFrame, cpdf: pd.DataFrame,
         D = (Q @ C.T).astype(np.int64)  # exact (ints < 2^53)
         nq = len(qc)
         qids = qc["qid"].to_numpy()
-        qns = qc["ns"].to_numpy()
+        qns = np.einsum("ij,ij->i", Q, Q).astype(np.int64)
         mask = None
         if upper_only:  # canonical a < b pairs for self-joins
             mask = qids[:, None] < nid[None, :]
@@ -203,12 +188,12 @@ def _gemm_pairs(qpdf: pd.DataFrame, cpdf: pd.DataFrame,
                 # `cos >= t` treats NaN as greater-than-all and KEEPS
                 # them, so dropping here would break the strict-superset
                 # contract — downstream decides their fate, same as topk
-                keep_mc = cos >= (min_cos - margin)
+                keep_mc = cos >= (min_cos - _PRUNE_MARGIN)
                 if nonfinite is not None:
                     keep_mc |= nonfinite
                 sel &= keep_mc
             if topk is not None and nc > topk + 1:
-                # kth over FINITE cosines only (r4 ADVICE): np.partition
+                # kth over FINITE cosines only (r4 ADVICE): a partition
                 # sorts NaN last, so >= topk+1 zero-norm candidates in a
                 # bucket would make kth NaN and `cos >= NaN` all-False,
                 # silently pruning every finite candidate before the
@@ -221,7 +206,7 @@ def _gemm_pairs(qpdf: pd.DataFrame, cpdf: pd.DataFrame,
                 kth = np.partition(base, nc - topk - 1, axis=1)[
                     :, nc - topk - 1
                 ]
-                keep_k = cos >= (kth - margin)[:, None]
+                keep_k = cos >= (kth - _PRUNE_MARGIN)[:, None]
                 if nonfinite is not None:
                     keep_k |= nonfinite
                 sel &= keep_k
@@ -253,15 +238,12 @@ def _gemm_pairs(qpdf: pd.DataFrame, cpdf: pd.DataFrame,
 
 
 def _bucket_pair_dots(q: DataFrame, c: DataFrame, key: str,
-                      upper_only: bool = False,
-                      topk: int | None = None,
-                      min_cos: float | None = None,
-                      round_scale: int = 4) -> DataFrame:
+                      topk: int | None = None) -> DataFrame:
     """Cogroup the prepped sides on the bucket key and GEMM each
     bucket. Output is narrow (qid, nid, dot, qns, cns) — the scale
     contract: Arrow traffic is O(bucket members), not O(pairs x dim) —
-    and with `topk`/`min_cos` the kernel emits only the provable
-    superset of the final ranking's survivors (see _gemm_pairs).
+    and with `topk` the kernel emits only the provable superset of the
+    final ranking's survivors (see _gemm_pairs).
 
     At 100 TB a degenerate bucket could overflow one task's memory;
     production pairing caps bucket size upstream (see
@@ -269,8 +251,7 @@ def _bucket_pair_dots(q: DataFrame, c: DataFrame, key: str,
     """
 
     def fn(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        return _gemm_pairs(qpdf, cpdf, upper_only=upper_only, topk=topk,
-                           min_cos=min_cos, round_scale=round_scale)
+        return _gemm_pairs(qpdf, cpdf, topk=topk)
 
     return (
         q.groupBy(key)
@@ -279,9 +260,9 @@ def _bucket_pair_dots(q: DataFrame, c: DataFrame, key: str,
     )
 
 
-def _rank_topk(scored: DataFrame, k: int, round_scale: int) -> DataFrame:
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     scored = scored.filter(F.col("qid") != F.col("nid")).select(
-        "qid", "nid", _cos_from_pair(round_scale).alias("cos")
+        "qid", "nid", _cos_from_pair().alias("cos")
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("nid"))
     return (
@@ -291,25 +272,18 @@ def _rank_topk(scored: DataFrame, k: int, round_scale: int) -> DataFrame:
     )
 
 
-def cosine_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    qid_col: str = "vec_id",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_scale: int = 4,
-) -> DataFrame:
-    """Exact brute-force cosine top-k baseline: the query matrix is by
-    contract tiny, so it is collected once into the kernel closure (the
-    mapInPandas equivalent of a broadcast) and the corpus streams
-    through in Arrow batches — each corpus vector crosses the boundary
-    exactly once, GEMM'd against all queries at once.
+def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
+    """Exact brute-force cosine top-k baseline over (vec_id, embedding)
+    frames: the query matrix is by contract tiny, so it is collected
+    once into the kernel closure (the mapInPandas equivalent of a
+    broadcast) and the corpus streams through in Arrow batches — each
+    corpus vector crosses the boundary exactly once, GEMM'd against all
+    queries at once.
 
-    Cosine is rounded to `round_scale` decimals *before* ranking and
-    ties broken by corpus id — a total order that is engine-neutral.
+    Cosine is rounded to 4 decimals *before* ranking and ties broken by
+    corpus id — a total order that is engine-neutral.
     """
-    qrows = _prep(queries, "qid", qid_col, vec_col).limit(100_001).collect()
+    qrows = _prep(queries, "qid").limit(100_001).collect()
     if not qrows:
         raise ValueError("cosine_topk: empty query set")
     if len(qrows) > 100_000:
@@ -318,37 +292,43 @@ def cosine_topk(
             "(queries are collected into the kernel closure); use "
             "ann_lsh_topk or ivf_topk for large query sets"
         )
-    Q = np.array([r.iv for r in qrows], dtype=np.float64)
-    qids = np.array([r.qid for r in qrows], dtype=np.int64)
-    qns = np.array([r.ns for r in qrows], dtype=np.int64)
-
-    qpdf = pd.DataFrame({"qid": qids, "iv": list(Q), "ns": qns})
+    qpdf = pd.DataFrame({
+        "qid": np.array([r.qid for r in qrows], dtype=np.int64),
+        "iv": list(np.array([r.iv for r in qrows], dtype=np.float64)),
+    })
 
     def gen(it):
         for pdf in it:
             if len(pdf):
                 # per-corpus-batch top-k per query is a superset of the
                 # global top-k — pruning stays exact across batches
-                yield _gemm_pairs(qpdf, pdf, topk=k,
-                                  round_scale=round_scale)
+                yield _gemm_pairs(qpdf, pdf, topk=k)
 
-    c = _prep(corpus, "nid", id_col, vec_col)
-    scored = c.mapInPandas(gen, _PAIR_SCHEMA)
-    return _rank_topk(scored, k, round_scale)
+    scored = _prep(corpus, "nid").mapInPandas(gen, _PAIR_SCHEMA)
+    return _rank_topk(scored, k)
 
 
-def hyperplane_signature(
-    df: DataFrame,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Random-hyperplane LSH signature (SimHash for embeddings) — one
-    Arrow batch matmul for all planes (the per-plane column-expression
-    tree this replaces bloated codegen O(n_planes x dims))."""
+def hyperplane_signature(df: DataFrame, n_planes: int = 8) -> DataFrame:
+    """(vec_id, lsh_sig): random-hyperplane LSH signature (SimHash for
+    embeddings) — one Arrow batch matmul for all planes (the per-plane
+    column-expression tree this replaces bloated codegen
+    O(n_planes x dims))."""
     sig = _make_sig_udf(n_planes)
-    return df.select(
-        F.col(id_col).alias("vec_id"), sig(fp_vec(vec_col)).alias("lsh_sig")
+    return df.select("vec_id", sig(fp_vec("embedding")).alias("lsh_sig"))
+
+
+def _shared_buckets(vecs: DataFrame) -> DataFrame:
+    """Drop size-1 LSH buckets before a self-pairing kernel: their only
+    pair is the self-match that both self-searches drop anyway
+    (qid != nid, vec_a < vec_b), and at wide signatures they dominate
+    the bucket count — each costs a per-group pandas kernel call for
+    zero output rows. The count window rides the same lsh_sig exchange
+    the grouped kernel needs."""
+    wb = Window.partitionBy("lsh_sig")
+    return (
+        vecs.withColumn("__bn", F.count("*").over(wb))
+        .filter(F.col("__bn") >= 2)
+        .drop("__bn")
     )
 
 
@@ -357,7 +337,6 @@ def ann_lsh_topk(
     corpus: DataFrame,
     k: int,
     n_planes: int = 8,
-    round_scale: int = 4,
 ) -> DataFrame:
     """Approximate NN: exact cosine ranking restricted to the LSH
     bucket — a cogrouped bucket-GEMM on the 64-bit signature key. At
@@ -371,38 +350,22 @@ def ann_lsh_topk(
         # self-search: prep + signature kernel run ONCE over the cached
         # corpus; the query side is an all-columns-aliased projection
         # (fresh attribute ids — the self-cogroup rule, CLAUDE.md)
-        # instead of a second fp_vec/dot_fp/sig Arrow pipeline.
-        # Size-1 buckets are dropped BEFORE the cogroup: their only
-        # pair is the self-match the final ranking filters anyway
-        # (qid != nid), and at wide signatures they dominate the
-        # bucket count — each costs a per-group pandas kernel call for
-        # zero output rows. The count window rides the same lsh_sig
-        # exchange the cogroup needs.
-        wb = Window.partitionBy("lsh_sig")
-        c = (
-            c.withColumn("__bn", F.count("*").over(wb))
-            .filter(F.col("__bn") >= 2)
-            .drop("__bn")
-            .cache()
-        )
+        # instead of a second fp_vec/sig Arrow pipeline
+        c = _shared_buckets(c).cache()
         q = c.select(
             F.col("nid").alias("qid"),
             F.col("iv").alias("iv"),
-            F.col("ns").alias("ns"),
             F.col("lsh_sig").alias("lsh_sig"),
         )
     else:
         q = _prep(queries, "qid").withColumn("lsh_sig", sig("iv"))
-    scored = _bucket_pair_dots(q, c, "lsh_sig", topk=k,
-                               round_scale=round_scale)
-    return _rank_topk(scored, k, round_scale)
+    return _rank_topk(_bucket_pair_dots(q, c, "lsh_sig", topk=k), k)
 
 
 def near_dup_pairs(
     corpus: DataFrame,
     n_planes: int = 8,
     threshold: float = 0.15,
-    round_scale: int = 4,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate PAIRS (vec_a < vec_b): candidate
     pairs from equal LSH hyperplane signatures, verified by exact
@@ -411,142 +374,80 @@ def near_dup_pairs(
     no rounding sensitivity), halving emitted rows.
     """
     sig = _make_sig_udf(n_planes)
-    vecs = _prep(corpus, "qid").withColumn("lsh_sig", sig("iv"))
-    # size-1 buckets emit no a<b pair — drop them before the grouped
-    # kernel (one count window on the same lsh_sig exchange) so the
-    # per-group pandas overhead is paid only where pairs can exist
-    wb = Window.partitionBy("lsh_sig")
-    vecs = (
-        vecs.withColumn("__bn", F.count("*").over(wb))
-        .filter(F.col("__bn") >= 2)
-        .drop("__bn")
-    )
+    vecs = _shared_buckets(_prep(corpus, "qid").withColumn("lsh_sig", sig("iv")))
 
     # self-pairing is ONE grouped kernel, not a self-cogroup: a cogroup
     # of a frame with itself shares attribute ids across sides, which
     # Catalyst dedups/prunes incorrectly — and one pass is cheaper
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         return _gemm_pairs(pdf, pdf.rename(columns={"qid": "nid"}),
-                           upper_only=True, min_cos=threshold,
-                           round_scale=round_scale)
+                           upper_only=True, min_cos=threshold)
 
     pairs = vecs.groupBy("lsh_sig").applyInPandas(fn, _PAIR_SCHEMA)
     return (
         pairs.select(
             F.col("qid").alias("vec_a"),
             F.col("nid").alias("vec_b"),
-            _cos_from_pair(round_scale).alias("cos"),
+            _cos_from_pair().alias("cos"),
         )
         .filter(F.col("cos") >= threshold)
     )
 
 
-def _centroid_dots(vectors: DataFrame, centroids: DataFrame,
-                   id_out: str = "vec_id",
-                   topk: int | None = None,
-                   round_scale: int = 4,
-                   prepped: DataFrame | None = None,
-                   crows: list | None = None) -> DataFrame:
-    """(id, cid, dot, qns, cns) for every vector x centroid — the
-    coarse quantizer's score matrix. Centroids are by definition tiny,
-    so they are collected once into the kernel closure (broadcast) and
-    the corpus streams through in Arrow batches. Ranking (rounded cos
-    DESC, cid ASC) happens in Catalyst, not here, so tie-breaks match
-    the oracle bit-for-bit. With `topk`, each vector emits only its
-    top-k centroids plus the rounding-margin superset (same proof as
-    _gemm_pairs; every batch sees ALL centroids, so per-batch selection
-    is globally exact) — O(n_vectors * topk) rows instead of
-    O(n_vectors * n_centroids).
+def _centroid_rows(centroids: DataFrame) -> list:
+    """The coarse quantizer's (cid, iv) rows, collected once."""
+    return _prep(centroids, "cid").limit(_MAX_CENTROIDS + 1).collect()
 
-    `prepped` / `crows` let a caller that already holds the prepped
-    (id, iv, ns) corpus frame or the collected centroid rows skip the
-    re-prep Arrow pass / the re-collect job (ivf_topk calls this twice
-    over the same corpus+centroids — assignment and probing).
-    """
-    if crows is None:
-        crows = _prep(centroids, "cid").limit(65_537).collect()
+
+def _nearest_centroids(prepped: DataFrame, crows: list, n: int) -> DataFrame:
+    """(qid, cid): the n nearest centroids of each prepped (qid, iv)
+    vector, ranked by (rounded cos DESC, cid ASC) in Catalyst, so
+    tie-breaks match the oracle's window bit-for-bit. Centroids are by
+    definition tiny, so `crows` ride the kernel closure (broadcast) and
+    the vectors stream through `_gemm_pairs` in Arrow batches. Every
+    batch sees ALL centroids, so the kernel's per-batch top-n superset
+    is globally exact — O(n_vectors * n) rows instead of
+    O(n_vectors * n_centroids)."""
     if not crows:
         raise ValueError("empty centroid set")
-    if len(crows) > 65_536:
+    if len(crows) > _MAX_CENTROIDS:
         raise ValueError("coarse quantizer too large to broadcast as a "
                          "kernel closure; shard the centroid table")
-    crows = sorted(crows, key=lambda r: r.cid)
-    C = np.array([r.iv for r in crows], dtype=np.float64)
-    cids = np.array([r.cid for r in crows], dtype=np.int64)
-    cns = np.array([r.ns for r in crows], dtype=np.int64)
-    margin = _prune_margin(round_scale)
+    cpdf = pd.DataFrame({
+        "nid": np.array([r.cid for r in crows], dtype=np.int64),
+        "iv": list(np.array([r.iv for r in crows], dtype=np.float64)),
+    })
 
     def gen(it):
         for pdf in it:
-            if len(pdf) == 0:
-                continue
-            V = np.stack(pdf["iv"].to_numpy()).astype(np.float64)
-            D = (V @ C.T).astype(np.int64)  # (nv, k) exact
-            nv, k = D.shape
-            qids = pdf["qid"].to_numpy()
-            qns = pdf["ns"].to_numpy()
-            if topk is not None and k > topk:
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = D / np.sqrt(
-                        qns[:, None].astype(np.float64)
-                        * cns[None, :].astype(np.float64)
-                    )
-                kth = np.partition(cos, k - topk, axis=1)[:, k - topk]
-                sel = (cos >= (kth - margin)[:, None]) | ~np.isfinite(cos)
-                qi, ci = np.nonzero(sel)
-                yield pd.DataFrame(
-                    {
-                        "qid": qids[qi],
-                        "nid": cids[ci],
-                        "dot": D[qi, ci],
-                        "qns": qns[qi],
-                        "cns": cns[ci],
-                    }
-                )
-                continue
-            yield pd.DataFrame(
-                {
-                    "qid": np.repeat(qids, k),
-                    "nid": np.tile(cids, nv),
-                    "dot": D.ravel(),
-                    "qns": np.repeat(qns, k),
-                    "cns": np.tile(cns, nv),
-                }
-            )
+            if len(pdf):
+                yield _gemm_pairs(pdf, cpdf, topk=n)
 
-    v = prepped if prepped is not None else _prep(vectors, "qid")
-    # single select, not chained renames (qid->nid would collide with
-    # the existing nid before its own rename to cid)
-    return v.mapInPandas(gen, _PAIR_SCHEMA).select(
-        F.col("qid").alias(id_out), F.col("nid").alias("cid"),
-        "dot", "qns", "cns",
+    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("cid"))
+    return (
+        prepped.mapInPandas(gen, _PAIR_SCHEMA)
+        .select("qid", F.col("nid").alias("cid"), _cos_from_pair().alias("cos"))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= n)
+        .select("qid", "cid")
     )
 
 
-def ivf_assign(corpus: DataFrame, centroids: DataFrame, round_scale: int = 4) -> DataFrame:
+def ivf_assign(corpus: DataFrame, centroids: DataFrame) -> DataFrame:
     """(vec_id, cid): each vector's nearest centroid by cosine.
     Ties break on centroid id for determinism (rounded cos, same rule
     as the oracle's window)."""
-    scored = _centroid_dots(corpus, centroids, "vec_id", topk=1,
-                            round_scale=round_scale).select(
-        "vec_id", "cid", _cos_from_pair(round_scale).alias("cos")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cos"), F.asc("cid"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cid")
-    )
+    return _nearest_centroids(
+        _prep(corpus, "qid"), _centroid_rows(centroids), 1
+    ).select(F.col("qid").alias("vec_id"), "cid")
 
 
 def ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int,
-    n_centroids: int = 8,
+    centroids: DataFrame,
     n_probe: int = 2,
-    round_scale: int = 4,
-    centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF approximate NN: coarse-quantize the corpus into centroid
     buckets, probe each query's n_probe nearest buckets, rank exactly
@@ -555,81 +456,49 @@ def ivf_topk(
     all queries) and a query touches n_probe/n_centroids of it instead
     of everything.
 
-    Default centroids are the deterministic first-N corpus vectors (a
-    reproducible stand-in for the k-means trainer `kmeans_centroids`,
-    which plugs in via the `centroids` parameter unchanged).
+    `centroids` is a (vec_id, embedding) frame: the first-N corpus
+    vectors, say, or the k-means trainer's output (`kmeans_centroids`).
     """
-    if centroids is None:
-        centroids = corpus.filter(F.col("vec_id") < n_centroids)
-
-    # the corpus crosses the Arrow prep boundary ONCE: the cached
-    # (nid, iv, ns) frame feeds the assignment kernel, the bucket join,
-    # and (when queries IS the corpus, the self-search case) both
-    # query-side consumers too — the old form re-prepped the corpus up
-    # to four times (guide §4: pay the Python boundary once). The
+    # the corpus crosses the Arrow boundary ONCE: the cached (nid, iv)
+    # frame feeds the assignment kernel, the bucket join, and (when
+    # queries IS the corpus, the self-search case) both query-side
+    # consumers too (guide §4: pay the Python boundary once). The
     # centroid rows are likewise collected once for both quantizer
     # passes.
     v = _prep(corpus, "nid").cache()
-    crows = _prep(centroids, "cid").limit(65_537).collect()
+    crows = _centroid_rows(centroids)
 
-    # corpus buckets: nearest centroid per vector (rank-1 on rounded cos)
-    cdots = _centroid_dots(corpus, centroids, "nid", topk=1,
-                           round_scale=round_scale,
-                           prepped=v.select(F.col("nid").alias("qid"),
-                                            "iv", "ns"),
-                           crows=crows).select(
-        "nid", "cid", _cos_from_pair(round_scale).alias("acos")
-    )
-    wa = Window.partitionBy("nid").orderBy(F.desc("acos"), F.asc("cid"))
-    assign = (
-        cdots.withColumn("rn", F.row_number().over(wa))
-        .filter(F.col("rn") == 1)
-        .select("nid", "cid")
-    )
-    bucketed = v.join(assign, "nid")  # (nid, iv, ns, cid)
+    # corpus buckets: nearest centroid per vector
+    assign = _nearest_centroids(
+        v.select(F.col("nid").alias("qid"), "iv"), crows, 1
+    ).withColumnRenamed("qid", "nid")
+    bucketed = v.join(assign, "nid")  # (nid, iv, cid)
 
     if queries is corpus:
         # self-search: derive the query side from the SAME cached prep,
         # alias-ing EVERY column — each Alias mints a fresh attribute
         # id, so the downstream cogroup never sees one attribute on
         # both sides (the self-cogroup pruning hazard, CLAUDE.md)
-        qprep = v.select(
-            F.col("nid").alias("qid"),
-            F.col("iv").alias("iv"),
-            F.col("ns").alias("ns"),
-        )
+        qprep = v.select(F.col("nid").alias("qid"), F.col("iv").alias("iv"))
     else:
         qprep = _prep(queries, "qid").cache()
     # query-side probes: top n_probe centroid buckets per query
-    qdots = _centroid_dots(queries, centroids, "qid", topk=n_probe,
-                           round_scale=round_scale,
-                           prepped=qprep, crows=crows).select(
-        "qid", "cid", _cos_from_pair(round_scale).alias("pcos")
-    )
-    wp = Window.partitionBy("qid").orderBy(F.desc("pcos"), F.asc("cid"))
-    probes = (
-        qdots.withColumn("pr", F.row_number().over(wp))
-        .filter(F.col("pr") <= n_probe)
-        .select("qid", "cid")
-    )
-    q = qprep.join(probes, "qid")  # (qid, iv, ns, cid)
+    q = qprep.join(_nearest_centroids(qprep, crows, n_probe), "qid")
 
-    scored = _bucket_pair_dots(q, bucketed, "cid", topk=k,
-                               round_scale=round_scale)
-    return _rank_topk(scored, k, round_scale)
+    return _rank_topk(_bucket_pair_dots(q, bucketed, "cid", topk=k), k)
 
 
 _PARTIAL_SCHEMA = "cid long, cnt long, sumvec array<long>"
 
 
-def _assign_partials_kernel(crows: list, round_scale: int):
+def _assign_partials_kernel(crows: list):
     """Fused assignment + partial-mean kernel for one Lloyd iteration:
     per Arrow batch, pick each vector's centroid and accumulate exact
     int64 per-centroid vector sums IN the kernel — the corpus crosses
     Arrow once per iteration and NO vector is ever shuffled.
 
     Exactness without a third rounding implementation: the final
-    assignment order is (round(cos, rs) DESC, cid ASC) in Catalyst.
+    assignment order is (round(cos, 4) DESC, cid ASC) in Catalyst.
     The kernel decides a row only when the decision cannot depend on
     the rounding function at all:
 
@@ -637,11 +506,11 @@ def _assign_partials_kernel(crows: list, round_scale: int):
       same loud failure the Catalyst window path produces under ANSI
       (double division by zero in _cos_from_pair is an error, not a
       NaN) — zero-norm vectors are a data error; filter them upstream;
-    * otherwise, if best - second_best > 1.5 * 10^-rs, ANY monotone
-      rounding to the 10^-rs grid puts the best strictly first
+    * otherwise, if best - second_best > 1.5 * 10^-4, ANY monotone
+      rounding to the 10^-4 grid puts the best strictly first
       (round(a) >= a - g/2 > b + g >= round(b) + g/2);
     * near-ties resolve on the integer grid: r = sign(y)*floor(|y|+.5)
-      with y = cos * 10^rs equals Catalyst's HALF_UP decimal rounding
+      with y = cos * 10^4 equals Catalyst's HALF_UP decimal rounding
       whenever |y| is not within 1e-6 of a .5 boundary (the float
       error in y is ~4 ulp ~ 1e-11, five orders below the tolerance,
       and the shortest-repr decimal Catalyst rounds lies within half
@@ -660,7 +529,6 @@ def _assign_partials_kernel(crows: list, round_scale: int):
     cids = np.array([r.cid for r in crows], dtype=np.int64)  # ascending
     cns = np.einsum("ij,ij->i", C, C)
     csq = np.sqrt(cns)
-    margin = _prune_margin(round_scale)
 
     def gen(it):
         for pdf in it:
@@ -687,16 +555,16 @@ def _assign_partials_kernel(crows: list, round_scale: int):
             c2 = cos.copy()
             c2[rows, win] = -np.inf
             gap = b1 - c2.max(axis=1)
-            close = gap <= margin
+            close = gap <= _PRUNE_MARGIN
             if close.any():
                 # grid-round the near-tie rows; winner-relevant
                 # candidates within 1e-6 of a .5 boundary escape
                 ci = np.flatnonzero(close)
-                y = cos[ci] * (10.0 ** round_scale)
+                y = cos[ci] * (10.0 ** _DECIMALS)
                 ay = np.abs(y)
                 r = np.sign(y) * np.floor(ay + 0.5)
                 risky = np.abs(ay - (np.floor(ay) + 0.5)) < 1e-6
-                relevant = cos[ci] >= (b1[ci] - margin)[:, None]
+                relevant = cos[ci] >= (b1[ci] - _PRUNE_MARGIN)[:, None]
                 esc = (risky & relevant).any(axis=1)
                 win[ci] = np.argmax(r, axis=1)
                 undecided[ci] = esc
@@ -728,9 +596,7 @@ def _assign_partials_kernel(crows: list, round_scale: int):
     return gen
 
 
-def kmeans_centroids(
-    corpus: DataFrame, k: int = 8, iters: int = 3, round_scale: int = 4
-) -> DataFrame:
+def kmeans_centroids(corpus: DataFrame, k: int = 8, iters: int = 3) -> DataFrame:
     """Distributed Lloyd k-means over the embedding column — the real
     "training" job behind ivf_topk's coarse quantizer.
 
@@ -773,7 +639,7 @@ def kmeans_centroids(
             key=lambda r: r.cid,
         )
         partials = ivs.mapInPandas(
-            _assign_partials_kernel(crows, round_scale), _PARTIAL_SCHEMA
+            _assign_partials_kernel(crows), _PARTIAL_SCHEMA
         ).cache()
         decided = partials.filter(F.col("cid") >= 0)
         # margin-undecided escape: exact Catalyst ranking for the few
@@ -789,7 +655,6 @@ def kmeans_centroids(
                 und,
                 cent.select(F.col("cid").alias("vec_id"),
                             F.col("cvec").alias("embedding")),
-                round_scale,
             )
             und_partials = (
                 ivs.join(F.broadcast(und_assign), "vec_id")
@@ -825,9 +690,7 @@ def kmeans_centroids(
 _PCA_GS_CAP = (1 << 62) // (64 * FP_SCALE)
 
 
-def pca_power_component(
-    emb: DataFrame, vec_col: str = "embedding", d: int = 64, n_iter: int = 2
-) -> DataFrame:
+def pca_power_component(emb: DataFrame, n_iter: int = 2) -> DataFrame:
     """Leading principal direction of the (uncentered) embedding
     corpus via EXACT fixed-point power iteration — the embedding-
     drift / dominant-axis audit, and the engine's demonstration that
@@ -865,11 +728,7 @@ def pca_power_component(
     gate checks); pass a larger n_iter when the data is known to be
     dominated and directional accuracy matters.
     """
-    xis = F.transform(
-        F.col(vec_col),
-        lambda x: F.round(x.cast("double") * F.lit(FP_SCALE)).cast("long"),
-    )
-    rows = emb.select(xis.alias("__x"))
+    rows = emb.select(fp_vec("embedding").alias("__x"))
 
     def _gram_partials(it):
         for pdf in it:

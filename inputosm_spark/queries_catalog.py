@@ -926,10 +926,7 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k ANN baseline (broadcast queries,
     single corpus scan, window top-k)."""
     emb = _t(spark, sf_dir, "embeddings")
-    out = similarity.cosine_topk(
-        emb.filter(F.col("vec_id") < 10), emb, k=5, round_scale=4
-    )
-    return out.select("qid", "neighbor_id", "cos", F.col("rank").cast("int").alias("rank"))
+    return similarity.cosine_topk(emb.filter(F.col("vec_id") < 10), emb, k=5)
 
 
 # hyperplane signature on the FIXED-POINT vector: ±1 weights times
@@ -1550,9 +1547,7 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket — the shuffle-join replacement for the brute-force cross
     join at 10^12 scale."""
     emb = _t(spark, sf_dir, "embeddings")
-    out = similarity.ann_lsh_topk(emb, emb, k=3, n_planes=8, round_scale=4)
-    return out.select("qid", "neighbor_id", "cos",
-                      F.col("rank").cast("int").alias("rank"))
+    return similarity.ann_lsh_topk(emb, emb, k=3, n_planes=8)
 
 
 @register(
@@ -1579,9 +1574,7 @@ def q_ann_lsh_topk_w16(spark: SparkSession, sf_dir: str) -> DataFrame:
     directive #5). Smaller buckets here = higher precision / lower
     recall — the production recall knob."""
     emb = _t(spark, sf_dir, "embeddings")
-    out = similarity.ann_lsh_topk(emb, emb, k=3, n_planes=16, round_scale=4)
-    return out.select("qid", "neighbor_id", "cos",
-                      F.col("rank").cast("int").alias("rank"))
+    return similarity.ann_lsh_topk(emb, emb, k=3, n_planes=16)
 
 
 _ALL_STOPS_SQL = (
@@ -1921,7 +1914,7 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     rung): LSH hyperplane buckets propose candidates, exact cosine
     verifies — pair work scales with bucket collisions, not corpus^2."""
     emb = _t(spark, sf_dir, "embeddings")
-    return similarity.near_dup_pairs(emb, n_planes=8, threshold=0.15, round_scale=4)
+    return similarity.near_dup_pairs(emb, n_planes=8, threshold=0.15)
 
 
 @register(
@@ -2298,10 +2291,9 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN (the second scale path next to hyperplane LSH): coarse
     centroid buckets, n_probe=2 probing, exact in-bucket ranking."""
     emb = _t(spark, sf_dir, "embeddings")
-    out = similarity.ivf_topk(emb, emb, k=3, n_centroids=8, n_probe=2,
-                              round_scale=4)
-    return out.select("qid", "neighbor_id", "cos",
-                      F.col("rank").cast("int").alias("rank"))
+    return similarity.ivf_topk(emb, emb, k=3,
+                               centroids=emb.filter(F.col("vec_id") < 8),
+                               n_probe=2)
 
 
 @register(
@@ -2474,11 +2466,9 @@ def q_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = similarity.kmeans_centroids(emb, k=8, iters=2).select(
         F.col("cid").alias("vec_id"), "embedding"
     )
-    out = similarity.ivf_topk(
-        emb.filter(F.col("vec_id") < 50), emb, k=3, n_probe=2, centroids=cents
+    return similarity.ivf_topk(
+        emb.filter(F.col("vec_id") < 50), emb, k=3, centroids=cents, n_probe=2
     )
-    return out.select("qid", "neighbor_id", "cos",
-                      F.col("rank").cast("int").alias("rank"))
 
 
 # ---------------------------------------------------------------------------
@@ -4456,7 +4446,7 @@ def q_embedding_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     pairs = similarity.near_dup_pairs(
-        emb, n_planes=8, threshold=0.15, round_scale=4
+        emb, n_planes=8, threshold=0.15
     ).select("vec_a", "vec_b")
     sp = sampling.train_val_test_split(
         emb.select("vec_id"), "vec_id"
@@ -5265,9 +5255,7 @@ def q_pca_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums) and both matvec+renormalize rounds with identical
     truncation-division arithmetic."""
     emb = _t(spark, sf_dir, "embeddings")
-    return similarity.pca_power_component(emb, d=64, n_iter=2).select(
-        F.col("dim_idx").cast("int").alias("dim_idx"), "weight"
-    )
+    return similarity.pca_power_component(emb, n_iter=2)
 
 
 _EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]

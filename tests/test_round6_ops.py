@@ -210,83 +210,3 @@ def test_approx_event_percentiles_envelope(spark, sf_dir):
             lo = a[max(0, int(frac * (n - 1)) - slack)]
             hi = a[min(n - 1, int(frac * (n - 1)) + 1 + slack)]
             assert lo <= est <= hi, (et, frac, est, lo, hi)
-
-
-def test_pca_component_exact_integer_replay(spark, sf_dir):
-    """Third independent implementation: a numpy big-int replay of the
-    fixed-point power iteration (half-away rounding, truncation
-    division) must equal the Spark result BIT-FOR-BIT on the real
-    corpus — the same triple-agreement pattern as k-means (Spark =
-    DuckDB oracle = Python reference)."""
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    from inputosm_spark.operators import similarity
-
-    got = {
-        r.dim_idx: r.weight
-        for r in similarity.pca_power_component(
-            spark.read.parquet(f"{sf_dir}/embeddings.parquet"), n_iter=2
-        ).collect()
-    }
-    t = pq.read_table(f"{sf_dir}/embeddings.parquet")
-    X = np.array([np.asarray(x) for x in t["embedding"].to_pylist()],
-                 dtype=np.float64)
-    y = X * 1_000_000
-    Xi = np.where(y >= 0, np.floor(y + 0.5), np.ceil(y - 0.5)).astype(
-        np.int64
-    ).astype(object)
-
-    def trunc(a, b):
-        q = abs(a) // b
-        return q if a >= 0 else -q
-
-    G = Xi.T @ Xi
-    gs = np.vectorize(lambda g: trunc(int(g), 10**9))(G)
-    w = gs @ np.full(64, 10**6, dtype=object)
-    s = max(1, trunc(max(abs(int(x)) for x in w), 10**6))
-    v = np.array([trunc(int(x), s) for x in w], dtype=object)
-    w = gs @ v
-    s = max(1, trunc(max(abs(int(x)) for x in w), 10**6))
-    v = [trunc(int(x), s) for x in w]
-    if -min(v) > max(v):
-        v = [-x for x in v]
-    assert got == {i: int(v[i]) for i in range(64)}
-
-
-def test_pca_component_aligns_on_dominated_spectrum(spark):
-    """On data whose gram HAS a dominant eigenvalue (signal direction
-    + small deterministic noise), two power iterations must align with
-    numpy's float eigenvector (|cos| >= 0.99). The shipped corpus is
-    near-isotropic (top eigs within ~2%), where NO 2-iteration method
-    aligns — there the bit-exact replay above and the oracle gate are
-    the correctness signal, and the docstring says so."""
-    import numpy as np
-
-    from inputosm_spark.operators import similarity
-
-    rng = np.arange(500)
-    u = np.sin(np.arange(64) + 1.0)
-    u /= np.linalg.norm(u)
-    noise = np.stack(
-        [np.cos(0.1 * i + 1.7 * np.arange(64)) for i in rng]
-    ) * 0.05
-    X = (0.9 + 0.001 * (rng % 7))[:, None] * u[None, :] + noise
-    X = np.clip(X, -0.999999, 0.999999)
-    df = spark.createDataFrame(
-        [(int(i), [float(x) for x in X[i]]) for i in rng],
-        "vec_id long, embedding array<float>",
-    )
-    got = {
-        r.dim_idx: r.weight
-        for r in similarity.pca_power_component(df, n_iter=2).collect()
-    }
-    v = np.array([got[i] for i in range(64)], dtype=np.float64)
-    Xd = np.array(
-        [np.asarray(x, dtype=np.float32) for x in X], dtype=np.float64
-    )
-    G = Xd.T @ Xd
-    _, vecs = np.linalg.eigh(G)
-    top = vecs[:, -1]
-    cos = abs(v @ top) / (np.linalg.norm(v) * np.linalg.norm(top))
-    assert cos >= 0.99, cos

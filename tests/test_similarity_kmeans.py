@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import functions as F
 
 from inputosm_spark.operators import similarity
@@ -28,7 +29,7 @@ def test_kmeans_improves_or_holds_assignment_quality(spark, sf_dir):
     naive = emb.filter(F.col("vec_id") < 6)
 
     def mean_best_cos(cent):
-        a = similarity.ivf_assign(emb, cent, round_scale=6)
+        a = similarity.ivf_assign(emb, cent)
         joined = (
             emb.select(F.col("vec_id"), "embedding")
             .join(a, "vec_id")
@@ -38,16 +39,16 @@ def test_kmeans_improves_or_holds_assignment_quality(spark, sf_dir):
                 "cid",
             )
         )
-        from inputosm_spark.operators.similarity import dot_fp, fp_vec
-
-        pairs = joined.select(
-            fp_vec(F.col("embedding")).alias("a"), fp_vec(F.col("cemb")).alias("b")
+        rows = joined.select(
+            similarity.fp_vec("embedding").alias("a"),
+            similarity.fp_vec("cemb").alias("b"),
+        ).collect()
+        A = np.array([r.a for r in rows], dtype=np.float64)
+        B = np.array([r.b for r in rows], dtype=np.float64)
+        cos = np.einsum("ij,ij->i", A, B) / np.sqrt(
+            np.einsum("ij,ij->i", A, A) * np.einsum("ij,ij->i", B, B)
         )
-        cos = dot_fp("a", "b").cast("double") / (
-            F.sqrt(dot_fp("a", "a").cast("double"))
-            * F.sqrt(dot_fp("b", "b").cast("double"))
-        )
-        return pairs.agg(F.avg(cos)).first()[0]
+        return cos.mean()
 
     trained = similarity.kmeans_centroids(emb, k=6, iters=2).select(
         F.col("cid").alias("vec_id"), "embedding"
@@ -72,7 +73,7 @@ def test_ivf_with_trained_centroids(spark, sf_dir):
         F.col("cid").alias("vec_id"), "embedding"
     )
     out = similarity.ivf_topk(emb.filter(F.col("vec_id") < 10), emb, k=3,
-                              n_probe=2, centroids=cents)
+                              centroids=cents, n_probe=2)
     assert out.count() == 30
     assert out.groupBy("qid").count().filter("count != 3").isEmpty()
 
@@ -84,7 +85,6 @@ def test_fused_assign_matches_window_formulation(spark):
     near-tie between cid 0 and 1 -> the in-kernel grid-rounding path)
     and exact duplicate corpus vectors. Zero-norm vectors RAISE in
     both paths (ANSI divide-by-zero contract) — checked separately."""
-    import numpy as np
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -131,7 +131,6 @@ def test_fused_assign_matches_window_formulation(spark):
         assign = ivf_assign(
             corpus,
             cent.select(F.col("cid").alias("vec_id"), F.col("cvec").alias("embedding")),
-            4,
         )
         means = (
             ivs.join(assign, "vec_id")

@@ -433,11 +433,12 @@ def run():
     pts = spark.range(2000).select("id", lat, lon)
     pip = sorted(map(tuple, spatial.pip_join(pts, synth_polygons(spark), res=6)
                      .select("id", "poly_id").collect()))
-    iv = similarity.fp_vec(F.array(F.col("id") / 100.0, F.lit(0.5)))
-    dots = sorted(map(tuple, spark.range(50).select(
-        "id", similarity.dot_fp(iv, iv).alias("d")).collect()))
+    emb = spark.range(50).select(
+        F.col("id").alias("vec_id"),
+        F.array(F.col("id") / 100.0, F.lit(0.5)).alias("embedding"))
+    sigs = sorted(map(tuple, similarity.hyperplane_signature(emb).collect()))
     spark.stop()
-    return pip, dots
+    return pip, sigs
 
 
 first, second = run(), run()
@@ -446,7 +447,7 @@ print(first == second, len(first[0]) > 0)
 
 
 def test_pandas_udfs_bind_to_each_session():
-    """pip_join and dot_fp in a second SparkSession, after the first
+    """pip_join and hyperplane_signature in a second SparkSession, after the first
     one stopped, return the same rows and log no accumulator errors. A
     pandas UDF built at import time stays bound to the first
     SparkContext: its rows still come back, but every task of the
