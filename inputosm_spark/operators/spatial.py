@@ -15,10 +15,13 @@ Scale design (100 TB corpus, 1000 executors):
   polygon side the join is a shuffled equi-join on cell where AQE
   splits skewed cells (dense metro cells are the known hot keys).
 * kNN: k-ring expansion multiplies the small QUERY side (9x, 25x, …),
-  never the big point side; escalation re-processes only unfilled
-  queries, and the final fallback brute-forces only stragglers.
+  which is broadcast, never the big point side; escalation
+  re-processes only unfilled queries, and the final fallback
+  brute-forces only stragglers.
 * exact refine runs per Arrow batch with numpy vectorized over points,
-  grouped by polygon within the batch — no per-row Python.
+  grouped by polygon sub-ring within the batch — no per-row Python.
+* raster tiles: one Exchange on tile, then one numpy kernel call per
+  partition (mapInArrow) — no per-tile Python call.
 
 Cell ids are built and taken apart only through functions.cells
 (`cell_x_expr`/`cell_y_expr`, `pack_expr`/`unpack_expr`); no operator
@@ -29,7 +32,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -64,9 +68,9 @@ _COVER = ArrayType(StructType([
 
 
 def polygon_cells(polygons: DataFrame, res: int) -> DataFrame:
-    """polygons -> (poly_id, ring_lat_e4, ring_lon_e4, cell, full)
+    """polygons -> (poly_id, sub, ring_lat_e4, ring_lon_e4, cell, full)
     exploded covering-cell rows; the ring is the seam-free sub-ring
-    that the cell covers.
+    that the cell covers and `sub` its ordinal within the polygon.
 
     One pandas UDF does the whole cover. Per ring,
     geo.split_antimeridian cuts a ring crossing lon ±180 into one
@@ -97,9 +101,10 @@ def polygon_cells(polygons: DataFrame, res: int) -> DataFrame:
         return pd.Series(out)
 
     rings = polygons.select(
-        "poly_id", F.explode(_cover("ring_lat_e4", "ring_lon_e4")).alias("r")
-    ).select("poly_id", "r.ring_lat_e4", "r.ring_lon_e4", F.explode("r.cells").alias("cf"))
-    return rings.select("poly_id", "ring_lat_e4", "ring_lon_e4", "cf.cell", "cf.full")
+        "poly_id", F.posexplode(_cover("ring_lat_e4", "ring_lon_e4")).alias("sub", "r")
+    ).select("poly_id", "sub", "r.ring_lat_e4", "r.ring_lon_e4",
+             F.explode("r.cells").alias("cf"))
+    return rings.select("poly_id", "sub", "ring_lat_e4", "ring_lon_e4", "cf.cell", "cf.full")
 
 
 # exploded polygon covering-cell rows at or below which pip_join
@@ -159,23 +164,28 @@ def pip_join(
         F.col("cell").alias("__cell"), "poly_id"
     )
     right_edge = pcells.filter(~F.col("full")).select(
-        F.col("cell").alias("__cell"), "poly_id", "ring_lat_e4", "ring_lon_e4"
+        F.col("cell").alias("__cell"), "poly_id", F.col("sub").alias("__sub"),
+        "ring_lat_e4", "ring_lon_e4",
     )
     if do_broadcast:
         right_full = F.broadcast(right_full)
         right_edge = F.broadcast(right_edge)
 
     # exact refine, built per call so it binds to the current
-    # SparkContext. Rows are grouped by poly_id (a cheap vectorized
-    # factorize — never per-row ring hashing) so the numpy ray cast
-    # runs once per polygon per Arrow batch over all its points.
+    # SparkContext. Rows are grouped by (poly_id, sub) — a cheap
+    # vectorized factorize, never per-row ring hashing — so the numpy
+    # ray cast runs once per sub-ring per Arrow batch over all its
+    # points; the sub-rings of one seam-crossing polygon share its
+    # poly_id but not its ring.
     @F.pandas_udf(BooleanType())
     def _pip_refine(lat: pd.Series, lon: pd.Series, poly_id: pd.Series,
-                    ring_lat: pd.Series, ring_lon: pd.Series) -> pd.Series:
+                    sub: pd.Series, ring_lat: pd.Series,
+                    ring_lon: pd.Series) -> pd.Series:
         plat = lat.to_numpy(dtype=np.int64)
         plon = lon.to_numpy(dtype=np.int64)
         out = np.zeros(len(lat), dtype=bool)
-        codes, _ = pd.factorize(poly_id, sort=False)
+        pcodes, _ = pd.factorize(poly_id, sort=False)
+        codes = (pcodes.astype(np.int64) << 32) + sub.to_numpy(dtype=np.int64)
         for g in np.unique(codes):
             ii = np.nonzero(codes == g)[0]
             ra = np.asarray(ring_lat.iloc[ii[0]], dtype=np.int64)
@@ -186,9 +196,9 @@ def pip_join(
     inside_full = pts.join(right_full, "__cell").drop("__cell")
     refined = (
         pts.join(right_edge, "__cell")
-        .filter(_pip_refine("lat_e4", "lon_e4", "poly_id", "ring_lat_e4",
+        .filter(_pip_refine("lat_e4", "lon_e4", "poly_id", "__sub", "ring_lat_e4",
                             "ring_lon_e4"))
-        .drop("__cell", "ring_lat_e4", "ring_lon_e4")
+        .drop("__cell", "__sub", "ring_lat_e4", "ring_lon_e4")
     )
     return inside_full.unionAll(refined)
 
@@ -273,12 +283,14 @@ def knn_join(
         # never start beyond what max_rounds' doubling could reach
         ring = min(ring, 2 ** (max_rounds - 1))
     for _ in range(max_rounds):
+        # the exploded query side is broadcast explicitly: a
+        # createDataFrame or checkpointed frame reports no size, so
+        # left to the planner the point scan would be the build side
+        probes = remaining.withColumn(
+            "__cell", F.explode(cells.kring_expr("__qlat", "__qlon", res, ring))
+        )
         cand = (
-            remaining.withColumn(
-                "__cells", cells.kring_expr("__qlat", "__qlon", res, ring)
-            )
-            .withColumn("__cell", F.explode("__cells"))
-            .drop("__cells")
+            F.broadcast(probes)
             .join(pts, "__cell")
             .select(
                 "__qid",
@@ -351,6 +363,20 @@ def knn_join(
 # ---------------------------------------------------------------------------
 
 
+def _tile_pixel(tile_res: int, pixel_res: int) -> tuple[Column, Column, Column, int]:
+    """(tile, px, py, side) of a point's (lat_e4, lon_e4): its tile
+    cell at tile_res, its pixel's column and row within the tile, and
+    the tile's side in pixels (2^d, d = pixel_res - tile_res)."""
+    if pixel_res <= tile_res:
+        raise ValueError("pixel_res must exceed tile_res")
+    d = pixel_res - tile_res
+    side = 1 << d
+    x = cells.cell_x_expr("lon_e4", pixel_res)
+    y = cells.cell_y_expr("lat_e4", pixel_res)
+    tile = cells.pack_expr(tile_res, F.shiftright(y, d), F.shiftright(x, d))
+    return tile.alias("tile"), F.pmod(x, F.lit(side)), F.pmod(y, F.lit(side)), side
+
+
 def tile_counts(points: DataFrame, tile_res: int, pixel_res: int) -> DataFrame:
     """Flat raster: per-tile per-pixel point counts.
 
@@ -358,18 +384,9 @@ def tile_counts(points: DataFrame, tile_res: int, pixel_res: int) -> DataFrame:
     2^(d) x 2^(d) sub-cells at pixel_res (d = pixel_res - tile_res).
     Pure column math -> fully oracle-checkable.
     """
-    if pixel_res <= tile_res:
-        raise ValueError("pixel_res must exceed tile_res")
-    d = pixel_res - tile_res
-    x = cells.cell_x_expr("lon_e4", pixel_res)
-    y = cells.cell_y_expr("lat_e4", pixel_res)
+    tile, px, py, _ = _tile_pixel(tile_res, pixel_res)
     return (
-        points.select(
-            cells.pack_expr(tile_res, F.shiftright(y, d), F.shiftright(x, d))
-            .alias("tile"),
-            F.pmod(x, F.lit(1 << d)).cast("int").alias("px"),
-            F.pmod(y, F.lit(1 << d)).cast("int").alias("py"),
-        )
+        points.select(tile, px.cast("int").alias("px"), py.cast("int").alias("py"))
         .groupBy("tile", "px", "py")
         .agg(F.count("*").alias("cnt"))
     )
@@ -386,21 +403,35 @@ _RASTER_SCHEMA = StructType(
 def rasterize(points: DataFrame, tile_res: int, pixel_res: int) -> DataFrame:
     """Dense raster tiles: (tile, pixels row-major array of counts).
 
-    groupBy(tile) + applyInPandas with a numpy bincount — the grouped
-    vectorized-UDF path (reference span-callback analog) for the data
-    shape SQL can't express (fixed-size dense arrays).
+    Each point is projected to its tile and its row-major pixel index
+    `py * side + px` in the JVM, the rows are hash-partitioned on tile
+    (the one Exchange), and one mapInArrow kernel call per partition
+    counts every tile of the partition with a single numpy bincount
+    and emits the dense arrays as one Arrow ListArray — no per-tile
+    Python call, no pandas, no Python lists (the data shape SQL can't
+    express: fixed-size dense arrays).
     """
-    d = pixel_res - tile_res
-    side = 1 << d
-    flat = tile_counts(points, tile_res, pixel_res)
+    tile, px, py, side = _tile_pixel(tile_res, pixel_res)
+    n_pix = side * side
 
-    def _to_raster(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pix = np.zeros(side * side, dtype=np.int64)
-        np.add.at(pix, pdf["py"].to_numpy() * side + pdf["px"].to_numpy(),
-                  pdf["cnt"].to_numpy())
-        return pd.DataFrame({"tile": [key[0]], "pixels": [pix.tolist()]})
+    def _raster(batches):
+        cols = [(b.column(0).to_numpy(), b.column(1).to_numpy()) for b in batches]
+        if not sum(len(t) for t, _ in cols):
+            return
+        tile_ids, pix = (np.concatenate(c) for c in zip(*cols))
+        tiles, inv = np.unique(tile_ids, return_inverse=True)
+        counts = np.bincount(inv * n_pix + pix, minlength=len(tiles) * n_pix)
+        offsets = pa.array(np.arange(len(tiles) + 1, dtype=np.int32) * n_pix)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(tiles), pa.ListArray.from_arrays(offsets, pa.array(counts))],
+            ["tile", "pixels"],
+        )
 
-    return flat.groupBy("tile").applyInPandas(_to_raster, _RASTER_SCHEMA)
+    return (
+        points.select(tile, (py * side + px).alias("i"))
+        .repartition("tile")
+        .mapInArrow(_raster, _RASTER_SCHEMA)
+    )
 
 
 def vectorize(raster: DataFrame, tile_res: int, pixel_res: int) -> DataFrame:

@@ -1689,8 +1689,9 @@ _X8, _Y8 = cells.cell_xy_sql(_LAT_SQL, _LON_SQL, 8)
 )
 def q_raster_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raster->vector inversion (north_star tiling): rasterize points
-    into dense per-tile pixel arrays (grouped Arrow UDF) then vectorize
-    back — must equal the direct per-pixel-cell counts exactly."""
+    into dense per-tile pixel arrays (one tile Exchange, one mapInArrow
+    kernel call per partition) then vectorize back — must equal the
+    direct per-pixel-cell counts exactly."""
     docs = _t(spark, sf_dir, "documents")
     lat, lon = cells.point_exprs("doc_id")
     pts = docs.select(lat, lon)

@@ -225,6 +225,9 @@ CHECKS: dict[str, list[str]] = {
     "grouping_sets_cells": [r"Expand", r"partial_count"],
     # melt: one Expand over a SINGLE scan (never a union of scans)
     "melt_doc_metrics": [r"Expand"],
+    # raster tiles: one Exchange on tile into one Arrow kernel call per
+    # partition (see ANTI)
+    "raster_roundtrip": [r"MapInArrow", r"hashpartitioning\(tile"],
 }
 
 # patterns that must NOT appear (regression = reintroduced anti-pattern)
@@ -293,6 +296,10 @@ ANTI_CHECKS: dict[str, list[str]] = {
     "areal_interpolation": [r"Join"],  # pure fan-out + rollup, no join
     "melt_doc_metrics": [r"Union"],  # Expand form, not a two-scan union
     "scd2_history": [r"\(\d+\) Exchange.*\(\d+\) Exchange"],
+    # a pandas call per tile, or a second shuffle (a map-side count
+    # ahead of the tile exchange), is the plan the kernel replaced
+    "raster_roundtrip": [r"FlatMapGroupsInPandas",
+                         r"\(\d+\) Exchange.*\(\d+\) Exchange"],
 }
 
 

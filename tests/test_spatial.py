@@ -102,6 +102,58 @@ def test_knn_escalation_sparse_region(spark, points, points_np):
         assert sorted(by_q[qid], key=lambda t: t[2]) == want
 
 
+def _plan_graphs(spark, since: int) -> list[tuple[dict, list]]:
+    """(node id -> name, (child, parent) edges) of the final plan of
+    every SQL execution the status store recorded after its first
+    `since` ones."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    store = spark._jsparkSession.sharedState().statusStore()
+    as_java = sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    out = []
+    for e in as_java(store.executionsList(since, store.executionsCount() - since)):
+        g = store.planGraph(e.executionId())
+        out.append(({n.id(): n.name() for n in as_java(g.allNodes())},
+                    [(ed.fromId(), ed.toId()) for ed in as_java(g.edges())]))
+    return out
+
+
+def test_knn_join_broadcasts_query_side(spark, points, tmp_path):
+    """The candidate join replicates the exploded k-ring query frame,
+    never the point side: a createDataFrame query frame reports no
+    size, so a planner left alone broadcasts the (small) parquet point
+    scan instead."""
+    points.write.parquet(str(tmp_path / "pts"))
+    pts = spark.read.parquet(str(tmp_path / "pts"))
+    qlat, qlon = geo.point_from_id(np.arange(900_000, 900_040))
+    queries = spark.createDataFrame(
+        [(int(i), int(a), int(o)) for i, (a, o) in enumerate(zip(qlat, qlon))],
+        "qid long, lat_e4 long, lon_e4 long",
+    )
+    store = spark._jsparkSession.sharedState().statusStore()
+    since = store.executionsCount()
+    assert spatial.knn_join(queries, pts, k=5, res=6).count() == 40 * 5
+    graphs = _plan_graphs(spark, since)
+    n_broadcasts = n_scans = 0
+    for nodes, edges in graphs:
+        parents: dict[int, list[int]] = {}
+        for child, parent in edges:
+            parents.setdefault(child, []).append(parent)
+        n_broadcasts += sum(name == "BroadcastExchange" for name in nodes.values())
+        for nid, name in nodes.items():
+            if not name.startswith("Scan parquet"):
+                continue
+            n_scans += 1
+            above, todo = set(), [nid]
+            while todo:
+                for p in parents.get(todo.pop(), []):
+                    if p not in above:
+                        above.add(p)
+                        todo.append(p)
+            assert "BroadcastExchange" not in {nodes[p] for p in above}
+    assert n_scans and n_broadcasts  # the query side was broadcast
+
+
 def test_tile_counts_vs_bruteforce(spark, points, points_np):
     ids, lat, lon = points_np
     tile_res, pixel_res = 4, 7
@@ -140,6 +192,52 @@ def test_raster_vector_roundtrip(spark, points):
     }
     got = {(r.cell, r.cnt) for r in back.collect()}
     assert got == want
+
+
+def _raster_reference(lat, lon, tile_res, pixel_res):
+    """tile -> dense row-major (py * side + px) pixel counts, by numpy."""
+    _, py_all, px_all = geo.unpack_cell(geo.cell_id(lat, lon, pixel_res))
+    d = pixel_res - tile_res
+    side = 1 << d
+    tiles = geo.pack_cell(np.full(len(lat), tile_res, np.int64), py_all >> d, px_all >> d)
+    pix = (py_all % side) * side + px_all % side
+    return {int(t): np.bincount(pix[tiles == t], minlength=side * side)
+            for t in np.unique(tiles)}
+
+
+@pytest.mark.parametrize("tile_res, pixel_res, partitions", [(4, 7, "8"), (1, 3, "64")])
+def test_rasterize_matches_numpy_bincount(spark, points, points_np, tile_res,
+                                          pixel_res, partitions):
+    """Dense arrays equal a numpy bincount; with 64 shuffle partitions
+    (coalescing off) and 8 tiles most kernel partitions are empty."""
+    _, lat, lon = points_np
+    keys = ("spark.sql.shuffle.partitions",
+            "spark.sql.adaptive.coalescePartitions.enabled")
+    orig = [spark.conf.get(k) for k in keys]
+    spark.conf.set(keys[0], partitions)
+    spark.conf.set(keys[1], "false")
+    try:
+        raster = spatial.rasterize(points, tile_res, pixel_res)
+        rows = raster.collect()
+        n_parts = raster.rdd.getNumPartitions()
+    finally:
+        for k, v in zip(keys, orig):
+            spark.conf.set(k, v)
+    assert raster.schema == spatial._RASTER_SCHEMA
+    want = _raster_reference(lat, lon, tile_res, pixel_res)
+    side = 1 << (pixel_res - tile_res)
+    assert sorted(r.tile for r in rows) == sorted(want)
+    for r in rows:
+        assert len(r.pixels) == side * side
+        assert r.pixels == want[r.tile].tolist()
+    assert sum(sum(r.pixels) for r in rows) == N_POINTS
+    assert n_parts == int(partitions)
+
+
+def test_rasterize_empty_input(spark, points):
+    raster = spatial.rasterize(points.limit(0), 4, 7)
+    assert raster.schema == spatial._RASTER_SCHEMA
+    assert raster.count() == 0
 
 
 def test_pip_plan_broadcasts_small_polygons(spark, points):
@@ -187,6 +285,28 @@ def test_pip_join_antimeridian_polygon(spark):
     assert len(parts) == 2
     for la, lo in parts:
         assert lo.max() - lo.min() < 2 * geo.LON_MAX_E4 / 2  # < half world
+
+
+def test_pip_join_antimeridian_refine_per_sub_ring(spark):
+    """Points on both sides of the seam in ONE Arrow batch, all in
+    boundary cells: each is refined against its own sub-ring, not
+    against whichever sub-ring of the polygon the batch met first."""
+    polys = spark.createDataFrame(
+        [("seam", [-100000, -100000, 100000, 100000, -100000],
+          [1700000, -1700000, -1700000, 1700000, 1700000])],
+        "poly_id string, ring_lat_e4 array<long>, ring_lon_e4 array<long>",
+    )
+    rows = [(j, -99000, (1750000 + 1000 * j) * (1 if j % 2 == 0 else -1))
+            for j in range(40)]
+    pts = spark.createDataFrame(rows, "doc_id long, lat_e4 long, lon_e4 long")
+    res = 6
+    # every point sits in a boundary cell, so all 40 go through the refine
+    edge = {r.cell for r in spatial.polygon_cells(polys, res).collect() if not r.full}
+    lat = np.array([r[1] for r in rows])
+    lon = np.array([r[2] for r in rows])
+    assert set(geo.cell_id(lat, lon, res).tolist()) <= edge
+    got = spatial.pip_join(pts.coalesce(1), polys, res=res).select("doc_id").collect()
+    assert sorted(r.doc_id for r in got) == list(range(40))
 
 
 def test_box_overlap_join_matches_bruteforce(spark):
