@@ -10,12 +10,16 @@ toggling (:243-257).
 
 Design note (scale): XML is the reference's *slow single-threaded*
 path too — it exists for fixtures and change files, not bulk data. The
-bulk path is columnar (Parquet/Iceberg). Accordingly this reader
-parses on the driver for fixture-sized files; `read_osm_dir` fans a
-directory of files out via `spark.createDataFrame` over per-file
-parses inside an RDD `flatMap` ONLY when given many files (one task
-per file — the same one-blob-one-work-item model as the PBF queue,
-/root/reference/src/inputosmpbf.cpp:843-851).
+bulk path is columnar (Parquet/Iceberg). `read_osm`/`read_osc` parse
+one file on the driver; `read_osc_stream` parses a landing zone of
+change files one task per file (the same one-file-one-work-item model
+as `pbf.read_pbf_stream`).
+
+`apply_changes` is the engine's one latest-wins replay of change rows
+onto an entity table: a batch `.osc` (`read_osc`), the replication
+catch-up (`replication.catch_up_osc`) and the OSC stream
+(`streaming.events.stream_osc_replication`) all merge through it, each
+passing its own key and recency order.
 
 Coordinates are stored in the reference's fixed-point encoding
 `raw = round(deg * 1e7)` (inputosmxml.cpp:69-77).
@@ -27,10 +31,11 @@ import datetime as dt
 import xml.sax
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from inputosm_spark import schemas
+from inputosm_spark.sources.registry import read_landing_zone
 
 _MEMBER_TYPE = {"node": 0, "way": 1, "relation": 2}
 
@@ -151,35 +156,43 @@ def read_osc(
     )
 
 
-def apply_changes(base: DataFrame, changes: DataFrame, key: str = "id") -> DataFrame:
-    """Apply an OSC change set to a base entity table — latest-wins
-    MERGE semantics (the Iceberg `MERGE INTO` fallback).
+def apply_changes(
+    base: DataFrame,
+    changes: DataFrame,
+    key: str | list[str] = "id",
+    order: list[Column] | None = None,
+) -> DataFrame:
+    """Apply change rows (with an `op` column) to a base entity table —
+    latest-wins MERGE semantics (the Iceberg `MERGE INTO` fallback).
 
     The reference replays ops sequentially (inputosmxml.cpp:243-257), so
-    when one change set carries several ops for the same key only the
-    LAST one IN FILE ORDER survives (`monotonically_increasing_id`
-    preserves the parse order of the change file), and only that row
-    decides delete-vs-upsert. File position alone decides — NOT version:
-    a later op carrying a lower/equal version (e.g. a revert) still wins,
+    when a change set carries several ops for the same `key` (a column
+    name or a list of them) only the most recent one survives, and only
+    that row decides delete-vs-upsert. `order` lists the sort Columns
+    that put the most recent op first; by default it is the position in
+    the change frame (`monotonically_increasing_id` preserves the parse
+    order of one change file). Recency alone decides — NOT version: a
+    later op carrying a lower/equal version (e.g. a revert) still wins,
     matching the reference's sequential replay. A create followed by a
     delete removes the row; a delete followed by a create keeps the new
-    row.
+    row. Upserts are projected onto the base's columns, so extra change
+    columns (`op`, stream bookkeeping) never reach the result.
     """
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    ch = changes.withColumn("__pos", F.monotonically_increasing_id())
-    w = Window.partitionBy(key).orderBy(F.desc("__pos"))
-    latest = (
-        ch.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__pos")
+    keys = [key] if isinstance(key, str) else list(key)
+    if order is None:
+        changes = changes.withColumn("__pos", F.monotonically_increasing_id())
+        order = [F.desc("__pos")]
+    w = Window.partitionBy(*keys).orderBy(*order)
+    latest = changes.withColumn("__rn", F.row_number().over(w)).filter(
+        F.col("__rn") == 1
     )
-    upserts = latest.filter(F.col("op") != "delete").drop("op")
-    touched = latest.select(key)
-    # keys whose latest op is delete are in `touched` (removed from base)
-    # and absent from `upserts` — no separate delete pass needed
-    kept = base.join(touched, key, "left_anti")
+    upserts = latest.filter(F.col("op") != "delete").select(*base.columns)
+    # keys whose latest op is delete are removed from base and absent
+    # from `upserts` — no separate delete pass needed
+    kept = base.join(latest.select(*keys), keys, "left_anti")
     return kept.unionByName(upserts)
 
 
@@ -206,19 +219,9 @@ def read_osc_stream(
     preserves each KIND's within-file document order (ops on the same
     entity are always the same kind, so per-kind order is exactly what
     sequential-replay "last op in file wins" resolution needs
-    downstream in `apply_changes`-style merges).
+    downstream in `apply_changes`).
     """
-    reader = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .option("pathGlobFilter", "*.osc")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.load(landing_dir).select("path", "content")
+    raw = read_landing_zone(spark, landing_dir, "*.osc", max_files_per_trigger)
 
     def parse(it):
         import io as _io

@@ -56,6 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from inputosm_spark import schemas
+from inputosm_spark.sources.registry import read_landing_zone
 
 # --- varint / zigzag (S6, F3) ------------------------------------------------
 
@@ -747,17 +748,7 @@ def read_pbf_stream(
     required_features fail the micro-batch rather than silently
     decoding wrong.
     """
-    reader = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .option("pathGlobFilter", "*.pbf")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.load(landing_dir).select("path", "content")
+    raw = read_landing_zone(spark, landing_dir, "*.pbf", max_files_per_trigger)
 
     def decode(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:

@@ -24,6 +24,7 @@ block) is plain Python.
 from __future__ import annotations
 
 import os
+import shutil
 import zlib
 from typing import Iterator
 
@@ -31,6 +32,8 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
+
+from inputosm_spark.streaming.events import drain
 
 ENTITIES_PER_BLOCK = 8000
 
@@ -458,19 +461,12 @@ def run_pbf_sink_stream(entities, checkpoint_path: str, out_dir: str):
     directory, never a neighbor's). Shard parallelism inside a batch
     is `write_pbf_shards`' per-partition model — the reference's
     per-thread shard files (/root/reference/src/inputosmpbf.cpp
-    per-thread work queues), per micro-batch.
+    per-thread work queues), per micro-batch. Runs until the stream
+    is drained (`streaming.events.drain`) and returns the query.
     """
-    import os
-    import shutil
-
     def write_batch(batch, batch_id: int) -> None:
         d = os.path.join(out_dir, f"batch={batch_id}")
         shutil.rmtree(d, ignore_errors=True)
         write_pbf_shards(batch, d)
 
-    return (
-        entities.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(entities, checkpoint_path, write_batch)

@@ -70,3 +70,28 @@ def read_osm_file(spark: SparkSession, path: str):
 
         return osmxml.read_osm(spark, path)
     raise ValueError(f"unsupported OSM input extension: {path}")
+
+
+def read_landing_zone(
+    spark: SparkSession,
+    landing_dir: str,
+    glob: str,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """binaryFile STREAM over a landing zone: one (path, content) row
+    per file matching `glob` as it lands. Spark's file stream handles
+    discovery, exactly-once tracking and backfill;
+    `max_files_per_trigger` paces ingestion. The streaming OSM readers
+    (`osmxml.read_osc_stream`, `pbf.read_pbf_stream`) decode these rows
+    one file per task."""
+    reader = (
+        spark.readStream.format("binaryFile")
+        .schema(
+            "path string, modificationTime timestamp, "
+            "length long, content binary"
+        )
+        .option("pathGlobFilter", glob)
+    )
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return reader.load(landing_dir).select("path", "content")

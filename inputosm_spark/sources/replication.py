@@ -73,18 +73,12 @@ def catch_up_osc(
     spark: SparkSession,
     store: SnapshotStore,
     change_sets: dict[int, str],
-    key: str = "id",
 ) -> int | None:
     """Apply every pending OSC change set (sequence -> .osc path) with
     sequence > the table's current replication sequence, in order, and
     commit one snapshot with the advanced sequence. Change sets at or
     below the current sequence are skipped (idempotent re-run). Returns
-    the new snapshot id, or None if nothing was pending.
-
-    The node/way/relation CDC frames of one .osc are applied as three
-    kind-partitioned merges against the kind-discriminated entity
-    table, preserving each file's sequential-replay semantics
-    (osmxml.apply_changes)."""
+    the new snapshot id, or None if nothing was pending."""
     cur = current_sequence(store)
     pending = sorted(
         s for s in change_sets if cur is None or s > cur
@@ -93,34 +87,27 @@ def catch_up_osc(
         return None
     table = store.read()
     for seq in pending:
-        table = _apply_osc(spark, table, change_sets[seq], key)
+        table = _apply_osc(spark, table, change_sets[seq])
     return store.overwrite(
         table, properties={"osm.replication.sequence": str(pending[-1])}
     )
 
 
-def _apply_osc(
-    spark: SparkSession, table: DataFrame, osc_path: str, key: str
-) -> DataFrame:
-    """One .osc against the kind-discriminated entity table."""
+def _apply_osc(spark: SparkSession, table: DataFrame, osc_path: str) -> DataFrame:
+    """One .osc against the kind-discriminated entity table: the
+    node/way/relation CDC frames, unioned onto the entity superset
+    schema, replayed by one merge keyed (kind, id) — OSM ids are unique
+    per kind only. Ops on one entity share a kind, so each frame's
+    file order is the replay order (osmxml.apply_changes)."""
     from pyspark.sql import functions as F
 
-    nodes, ways, rels = osmxml.read_osc(spark, osc_path)
-    out = []
-    for kind, ch in (("node", nodes), ("way", ways), ("relation", rels)):
-        base = table.filter(F.col("kind") == kind)
-        # project the change rows onto the entity superset schema
-        ch_cols = set(ch.columns)
-        proj = [
-            (F.col(c) if c in ch_cols
-             else F.lit(None).cast(table.schema[c].dataType)).alias(c)
-            for c in table.columns
-        ]
-        ch_full = ch.select(*proj, F.col("op")).withColumn(
-            "kind", F.lit(kind)
+    frames = [
+        ch.select(F.lit(kind).alias("kind"), "*")
+        for kind, ch in zip(
+            ("node", "way", "relation"), osmxml.read_osc(spark, osc_path)
         )
-        out.append(osmxml.apply_changes(base, ch_full, key=key))
-    merged = out[0]
-    for df in out[1:]:
-        merged = merged.unionByName(df)
-    return merged
+    ]
+    changes = frames[0]
+    for ch in frames[1:]:
+        changes = changes.unionByName(ch, allowMissingColumns=True)
+    return osmxml.apply_changes(table, changes, key=["kind", "id"])

@@ -3,27 +3,40 @@
 The reference's only streaming concept is the OSC change file — an
 ordered batch of create/modify/delete entities replayed through the
 same handlers with a `mode` flag (/root/reference/src/inputosmxml.cpp:
-243-257). Here that becomes a real Structured Streaming pipeline:
+243-257). Here that becomes real Structured Streaming pipelines:
 
 * `read_event_stream` — file-source readStream over the events table
   directory (one parquet per micro-batch at test scale; at 100 TB the
   same code points at a landing zone and `maxFilesPerTrigger` paces
   ingestion).
-* `windowed_event_counts` — watermarked tumbling event-time windows;
-  late rows beyond the watermark are dropped deterministically.
-* `stream_cdc_merge` — foreachBatch latest-wins merge into a keyed
-  state table (Iceberg MERGE INTO when the catalog is present; an
-  idempotent overwrite-by-key parquet fallback otherwise), the
-  streaming twin of queries_catalog.q_cdc_latest_state.
-
-All sinks run with `trigger(availableNow=True)` in tests so the
-pipeline drains the input and stops — deterministic, CI-friendly.
+* Stream operators, each checked against a batch twin:
+  `windowed_event_counts` (watermarked tumbling event-time windows;
+  late rows beyond the watermark are dropped deterministically),
+  `hot_cell_counts` (the same windows per grid cell),
+  `attribution_join` (watermarked stream-stream time-range join) and
+  the custom stateful operators `stream_sessionize`,
+  `stream_exact_dedup` and `stream_od_transitions`
+  (applyInPandasWithState).
+* `drain(stream, checkpoint_path, sink)` — the one sink: it runs a
+  stream with `trigger(availableNow=True)` until the input is drained
+  (deterministic, CI-friendly) into a parquet directory or a
+  foreachBatch function.
+* `stream_cdc_merge` and `stream_osc_replication` — foreachBatch
+  upserts into a keyed parquet state table (the stand-in for an
+  Iceberg MERGE INTO) through one body, `_upsert_state`: read, merge,
+  localCheckpoint, overwrite. The OSC stream merges with
+  `osmxml.apply_changes`, the same latest-wins replay as a batch
+  `.osc` and the replication catch-up; the events CDC merge re-ranks
+  the stored state against the batch by event time (the streaming twin
+  of queries_catalog.q_cdc_latest_state).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from inputosm_spark.sources import osmxml
 
 EVENTS_DDL = (
     "event_id long, user_id long, event_type string, ts timestamp, value double"
@@ -41,9 +54,14 @@ def read_event_stream(
     return reader.parquet(path)
 
 
-def windowed_event_counts(
-    events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
+#: Tumbling event-time window and watermark delay of the windowed stream
+#: operators (`windowed_event_counts`, `hot_cell_counts`,
+#: `attribution_join`).
+_WINDOW = "1 hour"
+_WATERMARK = "2 hours"
+
+
+def windowed_event_counts(events: DataFrame) -> DataFrame:
     """Watermarked tumbling-window counts per event_type.
 
     The watermark bounds state: at 100 TB/day ingest the window state
@@ -51,8 +69,8 @@ def windowed_event_counts(
     the full history.
     """
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.withWatermark("ts", _WATERMARK)
+        .groupBy(F.window("ts", _WINDOW).alias("w"), "event_type")
         .agg(
             F.count("*").alias("n"),
             F.sum(F.round("value", 2).cast("decimal(18,2)"))
@@ -81,43 +99,67 @@ def event_ops(events: DataFrame) -> DataFrame:
     )
 
 
-def _merge_batch(state_path: str):
-    """foreachBatch body: latest-wins upsert of the micro-batch into the
-    keyed state table. Idempotent per (user_id, ts, event_id) — a
-    replayed micro-batch converges to the same state."""
+def drain(stream: DataFrame, checkpoint_path: str, sink):
+    """The one streaming sink: run `stream` with
+    `trigger(availableNow=True)` until its input is drained, and wait
+    for it. `sink` is a parquet directory, written in append mode
+    (watermarks close windows, so emitted rows are final), or a
+    foreachBatch function `(batch, batch_id) -> None`. Returns the
+    terminated StreamingQuery; a failed micro-batch raises here."""
+    writer = stream.writeStream.option(
+        "checkpointLocation", checkpoint_path
+    ).trigger(availableNow=True)
+    if callable(sink):
+        writer = writer.foreachBatch(sink)
+    else:
+        writer = writer.format("parquet").outputMode("append").option(
+            "path", sink
+        )
+    q = writer.start()
+    q.awaitTermination()
+    return q
+
+
+def _upsert_state(state_path: str, merge):
+    """foreachBatch body of the state-table streams: read the current
+    state (None only while `state_path` does not exist), overwrite it
+    with `merge(state, batch)`. Any other read error raises — treating
+    an unreadable table as empty would overwrite it with the
+    micro-batch alone. Idempotent when `merge` is: a replayed
+    micro-batch converges to the same state."""
+    from pyspark.errors import AnalysisException
 
     def apply(batch: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window
-
-        spark = batch.sparkSession
-        w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-        latest_in_batch = (
-            batch.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
         try:
-            current = spark.read.parquet(state_path)
-        except Exception:
-            current = None
-        if current is not None:
-            merged = (
-                current.unionByName(latest_in_batch)
-                .withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-        else:
-            merged = latest_in_batch
-        out = merged.filter(F.col("op") != "delete")
+            state = batch.sparkSession.read.parquet(state_path)
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
+            state = None
         # overwrite-by-snapshot fallback (Iceberg MERGE INTO when present).
         # localCheckpoint (not cache) before overwriting the path we just
         # read: a lost cached partition would otherwise recompute from the
         # half-truncated source directory and corrupt the state table.
-        out = out.localCheckpoint(eager=True)
+        out = merge(state, batch).localCheckpoint(eager=True)
         out.write.mode("overwrite").parquet(state_path)
 
     return apply
+
+
+def _latest_event_state(state: DataFrame | None, batch: DataFrame) -> DataFrame:
+    """Latest op per user_id by (ts, event_id) over the stored state and
+    the micro-batch; a user whose latest op is a delete leaves the
+    state. Re-ranking the state by event time (not arrival) makes the
+    merge idempotent per (user_id, ts, event_id)."""
+    from pyspark.sql import Window
+
+    rows = batch if state is None else state.unionByName(batch)
+    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
+    return (
+        rows.withColumn("__rn", F.row_number().over(w))
+        .filter((F.col("__rn") == 1) & (F.col("op") != "delete"))
+        .drop("__rn")
+    )
 
 
 def stream_cdc_merge(
@@ -128,33 +170,10 @@ def stream_cdc_merge(
     Returns the StreamingQuery after awaitTermination — callers read
     `state_path` for the materialized latest state.
     """
-    q = (
-        event_ops(events)
-        .writeStream.foreachBatch(_merge_batch(state_path))
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    return drain(
+        event_ops(events), checkpoint_path,
+        _upsert_state(state_path, _latest_event_state),
     )
-    q.awaitTermination()
-    return q
-
-
-def run_windowed_stream(
-    events: DataFrame, checkpoint_path: str, out_path: str
-):
-    """Drain the watermarked windowed agg to a parquet sink (append —
-    watermark closes windows, so rows are final when emitted)."""
-    q = (
-        windowed_event_counts(events)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
 
 
 # ---------------------------------------------------------------------------
@@ -167,7 +186,11 @@ SESSION_OUT_DDL = (
 )
 
 
-def stream_sessionize(events: DataFrame, gap_s: int = 1800):
+#: Inactivity gap that closes a session.
+_SESSION_GAP_S = 1800
+
+
+def stream_sessionize(events: DataFrame):
     """Gap-based sessionization as a CUSTOM STATEFUL streaming operator
     (applyInPandasWithState) — the engine's example of semantics the
     built-in window/watermark operators can't express: per-key mutable
@@ -197,7 +220,7 @@ def stream_sessionize(events: DataFrame, gap_s: int = 1800):
             ts = rows["ts"].reset_index(drop=True)
             # vectorized gap detection: boundary where inter-event gap
             # exceeds gap_s (no per-row Python)
-            bound = ts.diff().dt.total_seconds() > gap_s
+            bound = ts.diff().dt.total_seconds() > _SESSION_GAP_S
             grp = bound.cumsum()
             agg = ts.groupby(grp).agg(["min", "max", "count"])
 
@@ -208,7 +231,8 @@ def stream_sessionize(events: DataFrame, gap_s: int = 1800):
             for g_start, g_end, g_n in agg.itertuples(index=False):
                 g_start = g_start.to_pydatetime()
                 g_end = g_end.to_pydatetime()
-                if last is not None and (g_start - last).total_seconds() > gap_s:
+                if (last is not None
+                        and (g_start - last).total_seconds() > _SESSION_GAP_S):
                     closed.append((s0, last, n))
                     s0, last, n = None, None, 0
                 if s0 is None:
@@ -223,7 +247,9 @@ def stream_sessionize(events: DataFrame, gap_s: int = 1800):
             state.update((s0, last, n))
             # event-time timeout: close the open session once the
             # watermark passes last_ts + gap
-            state.setTimeoutTimestamp(int(last.timestamp() * 1000) + gap_s * 1000)
+            state.setTimeoutTimestamp(
+                int(last.timestamp() * 1000) + _SESSION_GAP_S * 1000
+            )
 
         if closed:
             yield pd.DataFrame(
@@ -236,7 +262,7 @@ def stream_sessionize(events: DataFrame, gap_s: int = 1800):
             )
 
     return (
-        events.withWatermark("ts", f"{gap_s} seconds")
+        events.withWatermark("ts", f"{_SESSION_GAP_S} seconds")
         .groupBy("user_id")
         .applyInPandasWithState(
             fn,
@@ -248,21 +274,6 @@ def stream_sessionize(events: DataFrame, gap_s: int = 1800):
     )
 
 
-def run_sessionize_stream(events: DataFrame, checkpoint_path: str, out_path: str):
-    """Drain the stateful sessionizer to parquet (availableNow)."""
-    q = (
-        stream_sessionize(events)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
 # ---------------------------------------------------------------------------
 # custom stateful operator: streaming exact dedup (keep-first)
 # ---------------------------------------------------------------------------
@@ -271,13 +282,16 @@ DEDUP_STATE_DDL = "first_ts timestamp, n_dups long"
 DEDUP_OUT_DDL = "fingerprint string, event_id long, user_id long, ts timestamp"
 
 
-def stream_exact_dedup(events: DataFrame, key_col: str = "fingerprint",
-                       ttl_s: int = 7200):
+#: How long a fingerprint stays in state past the watermark.
+_DEDUP_TTL_S = 7200
+
+
+def stream_exact_dedup(events: DataFrame):
     """Streaming keep-first exact dedup — the training-data pipeline's
     dedup ladder (operators/dedup.exact_dups) lifted to a stream: the
     FIRST row per fingerprint is emitted, every later duplicate is
     dropped while its fingerprint is in state. State per key is two
-    scalars and expires `ttl_s` past the watermark (bounded state:
+    scalars and expires `_DEDUP_TTL_S` past the watermark (bounded state:
     at 100 TB/day the table holds one window of fingerprints, not the
     full history — the standard at-scale trade: duplicates separated
     by more than the TTL pass through and are caught by the batch
@@ -314,11 +328,13 @@ def stream_exact_dedup(events: DataFrame, key_col: str = "fingerprint",
                 }
             )
         last_ts = rows["ts"].max().to_pydatetime()
-        state.setTimeoutTimestamp(int(last_ts.timestamp() * 1000) + ttl_s * 1000)
+        state.setTimeoutTimestamp(
+            int(last_ts.timestamp() * 1000) + _DEDUP_TTL_S * 1000
+        )
 
     return (
-        events.withWatermark("ts", f"{ttl_s} seconds")
-        .groupBy(key_col)
+        events.withWatermark("ts", f"{_DEDUP_TTL_S} seconds")
+        .groupBy("fingerprint")
         .applyInPandasWithState(
             fn,
             outputStructType=DEDUP_OUT_DDL,
@@ -329,30 +345,16 @@ def stream_exact_dedup(events: DataFrame, key_col: str = "fingerprint",
     )
 
 
-def run_dedup_stream(events: DataFrame, checkpoint_path: str, out_path: str):
-    """Drain the streaming dedup to parquet (availableNow)."""
-    q = (
-        stream_exact_dedup(events)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
 # ---------------------------------------------------------------------------
 # streaming spatial rollup: hot-cell monitor
 # ---------------------------------------------------------------------------
 
 
-def hot_cell_counts(
-    events: DataFrame, res: int = 5, window: str = "1 hour",
-    watermark: str = "2 hours", min_count: int = 1
-) -> DataFrame:
+#: Grid resolution of the hot-cell monitor.
+_HOT_CELL_RES = 5
+
+
+def hot_cell_counts(events: DataFrame) -> DataFrame:
     """Streaming hot-cell monitor (north_star composition): assign each
     event a grid cell from its user's deterministic point, then run a
     watermarked tumbling-window count per cell — the live view of the
@@ -365,13 +367,12 @@ def hot_cell_counts(
 
     lat, lon = cells.point_exprs("user_id")
     keyed = events.select(
-        "ts", cells.cell_id_expr(lat, lon, res).alias("cell")
+        "ts", cells.cell_id_expr(lat, lon, _HOT_CELL_RES).alias("cell")
     )
     return (
-        keyed.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "cell")
+        keyed.withWatermark("ts", _WATERMARK)
+        .groupBy(F.window("ts", _WINDOW).alias("w"), "cell")
         .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= min_count)
         .select(
             F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("hour_start"),
             "cell",
@@ -380,67 +381,26 @@ def hot_cell_counts(
     )
 
 
-def run_hot_cell_stream(events: DataFrame, checkpoint_path: str, out_path: str):
-    """Drain the hot-cell monitor to parquet (availableNow)."""
-    q = (
-        hot_cell_counts(events)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+def _osc_merge(state: DataFrame | None, batch: DataFrame) -> DataFrame:
+    """Replay a micro-batch of OSC rows onto the entity state with
+    `osmxml.apply_changes`, keyed (kind, id). Recency: the file's
+    NUMERIC replication sequence (last digit run in the filename), then
+    the filename, then the in-file op position. Numeric extraction
+    matters: lexicographic file order would sort a non-zero-padded
+    landing zone wrong (``10.osc`` < ``9.osc``) and replay stale ops as
+    latest; plain names without digits fall back to lexicographic."""
+    if state is None:
+        state = batch.sparkSession.createDataFrame(
+            [], batch.drop("op", "seq", "source_file").schema
+        )
+    file_num = F.nullif(
+        F.regexp_extract("source_file", r"(\d+)[^\d]*$", 1), F.lit("")
+    ).cast("long")
+    return osmxml.apply_changes(
+        state, batch, key=["kind", "id"],
+        order=[F.desc_nulls_last(file_num), F.desc("source_file"),
+               F.desc("seq")],
     )
-    q.awaitTermination()
-    return q
-
-
-def _osc_merge_batch(state_path: str):
-    """foreachBatch body for OSC replication: resolve the micro-batch
-    to its last op per (kind, id) — ordered by the file's NUMERIC
-    replication sequence (last digit run in the filename), then the
-    in-file op position — then upsert/delete into the entity state
-    table. Numeric extraction matters: lexicographic file order would
-    sort a non-zero-padded landing zone wrong (``10.osc`` < ``9.osc``)
-    and replay stale ops as latest; plain names without digits fall
-    back to lexicographic. Idempotent: replaying a micro-batch
-    converges to the same state."""
-
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window
-
-        spark = batch.sparkSession
-        file_num = F.nullif(
-            F.regexp_extract("source_file", r"(\d+)[^\d]*$", 1), F.lit("")
-        ).cast("long")
-        w = Window.partitionBy("kind", "id").orderBy(
-            F.desc_nulls_last(file_num), F.desc("source_file"), F.desc("seq")
-        )
-        latest = (
-            batch.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        try:
-            current = spark.read.parquet(state_path)
-        except Exception:
-            current = None
-        upserts = latest.filter(F.col("op") != "delete").drop(
-            "op", "seq", "source_file"
-        )
-        touched = latest.select("kind", "id")
-        if current is not None:
-            merged = current.join(
-                touched, ["kind", "id"], "left_anti"
-            ).unionByName(upserts)
-        else:
-            merged = upserts
-        # localCheckpoint before overwriting the path we just read
-        # (same rationale as _merge_batch above)
-        merged = merged.localCheckpoint(eager=True)
-        merged.write.mode("overwrite").parquet(state_path)
-
-    return apply
 
 
 def stream_osc_replication(
@@ -450,32 +410,24 @@ def stream_osc_replication(
     (e.g. fetched by sources/replication.py from the header's
     replication sequence), the streaming source parses them
     (osmxml.read_osc_stream), and each micro-batch upserts into the
-    entity state table with last-op-in-file-order-wins semantics — the
-    reference's sequential OSC replay, continuous and restartable
-    (checkpointed file-stream progress). availableNow drain; callers
-    read `state_path` for the materialized current state."""
-    from inputosm_spark.sources import osmxml
-
-    src = osmxml.read_osc_stream(spark, landing_dir)
-    q = (
-        src.writeStream.foreachBatch(_osc_merge_batch(state_path))
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    entity state table with last-op-wins semantics — the reference's
+    sequential OSC replay, continuous and restartable (checkpointed
+    file-stream progress). availableNow drain; callers read
+    `state_path` for the materialized current state."""
+    return drain(
+        osmxml.read_osc_stream(spark, landing_dir), checkpoint_path,
+        _upsert_state(state_path, _osc_merge),
     )
-    q.awaitTermination()
-    return q
 
 
-def attribution_join(
-    clicks: DataFrame,
-    purchases: DataFrame,
-    max_delay_s: int = 3600,
-    watermark: str = "2 hours",
-) -> DataFrame:
+#: Longest click -> purchase delay the attribution join pairs.
+_ATTRIBUTION_MAX_DELAY_S = 3600
+
+
+def attribution_join(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
     """Watermarked STREAM-STREAM inner join (round-5 §2.7 extension):
     every (click, purchase) pair of the same user where the purchase
-    lands within `max_delay_s` AFTER the click — the classic
+    lands within `_ATTRIBUTION_MAX_DELAY_S` AFTER the click — the classic
     attribution join. On streaming inputs Spark plans a
     StreamingSymmetricHashJoin whose state is BOUNDED by the watermark
     plus the time-range condition (each side buffers only rows still
@@ -487,12 +439,12 @@ def attribution_join(
     delay_s compares floor-epoch integers on both sides (DuckDB's
     `epoch()` is fractional; truncating each endpoint first is the
     engine's cross-dialect convention)."""
-    c = clicks.withWatermark("ts", watermark).select(
+    c = clicks.withWatermark("ts", _WATERMARK).select(
         F.col("user_id").alias("c_user"),
         F.col("event_id").alias("click_id"),
         F.col("ts").alias("click_ts"),
     )
-    p = purchases.withWatermark("ts", watermark).select(
+    p = purchases.withWatermark("ts", _WATERMARK).select(
         F.col("user_id").alias("p_user"),
         F.col("event_id").alias("purchase_id"),
         F.col("ts").alias("purchase_ts"),
@@ -503,7 +455,8 @@ def attribution_join(
         & (F.col("purchase_ts") >= F.col("click_ts"))
         & (
             F.col("purchase_ts")
-            <= F.col("click_ts") + F.make_interval(secs=F.lit(max_delay_s))
+            <= F.col("click_ts")
+            + F.make_interval(secs=F.lit(_ATTRIBUTION_MAX_DELAY_S))
         ),
     )
     return joined.select(
@@ -517,26 +470,6 @@ def attribution_join(
         F.date_format("purchase_ts", "yyyy-MM-dd HH:mm:ss").alias(
             "purchase_at"
         ),
-    )
-
-
-def run_attribution_stream(
-    events: DataFrame, checkpoint_path: str, out_path: str
-):
-    """Drive attribution_join over one event stream split into its
-    click/purchase legs (a stream-stream SELF join through two
-    filters), draining to parquet."""
-    out = attribution_join(
-        events.filter(F.col("event_type") == "click"),
-        events.filter(F.col("event_type") == "purchase"),
-    )
-    return (
-        out.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
 
 
@@ -622,19 +555,3 @@ def stream_od_transitions(obs: DataFrame, res: int) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-
-
-def run_od_stream(obs: DataFrame, res: int, checkpoint_path: str,
-                  out_path: str):
-    """Drain the streaming OD detector to parquet (availableNow)."""
-    q = (
-        stream_od_transitions(obs, res)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q

@@ -18,6 +18,7 @@ from inputosm_spark.datagen import (
     golden_ways,
 )
 from inputosm_spark.sources import osmxml
+from inputosm_spark.streaming.events import drain
 
 OSM = """<?xml version="1.0" encoding="UTF-8"?>
 <osm version="0.6" generator="inputosm_spark-test">
@@ -197,11 +198,7 @@ def test_read_osc_stream_matches_batch(spark, tmp_path):
 
     src = osmxml.read_osc_stream(spark, str(landing), max_files_per_trigger=1)
     out = str(tmp_path / "osc_out")
-    q = (src.writeStream.outputMode("append").format("parquet")
-         .option("path", out)
-         .option("checkpointLocation", str(tmp_path / "osc_ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    drain(src, str(tmp_path / "osc_ckpt"), out)
     got = spark.read.parquet(out)
 
     want = set()

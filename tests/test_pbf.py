@@ -12,6 +12,7 @@ import numpy as np
 import pytest
 
 from inputosm_spark.sources import osmxml, pbf
+from inputosm_spark.streaming.events import drain
 from tests import pbf_writer as W
 from tests.test_osmxml import OSM, _rows, _write
 
@@ -350,11 +351,7 @@ def test_read_pbf_stream_matches_batch(spark, tmp_path):
 
     src = pbf.read_pbf_stream(spark, str(landing), max_files_per_trigger=1)
     out = str(tmp_path / "stream_out")
-    q = (src.writeStream.outputMode("append").format("parquet")
-         .option("path", out)
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    drain(src, str(tmp_path / "ckpt"), out)
     got = spark.read.parquet(out)
 
     batch_rows = set()
@@ -376,14 +373,10 @@ def test_read_pbf_stream_rejects_bad_required_feature(spark, tmp_path):
     hdr = W.header_blob(required=("OsmSchema-V0.6", "Exotic-Feature-v9"))
     W.write_pbf(str(landing / "bad.osm.pbf"), [block], header=hdr)
     src = pbf.read_pbf_stream(spark, str(landing))
-    q = (src.writeStream.format("parquet")
-         .option("path", str(tmp_path / "bad_out"))
-         .option("checkpointLocation", str(tmp_path / "bad_ckpt"))
-         .trigger(availableNow=True).start())
     import pyspark.errors
 
     with pytest.raises(pyspark.errors.exceptions.base.PySparkException):
-        q.awaitTermination()
+        drain(src, str(tmp_path / "bad_ckpt"), str(tmp_path / "bad_out"))
 
 
 # --- single-blob public API (input_blob_mem parity,

@@ -93,3 +93,43 @@ def test_time_travel_preserves_pre_catchup_state(spark, seeded):
     old = store.read(snapshot_id=before)
     assert old.filter("kind = 'relation'").count() == 1  # VERSION AS OF
     assert store.properties(before)["osm.replication.sequence"] == "100"
+
+
+def test_catch_up_keys_changes_by_kind_and_id(spark, tmp_path):
+    """OSM ids are unique per kind only: node 7, way 7 and relation 7
+    are three entities. Deleting node 7 and modifying way 7 in one
+    change set must leave relation 7 untouched."""
+    same_id = dict(id=7, version=1, ts_s=1_600_000_000, changeset=1)
+    block = W.primitive_block(lambda st: [
+        W.dense_group(st, [dict(same_id, raw_lat=10**7, raw_lon=10**7,
+                                tags={"n": "7"})]),
+        W.way_group(st, dict(same_id, node_refs=[7], tags={"w": "7"})),
+        W.relation_group(st, dict(same_id, members=[(0, 7, "")],
+                                  tags={"r": "7"})),
+    ])
+    path = W.write_pbf(str(tmp_path / "seven.osm.pbf"), [block],
+                       header=W.header_blob(rep_seq=1))
+    store = SnapshotStore(spark, str(tmp_path / "table7"))
+    replication.ingest_pbf(spark, path, store)
+    osc = tmp_path / "2.osc"
+    osc.write_text("""<?xml version="1.0" encoding="UTF-8"?>
+<osmChange version="0.6">
+  <delete>
+    <node id="7" lat="1.0" lon="1.0" version="2"
+          timestamp="2021-01-01T00:00:00Z" changeset="2"/>
+  </delete>
+  <modify>
+    <way id="7" version="2" timestamp="2021-01-01T00:00:00Z" changeset="2">
+      <nd ref="8"/>
+      <tag k="w" v="8"/>
+    </way>
+  </modify>
+</osmChange>
+""")
+    replication.catch_up_osc(spark, store, {2: str(osc)})
+
+    rows = {(r.kind, r.id): r for r in store.read().collect()}
+    assert set(rows) == {("way", 7), ("relation", 7)}
+    way = rows[("way", 7)]
+    assert way.node_refs == [8] and way.version == 2 and way.tags == {"w": "8"}
+    assert rows[("relation", 7)].version == 1

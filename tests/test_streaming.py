@@ -31,7 +31,7 @@ def test_windowed_stream_matches_batch(spark, sf_dir, tmp_path):
     src = stream_ops.read_event_stream(spark, _events_dir(sf_dir, tmp_path))
     out = str(tmp_path / "win_out")
     ckpt = str(tmp_path / "win_ckpt")
-    stream_ops.run_windowed_stream(src, ckpt, out)
+    stream_ops.drain(stream_ops.windowed_event_counts(src), ckpt, out)
 
     got = spark.read.parquet(out)
     batch_events = spark.read.parquet(_events_path(sf_dir))
@@ -97,13 +97,33 @@ def test_cdc_merge_replay_is_idempotent(spark, sf_dir, tmp_path):
     assert ids.isEmpty()
 
 
+def test_cdc_merge_raises_on_unreadable_state(spark, sf_dir, tmp_path):
+    """Only a MISSING state table is empty state: an existing table the
+    reader cannot parse fails the stream and is left as it was, never
+    overwritten with the micro-batch alone."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    state = tmp_path / "bad_state"
+    state.mkdir()
+    garbage = state / "part-00000.parquet"
+    garbage.write_bytes(b"not a parquet file")
+    src = stream_ops.read_event_stream(spark, _events_dir(sf_dir, tmp_path))
+    with pytest.raises(StreamingQueryException):
+        stream_ops.stream_cdc_merge(src, str(state), str(tmp_path / "bad_ckpt"))
+    assert [p.name for p in state.iterdir()] == ["part-00000.parquet"]
+    assert garbage.read_bytes() == b"not a parquet file"
+
+
 def test_stateful_sessionize_matches_batch(spark, sf_dir, tmp_path):
     """applyInPandasWithState sessionizer: closed sessions must equal
     batch sessionization minus each user's open tail session (which
     stays in state until the watermark passes it)."""
     src = stream_ops.read_event_stream(spark, _events_dir(sf_dir, tmp_path))
     out = str(tmp_path / "sess_out")
-    stream_ops.run_sessionize_stream(src, str(tmp_path / "sess_ckpt"), out)
+    stream_ops.drain(
+        stream_ops.stream_sessionize(src), str(tmp_path / "sess_ckpt"), out
+    )
     got = spark.read.parquet(out)
 
     from pyspark.sql import Window
@@ -155,7 +175,9 @@ def test_hot_cell_stream_matches_batch(spark, sf_dir, tmp_path):
 
     src = stream_ops.read_event_stream(spark, _events_dir(sf_dir, tmp_path))
     out = str(tmp_path / "hot_out")
-    stream_ops.run_hot_cell_stream(src, str(tmp_path / "hot_ckpt"), out)
+    stream_ops.drain(
+        stream_ops.hot_cell_counts(src), str(tmp_path / "hot_ckpt"), out
+    )
     got = spark.read.parquet(out)
     assert got.count() > 0
 
@@ -210,7 +232,9 @@ def test_sessionize_late_event_does_not_shrink_session(spark, tmp_path):
 
     src = stream_ops.read_event_stream(spark, str(landing), max_files_per_trigger=1)
     out = str(tmp_path / "late_out")
-    stream_ops.run_sessionize_stream(src, str(tmp_path / "late_ckpt"), out)
+    stream_ops.drain(
+        stream_ops.stream_sessionize(src), str(tmp_path / "late_ckpt"), out
+    )
 
     got = {r.user_id: r for r in spark.read.parquet(out).collect()}
     assert 1 in got, "user 1's session must close via the event-time timeout"
@@ -231,7 +255,9 @@ def test_streaming_exact_dedup_matches_batch_keep_first(spark, sf_dir, tmp_path)
         spark, _events_dir(sf_dir, tmp_path)
     ).withColumn("fingerprint", fp)
     out = str(tmp_path / "dedup_out")
-    stream_ops.run_dedup_stream(src, str(tmp_path / "dedup_ckpt"), out)
+    stream_ops.drain(
+        stream_ops.stream_exact_dedup(src), str(tmp_path / "dedup_ckpt"), out
+    )
     got = spark.read.parquet(out)
 
     ev = spark.read.parquet(_events_path(sf_dir)).withColumn("fingerprint", fp)
@@ -355,10 +381,13 @@ def test_stream_stream_attribution_matches_batch(spark, sf_dir, tmp_path):
         os.path.join(sf_dir, "events.parquet"), src / "events.parquet"
     )
     stream = se.read_event_stream(spark, str(src))
-    q = se.run_attribution_stream(
-        stream, str(tmp_path / "ckpt"), str(tmp_path / "out")
+    se.drain(
+        se.attribution_join(
+            stream.filter(F.col("event_type") == "click"),
+            stream.filter(F.col("event_type") == "purchase"),
+        ),
+        str(tmp_path / "ckpt"), str(tmp_path / "out"),
     )
-    q.awaitTermination(120)
 
     batch_events = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     want = se.attribution_join(
@@ -401,10 +430,9 @@ def test_streaming_pbf_sink_roundtrips(spark, sf_dir, tmp_path):
     ent.repartition(3).write.parquet(str(src))
 
     stream = spark.readStream.schema(pbf._ENTITY_DDL).parquet(str(src))
-    q = pbf_encode.run_pbf_sink_stream(
+    pbf_encode.run_pbf_sink_stream(
         stream, str(tmp_path / "ckpt"), str(tmp_path / "out")
     )
-    q.awaitTermination(180)
 
     shards = sorted(
         glob.glob(str(tmp_path / "out" / "batch=*" / "*.osm.pbf"))
@@ -462,7 +490,9 @@ def test_stream_od_transitions_matches_batch(spark, sf_dir, tmp_path):
         .parquet(str(landing) + "/*")
     )
     out = str(tmp_path / "od_out")
-    stream_ops.run_od_stream(src, 6, str(tmp_path / "od_ckpt"), out)
+    stream_ops.drain(
+        stream_ops.stream_od_transitions(src, 6), str(tmp_path / "od_ckpt"), out
+    )
     got = spark.read.parquet(out)
 
     cell = cells.cell_id_expr("lat_e4", "lon_e4", 6)
