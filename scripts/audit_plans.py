@@ -228,6 +228,20 @@ CHECKS: dict[str, list[str]] = {
     # raster tiles: one Exchange on tile into one Arrow kernel call per
     # partition (see ANTI)
     "raster_roundtrip": [r"MapInArrow", r"hashpartitioning\(tile"],
+    # the rest of perfbench's query_mix: each plan the benchmark times
+    # carries one asserted property, so a plan change shows up here
+    # pixel counts pre-combine map-side before the one Exchange
+    "tile_counts": [r"partial_count"],
+    # corpus batches stream through one Arrow kernel (queries ride in
+    # its closure), never a cross join of query x corpus rows
+    "cosine_topk": [r"MapInPandas"],
+    # the shipdate cutoff is pushed into the parquet scan
+    "tpch_q1_pricing": [r"PushedFilters: \[IsNotNull\(l_shipdate\), "
+                        r"LessThanOrEqual\(l_shipdate"],
+    # both session windows partition on user_id
+    "sessionize": [r"windowspecdefinition\(user_id"],
+    # the dedup keep-first rank is a window over the md5 fingerprint
+    "training_pipeline": [r"windowspecdefinition\(fp#"],
 }
 
 # patterns that must NOT appear (regression = reintroduced anti-pattern)
