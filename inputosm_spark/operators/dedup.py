@@ -521,7 +521,7 @@ def minhash_bands(
     bucketed-history path (write the HISTORY's bands with
     plans/layout.write_bucketed_table keyed on band||'|'||band_val and
     every future batch probes it with zero Exchange on the history
-    side — plan-asserted in tests/test_round5_ops.py).
+    side — plan-asserted in tests/test_dedup.py).
 
     Fan-out is ONE explode over a literal struct array, never a
     unionAll of n_bands selects: Spark has no cross-branch subplan

@@ -15,9 +15,11 @@ Scale design (100 TB corpus, 1000 executors):
   polygon side the join is a shuffled equi-join on cell where AQE
   splits skewed cells (dense metro cells are the known hot keys).
 * kNN: k-ring expansion multiplies the small QUERY side (9x, 25x, …),
-  which is broadcast, never the big point side; escalation
-  re-processes only unfilled queries, and the final fallback
-  brute-forces only stragglers.
+  which is broadcast, never the big point side. The ring schedule is
+  fixed (ring 1, doubling), so no statistic job runs first and nothing
+  derived from the data is memoized; escalation re-processes only
+  unfilled queries, and the final fallback brute-forces only
+  stragglers.
 * exact refine runs per Arrow batch with numpy vectorized over points,
   grouped by polygon sub-ring within the batch — no per-row Python.
 * raster tiles: one Exchange on tile, then one numpy kernel call per
@@ -46,11 +48,10 @@ from pyspark.sql.types import (
 from inputosm_spark import geo
 from inputosm_spark.functions import cells
 
-#: (applicationId, semanticHash of the prepared point plan) ->
-#: (n_points, approx occupied cells): the kNN auto-ring PLAN-CHOICE
-#: statistic (see knn_join) — immutable input, performance-only
-#: decision, applicationId-fenced; no query results are cached.
-_DENSITY_MEMO: dict[tuple[str, int], tuple[int, int]] = {}
+#: knn_join's grid resolution and its ring rounds (ring 1, 2, 4, 8)
+#: before the stragglers are brute-forced.
+_KNN_RES = 6
+_KNN_MAX_ROUNDS = 4
 
 # ---------------------------------------------------------------------------
 # polygon covering cells (polyfill) — one Arrow UDF over numpy
@@ -208,13 +209,7 @@ def pip_join(
 # ---------------------------------------------------------------------------
 
 
-def knn_join(
-    queries: DataFrame,
-    points: DataFrame,
-    k: int,
-    res: int = 6,
-    max_rounds: int = 4,
-) -> DataFrame:
+def knn_join(queries: DataFrame, points: DataFrame, k: int) -> DataFrame:
     """k nearest points for each query row, exact.
 
     queries: (qid, lat_e4, lon_e4); points: (id, lat_e4, lon_e4).
@@ -222,14 +217,17 @@ def knn_join(
     ties broken by point id — a total order, so the result set is
     engine-independent and oracle-checkable.
 
-    Algorithm (grid kNN): explode each query's ring-r neighborhood ->
-    equi-join points on cell -> window top-k. A result is PROVEN exact
-    when the k-th distance is <= the minimum possible distance to any
-    cell outside the ring; unfinished queries escalate to a wider ring
-    (2r), and after `max_rounds` the few stragglers are finished by a
-    broadcast brute-force pass. Only the (small) query side is ever
+    Algorithm (grid kNN at res `_KNN_RES`): explode each query's
+    ring-r neighborhood -> equi-join points on cell -> window top-k. A
+    result is PROVEN exact when the k-th distance is <= the minimum
+    possible distance to any cell outside the ring. The ring starts at
+    1 and unfinished queries escalate to 2r; after `_KNN_MAX_ROUNDS`
+    rounds the few stragglers are finished by a broadcast brute-force
+    pass. The schedule reads nothing from the data: no statistic job
+    runs before the first round. Only the (small) query side is ever
     replicated; the big point side is scanned with an equi-join.
     """
+    res = _KNN_RES
     nx, ny = 2 ** (res + 1), 2**res
     # conservative min separation to outside-of-ring cells (e4 units)
     w_lon = (2 * geo.LON_MAX_E4) // nx
@@ -252,37 +250,7 @@ def knn_join(
     )
     results = None
     ring = 1
-    # density-aware starting ring: one cheap agg over the point
-    # side estimates points per OCCUPIED cell; pick the smallest
-    # ring whose (2r+1)^2 cells are expected to hold ~2k points,
-    # skipping escalation rounds that predictably come up short
-    # (clustered data makes the occupied-cell average the right
-    # density, not the whole-world one). The statistic is a
-    # PLAN-CHOICE input over an immutable point plan (the ring
-    # schedule only changes how the exact answer is found — the
-    # k-th-distance bound proves exactness at every ring), so it
-    # is memoized per (applicationId, semanticHash) like the
-    # partition probe: the ~0.3 s driver job runs once per
-    # distinct point plan, never per invocation. No results are
-    # cached.
-    sc = pts.sparkSession.sparkContext
-    key = (sc.applicationId, pts.semanticHash())
-    st = _DENSITY_MEMO.get(key)
-    if st is None:
-        stats = pts.agg(
-            F.count("*").alias("n"),
-            F.approx_count_distinct("__cell", 0.05).alias("c"),
-        ).first()
-        st = (stats.n or 0, stats.c or 0)
-        _DENSITY_MEMO[key] = st
-    if st[0] and st[1]:
-        per_cell = max(st[0] / st[1], 1e-9)
-        import math
-
-        ring = max(1, math.ceil((math.sqrt(2 * k / per_cell) - 1) / 2))
-        # never start beyond what max_rounds' doubling could reach
-        ring = min(ring, 2 ** (max_rounds - 1))
-    for _ in range(max_rounds):
+    for _ in range(_KNN_MAX_ROUNDS):
         # the exploded query side is broadcast explicitly: a
         # createDataFrame or checkpointed frame reports no size, so
         # left to the planner the point scan would be the build side

@@ -107,6 +107,15 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _text_chars():
+    """Characters of a document's text spans."""
+    return F.aggregate(
+        F.transform("spans", lambda s: F.coalesce(F.length(s.text), F.lit(0))),
+        F.lit(0),
+        lambda acc, x: acc + x,
+    )
+
+
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interleaved-corpus spatial rollup: documents -> spans table ->
     per-doc deterministic point -> res-7 cell -> per-cell doc/span/char
@@ -117,11 +126,7 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexed = docs.select(
         "doc_id",
         F.size("spans").alias("n_spans"),
-        F.aggregate(
-            F.transform("spans", lambda s: F.coalesce(F.length(s.text), F.lit(0))),
-            F.lit(0),
-            lambda acc, x: acc + x,
-        ).alias("text_chars"),
+        _text_chars().alias("text_chars"),
         cells.cell_id_expr(lat, lon, 7).alias("cell7"),
     )
     return (
@@ -409,27 +414,42 @@ def _box_polygons(spark: SparkSession) -> DataFrame:
     )
 
 
-@register(
-    "pip_join_boxes",
-    oracle=f"""
-    WITH pts AS (SELECT doc_id, {_LAT_SQL} AS lat_e4, {_LON_SQL} AS lon_e4
-                 FROM documents),
-         boxes AS ({_BOX_SQL})
+# the documents' points and the box fixture: the PIP family's
+# oracle inputs (closed-open box test, as the ray-cast boundary rule)
+_PTS_SQL = f"SELECT doc_id, {_LAT_SQL} AS lat_e4, {_LON_SQL} AS lon_e4 FROM documents"
+_PIP_CTES_SQL = f"pts AS ({_PTS_SQL}), boxes AS ({_BOX_SQL})"
+_PIP_BOXES_SQL = f"""
+    WITH {_PIP_CTES_SQL}
     SELECT p.doc_id, b.poly_id
     FROM pts p JOIN boxes b
       ON p.lat_e4 >= b.lat0 AND p.lat_e4 < b.lat1
      AND p.lon_e4 >= b.lon0 AND p.lon_e4 < b.lon1
-    """,
-)
+"""
+
+
+def _doc_points(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, lat_e4, lon_e4): every document's deterministic point."""
+    lat, lon = cells.point_exprs("doc_id")
+    return _t(spark, sf_dir, "documents").select("doc_id", lat, lon)
+
+
+def _doc_cells(spark: SparkSession, sf_dir: str, *cols, **res) -> DataFrame:
+    """Every document's grid cell at each `name=res`, then `cols`."""
+    lat, lon = cells.point_exprs("doc_id")
+    return _t(spark, sf_dir, "documents").select(
+        *[cells.cell_id_expr(lat, lon, r).alias(n) for n, r in res.items()],
+        *cols,
+    )
+
+
+@register("pip_join_boxes", oracle=_PIP_BOXES_SQL)
 def q_pip_join_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cell-bucketed PIP join (north_star). The engine path is fully
     general (polyfill + ray-cast refine in Arrow UDFs); the oracle uses
     the boxes' closed-open bbox form, which the ray-cast's boundary
     rule reproduces exactly.
     """
-    docs = _t(spark, sf_dir, "documents")
-    lat, lon = cells.point_exprs("doc_id")
-    pts = docs.select("doc_id", lat, lon)
+    pts = _doc_points(spark, sf_dir)
     return spatial.pip_join(pts, _box_polygons(spark), res=6).select(
         "doc_id", "poly_id"
     )
@@ -443,9 +463,7 @@ def q_pip_join_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
              {cells.point_sql('vec_id + 7777')[0]} AS qlat,
              {cells.point_sql('vec_id + 7777')[1]} AS qlon
       FROM embeddings WHERE vec_id < 20
-    ), p AS (
-      SELECT doc_id, {_LAT_SQL} AS lat_e4, {_LON_SQL} AS lon_e4 FROM documents
-    ), scored AS (
+    ), p AS ( {_PTS_SQL} ), scored AS (
       SELECT q.qid, p.doc_id AS neighbor_id,
              (q.qlat - p.lat_e4) * (q.qlat - p.lat_e4)
              + (q.qlon - p.lon_e4) * (q.qlon - p.lon_e4) AS dist2,
@@ -471,7 +489,7 @@ def q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     qs = emb.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("qid"), qlat, qlon
     )
-    out = spatial.knn_join(qs, pts, k=5, res=6)
+    out = spatial.knn_join(qs, pts, k=5)
     return out.select("qid", "neighbor_id", "dist2", F.col("rank").cast("int").alias("rank"))
 
 
@@ -546,10 +564,8 @@ _CELL3_SQL = cells.cell_id_sql(_LAT_SQL, _LON_SQL, 3)
 def q_salted_cell_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-level salted aggregation (north_star skew handling) — must
     equal the plain group count exactly (algebraic re-association)."""
-    docs = _t(spark, sf_dir, "documents")
-    lat, lon = cells.point_exprs("doc_id")
-    keyed = docs.select(cells.cell_id_expr(lat, lon, 3).alias("cell3"))
-    return skew.salted_count(keyed, "cell3", n_salt=16)
+    return skew.salted_count(_doc_cells(spark, sf_dir, cell3=3), "cell3",
+                             n_salt=16)
 
 
 # --- dedup -----------------------------------------------------------------
@@ -597,129 +613,35 @@ _SHINGLES_SQL = f"""
   )
 """
 
-
-@register(
-    "minhash_signatures",
-    oracle=f"""
-    WITH sh AS ({_SHINGLES_SQL})
+# The MinHash/LSH family's one oracle definition: 4 md5-slice
+# signatures over the `sh` shingles (dedup.minhash_signatures,
+# n_hashes=4), their 2 x 2 banding (dedup.lsh_candidate_pairs), the
+# candidate pairs of a band table, and the connected components of
+# those pairs labelling every document (graph.connected_components).
+_MINHASH_SIG_SQL = """
     SELECT doc_id,
            min(substr(md5('0|' || shingle), 1, 8)) AS sig_0,
            min(substr(md5('0|' || shingle), 9, 8)) AS sig_1,
            min(substr(md5('0|' || shingle), 17, 8)) AS sig_2,
            min(substr(md5('0|' || shingle), 25, 8)) AS sig_3
     FROM sh GROUP BY doc_id
-    """,
-)
-def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash over word 3-gram shingles, 4 hash families (md5-keyed
-    min-hash form — engine-neutral)."""
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    )
-    return dedup.minhash_signatures(dedup.word_shingles(docs, n=3), n_hashes=4)
+"""
 
-
-@register(
-    "lsh_candidate_pairs",
-    oracle=f"""
-    WITH sh AS ({_SHINGLES_SQL}),
-    sig AS (
-      SELECT doc_id,
-             min(substr(md5('0|' || shingle), 1, 8)) AS sig_0,
-             min(substr(md5('0|' || shingle), 9, 8)) AS sig_1,
-             min(substr(md5('0|' || shingle), 17, 8)) AS sig_2,
-             min(substr(md5('0|' || shingle), 25, 8)) AS sig_3
-      FROM sh GROUP BY doc_id
-    ),
+_LSH_BANDS_SQL = f"""sh AS ({_SHINGLES_SQL}),
+    sig AS ({_MINHASH_SIG_SQL}),
     bands AS (
       SELECT doc_id, 0 AS band, sig_0 || '|' || sig_1 AS band_val FROM sig
       UNION ALL
       SELECT doc_id, 1 AS band, sig_2 || '|' || sig_3 AS band_val FROM sig
-    )
+    )"""
+
+_LSH_PAIRS_SQL = """
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM bands a JOIN bands b
+    FROM {t} a JOIN {t} b
       ON a.band = b.band AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-    """,
-)
-def q_lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH banding: near-dup candidate pairs via bucket join
-    (2 bands x 2 rows)."""
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    )
-    sigs = dedup.minhash_signatures(dedup.word_shingles(docs, n=3), n_hashes=4)
-    return dedup.lsh_candidate_pairs(sigs, n_bands=2, rows_per_band=2)
+"""
 
-
-@register(
-    "lsh_candidate_pairs_capped",
-    oracle=f"""
-    WITH docs_aug AS (
-      SELECT doc_id, text FROM documents
-      UNION ALL
-      SELECT 1000000 + i AS doc_id, '' AS text FROM range(30) t(i)
-    ),
-    sh AS ({_SHINGLES_SQL.replace("FROM documents", "FROM docs_aug")}),
-    sig AS (
-      SELECT doc_id,
-             min(substr(md5('0|' || shingle), 1, 8)) AS sig_0,
-             min(substr(md5('0|' || shingle), 9, 8)) AS sig_1,
-             min(substr(md5('0|' || shingle), 17, 8)) AS sig_2,
-             min(substr(md5('0|' || shingle), 25, 8)) AS sig_3
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      SELECT doc_id, 0 AS band, sig_0 || '|' || sig_1 AS band_val FROM sig
-      UNION ALL
-      SELECT doc_id, 1 AS band, sig_2 || '|' || sig_3 AS band_val FROM sig
-    ),
-    capped AS (
-      SELECT * FROM bands
-      QUALIFY count(*) OVER (PARTITION BY band, band_val) <= 20
-    )
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM capped a JOIN capped b
-      ON a.band = b.band AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-    """,
-)
-def q_lsh_candidate_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH candidate generation with the bucket-size cap exercised by a
-    synthesized degenerate bucket: 30 empty documents all share one
-    MinHash signature, which uncapped would emit 435+ junk pairs (and
-    at 100 TB, one never-finishing task). max_bucket=20 drops the
-    degenerate bucket entirely while the organic near-dup buckets pass
-    through — bounded pair counts, oracle-verified."""
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    )
-    degenerate = spark.range(30).select(
-        (F.col("id") + 1000000).cast("string").alias("doc_id"),
-        F.lit("").alias("text"),
-    )
-    aug = docs.unionByName(degenerate)
-    sigs = dedup.minhash_signatures(dedup.word_shingles(aug, n=3), n_hashes=4)
-    return dedup.lsh_candidate_pairs(
-        sigs, n_bands=2, rows_per_band=2, max_bucket=20
-    )
-
-
-@register(
-    "dedup_clusters",
-    oracle=f"""
-    WITH RECURSIVE sh AS ({_SHINGLES_SQL}),
-    sig AS (
-      SELECT doc_id,
-             min(substr(md5('0|' || shingle), 1, 8)) AS sig_0,
-             min(substr(md5('0|' || shingle), 9, 8)) AS sig_1,
-             min(substr(md5('0|' || shingle), 17, 8)) AS sig_2,
-             min(substr(md5('0|' || shingle), 25, 8)) AS sig_3
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      SELECT doc_id, 0 AS band, sig_0 || '|' || sig_1 AS band_val FROM sig
-      UNION ALL
-      SELECT doc_id, 1 AS band, sig_2 || '|' || sig_3 AS band_val FROM sig
-    ),
+_LSH_LABELS_SQL = f"""{_LSH_BANDS_SQL},
     pairs AS (
       SELECT DISTINCT CAST(a.doc_id AS BIGINT) AS a,
                       CAST(b.doc_id AS BIGINT) AS b
@@ -733,10 +655,100 @@ def q_lsh_candidate_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
       UNION
       SELECT s.b AS node, r.lab FROM reach r JOIN sym s ON s.a = r.node
     ),
-    comp AS (SELECT node, min(lab) AS component FROM reach GROUP BY node)
+    comp AS (SELECT node, min(lab) AS component FROM reach GROUP BY node)"""
+
+_LABELS_SQL = """
     SELECT d.doc_id, coalesce(c.component, d.doc_id) AS component
     FROM documents d LEFT JOIN comp c ON c.node = d.doc_id
+"""
+
+
+def _str_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id as string, text): the input of the dedup operators."""
+    return _t(spark, sf_dir, "documents").select(
+        F.col("doc_id").cast("string").alias("doc_id"), "text"
+    )
+
+
+def _minhash(docs: DataFrame) -> DataFrame:
+    return dedup.minhash_signatures(dedup.word_shingles(docs, n=3), n_hashes=4)
+
+
+def _lsh_pairs(sigs: DataFrame, **kw) -> DataFrame:
+    return dedup.lsh_candidate_pairs(sigs, n_bands=2, rows_per_band=2, **kw)
+
+
+def _dup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, component): every document labelled with the smallest
+    doc_id of its LSH near-duplicate cluster (itself when alone)."""
+    from inputosm_spark.operators import graph
+
+    cand = _lsh_pairs(_minhash(_str_docs(spark, sf_dir)))
+    comp = graph.connected_components(
+        cand.select(
+            F.col("doc_a").cast("long").alias("src"),
+            F.col("doc_b").cast("long").alias("dst"),
+        )
+    )
+    return _t(spark, sf_dir, "documents").select("doc_id").join(
+        comp.withColumnRenamed("node", "doc_id"), "doc_id", "left"
+    ).select("doc_id", F.coalesce("component", "doc_id").alias("component"))
+
+
+@register(
+    "minhash_signatures",
+    oracle=f"WITH sh AS ({_SHINGLES_SQL}) {_MINHASH_SIG_SQL}",
+)
+def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash over word 3-gram shingles, 4 hash families (md5-keyed
+    min-hash form — engine-neutral)."""
+    return _minhash(_str_docs(spark, sf_dir))
+
+
+@register(
+    "lsh_candidate_pairs",
+    oracle=f"WITH {_LSH_BANDS_SQL} {_LSH_PAIRS_SQL.format(t='bands')}",
+)
+def q_lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash-LSH banding: near-dup candidate pairs via bucket join
+    (2 bands x 2 rows)."""
+    return _lsh_pairs(_minhash(_str_docs(spark, sf_dir)))
+
+
+@register(
+    "lsh_candidate_pairs_capped",
+    oracle=f"""
+    WITH docs_aug AS (
+      SELECT doc_id, text FROM documents
+      UNION ALL
+      SELECT 1000000 + i AS doc_id, '' AS text FROM range(30) t(i)
+    ),
+    {_LSH_BANDS_SQL.replace("FROM documents", "FROM docs_aug")},
+    capped AS (
+      SELECT * FROM bands
+      QUALIFY count(*) OVER (PARTITION BY band, band_val) <= 20
+    )
+    {_LSH_PAIRS_SQL.format(t='capped')}
     """,
+)
+def q_lsh_candidate_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LSH candidate generation with the bucket-size cap exercised by a
+    synthesized degenerate bucket: 30 empty documents all share one
+    MinHash signature, which uncapped would emit 435+ junk pairs (and
+    at 100 TB, one never-finishing task). max_bucket=20 drops the
+    degenerate bucket entirely while the organic near-dup buckets pass
+    through — bounded pair counts, oracle-verified."""
+    degenerate = spark.range(30).select(
+        (F.col("id") + 1000000).cast("string").alias("doc_id"),
+        F.lit("").alias("text"),
+    )
+    aug = _str_docs(spark, sf_dir).unionByName(degenerate)
+    return _lsh_pairs(_minhash(aug), max_bucket=20)
+
+
+@register(
+    "dedup_clusters",
+    oracle=f"WITH RECURSIVE {_LSH_LABELS_SQL} {_LABELS_SQL}",
 )
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate CLUSTERS: LSH candidate pairs -> connected components
@@ -745,34 +757,18 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (singletons label themselves). The keep-one-per-group decision at
     the end of the dedup ladder. Oracle: recursive-CTE transitive
     closure — an independent fixpoint formulation of the same graph."""
-    from inputosm_spark.operators import graph
-
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    )
-    sigs = dedup.minhash_signatures(dedup.word_shingles(docs, n=3), n_hashes=4)
-    cand = dedup.lsh_candidate_pairs(sigs, n_bands=2, rows_per_band=2)
-    comp = graph.connected_components(
-        cand.select(
-            F.col("doc_a").cast("long").alias("src"),
-            F.col("doc_b").cast("long").alias("dst"),
-        )
-    )
-    all_docs = _t(spark, sf_dir, "documents").select("doc_id")
-    return all_docs.join(
-        comp.withColumnRenamed("node", "doc_id"), "doc_id", "left"
-    ).select(
-        "doc_id", F.coalesce("component", "doc_id").alias("component")
-    )
+    return _dup_labels(spark, sf_dir)
 
 
 _HEXMAP_SQL = "(instr('0123456789abcdef', substr(md5(tok), CAST(bit // 4 AS INT) + 1, 1)) - 1)"
 
 
-@register(
-    "simhash",
-    oracle=f"""
-    WITH toks AS (
+def _simhash_sums_sql(bits: int) -> str:
+    """toks/per_bit/sums CTEs: the +-1 vote sum `s` of every signature
+    bit of every document (operators/dedup.simhash, md5-hex-digit token
+    hash)."""
+    return f"""
+    toks AS (
       SELECT DISTINCT CAST(doc_id AS VARCHAR) AS doc_id, tok
       FROM (SELECT doc_id, unnest(string_split({_NORM_SQL}, ' ')) AS tok
             FROM documents)
@@ -781,10 +777,16 @@ _HEXMAP_SQL = "(instr('0123456789abcdef', substr(md5(tok), CAST(bit // 4 AS INT)
              CASE WHEN ({_HEXMAP_SQL} // (CASE bit % 4 WHEN 0 THEN 1 WHEN 1 THEN 2
                                           WHEN 2 THEN 4 ELSE 8 END)) % 2 = 1
                   THEN 1 ELSE -1 END AS sign
-      FROM toks, unnest(range(0, 16)) AS t(bit)
+      FROM toks, unnest(range(0, {bits})) AS t(bit)
     ), sums AS (
       SELECT doc_id, bit, sum(sign) AS s FROM per_bit GROUP BY 1, 2
-    )
+    )"""
+
+
+@register(
+    "simhash",
+    oracle=f"""
+    WITH {_simhash_sums_sql(16)}
     SELECT doc_id,
            CAST(sum(CASE WHEN s > 0 THEN CAST(power(2, bit) AS BIGINT) ELSE 0 END)
                 AS BIGINT) AS simhash
@@ -793,10 +795,7 @@ _HEXMAP_SQL = "(instr('0123456789abcdef', substr(md5(tok), CAST(bit // 4 AS INT)
 )
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash document fingerprint (16-bit, md5-hex-digit token hash)."""
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    )
-    return dedup.simhash(docs, bits=16)
+    return dedup.simhash(_str_docs(spark, sf_dir), bits=16)
 
 
 @register("simhash_sharded")  # oracle: shared with `simhash`, set below
@@ -807,10 +806,7 @@ def q_simhash_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature function is identical, so the DuckDB replay is shared —
     a driver hash-match proves the sharded carry reassembles the
     bit counts exactly."""
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    )
-    return dedup.simhash_sharded(docs, bits=16, n_shards=8)
+    return dedup.simhash_sharded(_str_docs(spark, sf_dir), bits=16, n_shards=8)
 
 
 _ORACLES["simhash_sharded"] = _ORACLES["simhash"]
@@ -908,19 +904,33 @@ _COS_SQL = f"""
 """
 
 
-@register(
-    "cosine_topk",
-    oracle=f"""
-    WITH scored AS (
-      SELECT q.vec_id AS qid, c.vec_id AS neighbor_id, {_COS_SQL} AS cos,
-             row_number() OVER (PARTITION BY q.vec_id
-                                ORDER BY {_COS_SQL} DESC, c.vec_id) AS rank
-      FROM embeddings q, embeddings c
-      WHERE q.vec_id < 10 AND q.vec_id != c.vec_id
+
+def _cos_sql(a: str, b: str) -> str:
+    return _COS_SQL.replace("q.", f"{a}.").replace("c.", f"{b}.")
+
+
+def _topk_sql(qid: str, nid: str, cos: str, pairs: str, k: int) -> str:
+    """The similarity family's ranking: a `scored` CTE over the
+    candidate `pairs` (a FROM clause), ranked per query by (cos DESC,
+    neighbor id) — the total order the kernels use — and its top k."""
+    return f"""
+    scored AS (
+      SELECT {qid} AS qid, {nid} AS neighbor_id, {cos} AS cos,
+             row_number() OVER (PARTITION BY {qid}
+                                ORDER BY {cos} DESC, {nid}) AS rank
+      {pairs}
     )
     SELECT qid, neighbor_id, cos, CAST(rank AS INT) AS rank
-    FROM scored WHERE rank <= 5
-    """,
+    FROM scored WHERE rank <= {k}
+    """
+
+@register(
+    "cosine_topk",
+    oracle="WITH " + _topk_sql(
+        "q.vec_id", "c.vec_id", _COS_SQL,
+        """FROM embeddings q, embeddings c
+      WHERE q.vec_id < 10 AND q.vec_id != c.vec_id""", 5,
+    ),
 )
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k ANN baseline (broadcast queries,
@@ -1096,16 +1106,28 @@ def q_event_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- TPC-H classics ----------------------------------------------------------
 
 
+def _revenue_sql(t: str) -> str:
+    """sum(extendedprice * (1 - discount)) in decimal, as a double."""
+    return (f"CAST(sum(CAST({t}l_extendedprice AS DECIMAL(18, 2))"
+            f" * (1 - CAST({t}l_discount AS DECIMAL(18, 2)))) AS DOUBLE)")
+
+
+def _revenue():
+    """The Column twin of _revenue_sql."""
+    return F.sum(
+        F.col("l_extendedprice").cast("decimal(18,2)")
+        * (F.lit(1) - F.col("l_discount").cast("decimal(18,2)"))
+    ).cast("double")
+
+
 @register(
     "tpch_q1_pricing",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag, l_linestatus,
            CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
            CAST(sum(CAST(round(l_extendedprice, 2) AS DECIMAL(18, 2))) AS DOUBLE)
              AS sum_base_price,
-           CAST(sum(CAST(l_extendedprice AS DECIMAL(18, 2))
-                    * (1 - CAST(l_discount AS DECIMAL(18, 2)))) AS DOUBLE)
-             AS sum_disc_price,
+           {_revenue_sql("")} AS sum_disc_price,
            round(CAST(sum(CAST(l_quantity AS BIGINT)) AS DOUBLE) / count(*), 4)
              AS avg_qty,
            count(*) AS count_order
@@ -1123,12 +1145,7 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.round("l_extendedprice", 2).cast("decimal(18,2)"))
         .cast("double")
         .alias("sum_base_price"),
-        F.sum(
-            F.col("l_extendedprice").cast("decimal(18,2)")
-            * (F.lit(1) - F.col("l_discount").cast("decimal(18,2)"))
-        )
-        .cast("double")
-        .alias("sum_disc_price"),
+        _revenue().alias("sum_disc_price"),
         F.round(
             F.sum(F.col("l_quantity").cast("long")).cast("double") / F.count("*"), 4
         ).alias("avg_qty"),
@@ -1138,12 +1155,10 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q3_top_orders",
-    oracle="""
+    oracle=f"""
     SELECT o.o_orderkey AS orderkey,
            strftime(o.o_orderdate, '%Y-%m-%d') AS orderdate,
-           CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18, 2))
-                    * (1 - CAST(l.l_discount AS DECIMAL(18, 2)))) AS DOUBLE)
-             AS revenue
+           {_revenue_sql("l.")} AS revenue
     FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
                     JOIN lineitem l ON l.l_orderkey = o.o_orderkey
     WHERE c.c_mktsegment = 'BUILDING'
@@ -1163,14 +1178,7 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderkey").alias("orderkey"),
             F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
         )
-        .agg(
-            F.sum(
-                F.col("l_extendedprice").cast("decimal(18,2)")
-                * (F.lit(1) - F.col("l_discount").cast("decimal(18,2)"))
-            )
-            .cast("double")
-            .alias("revenue")
-        )
+        .agg(_revenue().alias("revenue"))
         .orderBy(F.desc("revenue"), "orderkey")
         .limit(10)
     )
@@ -1178,11 +1186,9 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q5_region_volume",
-    oracle="""
+    oracle=f"""
     SELECT n.n_name AS nation,
-           CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18, 2))
-                    * (1 - CAST(l.l_discount AS DECIMAL(18, 2)))) AS DOUBLE)
-             AS revenue
+           {_revenue_sql("l.")} AS revenue
     FROM region r JOIN nation n ON n.n_regionkey = r.r_regionkey
                   JOIN customer c ON c.c_nationkey = n.n_nationkey
                   JOIN orders o ON o.o_custkey = c.c_custkey
@@ -1205,14 +1211,7 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(o, o.o_custkey == c.c_custkey)
         .join(li, li.l_orderkey == o.o_orderkey)
         .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            F.sum(
-                F.col("l_extendedprice").cast("decimal(18,2)")
-                * (F.lit(1) - F.col("l_discount").cast("decimal(18,2)"))
-            )
-            .cast("double")
-            .alias("revenue")
-        )
+        .agg(_revenue().alias("revenue"))
     )
 
 
@@ -1239,6 +1238,9 @@ _PER_CHUNK_ONLY_SQL = """
   )
 """
 
+_MEDIA_REF_SQL = ("'media://' || CAST(doc_id AS VARCHAR) || '/' "
+                  "|| CAST(i AS VARCHAR)")
+
 _PER_CHUNK_SQL = f"""{_PER_CHUNK_ONLY_SQL},
   per_doc AS (
     SELECT doc_id,
@@ -1251,18 +1253,18 @@ _PER_CHUNK_SQL = f"""{_PER_CHUNK_ONLY_SQL},
 
 _QCELL7_SQL = cells.cell_id_sql(*cells.point_sql("d.doc_id"), 7)
 
-
-@register(
-    "flagship",
-    oracle=f"""
+# flagship's oracle, shared with its SQL-API twin sql_cell_rollup
+_FLAGSHIP_SQL = f"""
     WITH {_PER_CHUNK_SQL}
     SELECT {_QCELL7_SQL} AS cell7, count(*) AS n_docs,
            CAST(sum(n_spans) AS BIGINT) AS n_spans,
            CAST(sum(text_chars) AS BIGINT) AS text_chars
     FROM per_doc d
     GROUP BY 1 ORDER BY 1
-    """,
-)
+"""
+
+
+@register("flagship", oracle=_FLAGSHIP_SQL)
 def q_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The driver's entry() query, oracle-gated: interleave -> res-7
     cell -> per-cell doc/span/char rollup."""
@@ -1280,8 +1282,7 @@ def q_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_PER_CHUNK_ONLY_SQL}
     SELECT CAST(doc_id AS VARCHAR) AS doc_id,
            CAST(2*i + 1 AS INT) AS offset,
-           'media://' || CAST(doc_id AS VARCHAR) || '/' || CAST(i AS VARCHAR)
-             AS media_ref,
+           {_MEDIA_REF_SQL} AS media_ref,
            'M' AS kind_code
     FROM per_chunk WHERE is_media = 1
     """,
@@ -1315,11 +1316,31 @@ def q_span_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rt.select(
         "doc_id",
         F.size("spans").cast("long").alias("n_spans"),
-        F.aggregate(
-            F.transform("spans", lambda s: F.coalesce(F.length(s.text), F.lit(0))),
-            F.lit(0),
-            lambda acc, x: acc + x,
-        ).cast("long").alias("text_chars"),
+        _text_chars().cast("long").alias("text_chars"),
+    )
+
+
+# Ways: each order's line items are a polyline whose vertices are the
+# deterministic points of l_partkey, in (l_linenumber, l_partkey) order.
+_WAYLEN_LAT, _WAYLEN_LON = cells.point_sql("l_partkey")
+_WAY_PTS_SQL = f"""pts AS (
+      SELECT l_orderkey, l_linenumber, l_partkey,
+             {_WAYLEN_LAT} AS lat, {_WAYLEN_LON} AS lon
+      FROM lineitem
+    )"""
+
+
+def _way_points(spark: SparkSession, sf_dir: str) -> DataFrame:
+    lat, lon = cells.point_exprs("l_partkey")
+    return _t(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_linenumber", "l_partkey", lat, lon
+    )
+
+
+def _way_vertices():
+    """Aggregate over _way_points grouped by way: its ordered vertices."""
+    return F.array_sort(
+        F.collect_list(F.struct("l_linenumber", "l_partkey", "lat_e4", "lon_e4"))
     )
 
 
@@ -1328,8 +1349,8 @@ def q_span_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT l_orderkey AS orderkey,
            'LINESTRING(' || string_agg(
-               CAST({cells.point_sql('l_partkey')[1]} AS VARCHAR) || ' ' ||
-               CAST({cells.point_sql('l_partkey')[0]} AS VARCHAR),
+               CAST({_WAYLEN_LON} AS VARCHAR) || ' ' ||
+               CAST({_WAYLEN_LAT} AS VARCHAR),
                ', ' ORDER BY l_linenumber, l_partkey) || ')' AS wkt,
            string_agg('"line"=>"' || CAST(l_linenumber AS VARCHAR) || '"', ','
                       ORDER BY l_linenumber, l_partkey) AS tags_hstore
@@ -1341,12 +1362,8 @@ def q_wkt_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     (/root/reference/test/integration/export_csv.cpp:129-254): ordered
     LINESTRING assembly + hstore-style tag serialization, fixed-point
     integer coords exactly like the reference's raw lat/lon."""
-    li = _t(spark, sf_dir, "lineitem")
-    lat, lon = cells.point_exprs("l_partkey")
-    pts = li.select("l_orderkey", "l_linenumber", "l_partkey", lat, lon)
-    ordered = F.array_sort(
-        F.collect_list(F.struct("l_linenumber", "l_partkey", "lat_e4", "lon_e4"))
-    )
+    pts = _way_points(spark, sf_dir)
+    ordered = _way_vertices()
     return pts.groupBy(F.col("l_orderkey").alias("orderkey")).agg(
         F.concat(
             F.lit("LINESTRING("),
@@ -1407,21 +1424,29 @@ def q_except_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_rollup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-resolution rollup (grouping sets) over the cell hierarchy —
     subtotals per coarse cell, per fine cell, grand total."""
-    docs = _t(spark, sf_dir, "documents")
-    lat, lon = cells.point_exprs("doc_id")
-    keyed = docs.select(
-        cells.cell_id_expr(lat, lon, 3).alias("cell3"),
-        cells.cell_id_expr(lat, lon, 5).alias("cell5"),
-    )
+    keyed = _doc_cells(spark, sf_dir, cell3=3, cell5=5)
     return keyed.rollup("cell3", "cell5").agg(F.count("*").alias("cnt"))
+
+
+# documents by length: the stratum of stratified_sample and a
+# grouping key of cube_cells and grouping_sets_cells
+_LEN_BAND_SQL = ("CASE WHEN n_chars < 500 THEN 'short' "
+                 "WHEN n_chars < 2000 THEN 'mid' ELSE 'long' END")
+
+
+def _len_band():
+    return (
+        F.when(F.col("n_chars") < 500, "short")
+        .when(F.col("n_chars") < 2000, "mid")
+        .otherwise("long")
+    )
 
 
 @register(
     "cube_cells",
     oracle=f"""
     SELECT {_CELL3_SQL} AS cell3,
-           CASE WHEN n_chars < 500 THEN 'short'
-                WHEN n_chars < 2000 THEN 'mid' ELSE 'long' END AS len_band,
+           {_LEN_BAND_SQL} AS len_band,
            count(*) AS cnt,
            CAST(sum(n_chars) AS BIGINT) AS chars
     FROM documents GROUP BY CUBE (1, 2)
@@ -1431,18 +1456,8 @@ def q_cube_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (spatial cell, length band): every subtotal
     combination — the grouping-sets surface beyond rollup (SURVEY §2.4;
     rollup covers the hierarchy, cube the full lattice)."""
-    docs = _t(spark, sf_dir, "documents")
-    lat, lon = cells.point_exprs("doc_id")
-    band = (
-        F.when(F.col("n_chars") < 500, "short")
-        .when(F.col("n_chars") < 2000, "mid")
-        .otherwise("long")
-    )
-    keyed = docs.select(
-        cells.cell_id_expr(lat, lon, 3).alias("cell3"),
-        band.alias("len_band"),
-        "n_chars",
-    )
+    keyed = _doc_cells(spark, sf_dir, _len_band().alias("len_band"),
+                       "n_chars", cell3=3)
     return keyed.cube("cell3", "len_band").agg(
         F.count("*").alias("cnt"),
         F.sum("n_chars").cast("long").alias("chars"),
@@ -1460,10 +1475,8 @@ def q_cube_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_topk_dense_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k densest cells — plans as TakeOrderedAndProject (no global
     sort; per-partition top-k then merge on the driver)."""
-    docs = _t(spark, sf_dir, "documents")
-    lat, lon = cells.point_exprs("doc_id")
     return (
-        docs.select(cells.cell_id_expr(lat, lon, 5).alias("cell5"))
+        _doc_cells(spark, sf_dir, cell5=5)
         .groupBy("cell5")
         .agg(F.count("*").alias("cnt"))
         .orderBy(F.desc("cnt"), "cell5")
@@ -1471,28 +1484,9 @@ def q_topk_dense_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "ngram_jaccard_pairs",
-    oracle=f"""
-    WITH sh AS ({_SHINGLES_SQL}),
-    sig AS (
-      SELECT doc_id,
-             min(substr(md5('0|' || shingle), 1, 8)) AS sig_0,
-             min(substr(md5('0|' || shingle), 9, 8)) AS sig_1,
-             min(substr(md5('0|' || shingle), 17, 8)) AS sig_2,
-             min(substr(md5('0|' || shingle), 25, 8)) AS sig_3
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      SELECT doc_id, 0 AS band, sig_0 || '|' || sig_1 AS band_val FROM sig
-      UNION ALL
-      SELECT doc_id, 1 AS band, sig_2 || '|' || sig_3 AS band_val FROM sig
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-    ),
+# exact Jaccard of the `cand` pairs over their `sh` shingle sets
+# (dedup.jaccard_verify), kept at or above {threshold}
+_JACCARD_VERIFY_SQL = """
     sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
     inter AS (
       SELECT c.doc_a, c.doc_b, count(*) AS n_inter
@@ -1506,41 +1500,38 @@ def q_topk_dense_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM inter i JOIN sizes sa ON sa.doc_id = i.doc_a
                  JOIN sizes sb ON sb.doc_id = i.doc_b
     WHERE round(CAST(i.n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_inter), 6)
-          >= 0.5
+          >= {threshold}
+"""
+
+
+@register(
+    "ngram_jaccard_pairs",
+    oracle=f"""
+    WITH {_LSH_BANDS_SQL},
+    cand AS ({_LSH_PAIRS_SQL.format(t='bands')}),
+    {_JACCARD_VERIFY_SQL.format(threshold=0.5)}
     """,
 )
 def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup verification: exact n-gram Jaccard computed ONLY on the
     LSH candidate pairs (cost scales with candidates, not corpus^2)."""
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    )
     # the shingle set feeds the signature pipeline AND the verify joins;
     # cache it once here (no cross-branch subplan sharing in Spark)
-    shingled = dedup.word_shingles(docs, n=3).cache()
+    shingled = dedup.word_shingles(_str_docs(spark, sf_dir), n=3).cache()
     sigs = dedup.minhash_signatures(shingled, n_hashes=4)
-    cand = dedup.lsh_candidate_pairs(sigs, n_bands=2, rows_per_band=2)
-    return dedup.jaccard_verify(cand, shingled, threshold=0.5)
+    return dedup.jaccard_verify(_lsh_pairs(sigs), shingled, threshold=0.5)
 
 
 _SIG_SQL = _SIG_INT_SQL  # shared fixed-point signature fragment
+_ANN_PAIRS_SQL = """FROM embeddings q JOIN sig sq ON sq.vec_id = q.vec_id
+           JOIN sig sc ON sc.lsh_sig = sq.lsh_sig
+           JOIN embeddings c ON c.vec_id = sc.vec_id AND c.vec_id != q.vec_id"""
 
 
 @register(
     "ann_lsh_topk",
-    oracle=f"""
-    WITH sig AS ({_SIG_SQL}),
-    scored AS (
-      SELECT q.vec_id AS qid, c.vec_id AS neighbor_id, {_COS_SQL} AS cos,
-             row_number() OVER (PARTITION BY q.vec_id
-                                ORDER BY {_COS_SQL} DESC, c.vec_id) AS rank
-      FROM embeddings q JOIN sig sq ON sq.vec_id = q.vec_id
-           JOIN sig sc ON sc.lsh_sig = sq.lsh_sig
-           JOIN embeddings c ON c.vec_id = sc.vec_id AND c.vec_id != q.vec_id
-    )
-    SELECT qid, neighbor_id, cos, CAST(rank AS INT) AS rank
-    FROM scored WHERE rank <= 3
-    """,
+    oracle=f"WITH sig AS ({_SIG_SQL}),"
+    + _topk_sql("q.vec_id", "c.vec_id", _COS_SQL, _ANN_PAIRS_SQL, 3),
 )
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN scale path: cosine top-k restricted to the LSH hyperplane
@@ -1552,19 +1543,8 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_lsh_topk_w16",
-    oracle=f"""
-    WITH sig AS ({_sig_int_sql(16)}),
-    scored AS (
-      SELECT q.vec_id AS qid, c.vec_id AS neighbor_id, {_COS_SQL} AS cos,
-             row_number() OVER (PARTITION BY q.vec_id
-                                ORDER BY {_COS_SQL} DESC, c.vec_id) AS rank
-      FROM embeddings q JOIN sig sq ON sq.vec_id = q.vec_id
-           JOIN sig sc ON sc.lsh_sig = sq.lsh_sig
-           JOIN embeddings c ON c.vec_id = sc.vec_id AND c.vec_id != q.vec_id
-    )
-    SELECT qid, neighbor_id, cos, CAST(rank AS INT) AS rank
-    FROM scored WHERE rank <= 3
-    """,
+    oracle=f"WITH sig AS ({_sig_int_sql(16)}),"
+    + _topk_sql("q.vec_id", "c.vec_id", _COS_SQL, _ANN_PAIRS_SQL, 3),
 )
 def q_ann_lsh_topk_w16(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME banded ANN operator at a second signature width
@@ -1594,6 +1574,26 @@ _QUALITY_SQL = """
       n_chars
     FROM documents
 """
+
+
+
+def _quality_sql(cte: str) -> str:
+    """`base` plus a `cte` of (doc_id, quality): textstats.quality_score's
+    composite, for the oracles that filter or rank by it."""
+    return f"""base AS ({_QUALITY_SQL}),
+    {cte} AS (
+      SELECT doc_id,
+             round(0.4 * (CASE WHEN n_chars BETWEEN 100 AND 5000 THEN 1.0
+                               WHEN n_chars < 100 THEN n_chars / 100.0
+                               ELSE 5000.0 / n_chars END)
+                 + 0.2 * (CASE WHEN CAST(n_nospace AS DOUBLE) / n_words
+                               BETWEEN 3 AND 10 THEN 1.0 ELSE 0.5 END)
+                 + 0.2 * least(CAST(len(list_filter(words, x -> x IN {_ALL_STOPS_SQL}))
+                                    AS DOUBLE) / n_words * 5, 1.0)
+                 + 0.2 * (1 - least(CAST(n_punct AS DOUBLE) / n_chars_t * 5, 1.0)),
+                 4) AS quality
+      FROM base
+    )"""
 
 
 @register(
@@ -1706,15 +1706,10 @@ def q_approx_distinct_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-specific, so this entry is rows-only checked; its error is
     BOUNDED by two independent gates instead (r6 directive #2): the
     oracle-gated exact twin `distinct_cells_exact` over the same
-    grouping, and tests/test_round6_ops.py asserting every group's
+    grouping, and tests/test_driver_contract.py asserting every group's
     HLL estimate within the configured rsd envelope of the exact
     count)."""
-    docs = _t(spark, sf_dir, "documents")
-    lat, lon = cells.point_exprs("doc_id")
-    keyed = docs.select(
-        cells.cell_id_expr(lat, lon, 3).alias("cell3"),
-        cells.cell_id_expr(lat, lon, 9).alias("cell9"),
-    )
+    keyed = _doc_cells(spark, sf_dir, cell3=3, cell9=9)
     return keyed.groupBy("cell3").agg(
         F.approx_count_distinct("cell9", 0.01).alias("approx_cells9"),
         F.count("*").alias("n_docs"),
@@ -1743,12 +1738,7 @@ def q_distinct_cells_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit path (count(DISTINCT) = one extra shuffle of the (cell3,
     cell9) pairs — Spark expands it to a two-stage partial-distinct
     aggregate, no all-rows-to-one-reducer stage)."""
-    docs = _t(spark, sf_dir, "documents")
-    lat, lon = cells.point_exprs("doc_id")
-    keyed = docs.select(
-        cells.cell_id_expr(lat, lon, 3).alias("cell3"),
-        cells.cell_id_expr(lat, lon, 9).alias("cell9"),
-    )
+    keyed = _doc_cells(spark, sf_dir, cell3=3, cell9=9)
     return keyed.groupBy("cell3").agg(
         F.countDistinct("cell9").alias("n_cells9"),
         F.count("*").alias("n_docs"),
@@ -1787,13 +1777,24 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _media_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The distinct media_ref of every media span of the interleaved
+    corpus."""
+    docs = interleave_documents(_t(spark, sf_dir, "documents"))
+    return (
+        docs.select(F.explode("spans").alias("s"))
+        .filter(F.col("s.kind") == "media")
+        .select(F.col("s.media_ref").alias("media_ref"))
+        .distinct()
+    )
+
+
 @register(
     "media_features",
     oracle=f"""
     WITH {_PER_CHUNK_ONLY_SQL},
     refs AS (
-      SELECT DISTINCT 'media://' || CAST(doc_id AS VARCHAR) || '/'
-                      || CAST(i AS VARCHAR) AS media_ref
+      SELECT DISTINCT {_MEDIA_REF_SQL} AS media_ref
       FROM per_chunk WHERE is_media = 1
     ),
     hx AS (SELECT media_ref, md5(md5(media_ref)) AS h FROM refs)
@@ -1817,13 +1818,7 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     features[i] = byte_i(md5(payload)) / 256."""
     from inputosm_spark import multimodal
 
-    docs = interleave_documents(_t(spark, sf_dir, "documents"))
-    refs = (
-        docs.select(F.explode("spans").alias("s"))
-        .filter(F.col("s.kind") == "media")
-        .select(F.col("s.media_ref").alias("media_ref"))
-        .distinct()
-    )
+    refs = _media_refs(spark, sf_dir)
     media = refs.select(
         "media_ref",
         F.lit("image").alias("media_type"),
@@ -1854,8 +1849,7 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_PER_CHUNK_ONLY_SQL},
     refs AS (
-      SELECT DISTINCT 'media://' || CAST(doc_id AS VARCHAR) || '/'
-                      || CAST(i AS VARCHAR) AS media_ref,
+      SELECT DISTINCT {_MEDIA_REF_SQL} AS media_ref,
              CAST(doc_id % 5 + 1 AS INT) AS n_frames
       FROM per_chunk WHERE is_media = 1
     )
@@ -1874,13 +1868,7 @@ def q_media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id % 5 + 1 seconds at 1 frame/s)."""
     from inputosm_spark import multimodal
 
-    docs = interleave_documents(_t(spark, sf_dir, "documents"))
-    refs = (
-        docs.select(F.explode("spans").alias("s"))
-        .filter(F.col("s.kind") == "media")
-        .select(F.col("s.media_ref").alias("media_ref"))
-        .distinct()
-    )
+    refs = _media_refs(spark, sf_dir)
     doc_id = F.split(F.split("media_ref", "//").getItem(1), "/").getItem(0)
     media = refs.select(
         "media_ref",
@@ -1899,15 +1887,22 @@ def q_media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# same-bucket vector pairs `a` < `b` with cosine >= 0.15
+# (similarity.near_dup_pairs, n_planes=8)
+_NEAR_DUP_PAIRS_SQL = f"""
+    FROM sig sa JOIN sig sb ON sa.lsh_sig = sb.lsh_sig AND sa.vec_id < sb.vec_id
+         JOIN embeddings a ON a.vec_id = sa.vec_id
+         JOIN embeddings b ON b.vec_id = sb.vec_id
+    WHERE {_cos_sql('a', 'b')} >= 0.15
+"""
+
+
 @register(
     "embedding_near_dup",
     oracle=f"""
     WITH sig AS ({_SIG_SQL})
-    SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, {_COS_SQL.replace('q.', 'a.').replace('c.', 'b.')} AS cos
-    FROM sig sa JOIN sig sb ON sa.lsh_sig = sb.lsh_sig AND sa.vec_id < sb.vec_id
-         JOIN embeddings a ON a.vec_id = sa.vec_id
-         JOIN embeddings b ON b.vec_id = sb.vec_id
-    WHERE {_COS_SQL.replace('q.', 'a.').replace('c.', 'b.')} >= 0.15
+    SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, {_cos_sql('a', 'b')} AS cos
+    {_NEAR_DUP_PAIRS_SQL}
     """,
 )
 def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1918,9 +1913,9 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.near_dup_pairs(emb, n_planes=8, threshold=0.15)
 
 
-@register(
-    "asof_user_state",
-    oracle="""
+# The as-of trio's one definition: clicks look up the user's
+# signup/purchase state through `join` (backward, forward, nearest).
+_ASOF_SQL = """
     WITH clicks AS (
       SELECT user_id, event_id, ts FROM events WHERE event_type = 'click'
     ),
@@ -1931,19 +1926,13 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT c.user_id, c.event_id,
            strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS ts, s.state_value
-    FROM clicks c ASOF LEFT JOIN states s
-      ON c.user_id = s.user_id AND c.ts >= s.ts
-    """,
-)
-def q_asof_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AS-OF join: every click gets the user's most recent prior
-    signup/purchase value. Implemented as union + carry-forward (ONE
-    window shuffle, no inequality join — operators/temporal.asof_join);
-    the oracle is DuckDB's NATIVE `ASOF LEFT JOIN`, an independent
-    implementation of the same semantics. Runs through the SKEW-SAFE
-    bucketed carry (bucket_s): no window partitions on user_id alone,
-    so a hot user parallelizes across (user, day) tasks — the oracle
-    hash proves the two-pass handoff is exact."""
+    FROM clicks c {join}
+"""
+
+
+def _asof_user_state(spark: SparkSession, sf_dir: str, **kw) -> DataFrame:
+    """temporal.asof_join of the click events against the per-(user,
+    ts) signup/purchase state; `kw` picks the direction."""
     from inputosm_spark.operators import temporal
 
     ev = _t(spark, sf_dir, "events")
@@ -1956,13 +1945,29 @@ def q_asof_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max(F.round("value", 2)).alias("state_value"))
     )
     out = temporal.asof_join(clicks, states, key="user_id",
-                             value_cols=["state_value"],
-                             bucket_s=86_400)
+                             value_cols=["state_value"], **kw)
     return out.select(
         "user_id", "event_id",
         F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
         "state_value",
     )
+
+
+@register(
+    "asof_user_state",
+    oracle=_ASOF_SQL.format(join="""ASOF LEFT JOIN states s
+      ON c.user_id = s.user_id AND c.ts >= s.ts"""),
+)
+def q_asof_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """AS-OF join: every click gets the user's most recent prior
+    signup/purchase value. Implemented as union + carry-forward (ONE
+    window shuffle, no inequality join — operators/temporal.asof_join);
+    the oracle is DuckDB's NATIVE `ASOF LEFT JOIN`, an independent
+    implementation of the same semantics. Runs through the SKEW-SAFE
+    bucketed carry (bucket_s): no window partitions on user_id alone,
+    so a hot user parallelizes across (user, day) tasks — the oracle
+    hash proves the two-pass handoff is exact."""
+    return _asof_user_state(spark, sf_dir, bucket_s=86_400)
 
 
 @register(
@@ -2071,14 +2076,17 @@ def q_cumulative_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# sampling.hash_bucket of doc_id and its 80/10/10 train/val/test split
+_BUCKET_SQL = "((((doc_id % 1000003) * 40503 + 1013) % 9973) % 100)"
+_SPLIT_SQL = (f"CASE WHEN {_BUCKET_SQL} < 80 THEN 'train' "
+              f"WHEN {_BUCKET_SQL} < 90 THEN 'val' ELSE 'test' END AS split")
+
+
 @register(
     "hash_split",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           CASE WHEN ((((doc_id % 1000003) * 40503 + 1013) % 9973) % 100) < 80
-                THEN 'train'
-                WHEN ((((doc_id % 1000003) * 40503 + 1013) % 9973) % 100) < 90
-                THEN 'val' ELSE 'test' END AS split
+           {_SPLIT_SQL}
     FROM documents
     """,
 )
@@ -2095,12 +2103,11 @@ def q_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stratified_sample",
-    oracle="""
+    oracle=f"""
     WITH banded AS (
       SELECT doc_id,
-             CASE WHEN n_chars < 500 THEN 'short'
-                  WHEN n_chars < 2000 THEN 'mid' ELSE 'long' END AS len_band,
-             ((((doc_id % 1000003) * 40503 + 1013) % 9973) % 100) AS b
+             {_LEN_BAND_SQL} AS len_band,
+             {_BUCKET_SQL} AS b
       FROM documents
     )
     SELECT doc_id, len_band FROM banded
@@ -2114,13 +2121,9 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     no shuffle, stable across reruns."""
     from inputosm_spark.operators import sampling
 
-    docs = _t(spark, sf_dir, "documents")
-    band = (
-        F.when(F.col("n_chars") < 500, "short")
-        .when(F.col("n_chars") < 2000, "mid")
-        .otherwise("long")
+    banded = _t(spark, sf_dir, "documents").select(
+        "doc_id", _len_band().alias("len_band")
     )
-    banded = docs.select("doc_id", band.alias("len_band"))
     return sampling.stratified_sample(
         banded, "len_band", {"long": 100, "mid": 50, "short": 10}, "doc_id"
     )
@@ -2154,20 +2157,7 @@ def q_intersect_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "training_pipeline",
     oracle=f"""
-    WITH base AS ({_QUALITY_SQL}),
-    q AS (
-      SELECT doc_id,
-             round(0.4 * (CASE WHEN n_chars BETWEEN 100 AND 5000 THEN 1.0
-                               WHEN n_chars < 100 THEN n_chars / 100.0
-                               ELSE 5000.0 / n_chars END)
-                 + 0.2 * (CASE WHEN CAST(n_nospace AS DOUBLE) / n_words
-                               BETWEEN 3 AND 10 THEN 1.0 ELSE 0.5 END)
-                 + 0.2 * least(CAST(len(list_filter(words, x -> x IN {_ALL_STOPS_SQL}))
-                                    AS DOUBLE) / n_words * 5, 1.0)
-                 + 0.2 * (1 - least(CAST(n_punct AS DOUBLE) / n_chars_t * 5, 1.0)),
-                 4) AS quality
-      FROM base
-    ),
+    WITH {_quality_sql("q")},
     l AS (
       SELECT doc_id, {_LANG_SCORES_SQL.replace("AS score_", "AS s_")}
       FROM (SELECT doc_id,
@@ -2220,17 +2210,22 @@ def q_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "rolling_fingerprint",
-    oracle=f"""
-    WITH nd AS (
+# the normalized text padded to the 8-char k-gram and its k-gram count
+# (textstats.rolling_fingerprint / winnow_sketch)
+_ND_SQL = f"""nd AS (
       SELECT doc_id,
              {_NORM_SQL} || repeat(' ', greatest(0, 8 - length({_NORM_SQL})))
                AS norm,
              greatest(length({_NORM_SQL} || repeat(' ',
                greatest(0, 8 - length({_NORM_SQL})))) - 7, 1) AS n_pos
       FROM documents
-    )
+    )"""
+
+
+@register(
+    "rolling_fingerprint",
+    oracle=f"""
+    WITH {_ND_SQL}
     SELECT doc_id,
            list_min(list_transform(range(1, n_pos + 1),
              i -> list_reduce(
@@ -2248,8 +2243,36 @@ def q_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textstats.rolling_fingerprint(_t(spark, sf_dir, "documents"))
 
 
-def _cos_sql(a: str, b: str) -> str:
-    return _COS_SQL.replace("q.", f"{a}.").replace("c.", f"{b}.")
+def _assign_sql(cos: str, pairs: str) -> str:
+    """(vec_id, cid): each vector `e`'s nearest centroid `c` over the
+    `pairs` FROM list, by (cos DESC, cid) — similarity.ivf_topk's
+    coarse assignment."""
+    return f"""
+      SELECT vec_id, cid FROM (
+        SELECT e.vec_id, c.cid,
+               row_number() OVER (PARTITION BY e.vec_id
+                                  ORDER BY {cos} DESC, c.cid) AS rn
+        FROM {pairs}
+      ) WHERE rn = 1
+    """
+
+
+def _probes_sql(cos: str, pairs: str, n_probe: int) -> str:
+    """(qid, cid): the n_probe nearest centroids of each query."""
+    return f"""
+      SELECT qid, cid FROM (
+        SELECT e.vec_id AS qid, c.cid,
+               row_number() OVER (PARTITION BY e.vec_id
+                                  ORDER BY {cos} DESC, c.cid) AS pr
+        FROM {pairs}
+      ) WHERE pr <= {n_probe}
+    """
+
+
+_IVF_PAIRS_SQL = """FROM probes p
+      JOIN assign a ON a.cid = p.cid AND a.vec_id != p.qid
+      JOIN embeddings q ON q.vec_id = p.qid
+      JOIN embeddings n ON n.vec_id = a.vec_id"""
 
 
 @register(
@@ -2258,34 +2281,9 @@ def _cos_sql(a: str, b: str) -> str:
     WITH cent AS (
       SELECT vec_id AS cid, embedding FROM embeddings WHERE vec_id < 8
     ),
-    assign AS (
-      SELECT vec_id, cid FROM (
-        SELECT e.vec_id, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {_cos_sql('e', 'c')} DESC, c.cid) AS rn
-        FROM embeddings e, cent c
-      ) WHERE rn = 1
-    ),
-    probes AS (
-      SELECT qid, cid FROM (
-        SELECT e.vec_id AS qid, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {_cos_sql('e', 'c')} DESC, c.cid) AS pr
-        FROM embeddings e, cent c
-      ) WHERE pr <= 2
-    ),
-    scored AS (
-      SELECT p.qid, a.vec_id AS neighbor_id, {_cos_sql('q', 'n')} AS cos,
-             row_number() OVER (PARTITION BY p.qid
-                                ORDER BY {_cos_sql('q', 'n')} DESC, a.vec_id)
-               AS rank
-      FROM probes p
-      JOIN assign a ON a.cid = p.cid AND a.vec_id != p.qid
-      JOIN embeddings q ON q.vec_id = p.qid
-      JOIN embeddings n ON n.vec_id = a.vec_id
-    )
-    SELECT qid, neighbor_id, cos, CAST(rank AS INT) AS rank
-    FROM scored WHERE rank <= 3
+    assign AS ({_assign_sql(_cos_sql('e', 'c'), 'embeddings e, cent c')}),
+    probes AS ({_probes_sql(_cos_sql('e', 'c'), 'embeddings e, cent c', 2)}),
+    {_topk_sql("p.qid", "a.vec_id", _cos_sql("q", "n"), _IVF_PAIRS_SQL, 3)}
     """,
 )
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2297,18 +2295,7 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                                n_probe=2)
 
 
-@register(
-    "pip_join_shuffle",
-    oracle=f"""
-    WITH pts AS (SELECT doc_id, {_LAT_SQL} AS lat_e4, {_LON_SQL} AS lon_e4
-                 FROM documents),
-         boxes AS ({_BOX_SQL})
-    SELECT p.doc_id, b.poly_id
-    FROM pts p JOIN boxes b
-      ON p.lat_e4 >= b.lat0 AND p.lat_e4 < b.lat1
-     AND p.lon_e4 >= b.lon0 AND p.lon_e4 < b.lon1
-    """,
-)
+@register("pip_join_shuffle", oracle=_PIP_BOXES_SQL)
 def q_pip_join_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PIP join without broadcast hints: force_broadcast=False
     drops the polygon-side hints, the plan used when the polygon side is
@@ -2317,9 +2304,7 @@ def q_pip_join_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts them here; the shuffle (SortMergeJoin) path itself is
     tested at threshold -1 (tests/test_spatial.py). Same oracle as
     pip_join_boxes."""
-    docs = _t(spark, sf_dir, "documents")
-    lat, lon = cells.point_exprs("doc_id")
-    pts = docs.select("doc_id", lat, lon)
+    pts = _doc_points(spark, sf_dir)
     return spatial.pip_join(
         pts, _box_polygons(spark), res=6, force_broadcast=False
     ).select("doc_id", "poly_id")
@@ -2328,14 +2313,7 @@ def q_pip_join_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "winnow_sketch",
     oracle=f"""
-    WITH nd AS (
-      SELECT doc_id,
-             {_NORM_SQL} || repeat(' ', greatest(0, 8 - length({_NORM_SQL})))
-               AS norm,
-             greatest(length({_NORM_SQL} || repeat(' ',
-               greatest(0, 8 - length({_NORM_SQL})))) - 7, 1) AS n_pos
-      FROM documents
-    ),
+    WITH {_ND_SQL},
     h AS (
       SELECT doc_id, n_pos,
              list_transform(range(1, n_pos + 1),
@@ -2370,8 +2348,8 @@ def _kmeans_ivf_oracle(k: int = 8, iters: int = 2, n_probe: int = 2,
     therefore assignments, probes and final ranking) are bit-for-bit
     reproducible across engines despite being an iterative float
     computation."""
-    cos = ("round(list_dot_product({a}.iv, {b}.civ) / ({a}.nrm * {b}.cnrm), 4)")
-    sql = """
+    cos = "round(list_dot_product(e.iv, c.civ) / (e.nrm * c.cnrm), 4)"
+    sql = f"""
     WITH ev AS (
       SELECT vec_id,
              list_transform(CAST(embedding AS DOUBLE[]),
@@ -2382,10 +2360,10 @@ def _kmeans_ivf_oracle(k: int = 8, iters: int = 2, n_probe: int = 2,
     cent0 AS (
       SELECT vec_id AS cid, list_transform(iv, x -> x / 1000000.0) AS cvec
       FROM ev WHERE vec_id < {k}
-    )""".format(k=k)
+    )"""
     prev = "cent0"
     for i in range(iters):
-        sql += """,
+        sql += f""",
     civ{i} AS (
       SELECT cid, list_transform(cvec, x -> round(x * 1000000.0)) AS civ
       FROM {prev}
@@ -2393,14 +2371,7 @@ def _kmeans_ivf_oracle(k: int = 8, iters: int = 2, n_probe: int = 2,
     civn{i} AS (
       SELECT cid, civ, sqrt(list_dot_product(civ, civ)) AS cnrm FROM civ{i}
     ),
-    asg{i} AS (
-      SELECT vec_id, cid FROM (
-        SELECT e.vec_id, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {cos} DESC, c.cid) AS rn
-        FROM evn e, civn{i} c
-      ) WHERE rn = 1
-    ),
+    asg{i} AS ({_assign_sql(cos, f"evn e, civn{i} c")}),
     mean{i} AS (
       SELECT a.cid, t.d,
              sum(e.iv[CAST(t.d AS INT)]) / (count(*) * 1000000.0) AS m
@@ -2409,51 +2380,29 @@ def _kmeans_ivf_oracle(k: int = 8, iters: int = 2, n_probe: int = 2,
       GROUP BY 1, 2
     ),
     newc{i} AS (SELECT cid, list(m ORDER BY d) AS cvec FROM mean{i} GROUP BY cid),
-    cent{j} AS (
+    cent{i + 1} AS (
       SELECT p.cid, coalesce(n.cvec, p.cvec) AS cvec
       FROM {prev} p LEFT JOIN newc{i} n USING (cid)
-    )""".format(i=i, j=i + 1, prev=prev,
-                cos=cos.format(a="e", b="c"))
+    )"""
         prev = f"cent{i + 1}"
-    sql += """,
+    sql += f""",
     fciv AS (
       SELECT cid, list_transform(cvec, x -> round(x * 1000000.0)) AS civ
       FROM {prev}
     ),
     fcivn AS (SELECT cid, civ, sqrt(list_dot_product(civ, civ)) AS cnrm FROM fciv),
-    fassign AS (
-      SELECT vec_id, cid FROM (
-        SELECT e.vec_id, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {acos} DESC, c.cid) AS rn
-        FROM evn e, fcivn c
-      ) WHERE rn = 1
-    ),
-    fprobes AS (
-      SELECT qid, cid FROM (
-        SELECT e.vec_id AS qid, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {acos} DESC, c.cid) AS pr
-        FROM evn e, fcivn c WHERE e.vec_id < {nq}
-      ) WHERE pr <= {np}
-    ),
-    scored AS (
-      SELECT p.qid, a.vec_id AS neighbor_id,
-             round(list_dot_product(q.iv, n.iv) / (q.nrm * n.nrm), 4) AS cos,
-             row_number() OVER (PARTITION BY p.qid
-                                ORDER BY round(list_dot_product(q.iv, n.iv)
-                                               / (q.nrm * n.nrm), 4) DESC,
-                                         a.vec_id) AS rank
-      FROM fprobes p
+    fassign AS ({_assign_sql(cos, "evn e, fcivn c")}),
+    fprobes AS ({_probes_sql(cos, f"evn e, fcivn c WHERE e.vec_id < {n_queries}",
+                             n_probe)}),
+"""
+    return sql + _topk_sql(
+        "p.qid", "a.vec_id",
+        "round(list_dot_product(q.iv, n.iv) / (q.nrm * n.nrm), 4)",
+        """FROM fprobes p
       JOIN fassign a ON a.cid = p.cid AND a.vec_id != p.qid
       JOIN evn q ON q.vec_id = p.qid
-      JOIN evn n ON n.vec_id = a.vec_id
+      JOIN evn n ON n.vec_id = a.vec_id""", topk,
     )
-    SELECT qid, neighbor_id, cos, CAST(rank AS INT) AS rank
-    FROM scored WHERE rank <= {tk}
-    """.format(prev=prev, acos=cos.format(a="e", b="c"), nq=n_queries,
-               np=n_probe, tk=topk)
-    return sql
 
 
 @register("ivf_kmeans_topk", oracle=_kmeans_ivf_oracle())
@@ -2481,17 +2430,7 @@ def q_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
-    "sql_cell_rollup",
-    oracle=f"""
-    WITH {_PER_CHUNK_SQL}
-    SELECT {_QCELL7_SQL} AS cell7, count(*) AS n_docs,
-           CAST(sum(n_spans) AS BIGINT) AS n_spans,
-           CAST(sum(text_chars) AS BIGINT) AS text_chars
-    FROM per_doc d
-    GROUP BY 1 ORDER BY 1
-    """,
-)
+@register("sql_cell_rollup", oracle=_FLAGSHIP_SQL)
 def q_sql_cell_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship semantics via the SQL API: documents_interleaved and
     doc_cells temp views joined and aggregated in one spark.sql —
@@ -2515,91 +2454,31 @@ def q_sql_cell_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "asof_user_state_fwd",
-    oracle="""
-    WITH clicks AS (
-      SELECT user_id, event_id, ts FROM events WHERE event_type = 'click'
-    ),
-    states AS (
-      SELECT user_id, ts, max(round(value, 2)) AS state_value
-      FROM events WHERE event_type IN ('signup', 'purchase')
-      GROUP BY 1, 2
-    )
-    SELECT c.user_id, c.event_id,
-           strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS ts, s.state_value
-    FROM clicks c ASOF LEFT JOIN states s
-      ON c.user_id = s.user_id AND c.ts <= s.ts
-    """,
+    oracle=_ASOF_SQL.format(join="""ASOF LEFT JOIN states s
+      ON c.user_id = s.user_id AND c.ts <= s.ts"""),
 )
 def q_asof_user_state_fwd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FORWARD as-of join: every click gets the user's NEXT
     signup/purchase value (earliest state at-or-after the click) —
     the symmetric carry-backward window of asof_join; oracle is
     DuckDB's native forward `ASOF LEFT JOIN ... ON c.ts <= s.ts`."""
-    from inputosm_spark.operators import temporal
-
-    ev = _t(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", "event_id", "ts"
-    )
-    states = (
-        ev.filter(F.col("event_type").isin("signup", "purchase"))
-        .groupBy("user_id", "ts")
-        .agg(F.max(F.round("value", 2)).alias("state_value"))
-    )
-    out = temporal.asof_join(clicks, states, key="user_id",
-                             value_cols=["state_value"],
-                             direction="forward")
-    return out.select(
-        "user_id", "event_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
-        "state_value",
-    )
+    return _asof_user_state(spark, sf_dir, direction="forward")
 
 
 @register(
     "asof_user_state_nearest",
-    oracle="""
-    WITH clicks AS (
-      SELECT user_id, event_id, ts FROM events WHERE event_type = 'click'
-    ),
-    states AS (
-      SELECT user_id, ts, max(round(value, 2)) AS state_value
-      FROM events WHERE event_type IN ('signup', 'purchase')
-      GROUP BY 1, 2
-    )
-    SELECT c.user_id, c.event_id,
-           strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS ts, s.state_value
-    FROM clicks c LEFT JOIN states s ON c.user_id = s.user_id
+    oracle=_ASOF_SQL.format(join="""LEFT JOIN states s ON c.user_id = s.user_id
     QUALIFY row_number() OVER (
       PARTITION BY c.user_id, c.event_id
       ORDER BY abs(epoch(c.ts) - epoch(s.ts)), s.ts
-    ) = 1
-    """,
+    ) = 1"""),
 )
 def q_asof_user_state_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NEAREST as-of join: each click gets the temporally closest
     signup/purchase value in either direction; exact ties resolve to
     the earlier (backward) state — replayed in the oracle by ordering
     on (|delta|, state_ts)."""
-    from inputosm_spark.operators import temporal
-
-    ev = _t(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", "event_id", "ts"
-    )
-    states = (
-        ev.filter(F.col("event_type").isin("signup", "purchase"))
-        .groupBy("user_id", "ts")
-        .agg(F.max(F.round("value", 2)).alias("state_value"))
-    )
-    out = temporal.asof_join(clicks, states, key="user_id",
-                             value_cols=["state_value"],
-                             direction="nearest")
-    return out.select(
-        "user_id", "event_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
-        "state_value",
-    )
+    return _asof_user_state(spark, sf_dir, direction="nearest")
 
 
 @register(
@@ -2631,17 +2510,10 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textstats.tfidf_top_terms(_t(spark, sf_dir, "documents"), k=3)
 
 
-_WAYLEN_LAT, _WAYLEN_LON = cells.point_sql("l_partkey")
-
-
 @register(
     "way_length",
     oracle=f"""
-    WITH pts AS (
-      SELECT l_orderkey, l_linenumber, l_partkey,
-             {_WAYLEN_LAT} AS lat, {_WAYLEN_LON} AS lon
-      FROM lineitem
-    ),
+    WITH {_WAY_PTS_SQL},
     seg AS (
       SELECT l_orderkey,
              CAST(floor(sqrt(
@@ -2667,12 +2539,8 @@ def q_way_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-way sum is order-independent — float-trig-free geodesy that
     hashes bit-for-bit. One groupBy shuffle; pairwise deltas via
     zip_with over the sorted point array (no window, no join)."""
-    li = _t(spark, sf_dir, "lineitem")
-    lat, lon = cells.point_exprs("l_partkey")
-    pts = li.select("l_orderkey", "l_linenumber", "l_partkey", lat, lon)
-    arr = F.array_sort(
-        F.collect_list(F.struct("l_linenumber", "l_partkey", "lat_e4", "lon_e4"))
-    )
+    pts = _way_points(spark, sf_dir)
+    arr = _way_vertices()
     segs = F.zip_with(
         F.slice(arr, 1, F.size(arr) - 1),
         F.slice(arr, 2, F.size(arr) - 1),
@@ -2772,21 +2640,64 @@ _PBF_RT_NODES_SQL = f"""
 """
 
 
-@register(
-    "pbf_roundtrip",
-    oracle=f"""
+_PBF_RT_SUBSET_SQL = f"""
     WITH nodes AS ({_PBF_RT_NODES_SQL})
-    SELECT CAST(id % 7 AS BIGINT) AS bucket,
-           count(*) AS n,
-           CAST(sum(raw_lat) AS BIGINT) AS sum_lat,
-           CAST(sum(raw_lon) AS BIGINT) AS sum_lon,
-           CAST(sum(changeset) AS BIGINT) AS sum_cs,
-           CAST(sum(ts_s) AS BIGINT) AS sum_ts_s,
-           max(id) AS max_id,
-           count(DISTINCT clerk) AS n_clerks
-    FROM nodes GROUP BY 1
-    """,
-)
+    SELECT * FROM nodes WHERE id % 4 = 1
+"""
+
+
+# Per-bucket (id % 7) aggregates of the decoded nodes, each named
+# once with its oracle twin; the roundtrip queries pick their axes.
+_PBF_AXIS_SQL = {
+    "n": "count(*)",
+    "sum_id": "CAST(sum(id) AS BIGINT)",
+    "max_id": "max(id)",
+    "sum_lat": "CAST(sum(raw_lat) AS BIGINT)",
+    "sum_lon": "CAST(sum(raw_lon) AS BIGINT)",
+    "sum_cs": "CAST(sum(changeset) AS BIGINT)",
+    "sum_ts_s": "CAST(sum(ts_s) AS BIGINT)",
+    "n_clerks": "count(DISTINCT clerk)",
+}
+
+
+def _pbf_bucket_sql(cols: str, src: str = "sub") -> str:
+    """Oracle of _pbf_buckets over the `src` CTE (all of orders as
+    `nodes`, or the o_orderkey % 4 == 1 subset as `sub`)."""
+    body = _PBF_RT_NODES_SQL if src == "nodes" else _PBF_RT_SUBSET_SQL
+    sel = ", ".join(f"{_PBF_AXIS_SQL[c]} AS {c}" for c in cols.split())
+    return f"""
+    WITH {src} AS ({body})
+    SELECT CAST(id % 7 AS BIGINT) AS bucket, {sel}
+    FROM {src} GROUP BY 1
+    """
+
+
+def _pbf_buckets(spark: SparkSession, sf_dir: str, cols: str,
+                 mod: int | None = 4) -> DataFrame:
+    """The `cols` aggregates per id % 7 bucket of the roundtripped
+    orders (the o_orderkey % `mod` == 1 subset, or all of them)."""
+    aggs = {
+        "n": F.count("*"),
+        "sum_id": F.sum("id"),
+        "max_id": F.max("id"),
+        "sum_lat": F.sum("raw_lat"),
+        "sum_lon": F.sum("raw_lon"),
+        "sum_cs": F.sum("changeset"),
+        # unix_timestamp of the reader's instant-typed ts IS the wire's
+        # epoch integer — TZ-free, unlike hour()/to_date() extraction
+        "sum_ts_s": F.sum(F.unix_timestamp("ts")),
+        "n_clerks": F.countDistinct(F.element_at("tags", F.lit("clerk"))),
+    }
+    back = _pbf_roundtrip_frame(spark, sf_dir, mod=mod)
+    return back.groupBy(
+        F.pmod("id", F.lit(7)).cast("long").alias("bucket")
+    ).agg(*[aggs[c].alias(c) for c in cols.split()])
+
+
+_PBF_FULL = "n sum_lat sum_lon sum_cs sum_ts_s max_id n_clerks"
+
+
+@register("pbf_roundtrip", oracle=_pbf_bucket_sql(_PBF_FULL, src="nodes"))
 def q_pbf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL WIRE-FORMAT ROUNDTRIP under the oracle gate: orders rows
     become dense nodes (id / fixed-point coords / tags / info), the
@@ -2813,22 +2724,7 @@ def q_pbf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     are TZ-free under ANY session zone, exactly the reference's
     epoch-integer timestamp model
     (/root/reference/src/timeutil.cpp:31-39)."""
-    back = _pbf_roundtrip_frame(spark, sf_dir)
-    return back.groupBy(
-        F.pmod("id", F.lit(7)).cast("long").alias("bucket")
-    ).agg(
-        F.count("*").alias("n"),
-        F.sum("raw_lat").alias("sum_lat"),
-        F.sum("raw_lon").alias("sum_lon"),
-        F.sum("changeset").alias("sum_cs"),
-        # unix_timestamp of the reader's instant-typed ts IS the wire's
-        # epoch integer — TZ-free, unlike hour()/to_date() extraction
-        F.sum(F.unix_timestamp("ts")).alias("sum_ts_s"),
-        F.max("id").alias("max_id"),
-        F.countDistinct(F.element_at("tags", F.lit("clerk"))).alias(
-            "n_clerks"
-        ),
-    )
+    return _pbf_buckets(spark, sf_dir, _PBF_FULL, mod=None)
 
 
 # --- pbf_roundtrip per-axis debug twins (r6 directive #1c) ----------------
@@ -2840,151 +2736,43 @@ def q_pbf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # red/green pattern across {ids, coords, ts, tags} bisects the drifting
 # column in that same round instead of a round-trip of guesswork.
 
-_PBF_RT_SUBSET_SQL = f"""
-    WITH nodes AS ({_PBF_RT_NODES_SQL})
-    SELECT * FROM nodes WHERE id % 4 = 1
-"""
 
-
-@register(
-    "pbf_roundtrip_ids",
-    oracle=f"""
-    WITH sub AS ({_PBF_RT_SUBSET_SQL})
-    SELECT CAST(id % 7 AS BIGINT) AS bucket,
-           count(*) AS n, CAST(sum(id) AS BIGINT) AS sum_id, max(id) AS max_id
-    FROM sub GROUP BY 1
-    """,
-)
+@register("pbf_roundtrip_ids", oracle=_pbf_bucket_sql("n sum_id max_id"))
 def q_pbf_roundtrip_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Debug twin, id axis only: delta-coded dense-node ids through
     varint encode/decode (sources/pbf_encode dense_nodes_group id
     deltas; sources/pbf.py dense-node cumsum)."""
-    back = _pbf_roundtrip_frame(spark, sf_dir, mod=4)
-    return back.groupBy(
-        F.pmod("id", F.lit(7)).cast("long").alias("bucket")
-    ).agg(
-        F.count("*").alias("n"),
-        F.sum("id").alias("sum_id"),
-        F.max("id").alias("max_id"),
-    )
+    return _pbf_buckets(spark, sf_dir, "n sum_id max_id")
 
 
-@register(
-    "pbf_roundtrip_coords",
-    oracle=f"""
-    WITH sub AS ({_PBF_RT_SUBSET_SQL})
-    SELECT CAST(id % 7 AS BIGINT) AS bucket,
-           CAST(sum(raw_lat) AS BIGINT) AS sum_lat,
-           CAST(sum(raw_lon) AS BIGINT) AS sum_lon
-    FROM sub GROUP BY 1
-    """,
-)
+@register("pbf_roundtrip_coords", oracle=_pbf_bucket_sql("sum_lat sum_lon"))
 def q_pbf_roundtrip_coords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Debug twin, coordinate axis only: zigzag + delta-coded
     fixed-point lat/lon through the wire."""
-    back = _pbf_roundtrip_frame(spark, sf_dir, mod=4)
-    return back.groupBy(
-        F.pmod("id", F.lit(7)).cast("long").alias("bucket")
-    ).agg(
-        F.sum("raw_lat").alias("sum_lat"),
-        F.sum("raw_lon").alias("sum_lon"),
-    )
+    return _pbf_buckets(spark, sf_dir, "sum_lat sum_lon")
 
 
-@register(
-    "pbf_roundtrip_ts",
-    oracle=f"""
-    WITH sub AS ({_PBF_RT_SUBSET_SQL})
-    SELECT CAST(id % 7 AS BIGINT) AS bucket,
-           CAST(sum(ts_s) AS BIGINT) AS sum_ts_s
-    FROM sub GROUP BY 1
-    """,
-)
+@register("pbf_roundtrip_ts", oracle=_pbf_bucket_sql("sum_ts_s"))
 def q_pbf_roundtrip_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Debug twin, timestamp axis only: the NTZ-naive-seconds wire
     convention (dense-info timestamp deltas) — the axis behind the r4
     driver red."""
-    back = _pbf_roundtrip_frame(spark, sf_dir, mod=4)
-    return back.groupBy(
-        F.pmod("id", F.lit(7)).cast("long").alias("bucket")
-    ).agg(F.sum(F.unix_timestamp("ts")).alias("sum_ts_s"))
+    return _pbf_buckets(spark, sf_dir, "sum_ts_s")
 
 
-@register(
-    "pbf_roundtrip_tags",
-    oracle=f"""
-    WITH sub AS ({_PBF_RT_SUBSET_SQL})
-    SELECT CAST(id % 7 AS BIGINT) AS bucket,
-           CAST(sum(changeset) AS BIGINT) AS sum_cs,
-           count(DISTINCT clerk) AS n_clerks
-    FROM sub GROUP BY 1
-    """,
-)
+@register("pbf_roundtrip_tags", oracle=_pbf_bucket_sql("sum_cs n_clerks"))
 def q_pbf_roundtrip_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Debug twin, stringtable + info axis: tag key/value indices
     through the shared string table, plus dense-info changesets."""
-    back = _pbf_roundtrip_frame(spark, sf_dir, mod=4)
-    return back.groupBy(
-        F.pmod("id", F.lit(7)).cast("long").alias("bucket")
-    ).agg(
-        F.sum("changeset").alias("sum_cs"),
-        F.countDistinct(F.element_at("tags", F.lit("clerk"))).alias(
-            "n_clerks"
-        ),
-    )
+    return _pbf_buckets(spark, sf_dir, "sum_cs n_clerks")
 
 
 @register(
     "dedup_keep_best",
     oracle=f"""
-    WITH RECURSIVE sh AS ({_SHINGLES_SQL}),
-    sig AS (
-      SELECT doc_id,
-             min(substr(md5('0|' || shingle), 1, 8)) AS sig_0,
-             min(substr(md5('0|' || shingle), 9, 8)) AS sig_1,
-             min(substr(md5('0|' || shingle), 17, 8)) AS sig_2,
-             min(substr(md5('0|' || shingle), 25, 8)) AS sig_3
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      SELECT doc_id, 0 AS band, sig_0 || '|' || sig_1 AS band_val FROM sig
-      UNION ALL
-      SELECT doc_id, 1 AS band, sig_2 || '|' || sig_3 AS band_val FROM sig
-    ),
-    pairs AS (
-      SELECT DISTINCT CAST(a.doc_id AS BIGINT) AS a,
-                      CAST(b.doc_id AS BIGINT) AS b
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.band_val = b.band_val
-       AND a.doc_id < b.doc_id
-    ),
-    sym AS (SELECT a, b FROM pairs UNION SELECT b, a FROM pairs),
-    reach AS (
-      SELECT node, node AS lab FROM (SELECT DISTINCT a AS node FROM sym)
-      UNION
-      SELECT s.b AS node, r.lab FROM reach r JOIN sym s ON s.a = r.node
-    ),
-    comp AS (SELECT node, min(lab) AS component FROM reach GROUP BY node),
-    labels AS (
-      SELECT d.doc_id, coalesce(c.component, d.doc_id) AS component
-      FROM documents d LEFT JOIN comp c ON c.node = d.doc_id
-    ),
-    base AS ({_QUALITY_SQL}),
-    qual AS (
-      SELECT doc_id,
-             round(0.4 * (CASE WHEN n_chars BETWEEN 100 AND 5000 THEN 1.0
-                               WHEN n_chars < 100 THEN n_chars / 100.0
-                               ELSE 5000.0 / n_chars END)
-                   + 0.2 * (CASE WHEN CAST(n_nospace AS DOUBLE) / n_words
-                                      BETWEEN 3 AND 10
-                                 THEN 1.0 ELSE 0.5 END)
-                   + 0.2 * least(CAST(len(list_filter(words,
-                         x -> x IN {_ALL_STOPS_SQL})) AS DOUBLE)
-                         / n_words * 5, 1.0)
-                   + 0.2 * (1 - least(CAST(n_punct AS DOUBLE)
-                         / n_chars_t * 5, 1.0)), 4) AS quality
-      FROM base
-    ),
+    WITH RECURSIVE {_LSH_LABELS_SQL},
+    labels AS ({_LABELS_SQL}),
+    {_quality_sql("qual")},
     ranked AS (
       SELECT l.component, l.doc_id, q.quality,
              row_number() OVER (PARTITION BY l.component
@@ -3004,25 +2792,10 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     arbitrary one. Composition of dedup_clusters + quality_score with
     a per-component ranking window (rounded quality DESC, doc_id ASC —
     a total order both engines replay)."""
-    from inputosm_spark.operators import graph
-    from pyspark.sql import Window
-
-    docs = _t(spark, sf_dir, "documents")
-    sdocs = docs.select(F.col("doc_id").cast("string").alias("doc_id"),
-                        "text")
-    sigs = dedup.minhash_signatures(dedup.word_shingles(sdocs, n=3),
-                                    n_hashes=4)
-    cand = dedup.lsh_candidate_pairs(sigs, n_bands=2, rows_per_band=2)
-    comp = graph.connected_components(
-        cand.select(
-            F.col("doc_a").cast("long").alias("src"),
-            F.col("doc_b").cast("long").alias("dst"),
-        )
+    labels = _dup_labels(spark, sf_dir)
+    qual = textstats.quality_score(_t(spark, sf_dir, "documents")).select(
+        "doc_id", "quality"
     )
-    labels = docs.select("doc_id").join(
-        comp.withColumnRenamed("node", "doc_id"), "doc_id", "left"
-    ).select("doc_id", F.coalesce("component", "doc_id").alias("component"))
-    qual = textstats.quality_score(docs).select("doc_id", "quality")
     w = Window.partitionBy("component").orderBy(
         F.desc("quality"), F.asc("doc_id")
     )
@@ -3042,11 +2815,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "way_area",
     oracle=f"""
-    WITH pts AS (
-      SELECT l_orderkey, l_linenumber, l_partkey,
-             {_WAYLEN_LAT} AS lat, {_WAYLEN_LON} AS lon
-      FROM lineitem
-    ),
+    WITH {_WAY_PTS_SQL},
     ring AS (
       SELECT l_orderkey, lon AS x, lat AS y,
              coalesce(lead(lon) OVER w, first_value(lon) OVER w2) AS xn,
@@ -3073,13 +2842,8 @@ def q_way_area(spark: SparkSession, sf_dir: str) -> DataFrame:
     way_length's trig-free geodesy. Ring closure = zip_with of the
     sorted point array against its rotate-by-one; one groupBy shuffle,
     no window, no join."""
-    li = _t(spark, sf_dir, "lineitem")
-    lat, lon = cells.point_exprs("l_partkey")
-    pts = li.select("l_orderkey", "l_linenumber", "l_partkey", lat, lon)
-    arr = F.array_sort(
-        F.collect_list(F.struct("l_linenumber", "l_partkey", "lat_e4",
-                                "lon_e4"))
-    )
+    pts = _way_points(spark, sf_dir)
+    arr = _way_vertices()
     rot = F.concat(F.slice(arr, 2, F.size(arr) - 1), F.slice(arr, 1, 1))
     cross = F.zip_with(
         arr, rot,
@@ -3149,20 +2913,7 @@ def q_heavy_hitter_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 # replay of operators/dedup.simhash at the Manku width; bit 63 is the
 # int64 sign bit — place value -(2^63), two's complement — and the
 # hugeint sum re-narrows to BIGINT exactly)
-_SIMHASH64_SIGS_SQL = f"""
-    toks AS (
-      SELECT DISTINCT CAST(doc_id AS VARCHAR) AS doc_id, tok
-      FROM (SELECT doc_id, unnest(string_split({_NORM_SQL}, ' ')) AS tok
-            FROM documents)
-    ), per_bit AS (
-      SELECT doc_id, bit,
-             CASE WHEN ({_HEXMAP_SQL} // (CASE bit % 4 WHEN 0 THEN 1 WHEN 1 THEN 2
-                                          WHEN 2 THEN 4 ELSE 8 END)) % 2 = 1
-                  THEN 1 ELSE -1 END AS sign
-      FROM toks, unnest(range(0, 64)) AS t(bit)
-    ), sums AS (
-      SELECT doc_id, bit, sum(sign) AS s FROM per_bit GROUP BY 1, 2
-    ), sigs AS (
+_SIMHASH64_SIGS_SQL = f"""{_simhash_sums_sql(64)}, sigs AS (
       SELECT CAST(doc_id AS BIGINT) AS doc_id,
              CAST(sum(CASE WHEN s <= 0 THEN 0
                            WHEN bit = 63 THEN -9223372036854775807 - 1
@@ -3192,10 +2943,8 @@ def q_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     scans all pairs — the banded self-join is a provable superset —
     while the ORACLE brute-forces all pairs, independently confirming
     the pruning loses nothing."""
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    )
-    return dedup.simhash_near_dup_pairs(docs, max_hd=3, bits=64)
+    return dedup.simhash_near_dup_pairs(_str_docs(spark, sf_dir), max_hd=3,
+                                        bits=64)
 
 
 @register(
@@ -3422,10 +3171,7 @@ def q_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_SIMHASH64_SIGS_SQL},
     splits AS (
       SELECT CAST(doc_id AS BIGINT) AS doc_id,
-             CASE WHEN ((((doc_id % 1000003) * 40503 + 1013) % 9973) % 100) < 80
-                  THEN 'train'
-                  WHEN ((((doc_id % 1000003) * 40503 + 1013) % 9973) % 100) < 90
-                  THEN 'val' ELSE 'test' END AS split
+             {_SPLIT_SQL}
       FROM documents
     )
     SELECT least(pa.split, pb.split) AS split_a,
@@ -3642,8 +3388,7 @@ def q_box_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "tile_pyramid",
     oracle=f"""
-    WITH pts AS (SELECT doc_id, {_LAT_SQL} AS lat_e4, {_LON_SQL} AS lon_e4
-                 FROM documents)
+    WITH pts AS ({_PTS_SQL})
     SELECT cell, count(*) AS n_docs FROM (
       SELECT {cells.cell_id_sql('lat_e4', 'lon_e4', 7)} AS cell FROM pts
       UNION ALL
@@ -3918,9 +3663,7 @@ def q_segment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays as a brute-force all-pairs filter."""
     from inputosm_spark.operators import spatial
 
-    docs = _t(spark, sf_dir, "documents")
-    lat, lon = cells.point_exprs("doc_id")
-    a = docs.select("doc_id", lat, lon).select(
+    a = _doc_points(spark, sf_dir).select(
         F.col("doc_id").alias("a_id"),
         F.col("lon_e4").alias("x0"),
         F.col("lat_e4").alias("y0"),
@@ -3946,19 +3689,21 @@ def q_segment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _GH_PREC = 6
 _GH_LAT, _GH_LON = cells.point_sql("doc_id")
-
-
-@register(
-    "geohash_cells",
-    oracle=f"""
-    WITH pts AS (
+# every document's geohash code (cells.geohash_code_sql, precision 6)
+_GH_CODES_SQL = f"""pts AS (
       SELECT doc_id, {_GH_LAT} AS lat, {_GH_LON} AS lon FROM documents
     ),
     c AS (
       SELECT doc_id,
              {cells.geohash_code_sql("lat", "lon", _GH_PREC)} AS code
       FROM pts
-    )
+    )"""
+
+
+@register(
+    "geohash_cells",
+    oracle=f"""
+    WITH {_GH_CODES_SQL}
     SELECT {cells.geohash_chars_sql("code", _GH_PREC)} AS gh,
            CAST(count(*) AS BIGINT) AS n_docs,
            CAST(min(doc_id) AS BIGINT) AS min_doc
@@ -3971,10 +3716,8 @@ def q_geohash_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan-build time like morton_expr): the third spatial indexing key
     family next to grid cells and Morton codes, with the identical
     bit math replayed by the oracle's integer SQL twin."""
-    docs = _t(spark, sf_dir, "documents")
-    lat, lon = cells.point_exprs("doc_id")
     return (
-        docs.select("doc_id", lat, lon)
+        _doc_points(spark, sf_dir)
         .select(
             "doc_id",
             cells.geohash_expr("lat_e4", "lon_e4", _GH_PREC).alias("gh"),
@@ -3993,11 +3736,7 @@ _SIMP_EPS = 300_000
 @register(
     "simplify_ways",
     oracle=f"""
-    WITH pts AS (
-      SELECT l_orderkey, l_linenumber, l_partkey,
-             {_WAYLEN_LAT} AS lat, {_WAYLEN_LON} AS lon
-      FROM lineitem
-    ),
+    WITH {_WAY_PTS_SQL},
     d AS (
       SELECT l_orderkey, l_linenumber, lat, lon,
              lag(lat) OVER w AS py, lag(lon) OVER w AS px,
@@ -4024,9 +3763,7 @@ def q_simplify_ways(spark: SparkSession, sf_dir: str) -> DataFrame:
     window + integer test."""
     from inputosm_spark.operators import spatial
 
-    li = _t(spark, sf_dir, "lineitem")
-    lat, lon = cells.point_exprs("l_partkey")
-    pts = li.select("l_orderkey", "l_linenumber", "l_partkey", lat, lon)
+    pts = _way_points(spark, sf_dir)
     out = spatial.simplify_polyline(
         pts,
         eps=_SIMP_EPS,
@@ -4115,20 +3852,7 @@ def q_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "incremental_dedup",
     oracle=f"""
-    WITH sh AS ({_SHINGLES_SQL}),
-    sig AS (
-      SELECT doc_id,
-             min(substr(md5('0|' || shingle), 1, 8)) AS sig_0,
-             min(substr(md5('0|' || shingle), 9, 8)) AS sig_1,
-             min(substr(md5('0|' || shingle), 17, 8)) AS sig_2,
-             min(substr(md5('0|' || shingle), 25, 8)) AS sig_3
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      SELECT doc_id, 0 AS band, sig_0 || '|' || sig_1 AS band_val FROM sig
-      UNION ALL
-      SELECT doc_id, 1 AS band, sig_2 || '|' || sig_3 AS band_val FROM sig
-    ),
+    WITH {_LSH_BANDS_SQL},
     cand AS (
       SELECT DISTINCT n.doc_id AS doc_a, h.doc_id AS doc_b
       FROM bands n JOIN bands h
@@ -4136,21 +3860,7 @@ def q_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE CAST(n.doc_id AS BIGINT) % 10 = 7
         AND CAST(h.doc_id AS BIGINT) % 10 != 7
     ),
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-    inter AS (
-      SELECT c.doc_a, c.doc_b, count(*) AS n_inter
-      FROM cand c
-      JOIN sh a ON a.doc_id = c.doc_a
-      JOIN sh b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
-      GROUP BY 1, 2
-    )
-    SELECT i.doc_a, i.doc_b, i.n_inter, sa.n_sh AS n_a, sb.n_sh AS n_b,
-           round(CAST(i.n_inter AS DOUBLE)
-                 / (sa.n_sh + sb.n_sh - i.n_inter), 6) AS jaccard
-    FROM inter i JOIN sizes sa ON sa.doc_id = i.doc_a
-                 JOIN sizes sb ON sb.doc_id = i.doc_b
-    WHERE round(CAST(i.n_inter AS DOUBLE)
-                / (sa.n_sh + sb.n_sh - i.n_inter), 6) >= 0.3
+    {_JACCARD_VERIFY_SQL.format(threshold=0.3)}
     """,
 )
 def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4281,14 +3991,7 @@ def q_event_path_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "geohash_pyramid",
     oracle=f"""
-    WITH pts AS (
-      SELECT doc_id, {_GH_LAT} AS lat, {_GH_LON} AS lon FROM documents
-    ),
-    c AS (
-      SELECT doc_id,
-             {cells.geohash_code_sql("lat", "lon", _GH_PREC)} AS code
-      FROM pts
-    ),
+    WITH {_GH_CODES_SQL},
     g AS (SELECT {cells.geohash_chars_sql("code", _GH_PREC)} AS gh FROM c)
     SELECT prefix, CAST(count(*) AS BIGINT) AS n_docs
     FROM (
@@ -4304,9 +4007,7 @@ def q_geohash_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefixes map-side (one explode), ONE map-side-combined aggregation
     produces all three zoom levels (the naive per-level formulation is
     three scans + three shuffles). Plan-gated single Exchange."""
-    docs = _t(spark, sf_dir, "documents")
-    lat, lon = cells.point_exprs("doc_id")
-    gh = docs.select("doc_id", lat, lon).select(
+    gh = _doc_points(spark, sf_dir).select(
         cells.geohash_expr("lat_e4", "lon_e4", _GH_PREC).alias("gh")
     )
     return (
@@ -4413,12 +4114,7 @@ def q_c4_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH sig AS ({_SIG_SQL}),
     pairs AS (
-      SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-      FROM sig sa JOIN sig sb
-        ON sa.lsh_sig = sb.lsh_sig AND sa.vec_id < sb.vec_id
-      JOIN embeddings a ON a.vec_id = sa.vec_id
-      JOIN embeddings b ON b.vec_id = sb.vec_id
-      WHERE {_COS_SQL.replace('q.', 'a.').replace('c.', 'b.')} >= 0.15
+      SELECT a.vec_id AS vec_a, b.vec_id AS vec_b {_NEAR_DUP_PAIRS_SQL}
     ),
     sp AS (
       SELECT vec_id,
@@ -4535,6 +4231,35 @@ def q_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spatial.dbscan(pts, eps=_DBSCAN_EPS, min_pts=_DBSCAN_MIN_PTS)
 
 
+# Trajectories: each user's events in (ts, event_id) order, every 4
+# consecutive events at one deterministic point (user_id * 1000 +
+# (seq - 1) // 4) — the input of staypoints, od_flows and
+# colocation_pairs.
+_TRAJ_SEQ_SQL = """seq AS (
+      SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS ts_sec,
+             row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
+               AS seq
+      FROM events
+    )"""
+
+
+def _trajectory(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, ts_sec, lat_e4, lon_e4) per event."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    seq = (
+        _t(spark, sf_dir, "events").select(
+            "user_id", F.unix_timestamp("ts").alias("ts_sec"), "ts", "event_id"
+        )
+        .withColumn("__seq", F.row_number().over(w))
+        .drop("ts", "event_id")
+    )
+    pid = F.col("user_id") * F.lit(1000) + F.floor(
+        (F.col("__seq") - 1) / F.lit(4)
+    )
+    lat, lon = cells.point_exprs(pid)
+    return seq.select("user_id", "ts_sec", lat, lon)
+
+
 _STAY_PID_SQL = "(user_id * 1000 + (seq - 1) // 4)"
 _STAY_LAT_SQL, _STAY_LON_SQL = cells.point_sql(_STAY_PID_SQL)
 _STAY_CELL_SQL = cells.cell_id_sql(_STAY_LAT_SQL, _STAY_LON_SQL, 5)
@@ -4543,12 +4268,7 @@ _STAY_CELL_SQL = cells.cell_id_sql(_STAY_LAT_SQL, _STAY_LON_SQL, 5)
 @register(
     "staypoints",
     oracle=f"""
-    WITH seq AS (
-      SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS ts_sec,
-             row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
-               AS seq
-      FROM events
-    ),
+    WITH {_TRAJ_SEQ_SQL},
     pts AS (
       SELECT user_id, ts_sec, {_STAY_CELL_SQL} AS cell FROM seq
     ),
@@ -4579,19 +4299,7 @@ def q_staypoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     location (user_id*1000 + seq//4 through the deterministic point
     hash), then gaps-and-islands runs of >= 3 observations in one
     res-5 cell with integer epoch dwell times."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = (
-        ev.select(
-            "user_id", "ts", F.unix_timestamp("ts").alias("ts_sec"), "event_id"
-        )
-        .withColumn("__seq", F.row_number().over(w))
-        .drop("ts")
-    )
-    pid = F.col("user_id") * F.lit(1000) + F.floor((F.col("__seq") - 1) / F.lit(4))
-    lat, lon = cells.point_exprs(pid)
-    pts = seq.select("user_id", "ts_sec", lat, lon)
-    return spatial.staypoints(pts, res=5, min_points=3)
+    return spatial.staypoints(_trajectory(spark, sf_dir), res=5, min_points=3)
 
 
 _BLOOM_M = 8064
@@ -4678,10 +4386,8 @@ def q_jaccard_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix collisions; integer cross-multiplied threshold). The
     oracle is the INDEPENDENT quadratic share-any-token definition, so
     a prefix-length bug (a missed pair) cannot hide."""
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    )
-    return dedup.prefix_filter_pairs(docs, threshold_e6=500_000)
+    return dedup.prefix_filter_pairs(_str_docs(spark, sf_dir),
+                                     threshold_e6=500_000)
 
 
 @register(
@@ -4750,12 +4456,7 @@ _OD_CELL_SQL = cells.cell_id_sql(_STAY_LAT_SQL, _STAY_LON_SQL, _OD_RES)
 @register(
     "od_flows",
     oracle=f"""
-    WITH seq AS (
-      SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS ts_sec,
-             row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
-               AS seq
-      FROM events
-    ),
+    WITH {_TRAJ_SEQ_SQL},
     pts AS (
       SELECT user_id, ts_sec, {_OD_CELL_SQL} AS cell FROM seq
     ),
@@ -4779,21 +4480,7 @@ def q_od_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     to (from_cell, to_cell, moves, distinct movers). One per-user lag
     window + one pair-key aggregation; the oracle replays the same
     two-window pipeline in DuckDB."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = (
-        ev.select(
-            "user_id", F.unix_timestamp("ts").alias("ts_sec"), "ts", "event_id"
-        )
-        .withColumn("__seq", F.row_number().over(w))
-        .drop("ts", "event_id")
-    )
-    pid = F.col("user_id") * F.lit(1000) + F.floor(
-        (F.col("__seq") - 1) / F.lit(4)
-    )
-    lat, lon = cells.point_exprs(pid)
-    pts = seq.select("user_id", "ts_sec", lat, lon)
-    return spatial.od_flows(pts, res=_OD_RES)
+    return spatial.od_flows(_trajectory(spark, sf_dir), res=_OD_RES)
 
 
 @register(
@@ -4840,12 +4527,7 @@ _COLOC_CELL_SQL = cells.cell_id_sql(_STAY_LAT_SQL, _STAY_LON_SQL, _COLOC_RES)
 @register(
     "colocation_pairs",
     oracle=f"""
-    WITH seq AS (
-      SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS ts_sec,
-             row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
-               AS seq
-      FROM events
-    ),
+    WITH {_TRAJ_SEQ_SQL},
     pres AS (
       SELECT DISTINCT user_id, ts_sec // {_COLOC_BS} AS tb,
              {_COLOC_CELL_SQL} AS cell
@@ -4870,29 +4552,27 @@ def q_colocation_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     proximity tracing / co-travel detection. Bucketed self-equi-join
     with the transit-hub drop rule (buckets > 64 distinct users are
     dropped, replayed verbatim in the oracle)."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = (
-        ev.select(
-            "user_id", F.unix_timestamp("ts").alias("ts_sec"), "ts", "event_id"
-        )
-        .withColumn("__seq", F.row_number().over(w))
-        .drop("ts", "event_id")
-    )
-    pid = F.col("user_id") * F.lit(1000) + F.floor(
-        (F.col("__seq") - 1) / F.lit(4)
-    )
-    lat, lon = cells.point_exprs(pid)
-    pts = seq.select("user_id", "ts_sec", lat, lon)
     return spatial.colocation_pairs(
-        pts, res=_COLOC_RES, bucket_s=_COLOC_BS,
+        _trajectory(spark, sf_dir), res=_COLOC_RES, bucket_s=_COLOC_BS,
         min_shared=2, max_bucket=_COLOC_CAP,
     )
 
 
+# one synchronous LPA round: votes c{i} from labels l{p}, then each
+# node's most-voted label (ties to the smallest)
+_LPA_ROUND_SQL = """
+    c{i} AS (SELECT e.d AS node, l.label, count(*) AS c
+           FROM e JOIN l{p} l ON l.node = e.s GROUP BY 1, 2),
+    l{i} AS (SELECT node, label FROM (
+             SELECT node, label,
+                    row_number() OVER (PARTITION BY node
+                                       ORDER BY c DESC, label) AS rn
+             FROM c{i}) WHERE rn = 1)"""
+
+
 @register(
     "label_propagation",
-    oracle="""
+    oracle=f"""
     WITH e0 AS (
       SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
       FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
@@ -4901,27 +4581,7 @@ def q_colocation_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     e AS (SELECT u AS s, v AS d FROM e0
           UNION ALL SELECT v AS s, u AS d FROM e0),
     l0 AS (SELECT DISTINCT s AS node, s AS label FROM e),
-    c1 AS (SELECT e.d AS node, l.label, count(*) AS c
-           FROM e JOIN l0 l ON l.node = e.s GROUP BY 1, 2),
-    l1 AS (SELECT node, label FROM (
-             SELECT node, label,
-                    row_number() OVER (PARTITION BY node
-                                       ORDER BY c DESC, label) AS rn
-             FROM c1) WHERE rn = 1),
-    c2 AS (SELECT e.d AS node, l.label, count(*) AS c
-           FROM e JOIN l1 l ON l.node = e.s GROUP BY 1, 2),
-    l2 AS (SELECT node, label FROM (
-             SELECT node, label,
-                    row_number() OVER (PARTITION BY node
-                                       ORDER BY c DESC, label) AS rn
-             FROM c2) WHERE rn = 1),
-    c3 AS (SELECT e.d AS node, l.label, count(*) AS c
-           FROM e JOIN l2 l ON l.node = e.s GROUP BY 1, 2),
-    l3 AS (SELECT node, label FROM (
-             SELECT node, label,
-                    row_number() OVER (PARTITION BY node
-                                       ORDER BY c DESC, label) AS rn
-             FROM c3) WHERE rn = 1)
+    {",".join(_LPA_ROUND_SQL.format(i=i, p=i - 1) for i in (1, 2, 3))}
     SELECT l3.node, l3.label, cs.community_size
     FROM l3 JOIN (SELECT label, count(*) AS community_size
                   FROM l3 GROUP BY label) cs ON cs.label = l3.label
@@ -5141,8 +4801,7 @@ def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_PER_CHUNK_ONLY_SQL},
     refs AS (
       SELECT doc_id,
-             'media://' || CAST(doc_id AS VARCHAR) || '/'
-             || CAST(i AS VARCHAR) AS media_ref
+             {_MEDIA_REF_SQL} AS media_ref
       FROM per_chunk WHERE is_media = 1
     ),
     content AS (
@@ -5191,9 +4850,7 @@ def q_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "pip_anti_join",
     oracle=f"""
-    WITH pts AS (SELECT doc_id, {_LAT_SQL} AS lat_e4, {_LON_SQL} AS lon_e4
-                 FROM documents),
-         boxes AS ({_BOX_SQL})
+    WITH {_PIP_CTES_SQL}
     SELECT p.doc_id, p.lat_e4, p.lon_e4
     FROM pts p
     WHERE NOT EXISTS (
@@ -5212,9 +4869,7 @@ def q_pip_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     column, broadcastable whenever the covered set is dimension-like;
     the point table is never shuffled twice. Oracle = textbook
     NOT EXISTS."""
-    docs = _t(spark, sf_dir, "documents")
-    lat, lon = cells.point_exprs("doc_id")
-    pts = docs.select("doc_id", lat, lon)
+    pts = _doc_points(spark, sf_dir)
     matched = spatial.pip_join(pts, _box_polygons(spark), res=6).select(
         "doc_id"
     )
@@ -5331,12 +4986,9 @@ def q_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     "grouping_sets_cells",
     oracle=f"""
     SELECT {_CELL3_SQL} AS cell3,
-           CASE WHEN n_chars < 500 THEN 'short'
-                WHEN n_chars < 2000 THEN 'mid' ELSE 'long' END AS len_band,
-           CAST(GROUPING({_CELL3_SQL}) * 2
-                + GROUPING(CASE WHEN n_chars < 500 THEN 'short'
-                                WHEN n_chars < 2000 THEN 'mid'
-                                ELSE 'long' END) AS BIGINT) AS gid,
+           {_LEN_BAND_SQL} AS len_band,
+           CAST(GROUPING({_CELL3_SQL}) * 2 + GROUPING({_LEN_BAND_SQL})
+                AS BIGINT) AS gid,
            count(*) AS cnt
     FROM documents
     GROUP BY GROUPING SETS ((1), (2))
@@ -5349,17 +5001,7 @@ def q_grouping_sets_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     set each row came from (cell3=NULL data rows vs the cell3 subtotal
     axis). One Expand over the scan into a map-side-combined
     aggregation, same single-shuffle shape as cube."""
-    docs = _t(spark, sf_dir, "documents")
-    lat, lon = cells.point_exprs("doc_id")
-    band = (
-        F.when(F.col("n_chars") < 500, "short")
-        .when(F.col("n_chars") < 2000, "mid")
-        .otherwise("long")
-    )
-    keyed = docs.select(
-        cells.cell_id_expr(lat, lon, 3).alias("cell3"),
-        band.alias("len_band"),
-    )
+    keyed = _doc_cells(spark, sf_dir, _len_band().alias("len_band"), cell3=3)
     return keyed.groupingSets(
         [["cell3"], ["len_band"]], "cell3", "len_band"
     ).agg(

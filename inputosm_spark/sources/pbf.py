@@ -633,7 +633,10 @@ def _batch(kind: str, st: pa.Array, tags, info, **cols) -> pa.RecordBatch:
     zero pandas and zero per-row Python. `tags` is (offsets, key_idx,
     val_idx) into the string table `st`, resolved by vectorized take();
     `info` is (version, ts_s, changeset); `cols` holds the kind's own
-    columns by name, and every column it lacks is null."""
+    columns by name. A column it lacks is null, except the nested
+    node_refs/members, which are empty lists: one encoding of "none"
+    across the ingest paths (the OSC stream and the replication
+    catch-up store [] too)."""
     offsets, key_idx, val_idx = tags
     version, ts_s, changeset = info
     n = len(cols["id"])
@@ -646,6 +649,12 @@ def _batch(kind: str, st: pa.Array, tags, info, **cols) -> pa.RecordBatch:
         ts=pa.array(ts_us, type=pa.timestamp("us"), mask=np.isnan(ts_s)),
         changeset=changeset,
     )
+    empty = pa.array(np.zeros(n + 1, dtype=np.int32))
+    for f in _PA_SCHEMA:
+        if f.name not in cols and pa.types.is_list(f.type):
+            cols[f.name] = pa.ListArray.from_arrays(
+                empty, pa.array([], type=f.type.value_type)
+            )
     return pa.RecordBatch.from_arrays(
         [
             pa.nulls(n, type=f.type) if f.name not in cols

@@ -98,11 +98,21 @@ def _apply_osc(spark: SparkSession, table: DataFrame, osc_path: str) -> DataFram
     node/way/relation CDC frames, unioned onto the entity superset
     schema, replayed by one merge keyed (kind, id) — OSM ids are unique
     per kind only. Ops on one entity share a kind, so each frame's
-    file order is the replay order (osmxml.apply_changes)."""
+    file order is the replay order (osmxml.apply_changes). A kind
+    without node_refs or members gets them as typed empty arrays, the
+    PBF reader's and the OSC stream's encoding of "none"."""
     from pyspark.sql import functions as F
 
+    nested = {
+        "node_refs": "array<long>",
+        "members": "array<struct<type:int,ref:long,role:string>>",
+    }
     frames = [
-        ch.select(F.lit(kind).alias("kind"), "*")
+        ch.select(
+            F.lit(kind).alias("kind"), "*",
+            *[F.expr(f"CAST(array() AS {t})").alias(c)
+              for c, t in nested.items() if c not in ch.columns],
+        )
         for kind, ch in zip(
             ("node", "way", "relation"), osmxml.read_osc(spark, osc_path)
         )

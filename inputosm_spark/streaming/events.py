@@ -122,20 +122,18 @@ def drain(stream: DataFrame, checkpoint_path: str, sink):
 
 def _upsert_state(state_path: str, merge):
     """foreachBatch body of the state-table streams: read the current
-    state (None only while `state_path` does not exist), overwrite it
-    with `merge(state, batch)`. Any other read error raises — treating
-    an unreadable table as empty would overwrite it with the
-    micro-batch alone. Idempotent when `merge` is: a replayed
-    micro-batch converges to the same state."""
-    from pyspark.errors import AnalysisException
+    state (None only while `state_path` does not exist, asked of the
+    Hadoop FileSystem so a first batch logs no failed read), overwrite
+    it with `merge(state, batch)`. Any read error raises — treating an
+    unreadable table as empty would overwrite it with the micro-batch
+    alone. Idempotent when `merge` is: a replayed micro-batch converges
+    to the same state."""
 
     def apply(batch: DataFrame, batch_id: int) -> None:
-        try:
-            state = batch.sparkSession.read.parquet(state_path)
-        except AnalysisException as e:
-            if e.getCondition() != "PATH_NOT_FOUND":
-                raise
-            state = None
+        spark = batch.sparkSession
+        path = spark._jvm.org.apache.hadoop.fs.Path(state_path)
+        fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+        state = spark.read.parquet(state_path) if fs.exists(path) else None
         # overwrite-by-snapshot fallback (Iceberg MERGE INTO when present).
         # localCheckpoint (not cache) before overwriting the path we just
         # read: a lost cached partition would otherwise recompute from the

@@ -9,6 +9,7 @@ import duckdb
 import json
 import os
 import pytest
+from pyspark.sql import functions as F
 
 
 def _entry():
@@ -103,3 +104,71 @@ def test_rows_only_queries_are_the_documented_exceptions():
         "approx_distinct_cells",   # HLL++ sketch; bounded by exact twin
         "approx_event_percentiles",  # percentile sketch; bounded by exact twin
     }, rows_only
+
+
+def test_approx_distinct_cells_error_bound(spark, sf_dir):
+    """r6 directive #2: `approx_distinct_cells` is the one catalog
+    entry with no cross-engine oracle (HLL++ is engine-specific).
+    Bound it instead: every group's estimate must sit within a 5x-rsd
+    envelope of the oracle-gated exact twin (rsd=0.01; HLL++ under a
+    fixed hash is DETERMINISTIC, so this is a stable gate, not a
+    flaky statistical one), and the n_docs side must match exactly."""
+    from inputosm_spark.queries_catalog import queries
+
+    q = queries()
+    approx = {
+        r.cell3: (r.approx_cells9, r.n_docs)
+        for r in q["approx_distinct_cells"](spark, sf_dir).collect()
+    }
+    exact = {
+        r.cell3: (r.n_cells9, r.n_docs)
+        for r in q["distinct_cells_exact"](spark, sf_dir).collect()
+    }
+    assert set(approx) == set(exact) and len(exact) > 0
+    for cell3, (est, nd) in approx.items():
+        true, nd_exact = exact[cell3]
+        assert nd == nd_exact
+        assert abs(est - true) <= max(5, 0.05 * true), (
+            f"cell3={cell3}: HLL estimate {est} outside 5x-rsd "
+            f"envelope of exact {true}"
+        )
+
+
+def test_approx_event_percentiles_envelope(spark, sf_dir):
+    """Twin gate for the rows-only percentile sketch: with accuracy
+    10000 the Greenwald-Khanna sketch's rank error is <= n/10000, so
+    on sf0.01 (n per group ~ thousands) the estimate must land within
+    the value-span of a +-max(1, n/1000) rank window around the exact
+    interpolated percentile. The n column must match exactly."""
+    from inputosm_spark.queries_catalog import queries
+
+    q = queries()
+    approx = {
+        r.event_type: (r.ap50, r.ap90, r.n)
+        for r in q["approx_event_percentiles"](spark, sf_dir).collect()
+    }
+    exact = {
+        r.event_type: (r.p50, r.p90, r.n)
+        for r in q["event_percentiles"](spark, sf_dir).collect()
+    }
+    assert set(approx) == set(exact) and len(exact) > 0
+    # independent per-group value arrays for the rank-window bound
+    import numpy as np
+
+    rows = (
+        spark.read.parquet(f"{sf_dir}/events.parquet")
+        .select("event_type", F.round("value", 2).alias("v"))
+        .collect()
+    )
+    vals: dict[str, list[float]] = {}
+    for r in rows:
+        vals.setdefault(r.event_type, []).append(r.v)
+    for et, (ap50, ap90, n) in approx.items():
+        p50, p90, n_exact = exact[et]
+        assert n == n_exact
+        a = np.sort(np.array(vals[et]))
+        slack = max(1, n // 1000)
+        for est, frac in ((ap50, 0.5), (ap90, 0.9)):
+            lo = a[max(0, int(frac * (n - 1)) - slack)]
+            hi = a[min(n - 1, int(frac * (n - 1)) + 1 + slack)]
+            assert lo <= est <= hi, (et, frac, est, lo, hi)

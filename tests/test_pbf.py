@@ -461,7 +461,7 @@ def test_blob_with_all_packed_refs_and_members_empty():
         W.relation_group(st, dict(GOLDEN_REL, members=[])),
     ])
     assert [(r["kind"], r["id"], r["node_refs"], r["members"]) for r in rows] == [
-        ("way", 10, [], None), ("way", 11, [], None),
-        ("relation", 20, None, []),
+        ("way", 10, [], []), ("way", 11, [], []),
+        ("relation", 20, [], []),
     ]
     assert dict(rows[2]["tags"]) == GOLDEN_REL["tags"]

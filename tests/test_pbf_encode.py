@@ -6,6 +6,9 @@ round-trips whole entity DataFrames bit-exactly through the reader.
 from __future__ import annotations
 
 import datetime as dt
+import glob
+import os
+import tempfile
 
 import numpy as np
 import pytest
@@ -91,23 +94,18 @@ def test_shard_writer_roundtrips_all_kinds(spark, tmp_path):
     got = _rowset(back)
     want = _rowset(_entity_df(spark))
     # the sink normalizes null nested cols to empty (wire format has no
-    # null list), and null tags to {}
+    # null list), and null tags to {}; the reader decodes a kind's
+    # absent node_refs/members as empty too
     norm = {
         (k, i, la, lo,
-         nr if nr is not None else (() if k == "way" else None),
-         mb if mb is not None else (() if k == "relation" else None),
+         nr if nr is not None else (),
+         mb if mb is not None else (),
          tg if tg is not None else (), v, t, c)
         for (k, i, la, lo, nr, mb, tg, v, t, c) in want
     }
-    normg = {
-        (k, i, la, lo, nr, mb, tg, v, t, c)
-        if k != "node"
-        else (k, i, la, lo, None, None, tg, v, t, c)
-        for (k, i, la, lo, nr, mb, tg, v, t, c) in got
-    }
-    assert {x[:2] for x in normg} == {x[:2] for x in norm}
+    assert {x[:2] for x in got} == {x[:2] for x in norm}
     # field-exact for every entity
-    gd = {x[:2]: x for x in normg}
+    gd = {x[:2]: x for x in got}
     for w in norm:
         g = gd[w[:2]]
         assert g == w, f"mismatch for {w[:2]}: {g} != {w}"
@@ -163,3 +161,26 @@ def test_large_block_chunking(spark, tmp_path):
     back = pbf.read_pbf_entities(spark, path)
     assert back.count() == n
     assert back.agg({"raw_lat": "sum"}).first()[0] == 3 * n * (n - 1) // 2
+
+
+def test_pbf_roundtrip_hermetic(spark, sf_dir):
+    """r6 directive #1: two interleaved invocations must not share any
+    filesystem state — build A, build B (which under the old fixed
+    sf-keyed dir would rmtree/rewrite A's shards), then read A. Both
+    must agree, and no shard temp dirs may survive."""
+    from inputosm_spark.queries_catalog import _pbf_roundtrip_frame
+
+    before = set(glob.glob(os.path.join(tempfile.gettempdir(), "inputosm_pbf_rt_*")))
+    a = _pbf_roundtrip_frame(spark, sf_dir, mod=4)
+    b = _pbf_roundtrip_frame(spark, sf_dir, mod=4)
+    rows_a = sorted(
+        (r.id, r.raw_lat, r.raw_lon, r.changeset)
+        for r in a.select("id", "raw_lat", "raw_lon", "changeset").collect()
+    )
+    rows_b = sorted(
+        (r.id, r.raw_lat, r.raw_lon, r.changeset)
+        for r in b.select("id", "raw_lat", "raw_lon", "changeset").collect()
+    )
+    assert rows_a == rows_b and len(rows_a) > 0
+    after = set(glob.glob(os.path.join(tempfile.gettempdir(), "inputosm_pbf_rt_*")))
+    assert after == before  # every invocation cleans its own mkdtemp

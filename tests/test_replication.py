@@ -12,6 +12,7 @@ from inputosm_spark.plans.snapshots import SnapshotStore
 from inputosm_spark.sources import pbf, replication
 from tests import pbf_writer as W
 from tests.test_pbf import GOLDEN_NODES, GOLDEN_REL, GOLDEN_WAY
+from tests.test_pbf import golden_pbf  # noqa: F401  (fixture)
 
 OSC_101 = """<?xml version="1.0" encoding="UTF-8"?>
 <osmChange version="0.6">
@@ -133,3 +134,78 @@ def test_catch_up_keys_changes_by_kind_and_id(spark, tmp_path):
     way = rows[("way", 7)]
     assert way.node_refs == [8] and way.version == 2 and way.tags == {"w": "8"}
     assert rows[("relation", 7)].version == 1
+
+
+
+def test_absent_nested_values_agree_across_ingest_paths(spark, tmp_path,
+                                                        golden_pbf):
+    """The golden entities read four ways — the .osm file, the .pbf
+    file, the OSC stream's state table and the replication catch-up —
+    carry identical node_refs/members per (kind, id). A kind without
+    refs or members has them empty, never NULL: one encoding of
+    "none", so size() and IS NULL agree between the tables."""
+    from pyspark.sql import functions as F
+
+    from inputosm_spark.sources import osmxml
+    from inputosm_spark.streaming import events as stream_ops
+    from tests.test_osmxml import OSM
+
+    def nested(df):
+        out = {}
+        for r in df.select("kind", "id", "node_refs", "members").collect():
+            ms = r.members
+            out[(r.kind, r.id)] = (
+                r.node_refs,
+                None if ms is None else [(m.type, m.ref, m.role) for m in ms],
+            )
+        return out
+
+    # .osm: per-kind frames, a column a kind does not have is "none"
+    osm = tmp_path / "g.osm"
+    osm.write_text(OSM)
+    xn, xw, xr = osmxml.read_osm(spark, str(osm))
+    none_refs = F.expr("CAST(array() AS array<long>)")
+    none_members = F.expr(
+        "CAST(array() AS array<struct<type:int,ref:long,role:string>>)")
+    want = nested(
+        xn.select(F.lit("node").alias("kind"), "id",
+                  none_refs.alias("node_refs"), none_members.alias("members"))
+        .unionByName(xw.select(F.lit("way").alias("kind"), "id", "node_refs",
+                               none_members.alias("members")))
+        .unionByName(xr.select(F.lit("relation").alias("kind"), "id",
+                               none_refs.alias("node_refs"), "members"))
+    )
+    assert want[("way", 10)] == ([1, 2], [])
+    assert want[("node", 1)] == ([], [])
+
+    # the same entities as OSC creates, plus the delete of a node the
+    # catch-up's seed snapshot holds
+    osc = OSM.replace('<osm version="0.6" generator="inputosm_spark-test">',
+                      '<osmChange version="0.6">\n<create>').replace(
+        "</osm>", '</create>\n<delete><node id="999" lat="0" lon="0" '
+        'version="2" timestamp="2021-01-01T00:00:00Z" changeset="9"/>'
+        "</delete>\n</osmChange>")
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "1.osc").write_text(osc)
+    state = str(tmp_path / "osc_state")
+    stream_ops.stream_osc_replication(spark, str(landing), state,
+                                      str(tmp_path / "osc_ckpt"))
+
+    seed = W.write_pbf(
+        str(tmp_path / "seed999.osm.pbf"),
+        [W.primitive_block(lambda st: [W.dense_group(st, [dict(
+            id=999, raw_lat=0, raw_lon=0, tags={}, version=1,
+            ts_s=1_600_000_000, changeset=1)])])],
+        header=W.header_blob(rep_seq=1),
+    )
+    store = SnapshotStore(spark, str(tmp_path / "table_g"))
+    replication.ingest_pbf(spark, seed, store)
+    replication.catch_up_osc(spark, store, {2: str(landing / "1.osc")})
+
+    for name, df in (
+        ("pbf", pbf.read_pbf_entities(spark, golden_pbf)),
+        ("osc stream", spark.read.parquet(state)),
+        ("catch-up", store.read()),
+    ):
+        assert nested(df) == want, name

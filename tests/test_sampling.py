@@ -3,6 +3,7 @@ corpus growth), ratio sanity, and filter-only semantics."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from inputosm_spark.operators import sampling
@@ -88,3 +89,59 @@ def test_token_shards_recursive_carry_small_buckets(spark):
         n = (i * 13) % 9 + 1
         assert got[i] == (n, cum // 50), (i, got[i], (n, cum // 50))
         cum += n
+
+
+def test_doc_chunks_cover_and_overlap(spark):
+    from inputosm_spark.operators import sampling
+
+    texts = [
+        (0, " ".join(f"w{i}" for i in range(100))),
+        (1, " ".join(f"w{i}" for i in range(32))),   # exactly one chunk
+        (2, " ".join(f"w{i}" for i in range(33))),   # spills into two
+        (3, "one two"),                              # shorter than size
+        (4, ""),                                     # empty doc
+    ]
+    df = spark.createDataFrame(texts, "doc_id long, text string")
+    rows = sampling.doc_chunks(df, size=32, overlap=8).collect()
+    by_doc: dict[int, list] = {}
+    for r in rows:
+        by_doc.setdefault(r.doc_id, []).append(r)
+    for doc_id, text in texts:
+        toks = text.split()
+        chunks = sorted(by_doc[doc_id], key=lambda r: r.chunk_id)
+        stride = 32 - 8
+        # stride-prefix reconstruction == original token stream
+        recon: list[str] = []
+        for i, c in enumerate(chunks):
+            ct = c.chunk_text.split() if c.chunk_text else []
+            assert len(ct) == c.n_tokens
+            recon.extend(ct if i == len(chunks) - 1 else ct[:stride])
+            # consecutive chunks overlap by exactly `overlap` tokens
+            if i + 1 < len(chunks):
+                nxt = chunks[i + 1].chunk_text.split()
+                assert ct[stride:] == nxt[: len(ct) - stride]
+        # the final chunk may re-cover a tail the previous chunk already
+        # emitted (clamped window); drop the duplicated prefix
+        assert " ".join(recon[: len(toks)]) == " ".join(toks)
+    assert len(by_doc[1]) == 1
+    assert len(by_doc[2]) == 2
+    assert len(by_doc[4]) == 1 and by_doc[4][0].n_tokens == 0
+
+
+def test_priority_sample_over_bound_weight_raises(spark):
+    from inputosm_spark.operators import sampling
+
+    df = spark.createDataFrame(
+        [(1, 10_000)], "doc_id long, weight long"  # 1e4 * 1e12 > 2^53
+    )
+    with pytest.raises(Exception, match="priority_sample"):
+        sampling.priority_sample(df, "weight", "doc_id", k=1).collect()
+    # weight so large that weight * scale overflows int64 itself: the
+    # guard compares against the bound WITHOUT multiplying (and leads
+    # the addition), so the user still gets the named diagnostic, not
+    # a generic ANSI ARITHMETIC_OVERFLOW (r5 ADVICE)
+    huge = spark.createDataFrame(
+        [(1, 100_000_000)], "doc_id long, weight long"
+    )
+    with pytest.raises(Exception, match="priority_sample"):
+        sampling.priority_sample(huge, "weight", "doc_id", k=1).collect()

@@ -68,38 +68,46 @@ def _knn_oracle(qlat, qlon, ids, lat, lon, k):
     return [(int(ids[i]), int(d2[i]), r + 1) for r, i in enumerate(order)]
 
 
-def test_knn_join_exact_vs_bruteforce(spark, points, points_np):
+def _assert_knn_exact(spark, qs, points, points_np, k):
+    """knn_join of the (qid, lat_e4, lon_e4) rows `qs` equals the numpy
+    brute force; returns the result frame."""
     ids, lat, lon = points_np
-    qlat, qlon = geo.point_from_id(np.arange(900_000, 900_040))
-    queries = spark.createDataFrame(
-        [(int(i), int(a), int(o)) for i, (a, o) in enumerate(zip(qlat, qlon))],
-        "qid long, lat_e4 long, lon_e4 long",
-    )
-    k = 5
-    got = spatial.knn_join(queries, points, k=k, res=6).collect()
-    by_q: dict[int, list] = {}
-    for r in got:
-        by_q.setdefault(r.qid, []).append((r.neighbor_id, r.dist2, r.rank))
-    for qi in range(len(qlat)):
-        want = _knn_oracle(int(qlat[qi]), int(qlon[qi]), ids, lat, lon, k)
-        assert sorted(by_q[qi], key=lambda t: t[2]) == want, f"qid {qi}"
-
-
-def test_knn_escalation_sparse_region(spark, points, points_np):
-    """Queries in empty regions must escalate rings (or brute-force)
-    and still return exactly k correct neighbors."""
-    ids, lat, lon = points_np
-    # corners near the poles are sparse at res 6
-    qs = [(0, 899_000, -1_799_000), (1, -899_500, 1_700_000)]
     queries = spark.createDataFrame(qs, "qid long, lat_e4 long, lon_e4 long")
-    k = 3
-    got = spatial.knn_join(queries, points, k=k, res=6, max_rounds=2).collect()
+    out = spatial.knn_join(queries, points, k=k)
     by_q: dict[int, list] = {}
-    for r in got:
+    for r in out.collect():
         by_q.setdefault(r.qid, []).append((r.neighbor_id, r.dist2, r.rank))
     for qid, qlat, qlon in qs:
         want = _knn_oracle(qlat, qlon, ids, lat, lon, k)
-        assert sorted(by_q[qid], key=lambda t: t[2]) == want
+        assert sorted(by_q[qid], key=lambda t: t[2]) == want, f"qid {qid}"
+    return out
+
+
+def test_knn_join_exact_vs_bruteforce(spark, points, points_np):
+    qlat, qlon = geo.point_from_id(np.arange(900_000, 900_040))
+    qs = [(i, int(a), int(o)) for i, (a, o) in enumerate(zip(qlat, qlon))]
+    # a query in the top (pole) cell row, and two on either side of the
+    # antimeridian (lon +-179.99 deg), where the ring wraps around
+    qs += [(40, 899_990, 123_456), (41, -5_000, 1_799_900),
+           (42, 7_000, -1_799_900)]
+    _assert_knn_exact(spark, qs, points, points_np, k=5)
+
+
+def test_knn_escalation_sparse_region(spark):
+    """Four far-apart points and k = 4: no ring of the fixed schedule
+    (1, 2, 4, 8 cells at res 6) proves a query's 4th neighbor, so every
+    query escalates through all rounds into the brute-force pass, which
+    still returns exactly the k nearest."""
+    pts_np = (np.arange(4), np.array([0, 450_000, -450_000, 600_000]),
+              np.array([0, 900_000, -900_000, -1_500_000]))
+    points = spark.createDataFrame(
+        [(int(i), int(a), int(o)) for i, a, o in zip(*pts_np)],
+        "id long, lat_e4 long, lon_e4 long",
+    )
+    qs = [(0, 10_000, 10_000), (1, -890_000, 1_790_000)]
+    out = _assert_knn_exact(spark, qs, points, pts_np, k=4)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join Cross" in plan  # the brute-force pass ran
 
 
 def _plan_graphs(spark, since: int) -> list[tuple[dict, list]]:
@@ -132,7 +140,7 @@ def test_knn_join_broadcasts_query_side(spark, points, tmp_path):
     )
     store = spark._jsparkSession.sharedState().statusStore()
     since = store.executionsCount()
-    assert spatial.knn_join(queries, pts, k=5, res=6).count() == 40 * 5
+    assert spatial.knn_join(queries, pts, k=5).count() == 40 * 5
     graphs = _plan_graphs(spark, since)
     n_broadcasts = n_scans = 0
     for nodes, edges in graphs:

@@ -115,6 +115,43 @@ def test_cdc_merge_raises_on_unreadable_state(spark, sf_dir, tmp_path):
     assert garbage.read_bytes() == b"not a parquet file"
 
 
+_FRESH_STATE_STREAM = """
+import sys
+
+from inputosm_spark import get_spark
+from inputosm_spark.streaming import events as stream_ops
+
+landing, state, ckpt = sys.argv[1:]
+spark = get_spark(cpus=2, shuffle_partitions=2, app_name="fresh_state")
+stream_ops.stream_cdc_merge(
+    stream_ops.read_event_stream(spark, landing), state, ckpt
+)
+print(spark.read.parquet(state).count() > 0)
+spark.stop()
+"""
+
+
+def test_cdc_merge_first_batch_logs_no_missing_state(sf_dir, tmp_path):
+    """A state-table stream starting on a fresh path finds no state
+    and says nothing about it: its first micro-batch must not log a
+    failed read (a JVM FileNotFoundException stack trace) of the state
+    table it is about to create."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root, INPUTOSM_DRIVER_MEM="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", _FRESH_STATE_STREAM,
+         _events_dir(sf_dir, tmp_path), str(tmp_path / "state"),
+         str(tmp_path / "ckpt")],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert proc.stdout.split() == ["True"]
+    assert "FileNotFoundException" not in proc.stderr
+
+
 def test_stateful_sessionize_matches_batch(spark, sf_dir, tmp_path):
     """applyInPandasWithState sessionizer: closed sessions must equal
     batch sessionization minus each user's open tail session (which

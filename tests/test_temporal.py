@@ -242,3 +242,24 @@ def test_interval_join_salted_equals_unsalted(spark):
     got = sorted(map(tuple, temporal.interval_join(
         pts, ivals, key="grp", n_salt=16).collect()), key=repr)
     assert got == want and len(want) > 0
+
+
+def test_event_path_ngrams_counts(spark):
+    from inputosm_spark.operators import temporal
+
+    rows = [
+        (1, 1, "2024-01-01 00:00:00", "a"),
+        (1, 2, "2024-01-01 00:01:00", "b"),
+        (1, 3, "2024-01-01 00:02:00", "c"),
+        (1, 4, "2024-01-01 00:03:00", "a"),
+        (2, 5, "2024-01-01 00:00:00", "a"),
+        (2, 6, "2024-01-01 00:01:00", "b"),
+        (2, 7, "2024-01-01 00:02:00", "c"),
+        (3, 8, "2024-01-01 00:00:00", "x"),  # < n events: no grams
+        (3, 9, "2024-01-01 00:01:00", "y"),
+    ]
+    df = spark.createDataFrame(
+        rows, "user_id long, event_id long, ts string, event_type string"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    got = {r.path: r.n for r in temporal.event_path_ngrams(df, n=3).collect()}
+    assert got == {"a>b>c": 2, "b>c>a": 1}
