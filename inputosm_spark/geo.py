@@ -255,9 +255,8 @@ def polyfill_classified(poly_lat_e4, poly_lon_e4, res: int):
     outside are wholly outside and are DROPPED from the cover.
 
     This is the 100 TB join plan: interior ("full") candidate pairs
-    bypass the exact ray-cast refine entirely — only boundary cells pay
-    the Arrow-UDF cost, so refine work scales with polygon perimeter,
-    not area.
+    bypass the exact ray cast entirely — only boundary cells pay it,
+    so the exact work scales with polygon perimeter, not area.
     """
     _check_res(res)
     vy = np.asarray(poly_lat_e4, np.int64)
@@ -320,10 +319,13 @@ def split_antimeridian(poly_lat_e4, poly_lon_e4):
     leave the band are returned unchanged. Seam-interpolated vertices
     are rounded to the e4 grid (≤ 1 unit drift along the seam only).
 
-    Returns a list of (lat_e4, lon_e4) int64 array pairs (open rings).
+    Returns a list of (lat_e4, lon_e4) int64 array pairs (open rings),
+    empty for a ring with no vertices.
     """
     vy = np.asarray(poly_lat_e4, np.int64)
     vx = np.asarray(poly_lon_e4, np.int64)
+    if not len(vx):
+        return []
     if len(vx) > 1 and vx[0] == vx[-1] and vy[0] == vy[-1]:
         vx, vy = vx[:-1], vy[:-1]
     world = 2 * LON_MAX_E4

@@ -4,8 +4,8 @@ join, raster<->vector tiling (north_star core).
 The reference has no general joins — its two-pass ID join
 (/root/reference/test/integration/extract_ferries.cpp:43-107) is the
 pattern these generalize: *bucket first, exact-match second*. Here the
-bucket is a grid cell, the exact phase is a vectorized numpy kernel in
-an Arrow UDF, and Catalyst/AQE picks broadcast vs shuffle.
+bucket is a grid cell, the exact phase is integer column arithmetic in
+Catalyst, and Catalyst/AQE picks broadcast vs shuffle.
 
 Scale design (100 TB corpus, 1000 executors):
 * PIP: one Arrow UDF (polygon_cells) splits each ring at the
@@ -13,15 +13,18 @@ Scale design (100 TB corpus, 1000 executors):
   small (the common case: polygon sets are dimension tables) —
   broadcast, so the point table is never shuffled at all; with a huge
   polygon side the join is a shuffled equi-join on cell where AQE
-  splits skewed cells (dense metro cells are the known hot keys).
+  splits skewed cells (dense metro cells are the known hot keys). The
+  points are scanned and joined once: interior cells keep their rows
+  untested, boundary cells run the exact ray cast as one Catalyst
+  aggregate over the ring arrays (`_ray_cast`) — no Python per point.
 * kNN: k-ring expansion multiplies the small QUERY side (9x, 25x, …),
-  which is broadcast, never the big point side. The ring schedule is
+  which is broadcast, never the big point side. The query side is read
+  to the driver once and each ring round is one job: the unfinished
+  queries go out as an Arrow local relation and their top-k comes back
+  to pandas, where the proven-exact test runs. The ring schedule is
   fixed (ring 1, doubling), so no statistic job runs first and nothing
-  derived from the data is memoized; escalation re-processes only
-  unfilled queries, and the final fallback brute-forces only
-  stragglers.
-* exact refine runs per Arrow batch with numpy vectorized over points,
-  grouped by polygon sub-ring within the batch — no per-row Python.
+  derived from the data is memoized; the final fallback brute-forces
+  only stragglers.
 * raster tiles: one Exchange on tile, then one numpy kernel call per
   partition (mapInArrow) — no per-tile Python call.
 
@@ -45,7 +48,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from inputosm_spark import geo
+from inputosm_spark import geo, metrics
 from inputosm_spark.functions import cells
 
 #: knn_join's grid resolution and its ring rounds (ring 1, 2, 4, 8)
@@ -69,20 +72,21 @@ _COVER = ArrayType(StructType([
 
 
 def polygon_cells(polygons: DataFrame, res: int) -> DataFrame:
-    """polygons -> (poly_id, sub, ring_lat_e4, ring_lon_e4, cell, full)
+    """polygons -> (poly_id, ring_lat_e4, ring_lon_e4, cell, full)
     exploded covering-cell rows; the ring is the seam-free sub-ring
-    that the cell covers and `sub` its ordinal within the polygon.
+    that the cell covers.
 
     One pandas UDF does the whole cover. Per ring,
     geo.split_antimeridian cuts a ring crossing lon ±180 into one
     sub-ring per 360° band (a point in ANY sub-ring joins to the
     original poly_id), then geo.polyfill_classified covers each
-    sub-ring. `full` cells lie entirely inside the polygon (no refine
-    needed); non-full cells are boundary cells that the exact ray-cast
-    refine resolves after the equi-join. The UDF returns each sub-ring
-    once with its cell array and both explodes run in the JVM, so the
-    ring arrays never cross Arrow once per cell. The UDF is built per
-    call so it binds to the current SparkContext.
+    sub-ring; a ring with no vertices has no sub-ring and no cell.
+    `full` cells lie entirely inside the polygon (no test needed);
+    non-full cells are boundary cells that the exact ray cast
+    (`_ray_cast`) resolves after the equi-join. The UDF returns each
+    sub-ring once with its cell array and both explodes run in the
+    JVM, so the ring arrays never cross Arrow once per cell. The UDF
+    is built per call so it binds to the current SparkContext.
     """
 
     @F.pandas_udf(_COVER)
@@ -102,10 +106,35 @@ def polygon_cells(polygons: DataFrame, res: int) -> DataFrame:
         return pd.Series(out)
 
     rings = polygons.select(
-        "poly_id", F.posexplode(_cover("ring_lat_e4", "ring_lon_e4")).alias("sub", "r")
-    ).select("poly_id", "sub", "r.ring_lat_e4", "r.ring_lon_e4",
+        "poly_id", F.explode(_cover("ring_lat_e4", "ring_lon_e4")).alias("r")
+    ).select("poly_id", "r.ring_lat_e4", "r.ring_lon_e4",
              F.explode("r.cells").alias("cf"))
-    return rings.select("poly_id", "sub", "ring_lat_e4", "ring_lon_e4", "cf.cell", "cf.full")
+    return rings.select("poly_id", "ring_lat_e4", "ring_lon_e4", "cf.cell", "cf.full")
+
+
+def _ray_cast(lat: str, lon: str, ring_lat: str, ring_lon: str) -> Column:
+    """geo.point_in_polygon's even-odd ray cast as one Catalyst
+    `aggregate` over sequence(0, n-1): edge i runs from vertex i's
+    predecessor j to vertex i, and flips the parity when it straddles
+    the point's latitude and crosses the ray east of it. The straddle
+    test and the cross-multiplied crossing test are the numpy
+    kernel's, in int64: e4 coordinate differences stay below 3.6e6, so
+    every product stays below about 6.5e12 and is exact, as numpy's
+    float64 products are. A closed ring's repeated first vertex adds a
+    zero-length edge, which never straddles. The ring must have a
+    vertex (polygon_cells emits no cell for an empty ring)."""
+    py, px = F.col(lat), F.col(lon)
+    vy, vx = F.col(ring_lat), F.col(ring_lon)
+    n = F.size(vy)
+
+    def flip(inside: Column, i: Column) -> Column:
+        j = F.when(i == 0, n - 1).otherwise(i - 1)
+        yi, yj, xi, xj = vy[i], vy[j], vx[i], vx[j]
+        lhs, rhs = (px - xi) * (yj - yi), (py - yi) * (xj - xi)
+        crosses = F.when(yj > yi, lhs < rhs).otherwise(lhs > rhs)
+        return inside != (((yi > py) != (yj > py)) & crosses)
+
+    return F.aggregate(F.sequence(F.lit(0), n - 1), F.lit(False), flip)
 
 
 # exploded polygon covering-cell rows at or below which pip_join
@@ -131,11 +160,19 @@ def pip_join(
     (polygon_cells / geo.split_antimeridian), so coverage and
     containment hold on both sides of the seam.
 
+    The points are scanned and equi-joined on cell once, against the
+    whole cover (cell, poly_id, full, sub-ring arrays), and filtered on
+    `full OR _ray_cast(...)`: rows in interior cells are kept untested,
+    rows in boundary cells get the exact ray cast in Catalyst.
+
     Physical strategy: polygon covering cells are counted; up to
-    _PIP_BROADCAST_MAX_CELLS exploded rows the polygon side is
-    broadcast (point table untouched by shuffle — the 100 TB plan),
-    otherwise a shuffled equi-join on cell with AQE skew splitting.
+    _PIP_BROADCAST_MAX_CELLS exploded rows the cover is broadcast
+    (point table untouched by shuffle — the 100 TB plan), otherwise a
+    shuffled equi-join on cell with AQE skew splitting.
     `force_broadcast=True/False` picks the strategy without the count.
+    The choice is logged through metrics.log as
+    `pip_join strategy=broadcast|shuffle cells=N` (N is `uncounted`
+    when forced).
     """
     # cache the exploded covering cells: the count() below and the join
     # both consume them — without the cache the cover UDF runs twice
@@ -150,63 +187,31 @@ def pip_join(
     # build side's size class — `force_broadcast` skips the measuring
     # job entirely (one fewer serial driver-side barrier per run; at
     # high parallelism these sync points are what Amdahl eats first)
+    n_cells = "uncounted"
     if force_broadcast is None:
-        n_poly_cells = pcells.count()  # tiny aggregate; drives the plan choice
-        do_broadcast = n_poly_cells <= _PIP_BROADCAST_MAX_CELLS
+        n_cells = pcells.count()  # tiny aggregate; drives the plan choice
+        do_broadcast = n_cells <= _PIP_BROADCAST_MAX_CELLS
     else:
         do_broadcast = force_broadcast
-    # split the build side: interior ("full") cells join WITHOUT the
-    # ring arrays — interior candidates (the bulk: polygon area) are
-    # contained by construction, so copying rings into them would be
-    # pure memory traffic; only boundary cells carry rings into the
-    # Arrow-UDF exact refine, so Python + memory work scales with
-    # polygon perimeter, not area
-    right_full = pcells.filter(F.col("full")).select(
-        F.col("cell").alias("__cell"), "poly_id"
-    )
-    right_edge = pcells.filter(~F.col("full")).select(
-        F.col("cell").alias("__cell"), "poly_id", F.col("sub").alias("__sub"),
-        "ring_lat_e4", "ring_lon_e4",
-    )
+    metrics.log("info", f"pip_join strategy={'broadcast' if do_broadcast else 'shuffle'} "
+                        f"cells={n_cells}")
+    cover = pcells.select(F.col("cell").alias("__cell"), "poly_id", "full",
+                          "ring_lat_e4", "ring_lon_e4")
     if do_broadcast:
-        right_full = F.broadcast(right_full)
-        right_edge = F.broadcast(right_edge)
-
-    # exact refine, built per call so it binds to the current
-    # SparkContext. Rows are grouped by (poly_id, sub) — a cheap
-    # vectorized factorize, never per-row ring hashing — so the numpy
-    # ray cast runs once per sub-ring per Arrow batch over all its
-    # points; the sub-rings of one seam-crossing polygon share its
-    # poly_id but not its ring.
-    @F.pandas_udf(BooleanType())
-    def _pip_refine(lat: pd.Series, lon: pd.Series, poly_id: pd.Series,
-                    sub: pd.Series, ring_lat: pd.Series,
-                    ring_lon: pd.Series) -> pd.Series:
-        plat = lat.to_numpy(dtype=np.int64)
-        plon = lon.to_numpy(dtype=np.int64)
-        out = np.zeros(len(lat), dtype=bool)
-        pcodes, _ = pd.factorize(poly_id, sort=False)
-        codes = (pcodes.astype(np.int64) << 32) + sub.to_numpy(dtype=np.int64)
-        for g in np.unique(codes):
-            ii = np.nonzero(codes == g)[0]
-            ra = np.asarray(ring_lat.iloc[ii[0]], dtype=np.int64)
-            ro = np.asarray(ring_lon.iloc[ii[0]], dtype=np.int64)
-            out[ii] = geo.point_in_polygon(plat[ii], plon[ii], ra, ro)
-        return pd.Series(out)
-
-    inside_full = pts.join(right_full, "__cell").drop("__cell")
-    refined = (
-        pts.join(right_edge, "__cell")
-        .filter(_pip_refine("lat_e4", "lon_e4", "poly_id", "__sub", "ring_lat_e4",
-                            "ring_lon_e4"))
-        .drop("__cell", "__sub", "ring_lat_e4", "ring_lon_e4")
+        cover = F.broadcast(cover)
+    return (
+        pts.join(cover, "__cell")
+        .filter(F.col("full") | _ray_cast("lat_e4", "lon_e4", "ring_lat_e4", "ring_lon_e4"))
+        .drop("__cell", "full", "ring_lat_e4", "ring_lon_e4")
     )
-    return inside_full.unionAll(refined)
 
 
 # ---------------------------------------------------------------------------
 # k-ring kNN join
 # ---------------------------------------------------------------------------
+
+
+_KNN_SCHEMA = "qid long, neighbor_id long, dist2 long, rank int"
 
 
 def knn_join(queries: DataFrame, points: DataFrame, k: int) -> DataFrame:
@@ -226,6 +231,17 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int) -> DataFrame:
     pass. The schedule reads nothing from the data: no statistic job
     runs before the first round. Only the (small) query side is ever
     replicated; the big point side is scanned with an equi-join.
+
+    The query side is read to the driver once (it is broadcast anyway,
+    so it is assumed small) and each round is one job: the unfinished
+    queries go out as an Arrow local relation, the round's top-k (at
+    most |remaining| * k rows) comes back with toPandas, and the
+    proven-exact test runs in pandas. The finished rows return as one
+    Arrow local relation, unioned with the lazy brute-force pass when
+    stragglers remain. One `key=value` line goes through metrics.log:
+    `knn_join res=6 rings=1,2 remaining=200,100,0 brute=0` (queries
+    left before the first round and after each one, and the number
+    brute-forced).
     """
     res = _KNN_RES
     nx, ny = 2 ** (res + 1), 2**res
@@ -236,71 +252,57 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int) -> DataFrame:
 
     from inputosm_spark.operators import ensure_parallelism
 
+    spark = points.sparkSession
     pts = ensure_parallelism(points).select(
         F.col("id").alias("__pid"),
         F.col("lat_e4").alias("__plat"),
         F.col("lon_e4").alias("__plon"),
         cells.cell_id_expr("lat_e4", "lon_e4", res).alias("__cell"),
     )
-
     remaining = queries.select(
         F.col("qid").alias("__qid"),
         F.col("lat_e4").alias("__qlat"),
         F.col("lon_e4").alias("__qlon"),
-    )
-    results = None
-    ring = 1
-    for _ in range(_KNN_MAX_ROUNDS):
-        # the exploded query side is broadcast explicitly: a
-        # createDataFrame or checkpointed frame reports no size, so
-        # left to the planner the point scan would be the build side
-        probes = remaining.withColumn(
+    ).toPandas()
+    w = Window.partitionBy("__qid").orderBy("__d2", "__pid")
+    done = [pd.DataFrame({c: [] for c in ("__qid", "__pid", "__d2", "__rn")},
+                         dtype="int64")]
+    rings, left = [], [len(remaining)]
+    for ring in (1 << r for r in range(_KNN_MAX_ROUNDS)):
+        if remaining.empty:
+            break
+        # the exploded query side is broadcast explicitly, so the point
+        # scan is never the build side whatever the planner estimates
+        probes = spark.createDataFrame(remaining).withColumn(
             "__cell", F.explode(cells.kring_expr("__qlat", "__qlon", res, ring))
         )
-        cand = (
+        topk = (
             F.broadcast(probes)
             .join(pts, "__cell")
             .select(
                 "__qid",
-                "__qlat",
-                "__qlon",
                 "__pid",
-                cells.dist2_expr("__qlat", "__qlon", "__plat", "__plon").alias(
-                    "__d2"
-                ),
+                cells.dist2_expr("__qlat", "__qlon", "__plat", "__plon").alias("__d2"),
             )
-        )
-        w = Window.partitionBy("__qid").orderBy("__d2", "__pid")
-        # topk is at most |remaining| * k rows — materialize it once
-        # (localCheckpoint severs lineage so later rounds never re-run
-        # this round's big equi-join)
-        topk = (
-            cand.withColumn("__rn", F.row_number().over(w))
+            .withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= k)
-            .localCheckpoint(eager=True)
+            .toPandas()
         )
         # proven-exact iff k found AND kth dist fits inside the ring bound
-        safe_d = (ring * w_min) ** 2
-        per_q = topk.groupBy("__qid").agg(
-            F.count("*").alias("__n"), F.max("__d2").alias("__dk")
-        )
-        done_q = per_q.filter((F.col("__n") == k) & (F.col("__dk") <= safe_d)).select(
-            "__qid"
-        )
-        done = topk.join(F.broadcast(done_q), "__qid", "left_semi").select(
-            "__qid", "__pid", "__d2", "__rn"
-        )
-        results = done if results is None else results.unionAll(done)
-        remaining = remaining.join(
-            F.broadcast(done_q), "__qid", "left_anti"
-        ).localCheckpoint(eager=True)
-        if remaining.isEmpty():
-            break
-        ring *= 2
-    else:
+        per_q = topk.groupby("__qid")["__d2"].agg(["size", "max"])
+        ok = per_q.index[(per_q["size"] == k) & (per_q["max"] <= (ring * w_min) ** 2)]
+        done.append(topk[topk["__qid"].isin(ok)])
+        remaining = remaining[~remaining["__qid"].isin(ok)]
+        rings.append(ring)
+        left.append(len(remaining))
+    metrics.log("info", f"knn_join res={res} rings={','.join(map(str, rings))} "
+                        f"remaining={','.join(map(str, left))} brute={len(remaining)}")
+
+    results = spark.createDataFrame(pd.concat(done), _KNN_SCHEMA)
+    if not remaining.empty:
         # brute-force the stragglers: tiny query side x full point scan
         cand = (
-            F.broadcast(remaining)
+            F.broadcast(spark.createDataFrame(remaining))
             .crossJoin(pts.drop("__cell"))
             .select(
                 "__qid",
@@ -310,20 +312,13 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int) -> DataFrame:
                 ),
             )
         )
-        w = Window.partitionBy("__qid").orderBy("__d2", "__pid")
         brute = (
             cand.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= k)
             .select("__qid", "__pid", "__d2", "__rn")
         )
-        results = brute if results is None else results.unionAll(brute)
-
-    return results.select(
-        F.col("__qid").alias("qid"),
-        F.col("__pid").alias("neighbor_id"),
-        F.col("__d2").alias("dist2"),
-        F.col("__rn").alias("rank"),
-    )
+        results = results.unionAll(brute)
+    return results
 
 
 # ---------------------------------------------------------------------------

@@ -445,7 +445,7 @@ def _doc_cells(spark: SparkSession, sf_dir: str, *cols, **res) -> DataFrame:
 @register("pip_join_boxes", oracle=_PIP_BOXES_SQL)
 def q_pip_join_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cell-bucketed PIP join (north_star). The engine path is fully
-    general (polyfill + ray-cast refine in Arrow UDFs); the oracle uses
+    general (polyfill in an Arrow UDF, ray cast in Catalyst); the oracle uses
     the boxes' closed-open bbox form, which the ray-cast's boundary
     rule reproduces exactly.
     """

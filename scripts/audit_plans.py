@@ -244,8 +244,16 @@ CHECKS: dict[str, list[str]] = {
     "training_pipeline": [r"windowspecdefinition\(fp#"],
 }
 
+# a Python UDF node (formatted details) evaluating anything but the
+# polygon cover: the PIP exact test runs in Catalyst, never in Python
+# over joined point rows
+_PY_EVAL_NOT_COVER = (r"(Arrow|Batch)EvalPython\nInput \[\d+\]: [^\n]*\n"
+                      r"Arguments: \[(?!_cover\()")
+
 # patterns that must NOT appear (regression = reintroduced anti-pattern)
 ANTI_CHECKS: dict[str, list[str]] = {
+    "pip_join_boxes": [_PY_EVAL_NOT_COVER],
+    "pip_anti_join": [_PY_EVAL_NOT_COVER],
     # 16x bit explode would reappear as a second Generate (the first is
     # the token split explode)
     "simhash": [r"Generate explode.*Generate explode"],

@@ -13,7 +13,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from inputosm_spark import geo
+from inputosm_spark import geo, metrics
 from inputosm_spark.datagen import synth_polygons
 from inputosm_spark.functions import cells
 from inputosm_spark.operators import spatial
@@ -47,6 +47,58 @@ def test_pip_join_exact_vs_bruteforce(spark, points, points_np):
         want |= {(int(i), p.poly_id) for i in ids[inside]}
     assert got == want
     assert len(want) > 100  # the metro box guarantees plenty of matches
+
+
+def _edge_points(ring_lat, ring_lon):
+    """(lat, lon) of every vertex, and of points along every edge that
+    runs horizontal or vertical (the ray cast's boundary cases)."""
+    la, lo = np.asarray(ring_lat), np.asarray(ring_lon)
+    out = list(zip(la, lo))
+    for i in range(len(la)):
+        a, b = (la[i - 1], lo[i - 1]), (la[i], lo[i])
+        if a[0] == b[0] or a[1] == b[1]:
+            out += [(a[0] + (b[0] - a[0]) * t // 4, a[1] + (b[1] - a[1]) * t // 4)
+                    for t in (1, 2, 3)]
+    return out
+
+
+def test_ray_cast_matches_numpy(spark):
+    """The Catalyst ray cast equals geo.point_in_polygon row for row:
+    seeded random points, points on vertices and on horizontal and
+    vertical edges, against a concave, an open, a closed ring and both
+    sub-rings of a seam-split ring. An empty ring gets no cover cell,
+    so the ray cast never indexes an empty array."""
+    concave = ([0, 0, 20_000, 20_000, 40_000, 40_000],
+               [0, 40_000, 40_000, 20_000, 20_000, 0])
+    closed = (concave[0] + [0], concave[1] + [0])
+    tri = ([-30_000, 50_000, -10_000], [-20_000, 5_000, 70_000])
+    seam = geo.split_antimeridian(np.array([-100_000, -100_000, 100_000, 100_000]),
+                                  np.array([1_700_000, -1_700_000, -1_700_000, 1_700_000]))
+    assert len(seam) == 2
+    rings = [concave, closed, tri] + [(list(la), list(lo)) for la, lo in seam]
+    rng = np.random.default_rng(14)
+    rows = []
+    for r, (la, lo) in enumerate(rings):
+        la, lo = [int(v) for v in la], [int(v) for v in lo]
+        pts = _edge_points(la, lo)
+        pts += zip(rng.integers(min(la) - 5_000, max(la) + 5_000, 300),
+                   rng.integers(max(min(lo) - 5_000, -1_800_000),
+                                min(max(lo) + 5_000, 1_800_000), 300))
+        rows += [(r, int(a), int(o), la, lo) for a, o in pts]
+    df = spark.createDataFrame(
+        rows, "r int, lat_e4 long, lon_e4 long, ring_lat_e4 array<long>, "
+              "ring_lon_e4 array<long>")
+    got = [x.inside for x in df.select(
+        spatial._ray_cast("lat_e4", "lon_e4", "ring_lat_e4", "ring_lon_e4")
+        .alias("inside")).collect()]
+    want = [bool(geo.point_in_polygon([a], [o], la, lo)[0]) for _, a, o, la, lo in rows]
+    assert got == want
+    assert 0 < sum(want) < len(want)
+
+    polys = spark.createDataFrame(
+        [("empty", [], []), ("box", [0, 0, 10_000, 10_000], [0, 10_000, 10_000, 0])],
+        "poly_id string, ring_lat_e4 array<long>, ring_lon_e4 array<long>")
+    assert {r.poly_id for r in spatial.polygon_cells(polys, 6).collect()} == {"box"}
 
 
 def test_pip_join_broadcast_vs_shuffle_same_result(spark, points, no_broadcast):
@@ -160,6 +212,69 @@ def test_knn_join_broadcasts_query_side(spark, points, tmp_path):
                         todo.append(p)
             assert "BroadcastExchange" not in {nodes[p] for p in above}
     assert n_scans and n_broadcasts  # the query side was broadcast
+
+
+def test_knn_join_empty_queries(spark, points):
+    queries = spark.createDataFrame([], "qid long, lat_e4 long, lon_e4 long")
+    out = spatial.knn_join(queries, points, k=3)
+    assert out.schema.simpleString() == (
+        "struct<qid:bigint,neighbor_id:bigint,dist2:bigint,rank:int>")
+    assert out.count() == 0
+
+
+def _log_lines(monkeypatch) -> list[str]:
+    """Messages metrics.log delivers while the test runs."""
+    got: list[str] = []
+    monkeypatch.setattr(metrics, "_log_callback", None)
+    monkeypatch.setattr(metrics, "_log_level", "info")
+    metrics.set_log_callback(lambda level, msg: got.append(msg))
+    return got
+
+
+def _fields(lines: list[str], op: str) -> dict[str, str]:
+    """key=value fields of the one log line of `op`."""
+    (line,) = [m for m in lines if m.split()[0] == op]
+    return dict(kv.split("=") for kv in line.split()[1:])
+
+
+def test_knn_join_one_round_is_one_job(spark, monkeypatch):
+    """On clustered points every query is proven at ring 1, and the
+    call starts exactly two SQL executions, the one read of the query
+    frame and the round, and logs what it did."""
+    points = spark.range(900).select(
+        "id", (F.col("id") % 30 * 10).alias("lat_e4"),
+        (F.floor(F.col("id") / 30) * 10).alias("lon_e4"))
+    ids = np.arange(900)
+    pts_np = (ids, ids % 30 * 10, ids // 30 * 10)
+    qs = [(0, 55, 52), (1, 151, 120)]
+    queries = spark.createDataFrame(qs, "qid long, lat_e4 long, lon_e4 long")
+    lines = _log_lines(monkeypatch)
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    since = store.executionsCount()
+    out = spatial.knn_join(queries, points, k=5)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    assert store.executionsCount() - since == 2
+    assert _fields(lines, "knn_join") == {
+        "res": "6", "rings": "1", "remaining": "2,0", "brute": "0"}
+    got = {}
+    for r in out.collect():
+        got.setdefault(r.qid, []).append((r.neighbor_id, r.dist2, r.rank))
+    for qid, qlat, qlon in qs:
+        assert sorted(got[qid], key=lambda t: t[2]) == _knn_oracle(qlat, qlon, *pts_np, 5)
+
+
+def test_pip_join_logs_strategy(spark, points, monkeypatch):
+    polys = synth_polygons(spark)
+    lines = _log_lines(monkeypatch)
+    spatial.pip_join(points, polys, res=6)
+    assert _fields(lines, "pip_join") == {
+        "strategy": "broadcast",
+        "cells": str(spatial.polygon_cells(polys, 6).count())}
+    lines.clear()
+    spatial.pip_join(points, polys, res=6, force_broadcast=False)
+    assert _fields(lines, "pip_join") == {"strategy": "shuffle", "cells": "uncounted"}
 
 
 def test_tile_counts_vs_bruteforce(spark, points, points_np):
