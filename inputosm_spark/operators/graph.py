@@ -19,12 +19,23 @@ without a fixpoint RAISES — a silent exit would mislabel clusters.
 Deterministic end to end (min over int64 labels, no RNG), so a SQL
 engine replays it with a recursive-CTE transitive closure — the
 `dedup_clusters` oracle does exactly that.
+
+The other graph operators here (pagerank, triangle counts, BFS, label
+propagation) share two conventions with CC. Their input is an edge
+SET: duplicate rows are dropped inside the operator (BFS reachability
+does not depend on them), never by the caller. And one byte cap
+(`_fits`) decides every broadcast and the local finishes: when the
+edges fit, CC runs its remaining rounds in one kernel task and
+pagerank runs all its iterations in numpy on the driver, each from a
+single read of the input.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from inputosm_spark import metrics
 
 # serialized broadcast-hash-relation footprint per (long, long) edge
 # row: 16 B of data + key/row overhead in the LongHashedRelation
@@ -241,6 +252,49 @@ def connected_components(
     return labels.unionAll(roots)
 
 
+_PR_RANK_MSG = (
+    "pagerank: rank exceeds 2^53 — the double floor-division is no "
+    "longer exact vs the integer oracle; lower `scale`"
+)
+_PR_MASS_MSG = (
+    "pagerank: damping_num * contribution mass exceeds 2^53 — the double "
+    "floor-division is no longer exact vs the integer oracle; lower `scale`"
+)
+
+
+def _pagerank_local(pairs, iters, damping_num, damping_den, scale):
+    """All `iters` iterations over a driver-side (m, 2) int64 array of
+    DISTINCT edges in numpy: the operator's integer contract, guards
+    and messages, with no Spark job. Returns (nodes, ranks).
+
+    The in-contributions are summed by a float64 bincount, which is
+    exact here and cannot wrap: every contribution is a non-negative
+    integer < 2^53 (the rank guard), so each running sum is exact
+    while it stays <= s_bound < 2^53, and rounding never takes a sum
+    that passed s_bound back under it. The mass guard therefore fires
+    exactly when the integer sum passes s_bound, and below it the
+    cast back to int64 is the integer sum. (An int64 np.add.at would
+    wrap silently past 2^63, where Spark's ANSI sum raises.)"""
+    import numpy as np
+
+    nodes, inv = np.unique(pairs.ravel(), return_inverse=True)
+    si, di = inv[0::2], inv[1::2]
+    n = len(nodes)
+    deg = np.bincount(si, minlength=n)[si]
+    base = scale * (damping_den - damping_num) // damping_den
+    s_bound = ((1 << 53) - 1) // damping_num
+    rank = np.full(n, scale, dtype=np.int64)
+    for _ in range(iters):
+        r = rank[si]
+        if len(r) and r.max() >= 1 << 53:
+            raise RuntimeError(_PR_RANK_MSG)
+        s = np.bincount(di, weights=r // deg, minlength=n)
+        if n and s.max() > s_bound:
+            raise RuntimeError(_PR_MASS_MSG)
+        rank = base + damping_num * s.astype(np.int64) // damping_den
+    return nodes, rank
+
+
 def pagerank(
     edges: DataFrame,
     iters: int = 3,
@@ -248,10 +302,13 @@ def pagerank(
     damping_den: int = 100,
     scale: int = 1_000_000,
 ) -> DataFrame:
-    """Fixed-point integer PageRank over a directed edge list — the
-    link-graph document-quality prior of web-corpus curation (the
+    """Fixed-point integer PageRank over a directed edge SET (src, dst)
+    — the link-graph document-quality prior of web-corpus curation (the
     reference has no graph operators; this extends the dedup CC stack
-    with the other classic iterative graph computation).
+    with the other classic iterative graph computation). Duplicate
+    (src, dst) rows are dropped inside the operator, as CC, triangle
+    counts and LPA do, so a repeated link counts once in the out-degree
+    and the contributions.
 
     ALL arithmetic is integer (ranks scaled by `scale`, floor
     division), so a DuckDB oracle replays every iteration bit-for-bit
@@ -262,33 +319,68 @@ def pagerank(
     (no out-edges) simply contribute nothing — no redistribution term,
     and the SQL twin states the same contract.
 
-    Scale shape: the (edges JOIN outdeg) frame is loop-invariant —
-    built once and CACHED (an InMemoryRelation preserves its child's
-    outputPartitioning; a checkpointed LogicalRDD reports
-    UnknownPartitioning and re-paid the exchanges every iteration —
-    the LPA lesson, r7). When the rank table fits the byte cap it is
-    broadcast per iteration and the cache is partitioned on the
-    AGGREGATION key dst, so each iteration runs with ZERO exchanges
-    (map-side join -> in-place dst aggregation -> broadcast the
-    aggregate onto the cached node table). Past the cap the cache
+    Local finish: when the edge rows fit the graph byte cap (`_fits`),
+    the input is read ONCE with a bounded collect (cap + 1 rows, so an
+    oversized input costs one capped read, never a count job) and all
+    iterations run in numpy on the driver (`_pagerank_local`: np.unique
+    dedup, bincount out-degree, an exact bincount scatter of the
+    contributions). The result returns as an Arrow local relation: one
+    Spark job per call, no cache, no shuffle (the distributed path ran
+    9 jobs and 257 tasks at local[4] for the 2,100-node, 52k-edge
+    catalog graph: per-job fixed cost, not work).
+
+    Scale shape past the cap: the deduplicated (edges JOIN outdeg)
+    frame is loop-invariant — built once and CACHED (an
+    InMemoryRelation preserves its child's outputPartitioning; a
+    checkpointed LogicalRDD reports UnknownPartitioning and re-paid the
+    exchanges every iteration — the LPA lesson, r7); the dedup runs in
+    place on the cache's repartition. When the rank table fits the
+    byte cap it is broadcast per iteration and the cache is partitioned
+    on the AGGREGATION key dst, so each iteration runs with ZERO
+    exchanges (map-side join -> in-place dst aggregation -> broadcast
+    the aggregate onto the cached node table). Past the cap the cache
     partitions on the join key src and iterations shuffle only the
     narrow rank table — the 100 TB plan. The per-iteration frames are
     plain lazy plans (iters is small and bounded; for deep iteration
     counts sever lineage per round like connected_components does).
 
-    Exactness bound (r5 ADVICE): both floor divisions run as doubles,
-    exact (== the oracle's integer //) only while the dividend stays
-    < 2^53 — rank for rank/outdeg, damping_num * sum(contributions)
-    for the damping term. In-plan assert_true guards enforce both
-    (the engine's loud-failure pattern, mirroring priority_sample):
-    past the bound the job RAISES instead of silently diverging from
-    the oracle. The contribution-mass guard compares sum(contrib)
-    against a precomputed bound WITHOUT multiplying (the product
-    itself could trip ANSI int64 overflow first and swallow the
+    One `key=value` line goes through metrics.log:
+    `pagerank strategy=local edges=N` (distinct edges) or
+    `pagerank strategy=broadcast|shuffle nodes=M`.
+
+    Exactness bound (r5 ADVICE): both floor divisions run as doubles on
+    the distributed path, exact (== the oracle's integer //) only while
+    the dividend stays < 2^53 — rank for rank/outdeg, damping_num *
+    sum(contributions) for the damping term. In-plan assert_true guards
+    enforce both (the engine's loud-failure pattern, mirroring
+    priority_sample): past the bound the job RAISES instead of silently
+    diverging from the oracle. The contribution-mass guard compares
+    sum(contrib) against a precomputed bound WITHOUT multiplying (the
+    product itself could trip ANSI int64 overflow first and swallow the
     diagnostic), and each guard leads its addition so it evaluates
-    before the division/product does. For graphs whose total rank
-    mass approaches 2^53 / damping_num, lower `scale`.
+    before the division/product does. The local path checks the same
+    two bounds (the ranks of source nodes, every node's mass) and
+    raises the same messages, so both sides of the gate fail alike.
+    For graphs whose total rank mass approaches 2^53 / damping_num,
+    lower `scale`.
     """
+    spark = edges.sparkSession
+    if _fits(spark, 0):
+        cap = _CLOSING_BROADCAST_MAX_BYTES // _EDGE_ROW_BYTES
+        pdf = edges.select("src", "dst").limit(cap + 1).toPandas()
+        if len(pdf) <= cap:
+            import numpy as np
+            import pandas as pd
+
+            pairs = np.unique(pdf.to_numpy(dtype="int64"), axis=0)
+            metrics.log("info", f"pagerank strategy=local edges={len(pairs)}")
+            nodes, rank = _pagerank_local(
+                pairs, iters, damping_num, damping_den, scale
+            )
+            return spark.createDataFrame(
+                pd.DataFrame({"node": nodes, "rank": rank}),
+                "node long, rank long",
+            )
     base = scale * (damping_den - damping_num) // damping_den
     # nodes feeds iters+1 plan branches (initial ranks + every
     # iteration's left join): cache it, or each branch re-scans and
@@ -302,34 +394,29 @@ def pagerank(
     # the node count is loop-invariant (every node keeps exactly one
     # rank row): one exact count drives the per-iteration broadcast
     # gate and the cache partitioning key (the LPA sizing pattern)
-    rank_fits = _fits(edges.sparkSession, nodes.count())
-    deg = edges.groupBy("src").agg(F.count("*").alias("__deg"))
+    n_nodes = nodes.count()
+    rank_fits = _fits(spark, n_nodes)
+    metrics.log("info", f"pagerank strategy="
+                        f"{'broadcast' if rank_fits else 'shuffle'} nodes={n_nodes}")
+    deg = edges.groupBy("src").agg(F.countDistinct("dst").alias("__deg"))
     # loop-invariant: edges carrying their source out-degree, cached
     # once so every iteration reuses the materialized columnar blocks
     # AND their partitioning — on the aggregation key dst when ranks
     # broadcast (zero-exchange iterations), on the join key src past
-    # the cap (iterations shuffle only the narrow rank table)
+    # the cap (iterations shuffle only the narrow rank table). Either
+    # key clusters (src, dst), so the dedup runs in place.
     ed = (
-        edges.join(deg, "src")
+        edges.select("src", "dst")
+        .join(deg, "src")
         .repartition(F.col("dst" if rank_fits else "src"))
+        .dropDuplicates(["src", "dst"])
         .cache()
     )
     _b = F.broadcast if rank_fits else (lambda df: df)
-    rank_guard = F.assert_true(
-        F.col("rank") < F.lit(1 << 53),
-        F.lit(
-            "pagerank: rank exceeds 2^53 — the double floor-division "
-            "is no longer exact vs the integer oracle; lower `scale`"
-        ),
-    )
+    rank_guard = F.assert_true(F.col("rank") < F.lit(1 << 53), F.lit(_PR_RANK_MSG))
     s_bound = ((1 << 53) - 1) // damping_num
     s_guard = F.assert_true(
-        F.coalesce(F.col("__s"), F.lit(0)) <= F.lit(s_bound),
-        F.lit(
-            "pagerank: damping_num * contribution mass exceeds 2^53 — "
-            "the double floor-division is no longer exact vs the "
-            "integer oracle; lower `scale`"
-        ),
+        F.coalesce(F.col("__s"), F.lit(0)) <= F.lit(s_bound), F.lit(_PR_MASS_MSG)
     )
     ranks = nodes.select("node", F.lit(scale).cast("long").alias("rank"))
     for _ in range(iters):

@@ -3599,14 +3599,16 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-point integer PageRank (operators/graph.pagerank, 3
     iterations) over the supplier->part link graph from lineitem — the
     web-graph document-quality prior of corpus curation, all-integer
-    so the oracle unrolls the exact same three iterations as CTEs."""
+    so the oracle unrolls the exact same three iterations as CTEs. The
+    operator takes the edge set of the (repeating) lineitem pairs, the
+    oracle's SELECT DISTINCT."""
     from inputosm_spark.operators import graph
 
     li = _t(spark, sf_dir, "lineitem")
     edges = li.select(
         F.col("l_suppkey").alias("src"),
         (F.col("l_partkey") + 100000).alias("dst"),
-    ).distinct()
+    )
     return graph.pagerank(edges, iters=3)
 
 

@@ -30,3 +30,25 @@ def no_broadcast(spark):
     spark.conf.set(key, "-1")
     yield
     spark.conf.set(key, orig)
+
+
+class _LogLines(list):
+    """Messages metrics.log delivered while the test ran."""
+
+    def fields(self, op: str) -> dict[str, str]:
+        """key=value fields of the one log line of `op`."""
+        (line,) = [m for m in self if m.split()[0] == op]
+        return dict(kv.split("=") for kv in line.split()[1:])
+
+
+@pytest.fixture
+def engine_log(monkeypatch):
+    """Capture the engine's metrics.log lines at level info for one
+    test; the previous callback and level come back afterwards."""
+    from inputosm_spark import metrics
+
+    got = _LogLines()
+    monkeypatch.setattr(metrics, "_log_callback", None)
+    monkeypatch.setattr(metrics, "_log_level", "info")
+    metrics.set_log_callback(lambda level, msg: got.append(msg))
+    return got

@@ -97,8 +97,9 @@ def test_gated_operators_match_references(spark, request, distributed):
     got = {r.node: r.component
            for r in graph.connected_components(cc).collect()}
     assert got == _ref_components(_GRAPH)
-    got = {r.node: r.rank for r in graph.pagerank(cc, iters=3).collect()}
-    assert got == _ref_pagerank(_GRAPH, 3)
+    for edges in (cc, cc.unionAll(cc)):
+        got = {r.node: r.rank for r in graph.pagerank(edges, iters=3).collect()}
+        assert got == _ref_pagerank(_GRAPH, 3)
     uv = spark.createDataFrame(_GRAPH, "u long, v long")
     got = {r.node: r.n_tri
            for r in graph.triangle_counts(uv.unionAll(uv)).collect()}
@@ -207,6 +208,83 @@ def test_pagerank_dangling_nodes_keep_base_rank(spark):
     assert ranks[1] == 150_000
     # 2 and 3 split 1's rank evenly
     assert ranks[2] == ranks[3]
+
+
+def _pagerank_plan(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted")
+
+
+@pytest.mark.parametrize("strategy", ["broadcast", "shuffle"])
+def test_pagerank_distributed_iterations_read_the_cache(
+        spark, request, monkeypatch, engine_log, strategy):
+    """Past the edge cap the iterations read the cached (edges x
+    outdeg) frame (InMemoryTableScan) and aggregate over it, with the
+    rank table broadcast while the node count fits the cap (edges 18 >
+    cap 16 >= nodes 14 here) and shuffled when broadcasting is off."""
+    if strategy == "broadcast":
+        monkeypatch.setattr(graph, "_CLOSING_BROADCAST_MAX_BYTES",
+                            16 * graph._EDGE_ROW_BYTES)
+    else:
+        request.getfixturevalue("no_broadcast")
+    cc = spark.createDataFrame(_GRAPH, "src long, dst long")
+    out = graph.pagerank(cc.unionAll(cc), iters=3)
+    assert engine_log.fields("pagerank") == {
+        "strategy": strategy, "nodes": "14"}
+    plan = _pagerank_plan(out)
+    assert "InMemoryTableScan" in plan and "HashAggregate" in plan
+    assert ("BroadcastHashJoin" in plan) == (strategy == "broadcast")
+    got = {r.node: r.rank for r in out.collect()}
+    assert got == _ref_pagerank(_GRAPH, 3)
+
+
+def test_pagerank_local_path_is_one_job(spark, engine_log):
+    """Under the cap the call reads its input once, runs every
+    iteration on the driver, logs the distinct edge count and leaves
+    no cache behind; the result is a local relation."""
+    cc = spark.createDataFrame(_GRAPH, "src long, dst long")
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    since = store.executionsCount()
+    n_rdds = sc._jsc.getPersistentRDDs().size()
+    out = graph.pagerank(cc.unionAll(cc), iters=3)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    assert store.executionsCount() - since == 1
+    assert sc._jsc.getPersistentRDDs().size() == n_rdds
+    assert engine_log.fields("pagerank") == {
+        "strategy": "local", "edges": str(len(_GRAPH))}
+    plan = _pagerank_plan(out)
+    assert "LocalTableScan" in plan and "Exchange" not in plan
+    assert {r.node: r.rank for r in out.collect()} == _ref_pagerank(_GRAPH, 3)
+
+
+# (edges, scale, error) per bound: at scale 2^54 the first iteration
+# divides a rank >= 2^53; n sources of out-degree 1 at scale 2^53 - 1
+# pour n * (2^53 - 1) into node 0, past the mass bound at n = 64 and
+# past int64 as well at n = 2,048, where Spark's ANSI sum raises first
+_OVER_2_53 = {
+    "rank": ([(1, 2), (2, 3)], 1 << 54, r"rank exceeds 2\^53"),
+    "mass": ([(i, 0) for i in range(1, 65)], (1 << 53) - 1,
+             r"mass exceeds 2\^53"),
+    "mass_past_int64": ([(i, 0) for i in range(1, 2049)], (1 << 53) - 1,
+                        r"mass exceeds 2\^53|ARITHMETIC_OVERFLOW"),
+}
+
+
+@pytest.mark.parametrize("distributed", [False, True],
+                         ids=["default_threshold", "threshold_-1"])
+@pytest.mark.parametrize("bound", sorted(_OVER_2_53))
+def test_pagerank_past_2_53_raises(spark, request, distributed, bound):
+    """Both sides of the gate refuse ranks or contribution masses that
+    the double floor division of the distributed path (and the integer
+    oracle) can no longer agree on; none of them wraps silently."""
+    if distributed:
+        request.getfixturevalue("no_broadcast")
+    edges, scale, error = _OVER_2_53[bound]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    with pytest.raises(Exception, match=error):
+        graph.pagerank(df, iters=1, scale=scale).collect()
 
 
 def test_triangle_counts_matches_bruteforce(spark):

@@ -10,10 +10,14 @@ from inputosm_spark import metrics
 from inputosm_spark.sources.registry import load_table
 
 
-def test_log_callback_contract():
+def test_log_callback_contract(monkeypatch):
+    # the previous callback and level come back after the test
+    monkeypatch.setattr(metrics, "_log_callback", None)
+    monkeypatch.setattr(metrics, "_log_level", "info")
     got = []
     assert metrics.set_log_callback(None) is False  # inputosmlog.cpp:59-62
     assert metrics.set_log_callback(lambda lv, m: got.append((lv, m))) is True
+    assert metrics.set_log_callback(None) is False  # keeps the callback
     metrics.set_log_level("info")
     metrics.log("debug", "dropped")   # below level
     metrics.log("warn", "kept")

@@ -13,7 +13,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from inputosm_spark import geo, metrics
+from inputosm_spark import geo
 from inputosm_spark.datagen import synth_polygons
 from inputosm_spark.functions import cells
 from inputosm_spark.operators import spatial
@@ -222,22 +222,7 @@ def test_knn_join_empty_queries(spark, points):
     assert out.count() == 0
 
 
-def _log_lines(monkeypatch) -> list[str]:
-    """Messages metrics.log delivers while the test runs."""
-    got: list[str] = []
-    monkeypatch.setattr(metrics, "_log_callback", None)
-    monkeypatch.setattr(metrics, "_log_level", "info")
-    metrics.set_log_callback(lambda level, msg: got.append(msg))
-    return got
-
-
-def _fields(lines: list[str], op: str) -> dict[str, str]:
-    """key=value fields of the one log line of `op`."""
-    (line,) = [m for m in lines if m.split()[0] == op]
-    return dict(kv.split("=") for kv in line.split()[1:])
-
-
-def test_knn_join_one_round_is_one_job(spark, monkeypatch):
+def test_knn_join_one_round_is_one_job(spark, engine_log):
     """On clustered points every query is proven at ring 1, and the
     call starts exactly two SQL executions, the one read of the query
     frame and the round, and logs what it did."""
@@ -248,7 +233,6 @@ def test_knn_join_one_round_is_one_job(spark, monkeypatch):
     pts_np = (ids, ids % 30 * 10, ids // 30 * 10)
     qs = [(0, 55, 52), (1, 151, 120)]
     queries = spark.createDataFrame(qs, "qid long, lat_e4 long, lon_e4 long")
-    lines = _log_lines(monkeypatch)
     sc = spark.sparkContext
     store = spark._jsparkSession.sharedState().statusStore()
     sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
@@ -256,7 +240,7 @@ def test_knn_join_one_round_is_one_job(spark, monkeypatch):
     out = spatial.knn_join(queries, points, k=5)
     sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
     assert store.executionsCount() - since == 2
-    assert _fields(lines, "knn_join") == {
+    assert engine_log.fields("knn_join") == {
         "res": "6", "rings": "1", "remaining": "2,0", "brute": "0"}
     got = {}
     for r in out.collect():
@@ -265,16 +249,15 @@ def test_knn_join_one_round_is_one_job(spark, monkeypatch):
         assert sorted(got[qid], key=lambda t: t[2]) == _knn_oracle(qlat, qlon, *pts_np, 5)
 
 
-def test_pip_join_logs_strategy(spark, points, monkeypatch):
+def test_pip_join_logs_strategy(spark, points, engine_log):
     polys = synth_polygons(spark)
-    lines = _log_lines(monkeypatch)
     spatial.pip_join(points, polys, res=6)
-    assert _fields(lines, "pip_join") == {
+    assert engine_log.fields("pip_join") == {
         "strategy": "broadcast",
         "cells": str(spatial.polygon_cells(polys, 6).count())}
-    lines.clear()
+    engine_log.clear()
     spatial.pip_join(points, polys, res=6, force_broadcast=False)
-    assert _fields(lines, "pip_join") == {"strategy": "shuffle", "cells": "uncounted"}
+    assert engine_log.fields("pip_join") == {"strategy": "shuffle", "cells": "uncounted"}
 
 
 def test_tile_counts_vs_bruteforce(spark, points, points_np):
